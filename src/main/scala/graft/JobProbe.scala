@@ -16,8 +16,44 @@ import org.apache.spark.sql.SparkSession
   */
 object JobProbe {
 
-  private case class JobRec(id: Int, desc: String, site: String,
+  private[graft] case class JobRec(id: Int, desc: String, site: String,
       start: Long, var end: Long = 0L, var tasks: Int = 0)
+
+  /** Per-job records. Each finished task is credited to the job that
+    * owns its STAGE (the stage ids `onJobStart` announces), so jobs
+    * running at the same time — `Concurrency.commitEc` futures — keep
+    * their own task counts. */
+  private[graft] class Listener extends SparkListener {
+    val jobs = mutable.LinkedHashMap[Int, JobRec]()
+    private val jobOfStage = mutable.HashMap[Int, Int]()
+
+    def clear(): Unit = synchronized { jobs.clear(); jobOfStage.clear() }
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      val desc = Option(e.properties)
+        .flatMap(p => Option(p.getProperty("spark.job.description")))
+        .getOrElse("")
+      // futures-submitted jobs carry no thread-local call site — the
+      // result stage's name (its creation site) localizes them
+      val site = Option(e.properties)
+        .flatMap(p => Option(p.getProperty("callSite.short")))
+        .filter(_.nonEmpty)
+        .orElse(e.stageInfos.iterator.flatMap(si =>
+          si.details.linesIterator
+            .find(l => l.contains("graft.") && !l.contains("JobProbe")))
+          .toSeq.headOption.map(_.trim.stripPrefix("at ")))
+        .orElse(e.stageInfos.lastOption.map(_.name))
+        .getOrElse("")
+      jobs(e.jobId) = JobRec(e.jobId, desc, site, e.time)
+      e.stageIds.foreach(s => jobOfStage(s) = e.jobId)
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      jobs.get(e.jobId).foreach(_.end = e.time)
+    }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      jobOfStage.get(e.stageId).flatMap(jobs.get).foreach(_.tasks += 1)
+    }
+  }
 
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("q_advance_day")
@@ -31,44 +67,20 @@ object JobProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val jobs = mutable.LinkedHashMap[Int, JobRec]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.synchronized {
-        val desc = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("")
-        // futures-submitted jobs carry no thread-local call site — the
-        // result stage's name (its creation site) localizes them
-        val site = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short")))
-          .filter(_.nonEmpty)
-          .orElse(e.stageInfos.iterator.flatMap(si =>
-            si.details.linesIterator
-              .find(l => l.contains("graft.") && !l.contains("JobProbe")))
-            .toSeq.headOption.map(_.trim.stripPrefix("at ")))
-          .orElse(e.stageInfos.lastOption.map(_.name))
-          .getOrElse("")
-        jobs(e.jobId) = JobRec(e.jobId, desc, site, e.time)
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = jobs.synchronized {
-        jobs.get(e.jobId).foreach(_.end = e.time)
-      }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = jobs.synchronized {
-        jobs.lastOption.foreach(_._2.tasks += 1)
-      }
-    }
+    val listener = new Listener
+    val jobs = listener.jobs
     spark.sparkContext.addSparkListener(listener)
     // warm-up at sf0.001 (codegen cache)
     try Bench.consume(SparkEntry.queries(name)(spark, "/root/testdata/sf0.001"))
     catch { case e: Throwable => System.err.println(s"[probe] warm-up: $e") }
     (1 to reps).foreach { r =>
-      jobs.synchronized(jobs.clear())
+      listener.clear()
       val t0 = System.nanoTime()
       Bench.consume(SparkEntry.queries(name)(spark, sfDir))
       val wall = (System.nanoTime() - t0) / 1e9
       Thread.sleep(500) // let the listener bus drain (public API has no wait)
       println(f"== $name rep $r: total $wall%.2f s, ${jobs.size} jobs ==")
-      jobs.synchronized {
+      listener.synchronized {
         jobs.values.foreach { j =>
           val dur = (j.end - j.start) / 1e3
           println(f"  job ${j.id}%4d ${dur}%7.3f s  tasks=${j.tasks}%4d  ${j.site}%-40s ${j.desc.take(60)}")

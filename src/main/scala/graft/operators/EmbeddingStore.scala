@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
@@ -998,8 +999,8 @@ object EmbeddingStore {
 
   /** [[probeCells]] plus the query's stored vector, from the SAME
     * bounded metadata job (the vector rides the collected probe rows
-    * instead of costing a second scan) — the compressed probe needs
-    * both. */
+    * instead of costing a second lookup) — every IVF probe scores
+    * against it. None when the id is not in the store. */
   private[graft] def probeCellsWithQuery(spark: SparkSession, path: String,
       queryDocId: Long, probes: Int): (Array[Int], Option[Seq[Float]]) = {
     val centroids = IndexCatalog.read(spark, path, "centroids")
@@ -1025,14 +1026,16 @@ object EmbeddingStore {
     * the probed cells scored 6dp against the query's stored vector,
     * query doc excluded — (doc_id, cell, score). Each search variant
     * adds only its tail (top-k / θ filter / metadata join), so the
-    * exclusion, rounding and probe handling can never diverge. */
+    * exclusion, rounding and probe handling can never diverge. The
+    * query vector is the one the probe job already collected, scored
+    * as ONE literal node (the compressed probes' idiom) — no second
+    * point lookup and no broadcast. An absent query id probes no
+    * cells, so the frame is empty with the same schema. */
   private def scoredProbeScan(spark: SparkSession, path: String,
       queryDocId: Long, probes: Int): DataFrame = {
-    val qv = IndexCatalog.readPruned(spark, path, "cells",
-        "doc_id", Seq(queryDocId))
-      .filter(col("doc_id") === queryDocId)
-      .select(col("embedding").as("qv"))
-    val probedCells = probeCells(spark, path, queryDocId, probes)
+    val (probedCells, qFloat) =
+      probeCellsWithQuery(spark, path, queryDocId, probes)
+    val qv = qFloat.fold(lit(null).cast(ArrayType(FloatType)))(typedLit(_))
     // the probed scan reads ONLY files whose cell range intersects a
     // probed cell (manifest stats pruning — the versioned-table
     // analogue of the old Hive PartitionFilters); the isin filter is
@@ -1041,9 +1044,8 @@ object EmbeddingStore {
         probedCells.toSeq)
       .filter(col("cell").isin(probedCells.toSeq: _*))
       .filter(col("doc_id") =!= queryDocId)
-      .join(broadcast(qv))
       .select(col("doc_id"), col("cell"),
-        round(cosineSim(col("embedding"), col("qv")), 6).as("score"))
+        round(cosineSim(col("embedding"), qv), 6).as("score"))
   }
 
   def searchIvf(spark: SparkSession, path: String, queryDocId: Long,

@@ -103,22 +103,20 @@ object IndexMaintenance {
     // disjoint roots — maintain them as concurrent job chains (guide
     // §2.6: this section's wall is max(substore) instead of the sum);
     // the catalog publish below is the one sequential point. Each
-    // manifest is COLLECTED once (file names give the count, the
-    // carried set and the byte accounting in one scan-planning-sized
-    // job — the old shape re-read each manifest three times).
+    // manifest's file list (the cached one — no job after a
+    // generation's first read) gives the count, the carried set and
+    // the byte accounting.
     import scala.concurrent.{Await, Future}
     import graft.Concurrency.commitEc
     import scala.concurrent.duration.Duration
-    def manifestFiles(root: String, g: Long): Array[String] =
-      TableFormat.readManifest(spark, root, g)
-        .select(col("file")).collect().map(_.getString(0))
     val futures = Seq("cells", "pq_codes", "sq8_codes").map { sub =>
       Future {
         val root = s"$path/$sub"
         TableFormat.currentGenOption(root).map { g =>
-          val beforeFiles = manifestFiles(root, g)
+          val beforeFiles = TableFormat.manifestFiles(spark, root, g)
           verb(root, TableFormat.genSchema(root, g))
-          val afterFiles = manifestFiles(root, TableFormat.currentGen(root))
+          val afterFiles = TableFormat.manifestFiles(spark, root,
+            TableFormat.currentGen(root))
           // bytes moved = the rewritten (non-carried) files' sizes;
           // the before-manifest names them, the filesystem prices them
           val carried = afterFiles.toSet

@@ -429,23 +429,124 @@ object TableFormat {
       gen: Long, key: String): Unit =
     commitGenManifested(df, root, gen, Seq(key))
 
-  /** A manifest is scan-planning-sized (one row per file), so the
-    * schema-inference footer read costs nothing; inferring keeps the
-    * min/max columns in their NATIVE types (a string key's range
-    * prunes as strings, a long key's as longs). */
+  // ---------------------------------------------------------------
+  // Driver-side manifest metadata cache
+  //
+  // A published generation's manifest never changes, yet reading it
+  // costs two Spark jobs (a footer schema-inference job plus a
+  // collect of the file list) — uncached, most of an interactive
+  // search request's jobs. The driver keeps, per manifest identity,
+  // the inferred schema and the O(files) RANGE-STAT rows (`file`,
+  // `n_rows`, `min_*`, `max_*`, `null_*`): the same scalars every
+  // file-list collect already brought to the driver. Bloom sketch bytes never enter the cache —
+  // the sketch probe stays a distributed filter over the manifest
+  // parquet, so the driver's share stays O(files) scalars at any
+  // table size.
+  // ---------------------------------------------------------------
+
+  /** The cached metadata of one manifest: the schema a reader passes
+    * instead of inferring it, and the range-stat rows (`statsSchema`
+    * = the manifest's columns minus every `bloom_*`). */
+  private[graft] final case class ManifestMeta(schema: StructType,
+      statsSchema: StructType, stats: Seq[org.apache.spark.sql.Row]) {
+    def files: Seq[String] = stats.map(_.getAs[String]("file"))
+
+    /** The range-stat rows as a LocalRelation: filters and
+      * projections over it fold on the driver (Catalyst's
+      * ConvertToLocalRelation), so a range-pruning decision keeps
+      * Spark's exact comparison semantics and runs no job. */
+    def statsFrame(spark: SparkSession): DataFrame = {
+      import scala.jdk.CollectionConverters._
+      spark.createDataFrame(stats.asJava, statsSchema)
+    }
+  }
+
+  /** An LRU map from a manifest's IDENTITY to its metadata, holding at
+    * most `capacity` entries. The identity is the canonical
+    * `_manifest` dir plus the (name, length, mtime) of every part
+    * file; part names carry the writing job's UUID, so a
+    * single-writer re-commit of the same generation id, a root
+    * deleted and recreated, or a hard-link clone under a new root is
+    * a NEW key — an entry can never answer for different bytes. */
+  private[graft] final class ManifestCache(capacity: Int) {
+    private type Key = (String, Seq[(String, Long, Long)])
+    private val entries =
+      new java.util.LinkedHashMap[Key, ManifestMeta](16, 0.75f, true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[Key, ManifestMeta]): Boolean =
+          this.size() > capacity
+      }
+
+    private def key(dir: String): Key = {
+      val d = new java.io.File(dir).getCanonicalFile
+      val parts = Option(d.listFiles()).getOrElse(Array.empty[java.io.File])
+        .filter(f => f.isFile &&
+          !f.getName.startsWith("_") && !f.getName.startsWith("."))
+        .map(f => (f.getName, f.length(), f.lastModified()))
+        .sortBy(_._1).toSeq
+      (d.getPath, parts)
+    }
+
+    /** The entry for the manifest at `dir`, running `load` on a miss
+      * OUTSIDE the map lock (a slow load never blocks readers of
+      * other manifests; two racing loaders of one key compute the
+      * same value and the later put is harmless). */
+    def getOrLoad(dir: String)(load: => ManifestMeta): ManifestMeta = {
+      val k = key(dir)
+      entries.synchronized(Option(entries.get(k))).getOrElse {
+        val v = load
+        entries.synchronized(entries.put(k, v))
+        v
+      }
+    }
+
+    def size: Int = entries.synchronized(entries.size())
+  }
+
+  /** Entries the manifest cache holds — each is O(files) scalars of
+    * one generation, so the bound caps driver memory at a fixed
+    * number of file lists. */
+  private[graft] val ManifestCacheEntries = 256
+
+  private[graft] val manifestCache = new ManifestCache(ManifestCacheEntries)
+
+  /** The cached metadata of generation `gen`'s manifest; a miss pays
+    * two jobs (footer schema inference + the range-stat collect). */
+  private[graft] def manifestMeta(spark: SparkSession, root: String,
+      gen: Long): ManifestMeta = {
+    val dir = manifestPath(root, gen)
+    manifestCache.getOrLoad(dir) {
+      val m = spark.read.parquet(dir)
+      val stats = m.drop(
+        m.columns.filter(_.startsWith("bloom_")).toIndexedSeq: _*)
+      ManifestMeta(m.schema, stats.schema, stats.collect().toSeq)
+    }
+  }
+
+  /** The manifest of generation `gen` as a frame over its parquet,
+    * every column (Bloom sketches included) in its NATIVE type — a
+    * string key's range prunes as strings, a long key's as longs. The
+    * schema comes from the manifest cache, so only the first read of
+    * a generation pays the footer-inference job. */
   private[graft] def readManifest(spark: SparkSession, root: String,
       gen: Long): DataFrame =
-    spark.read.parquet(manifestPath(root, gen))
+    spark.read.schema(manifestMeta(spark, root, gen).schema)
+      .parquet(manifestPath(root, gen))
 
-  /** Read a manifested generation via its file list. The collect is
-    * the driver's scan-planning cost — O(files), the same listing
-    * Spark's own file index materializes; a format's log IS this
-    * list. An all-rows-deleted generation (empty manifest) reads as
-    * an empty frame. */
+  /** Generation `gen`'s data file list — from the manifest cache, so
+    * no job after the generation's first read. */
+  private[graft] def manifestFiles(spark: SparkSession, root: String,
+      gen: Long): Seq[String] =
+    manifestMeta(spark, root, gen).files
+
+  /** Read a manifested generation via its file list — the O(files)
+    * listing Spark's own file index would materialize (a format's log
+    * IS this list), taken from the manifest cache. An
+    * all-rows-deleted generation (empty manifest) reads as an empty
+    * frame. */
   private[graft] def readViaManifest(spark: SparkSession, root: String,
       gen: Long, schema: StructType): DataFrame = {
-    val files = readManifest(spark, root, gen)
-      .select(col("file")).collect().map(_.getString(0)).toSeq
+    val files = manifestFiles(spark, root, gen)
     if (files.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
@@ -532,8 +633,8 @@ object TableFormat {
       }
     // the split is exhaustive and disjoint (carried = everything not
     // touched, including sketch-rejected range hits), so the carried
-    // count is arithmetic over the pinned manifest — no count job
-    val nAll = m.count()
+    // count is arithmetic over the cached manifest — no count job
+    val nAll = manifestMeta(spark, root, expected).stats.length
     val rangeTouched = m.join(sc, touch, "left_semi")
     val touchedFiles = refined.fold(rangeTouched)(rangeTouched.filter)
       .select(col("file")).collect().map(_.getString(0)).toSeq
@@ -804,11 +905,13 @@ object TableFormat {
       delta: DataFrame, schema: StructType,
       txn: Option[(String, Long)] = None): SkipReport = {
     val expected = currentGen(root)
-    val m = readManifest(spark, root, expected).localCheckpoint(true)
+    // every row carries, so the manifest feeds the new manifest's
+    // write exactly once and the cached stats give the count
+    val m = readManifest(spark, root, expected)
     tryCommitFiles(spark, root, expected, schema, manifestKeys(m),
       Seq.empty, m, _ => delta.select(
         schema.fieldNames.map(col).toIndexedSeq: _*), txn,
-      carriedN = m.count())
+      carriedN = manifestMeta(spark, root, expected).stats.length)
       .getOrElse(throw new IllegalStateException(
         s"appendScoped raced a concurrent writer on $root"))
   }
@@ -842,24 +945,28 @@ object TableFormat {
     * generation) cannot prune — unknown admits, exactly like the
     * range test's treatment of a NULL bound is the reverse (a file
     * carried from before the COLUMN existed holds only NULLs for it,
-    * so no equality can select from it and it prunes). Both probes
-    * are driver-side planner work over the O(files) manifest. */
+    * so no equality can select from it and it prunes). The range
+    * test runs on the driver over the cached stats (no job); the
+    * sketch probe, when the manifest has one, is ONE job over the
+    * manifest parquet, so sketch bytes stay distributed. */
   private[graft] def prunedFilesIn(spark: SparkSession, root: String,
       gen: Long, key: String, values: Seq[Any]): Seq[String] = {
     if (values.isEmpty) return Seq.empty
     val keep = values.map(v =>
       lit(v).between(col(s"min_$key"), col(s"max_$key"))).reduce(_ || _)
-    val m = readManifest(spark, root, gen)
+    val meta = manifestMeta(spark, root, gen)
     // the sketch probe runs INSIDE the manifest filter (the per-row
     // BloomMightContainAnyExpr), so the driver collects only the
     // SURVIVING file names — never the sketch bytes of every
     // range-admitted row, which on a non-clustering key means every
     // row and would grow the collect with the table's file count
     val ranged =
-      if (!m.columns.contains(s"bloom_$key")) m.filter(keep)
-      else m.filter(keep && (col(s"bloom_$key").isNull ||
-        graft.operators.JoinPruning.mightContainAnyOf(
-          col(s"bloom_$key"), values)))
+      if (!meta.schema.fieldNames.contains(s"bloom_$key"))
+        meta.statsFrame(spark).filter(keep)
+      else readManifest(spark, root, gen).filter(keep &&
+        (col(s"bloom_$key").isNull ||
+          graft.operators.JoinPruning.mightContainAnyOf(
+            col(s"bloom_$key"), values)))
     ranged.select(col("file")).collect().map(_.getString(0)).toSeq
   }
 
@@ -877,9 +984,7 @@ object TableFormat {
     require(keep >= 1, "retention must keep at least the current generation")
     val cur = currentGen(root)
     val retainedGens = (math.max(0L, cur - keep + 1) to cur).toSeq
-    val reachable = retainedGens
-      .flatMap(g => readManifest(spark, root, g)
-        .select(col("file")).collect().map(_.getString(0)))
+    val reachable = retainedGens.flatMap(g => manifestFiles(spark, root, g))
       .toSet
     // normalize manifest URIs (file:///…) onto local paths for compare
     def localPath(f: String): String =
@@ -952,9 +1057,7 @@ object TableFormat {
   private[graft] def cdcDiffScoped(spark: SparkSession, root: String,
       prevGen: Long, nextGen: Long, schema: StructType,
       key: String): DataFrame = {
-    def files(gen: Long): Set[String] =
-      readManifest(spark, root, gen)
-        .select(col("file")).collect().map(_.getString(0)).toSet
+    def files(gen: Long): Set[String] = manifestFiles(spark, root, gen).toSet
     val pf = files(prevGen); val nf = files(nextGen)
     def readOnly(only: Set[String]): DataFrame =
       if (only.isEmpty)
@@ -1273,19 +1376,19 @@ object TableFormat {
     * The residual predicate is re-applied to the surviving files, so
     * the answer is EXACT regardless of how coarse the file ranges
     * are. Returns the pruned frame plus the files-read /
-    * files-skipped evidence. The pruning decision is a filter over
-    * the scan-planning-sized manifest — no data is touched to decide
-    * what to read. */
+    * files-skipped evidence. The pruning decision is a driver-side
+    * filter over the cached manifest stats — no job runs and no data
+    * is touched to decide what to read. */
   private[graft] def readScoped(spark: SparkSession, root: String,
       gen: Long, schema: StructType,
       preds: Seq[(String, Any, Any)]): (DataFrame, SkipReport) = {
-    val m = readManifest(spark, root, gen)
+    val meta = manifestMeta(spark, root, gen)
     val keep = preds.map { case (k, lo, hi) =>
       lit(lo) <= col(s"max_$k") && col(s"min_$k") <= lit(hi)
     }.reduce(_ && _)
-    val files = m.filter(keep)
+    val files = meta.statsFrame(spark).filter(keep)
       .select(col("file")).collect().map(_.getString(0)).toSeq
-    val total = m.count()
+    val total = meta.stats.length
     val residual = preds.map { case (k, lo, hi) =>
       col(k).between(lit(lo), lit(hi)) }.reduce(_ && _)
     val df =
@@ -1524,14 +1627,13 @@ object TableFormat {
       schema: StructType, smallRows: Long,
       targetRows: Long): SkipReport = {
     val cur = currentGen(root)
-    val m = readManifest(spark, root, cur).localCheckpoint(true)
+    // the manifest feeds only the carried rows' write, so no pin
+    val m = readManifest(spark, root, cur)
     val keys = manifestKeys(m)
-    // ONE collect of (file, n_rows) decides everything driver-side:
-    // the fold set, the bin count and the carried count (the old
-    // shape ran a collect plus a sum aggregate over the same pinned
-    // manifest). Scan-planning-sized by the manifest's contract.
-    val sizes = m.select(col("file"), col("n_rows")).collect()
-      .map(r => (r.getString(0), r.getLong(1)))
+    // the cached (file, n_rows) decide everything driver-side: the
+    // fold set, the bin count and the carried count
+    val sizes = manifestMeta(spark, root, cur).stats
+      .map(r => (r.getAs[String]("file"), r.getAs[Long]("n_rows")))
     val touched = sizes.collect { case (f, n) if n < smallRows => f }.toSeq
     val carried = m.filter(col("n_rows") >= smallRows)
     val totalSmall = sizes.collect { case (_, n) if n < smallRows => n }.sum

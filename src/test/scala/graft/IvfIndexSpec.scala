@@ -196,6 +196,53 @@ class IvfIndexSpec extends SparkTestBase {
       s"appended-id lookup planned ${appended.length} of ${m2.count()}")
   }
 
+  test("searchIvf on a two-generation index: a warm request submits " +
+    "at most 4 Spark jobs, equals brute force over its probed cells, " +
+    "and an absent query id returns no rows") {
+    val dir = Files.createTempDirectory("graft-ivf-jobs").toFile
+    dir.deleteOnExit()
+    val path = dir.getAbsolutePath
+    val vectors = EmbeddingStore.embed(Tables(spark, sfDir).documents)
+      .drop("shard")
+    EmbeddingStore.buildIvfIndex(spark, vectors.filter(col("doc_id") < 400),
+      path)
+    EmbeddingStore.appendToIvfIndex(spark, path,
+      vectors.filter(col("doc_id") >= 400))
+    val (k, probes) = (10, 2)
+    // the warm-up request loads the manifests once
+    EmbeddingStore.searchIvf(spark, path, 3L, k, probes).collect()
+    val qid = 450L
+    val (rows, jobs) = JobCounting.countJobs(spark) {
+      EmbeddingStore.searchIvf(spark, path, qid, k, probes).collect()
+    }
+    assert(jobs <= 4, s"a warm searchIvf request submitted $jobs jobs")
+    // the parent formulation: the query's stored vector joined onto
+    // the centroids for the probe, then onto the probed cells' rows
+    val cells = IndexCatalog.read(spark, path, "cells")
+    val qv = cells.filter(col("doc_id") === qid)
+      .select(col("embedding").as("qv"))
+    val probed = IndexCatalog.read(spark, path, "centroids")
+      .join(broadcast(qv))
+      .select(col("cell"),
+        round(cosineSim(col("centroid"), col("qv")), 6).as("cs"))
+      .orderBy(col("cs").desc, col("cell")).limit(probes)
+      .collect().map(_.getInt(0)).toSeq
+    val exact = cells
+      .filter(col("cell").isin(probed: _*) && col("doc_id") =!= qid)
+      .join(broadcast(qv))
+      .select(col("doc_id"), col("cell"),
+        round(cosineSim(col("embedding"), col("qv")), 6).as("score"))
+      .orderBy(col("score").desc, col("doc_id"))
+      .limit(k).collect()
+    assert(rows.length === k)
+    assert(rows.map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq ===
+      exact.map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq)
+    val absent = EmbeddingStore.searchIvf(spark, path, 987654321L, k, probes)
+    assert(absent.collect().isEmpty)
+    assert(absent.schema === EmbeddingStore.searchIvf(spark, path, qid, k,
+      probes).schema)
+  }
+
   test("indexStats: health row tracks appends; a second Lloyd pass does not degrade quality") {
     val t = Tables(spark, sfDir)
     val vectors = EmbeddingStore.embed(t.documents).drop("shard")

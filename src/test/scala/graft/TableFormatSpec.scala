@@ -1077,4 +1077,182 @@ class TableFormatSpec extends SparkTestBase {
       .select("o_orderkey").collect().map(_.getLong(0)).toSet
     assert(ins.intersect(del).isEmpty)
   }
+
+  // ---------------------------------------------------------------
+  // The driver-side manifest cache: every read after a mutation must
+  // see the mutation's files and stats, never a cached entry's
+  // ---------------------------------------------------------------
+
+  private def rangeDocs(lo: Long, hi: Long, files: Int) =
+    spark.range(lo, hi)
+      .select(col("id").as("doc_id"), concat(lit("t"), col("id")).as("text"))
+      .repartitionByRange(files, col("doc_id"))
+
+  private def idsAt(root: String, gen: Long,
+      schema: org.apache.spark.sql.types.StructType): Seq[Long] =
+    TableFormat.readViaManifest(spark, root, gen, schema)
+      .collect().map(_.getLong(0)).sorted.toSeq
+
+  /** The cached range-stat rows equal an uncached read of the
+    * manifest parquet on disk. */
+  private def assertCacheFresh(root: String, gen: Long): Unit = {
+    val meta = TableFormat.manifestMeta(spark, root, gen)
+    val onDisk = spark.read.parquet(TableFormat.manifestPath(root, gen))
+      .select(meta.statsSchema.fieldNames.toIndexedSeq.map(col): _*)
+      .collect().toSeq
+    def norm(rows: Seq[org.apache.spark.sql.Row]) =
+      rows.map(_.toSeq.map(String.valueOf).mkString("|")).sorted
+    assert(norm(meta.stats) === norm(onDisk), s"stale cache for $root@$gen")
+  }
+
+  private def localFile(f: String) = new java.io.File(
+    if (f.startsWith("file:")) java.net.URI.create(f).getPath else f)
+
+  test("manifest cache: a single-writer re-commit of the same " +
+    "generation id reads the new files and stats, never the cached ones") {
+    val root = java.nio.file.Files.createTempDirectory("graft-mc-recommit")
+      .toString
+    val a = rangeDocs(0, 100, 4)
+    val schema = a.schema
+    TableFormat.commitGenManifested(a, root, 0L, "doc_id")
+    assert(idsAt(root, 0L, schema) === (0L until 100L))
+    assert(TableFormat.prunedFilesIn(spark, root, 0L, "doc_id",
+      Seq(50L)).length === 1)
+    TableFormat.commitGenManifested(rangeDocs(1000, 1060, 3), root, 0L,
+      "doc_id")
+    assert(idsAt(root, 0L, schema) === (1000L until 1060L))
+    assert(TableFormat.prunedFilesIn(spark, root, 0L, "doc_id",
+      Seq(50L)).isEmpty, "range test answered from the old stats")
+    assert(TableFormat.prunedFilesIn(spark, root, 0L, "doc_id",
+      Seq(1010L)).length === 1)
+    val (_, rep) = TableFormat.readScoped(spark, root, 0L, schema,
+      Seq(("doc_id", 0L, 5000L)))
+    val nFiles = spark.read.parquet(TableFormat.manifestPath(root, 0L))
+      .count()
+    assert(rep === TableFormat.SkipReport(nFiles, 0L))
+    val agg = TableFormat.metaAgg(spark, root, 0L, "doc_id").first()
+    assert((agg.getLong(0), agg.getLong(1), agg.getLong(2)) ===
+      ((60L, 1000L, 1059L)))
+    assertCacheFresh(root, 0L)
+  }
+
+  test("manifest cache: after vacuumManifested a retained generation " +
+    "re-reads intact and an expired one can never be served") {
+    val root = java.nio.file.Files.createTempDirectory("graft-mc-vacuum")
+      .toString
+    val docs = rangeDocs(0, 1000, 10)
+    val schema = docs.schema
+    TableFormat.commitGenManifested(docs, root, 0L, "doc_id")
+    TableFormat.purgeScoped(spark, root, Seq(5L, 950L).toDF("doc_id"),
+      schema, "doc_id")
+    // both generations cached before the sweep
+    assert(TableFormat.manifestFiles(spark, root, 0L).length === 10)
+    assert(idsAt(root, 1L, schema).length === 998)
+    assert(TableFormat.vacuumManifested(spark, root, keep = 1) >= 2L)
+    val files = TableFormat.manifestFiles(spark, root, 1L)
+    assert(files.nonEmpty && files.forall(f => localFile(f).exists()),
+      "the retained generation lists a reaped file")
+    assert(idsAt(root, 1L, schema) ===
+      (0L until 1000L).filterNot(Set(5L, 950L)))
+    assertCacheFresh(root, 1L)
+    intercept[java.nio.file.NoSuchFileException](
+      TableFormat.manifestFiles(spark, root, 0L))
+  }
+
+  test("manifest cache: a root deleted and recreated at gen 0 reads " +
+    "the new table") {
+    val root = java.nio.file.Files.createTempDirectory("graft-mc-recreate")
+      .toString
+    val a = rangeDocs(0, 100, 4)
+    val schema = a.schema
+    TableFormat.commitGenManifested(a, root, 0L, "doc_id")
+    assert(idsAt(root, 0L, schema) === (0L until 100L))
+    graft.sources.LayoutStore.deleteRecursively(new java.io.File(root))
+    new java.io.File(root).mkdirs()
+    TableFormat.commitGenManifested(rangeDocs(500, 550, 2), root, 0L,
+      "doc_id")
+    assert(idsAt(root, 0L, schema) === (500L until 550L))
+    assert(TableFormat.prunedFilesIn(spark, root, 0L, "doc_id",
+      Seq(10L)).isEmpty)
+    assert(TableFormat.manifestFiles(spark, root, 0L)
+      .forall(f => localFile(f).exists()))
+    assertCacheFresh(root, 0L)
+  }
+
+  test("manifest cache: a LayoutStore.cloneRecursively clone gets its " +
+    "own entry, and commits on either side stay invisible to the other") {
+    val src = java.nio.file.Files.createTempDirectory("graft-mc-src")
+      .toString
+    val a = rangeDocs(0, 100, 4)
+    val schema = a.schema
+    TableFormat.commitGenManifested(a, src, 0L, "doc_id")
+    assert(idsAt(src, 0L, schema) === (0L until 100L))
+    val dst = java.nio.file.Files.createTempDirectory("graft-mc-dst")
+      .resolve("clone").toString
+    graft.sources.LayoutStore.cloneRecursively(new java.io.File(src),
+      new java.io.File(dst))
+    val (_, cloneJobs) = JobCounting.countJobs(spark)(
+      TableFormat.manifestFiles(spark, dst, 0L))
+    assert(cloneJobs > 0,
+      "the clone's manifest was answered from its source's cache entry")
+    TableFormat.appendScoped(spark, dst, rangeDocs(100, 120, 1), schema)
+    TableFormat.appendScoped(spark, src, rangeDocs(200, 210, 1), schema)
+    assert(idsAt(dst, 1L, schema) === (0L until 120L))
+    assert(idsAt(src, 1L, schema) === (0L until 100L) ++ (200L until 210L))
+    assert(idsAt(dst, 0L, schema) === (0L until 100L))
+    Seq(src -> 0L, src -> 1L, dst -> 0L, dst -> 1L)
+      .foreach { case (r, g) => assertCacheFresh(r, g) }
+  }
+
+  test("manifest cache: entries hold no Bloom sketch bytes, the cache " +
+    "stays within its fixed bound, and eviction is least-recently-used") {
+    val root = java.nio.file.Files.createTempDirectory("graft-mc-bloom")
+      .toString
+    val docs = rangeDocs(0, 400, 4)
+    TableFormat.commitGenManifested(docs, root, 0L, Seq("doc_id"),
+      bloomKeys = Seq("doc_id"))
+    assert(TableFormat.prunedFilesIn(spark, root, 0L, "doc_id",
+      Seq(7L)).length === 1)
+    val entry = TableFormat.manifestMeta(spark, root, 0L)
+    assert(entry.schema.fieldNames.contains("bloom_doc_id"),
+      "readers still need the sketch column's type")
+    assert(!entry.statsSchema.fieldNames.exists(_.startsWith("bloom_")))
+    assert(entry.stats.length === 4 && entry.stats.forall(r =>
+      !r.schema.fieldNames.exists(_.startsWith("bloom_"))))
+    assert(TableFormat.manifestCache.size <= TableFormat.ManifestCacheEntries)
+    // the eviction rule, on a two-entry instance of the same class
+    val small = new TableFormat.ManifestCache(2)
+    val dirs = (0 until 3).map(i =>
+      java.nio.file.Files.createTempDirectory(s"graft-mc-lru$i").toString)
+    var loads = 0
+    def get(d: String) = small.getOrLoad(d) { loads += 1; entry }
+    get(dirs(0)); get(dirs(1)); get(dirs(0)); get(dirs(2))
+    assert(small.size === 2 && loads === 3)
+    get(dirs(0))
+    assert(loads === 3, "the most recently used entry was evicted")
+    get(dirs(1))
+    assert(loads === 4 && small.size === 2)
+  }
+
+  test("manifest cache: a warm manifest read runs no Spark job; a " +
+    "sketch probe runs exactly one") {
+    val root = java.nio.file.Files.createTempDirectory("graft-mc-jobs")
+      .toString
+    val docs = rangeDocs(0, 400, 4)
+    val schema = docs.schema
+    TableFormat.commitGenManifested(docs, root, 0L, Seq("doc_id"),
+      bloomKeys = Seq("doc_id"))
+    TableFormat.manifestFiles(spark, root, 0L)
+    val (_, warm) = JobCounting.countJobs(spark) {
+      TableFormat.readViaManifest(spark, root, 0L, schema)
+      TableFormat.readManifest(spark, root, 0L)
+      TableFormat.readScoped(spark, root, 0L, schema,
+        Seq(("doc_id", 10L, 20L)))
+    }
+    assert(warm === 0, s"warm manifest reads ran $warm jobs")
+    val (planned, sketch) = JobCounting.countJobs(spark) {
+      TableFormat.prunedFilesIn(spark, root, 0L, "doc_id", Seq(7L))
+    }
+    assert(planned.length === 1 && sketch === 1)
+  }
 }
