@@ -42,11 +42,113 @@ object Bench {
   private[graft] def consume(df: org.apache.spark.sql.DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
+  /** The warm-up dir every timing tool shares (sf0.001 by default). */
+  private[graft] def warmDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
+
+  /** Everything the timed passes must NOT pay for, run untimed before
+    * them: one warm-up run of each named row at [[warmDir]] (absorbs
+    * JVM classloading, Catalyst init and codegen), then the STORAGE
+    * layouts of the bench SF. Each layout is paid once at
+    * write/ETL time in production, exactly like the pre-generated
+    * parquet every other query reads — the bucketed layout
+    * (q_join_bucketed), the z-ordered events (q_zorder_scan), the
+    * persisted IVF index (q_search_ivf), the half-corpus DAY BASE of
+    * dedup state + IVF index that the day-episode rows copy-then-
+    * mutate (it is the previous day's output), the persisted dedup
+    * signature state (q_dedup_incremental) and the date-partitioned
+    * events (q_incremental_pruned). A setup failure is LOUD: the row
+    * would then time the build and its number must be explainable. */
+  private[graft] def prepare(spark: SparkSession, sfDir: String,
+      names: Seq[String]): Unit = {
+    names.foreach { n =>
+      try consume(SparkEntry.queries(n)(spark, warmDir))
+      catch { case _: Throwable => () }
+    }
+    def tables = graft.sources.Tables(spark, sfDir)
+    Seq[(String, String, () => Unit)](
+      ("bucketed-layout", "q_join_bucketed will include the table write",
+        () => graft.sources.Bucketing.ensureLayout(spark, sfDir)),
+      ("z-order layout", "q_zorder_scan will include the clustered write",
+        () => graft.sources.Zorder.ensureZorderLayout(spark, sfDir)),
+      ("IVF index", "q_search_ivf will include the build",
+        () => graft.operators.EmbeddingStore.ensureIndex(tables)),
+      ("day-base", "the day-episode rows will include the base build",
+        () => graft.operators.AdvanceDay.ensureDayBase(tables)),
+      ("dedup state", "q_dedup_incremental will include the base build",
+        () => graft.operators.Dedup.ensureDedupState(tables)),
+      ("date-partitioned events", "q_incremental_pruned will include the rewrite",
+        () => graft.sources.Bucketing.ensureEventsByDate(spark, sfDir))
+    ).foreach { case (layout, consequence, setup) =>
+      try setup()
+      catch {
+        case e: Throwable =>
+          System.err.println(
+            s"[bench] $layout setup failed ($consequence): ${e.getMessage}")
+      }
+    }
+  }
+
+  /** Per-row minimum wall and process-CPU seconds across passes.
+    * -1 marks a row that failed in ANY pass, and any failure makes a
+    * total -1: a regression must read as a failure, never as a
+    * suspiciously fast timing or a shrunken total. */
+  private[graft] final class Timings(val names: Seq[String]) {
+    private[Bench] val minWall, minCpu =
+      collection.mutable.Map(names.map(_ -> Double.MaxValue): _*)
+    private[Bench] val failed = collection.mutable.Set[String]()
+    /** System load average sampled before each pass. */
+    val loads = collection.mutable.ArrayBuffer[Double]()
+
+    def wall(n: String): Double = if (failed(n)) -1.0 else minWall(n)
+    def cpu(n: String): Double = if (failed(n)) -1.0 else minCpu(n)
+    def wallTotal(done: Set[String]): Double = total(done, wall)
+    def cpuTotal(done: Set[String]): Double = total(done, cpu)
+    private def total(done: Set[String], of: String => Double): Double =
+      if (done.exists(failed)) -1.0 else names.filter(done).map(of).sum
+  }
+
+  /** The min-of-passes loop every timing tool shares: up to `passes`
+    * pass-major sweeps over `t.names` (so the N runs of one row are
+    * spaced a whole pass apart and one noisy window cannot poison all
+    * of them), timing each `run(name)` for wall and process CPU.
+    * `afterRow(passIndex, name, rowsDoneThisPass)` fires, untimed,
+    * after every row; `afterPass(passesDone, passSeconds)` after every
+    * pass, and the loop stops early when it returns false. */
+  private[graft] def timePasses(t: Timings, passes: Int)(
+      run: String => Unit,
+      afterRow: (Int, String, Int) => Unit = (_, _, _) => (),
+      afterPass: (Int, Double) => Boolean = (_, _) => true): Timings = {
+    val osBean = ManagementFactory.getPlatformMXBean(
+      classOf[com.sun.management.OperatingSystemMXBean])
+    var pass = 0
+    var continue = true
+    while (continue && pass < passes) {
+      val tPass = System.nanoTime()
+      t.loads += osBean.getSystemLoadAverage
+      t.names.zipWithIndex.foreach { case (name, i) =>
+        val c0 = osBean.getProcessCpuTime
+        val t0 = System.nanoTime()
+        try {
+          run(name)
+          t.minWall(name) = math.min(t.minWall(name), (System.nanoTime() - t0) / 1e9)
+          t.minCpu(name) = math.min(t.minCpu(name), (osBean.getProcessCpuTime - c0) / 1e9)
+        } catch {
+          case e: Throwable =>
+            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+            t.failed += name
+        }
+        afterRow(pass, name, i + 1)
+      }
+      pass += 1
+      continue = afterPass(pass, (System.nanoTime() - tPass) / 1e9)
+    }
+    t
+  }
+
   def main(args: Array[String]): Unit = {
     val t0Main = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt
     // WALL BUDGET (seconds, from main() entry): the driver runs this
     // under an external `timeout`, and round 17's artifact was rc=124 /
@@ -57,106 +159,19 @@ object Bench {
     // Pass 1 ALWAYS runs (one pass is a complete, accurate artifact).
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_TIME_BUDGET", "1200").toDouble
     def elapsedSec = (System.nanoTime() - t0Main) / 1e9
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     // ERROR, not WARN: the driver keeps only a bounded tail of output
     // and parses the LAST JSON line in it — WARN chatter (WindowExec,
     // large-task-binary) after the final emission can push the JSON
     // out of the tail when an external timeout strikes mid-pass
-    spark.sparkContext.setLogLevel("ERROR")
-    val osBean = ManagementFactory.getPlatformMXBean(
-      classOf[com.sun.management.OperatingSystemMXBean])
+    val spark = Session.local(Session.cpus(32), "ERROR")
     val names = SparkEntry.queries.keys.toSeq.sorted
-    names.foreach { n =>
-      try consume(SparkEntry.queries(n)(spark, warmDir))
-      catch { case _: Throwable => () }
-    }
-    // the bucketed layout is STORAGE — paid once at write/ETL time,
-    // exactly like the pre-generated parquet every other query reads.
-    // Materialize it for the bench SF before timing (tables only, no
-    // query execution) so q_join_bucketed measures the join, not the
-    // one-time table write. A failure here is LOUD: the timed query
-    // would then include the write and the number must be explainable.
-    try graft.sources.Bucketing.ensureLayout(spark, sfDir)
-    catch {
-      case e: Throwable =>
-        System.err.println(
-          s"[bench] bucketed-layout setup failed (q_join_bucketed will " +
-            s"include the table write): ${e.getMessage}")
-    }
-    // same storage argument for the z-ordered events layout probed
-    // by q_zorder_scan: clustered once at write time
-    try graft.sources.Zorder.ensureZorderLayout(spark, sfDir)
-    catch {
-      case e: Throwable =>
-        System.err.println(
-          s"[bench] z-order layout setup failed (q_zorder_scan will " +
-            s"include the clustered write): ${e.getMessage}")
-    }
-    // same storage argument for the persisted IVF index: built once at
-    // ETL time, probed by q_search_ivf — materialize untimed
-    try graft.operators.EmbeddingStore.ensureIndex(
-      graft.sources.Tables(spark, sfDir))
-    catch {
-      case e: Throwable =>
-        System.err.println(
-          s"[bench] IVF index setup failed (q_search_ivf will include " +
-            s"the build): ${e.getMessage}")
-    }
-    // same storage argument for the half-corpus DAY BASE (dedup state
-    // + IVF index) that q_advance_day / q_index_maintain /
-    // q_index_history copy-then-mutate: it is the PREVIOUS day's
-    // output in production — built once untimed, so those rows time
-    // the advance, not the base build
-    try graft.operators.AdvanceDay.ensureDayBase(
-      graft.sources.Tables(spark, sfDir))
-    catch {
-      case e: Throwable =>
-        System.err.println(
-          s"[bench] day-base setup failed (the day-episode rows will " +
-            s"include the base build): ${e.getMessage}")
-    }
-    // same again for the persisted dedup signature state joined by
-    // q_dedup_incremental: built once at ETL time, so the bench times
-    // the delta run, not the base-corpus signature build
-    try graft.operators.Dedup.ensureDedupState(
-      graft.sources.Tables(spark, sfDir))
-    catch {
-      case e: Throwable =>
-        System.err.println(
-          s"[bench] dedup state setup failed (q_dedup_incremental will " +
-            s"include the base build): ${e.getMessage}")
-    }
-    // and the date-partitioned events layout probed by
-    // q_incremental_pruned
-    try graft.sources.Bucketing.ensureEventsByDate(spark, sfDir)
-    catch {
-      case e: Throwable =>
-        System.err.println(
-          s"[bench] date-partitioned events setup failed " +
-            s"(q_incremental_pruned will include the rewrite): ${e.getMessage}")
-    }
-    // wall[q] / cpu[q] = minimum across passes; -1 marks a query that
-    // failed in ANY pass (a regression must read as a failure, never
-    // as a suspiciously fast timing)
-    val wall = collection.mutable.Map(names.map(_ -> Double.MaxValue): _*)
-    val cpu = collection.mutable.Map(names.map(_ -> Double.MaxValue): _*)
-    val failed = collection.mutable.Set[String]()
-    val loads = collection.mutable.ArrayBuffer[Double]()
+    prepare(spark, sfDir, names)
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
+    val t = new Timings(names)
 
-    def fmt(m: collection.Map[String, Double], done: Set[String]): String =
-      names.filter(done).map(n =>
-        "\"" + n + "\":" + (if (failed(n)) -1.0 else m(n)))
+    def fmt(of: String => Double, done: Set[String]): String =
+      names.filter(done).map(n => "\"" + n + "\":" + of(n))
         .mkString("{", ",", "}")
-    // any failure makes the headline total -1: a broken query must never
-    // shrink the total into looking like a speedup
-    def totalOf(m: collection.Map[String, Double], done: Set[String]): Double =
-      if (done.exists(failed)) -1.0 else names.filter(done).map(m).sum
     // the driver keeps only a bounded tail of output (~2,000 chars), so
     // the LAST line must be the one it parses: print the ~4 KB full
     // per-query line FIRST (humans / logs), write it to a file (the
@@ -166,10 +181,10 @@ object Bench {
     // end: an external timeout mid-pass must leave the newest COMPLETE
     // line parseable, never rc=124 with nothing (the round-17 failure)
     def emit(passesDone: Int, done: Set[String]): Unit = {
-      val total = totalOf(wall, done)
-      val loadStr = loads.map(l => f"$l%.2f").mkString("[", ",", "]")
-      val headline = s"""{"metric":"total","value":$total,"unit":"sec","cpu_total":${totalOf(cpu, done)},"passes":$passesDone,"load_avg":$loadStr,"nqueries":${done.size},"sf":"$sfDir"}"""
-      val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":${fmt(wall, done)},"queries_cpu":${fmt(cpu, done)},"cpu_total":${totalOf(cpu, done)},"passes":$passesDone,"load_avg":$loadStr,"sf":"$sfDir"}"""
+      val total = t.wallTotal(done)
+      val loadStr = t.loads.map(l => f"$l%.2f").mkString("[", ",", "]")
+      val headline = s"""{"metric":"total","value":$total,"unit":"sec","cpu_total":${t.cpuTotal(done)},"passes":$passesDone,"load_avg":$loadStr,"nqueries":${done.size},"sf":"$sfDir"}"""
+      val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":${fmt(t.wall, done)},"queries_cpu":${fmt(t.cpu, done)},"cpu_total":${t.cpuTotal(done)},"passes":$passesDone,"load_avg":$loadStr,"sf":"$sfDir"}"""
       println(full)
       println(headline)
       System.out.flush()
@@ -179,45 +194,26 @@ object Bench {
         System.err.println(s"[bench] could not write $outFile: ${e.getMessage}")
       }
     }
-
-    var pass = 0
-    var lastPassSec = 0.0
-    var continue = true
-    while (continue && pass < passes) {
-      val tPass = System.nanoTime()
-      loads += osBean.getSystemLoadAverage
-      val done = collection.mutable.Set[String]()
-      names.foreach { name =>
-        val c0 = osBean.getProcessCpuTime
-        val t0 = System.nanoTime()
-        try {
-          consume(SparkEntry.queries(name)(spark, sfDir))
-          wall(name) = math.min(wall(name), (System.nanoTime() - t0) / 1e9)
-          cpu(name) = math.min(cpu(name), (osBean.getProcessCpuTime - c0) / 1e9)
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-            failed += name
-        }
-        done += name
-        // pass 1 has no complete line yet — the only window where a
-        // timeout could still leave nothing. Emit a partial cumulative
-        // line periodically ("passes":0 + the shrunken nqueries mark
-        // it as partial, values are real per-query minima so far)
-        if (pass == 0 && done.size % 40 == 0 && done.size < names.size)
-          emit(0, done.toSet)
-      }
-      pass += 1
-      lastPassSec = (System.nanoTime() - tPass) / 1e9
-      emit(pass, names.toSet)
-      // adaptive pass count: stop early when the budget cannot fit
-      // another pass (1.15 = headroom for ambient repricing mid-pass)
-      continue = elapsedSec + 1.15 * lastPassSec <= budgetSec
-      if (!continue && pass < passes)
-        System.err.println(
-          f"[bench] budget stop after pass $pass: elapsed $elapsedSec%.0f s" +
-            f" + est ${1.15 * lastPassSec}%.0f s > budget $budgetSec%.0f s")
-    }
+    timePasses(t, passes)(
+      run = name => consume(SparkEntry.queries(name)(spark, sfDir)),
+      // pass 1 has no complete line yet — the only window where a
+      // timeout could still leave nothing. Emit a partial cumulative
+      // line periodically ("passes":0 + the shrunken nqueries mark
+      // it as partial, values are real per-query minima so far)
+      afterRow = (pass, _, n) =>
+        if (pass == 0 && n % 40 == 0 && n < names.size)
+          emit(0, names.take(n).toSet),
+      afterPass = { (pass, passSec) =>
+        emit(pass, names.toSet)
+        // adaptive pass count: stop early when the budget cannot fit
+        // another pass (1.15 = headroom for ambient repricing mid-pass)
+        val continue = elapsedSec + 1.15 * passSec <= budgetSec
+        if (!continue && pass < passes)
+          System.err.println(
+            f"[bench] budget stop after pass $pass: elapsed $elapsedSec%.0f s" +
+              f" + est ${1.15 * passSec}%.0f s > budget $budgetSec%.0f s")
+        continue
+      })
     spark.stop()
   }
 }

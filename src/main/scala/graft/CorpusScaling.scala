@@ -1,15 +1,15 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Corpus-size scaling bench for the HEAVY query family.
+/** Corpus-size scaling for the HEAVY query family, driven by
+  * `graft.Dev scale`.
   *
   * Every per-round bench row is sf0.1, where a ~0.3-0.5 s planning/
   * scheduling floor per query dominates the data path (SCALING.md §1)
   * — so none of those rows says how the heavy operators grow with the
-  * CORPUS. This main times exactly that: the heaviest queries
+  * CORPUS. `Dev scale` times exactly that: the heaviest queries
   * (`q_dedup_family`, `q_ngram_overlap`, `q_containment`,
   * `q_ivf_recall`, `q_dedup_embedding`, `q_pack_sequences`,
   * `q_lsh_recall` — the `defaultHeavy` list below) over the
@@ -39,51 +39,14 @@ import org.apache.spark.sql.functions._
   * ground-truth side is O(K·n) — one more linear scan; the 1×-4×
   * points still grow sample×corpus because the cap hasn't bound yet.
   *
-  * Usage: SPARK_GRAFT_CPUS=32 SPARK_GRAFT_MULTS=1,2,4,8
-  *        sbt "runMain graft.CorpusScaling" → one JSON line
-  *        (also written to corpus_scaling.json).
+  * Usage: `sbt "runMain graft.Dev scale <sfDir> [1,2,4,8] [q,...]"`
+  * → one JSON line (also written to corpus_scaling.json).
   */
 object CorpusScaling {
 
-  private val defaultHeavy = Seq(
+  private[graft] val defaultHeavy = Seq(
     "q_dedup_family", "q_ngram_overlap", "q_containment", "q_ivf_recall",
     "q_dedup_embedding", "q_pack_sequences", "q_lsh_recall")
-
-  /** SPARK_GRAFT_QUERIES narrows the run to a comma-separated subset
-    * (e.g. after changing one operator, re-fit just its curve without
-    * paying for the whole family). */
-  private def heavy: Seq[String] =
-    sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(defaultHeavy)
-
-  /** Cumulative executor spill (memory + disk bytes) across a timed
-    * window — the graceful-degradation evidence for the constrained-
-    * heap runs in SCALING.md: under memory pressure the numbers to
-    * see are spill RISING while wall degrades smoothly, never an
-    * OOM. */
-  private final class SpillListener extends SparkListener {
-    val memB = new java.util.concurrent.atomic.AtomicLong(0L)
-    val diskB = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) {
-        memB.addAndGet(m.memoryBytesSpilled)
-        diskB.addAndGet(m.diskBytesSpilled)
-      }
-    }
-    def reset(): Unit = { memB.set(0L); diskB.set(0L) }
-    /** Poll the async bus until the totals hold still (bounded). */
-    def settled(): (Long, Long) = {
-      var last = (-1L, -1L); var stable = 0; var waited = 0
-      while (stable < 2 && waited < 2000) {
-        Thread.sleep(100); waited += 100
-        val now = (memB.get(), diskB.get())
-        if (now == last) stable += 1 else { stable = 0; last = now }
-      }
-      (memB.get(), diskB.get())
-    }
-  }
 
   /** Materialize the mult× salted corpus dir (idempotent per
     * (sfDir, mult)): documents.parquet + embeddings.parquet (the
@@ -96,138 +59,65 @@ object CorpusScaling {
     * honestly per-key. */
   def ensureReplicatedDir(spark: SparkSession, sfDir: String, mult: Int): String =
     graft.sources.LayoutStore.ensure(sfDir, s"scale_x$mult", "r14") { path =>
-      val ev0 = spark.read.parquet(s"$sfDir/events.parquet")
-      val evMaxes = ev0.agg(max(col("event_id")), max(col("user_id"))).first()
-      val evBase = evMaxes.getLong(0) + 1L
-      val userBase = evMaxes.getLong(1) + 1L
-      (0 until mult).map { i =>
+      def table(name: String) = spark.read.parquet(s"$sfDir/$name.parquet")
+      // id ranges derived from the corpus' own max ids — hardcoded
+      // offsets would silently collide on large-id corpora
+      def base(df: DataFrame, key: String) =
+        df.agg(max(col(key))).first().getLong(0) + 1L
+      def replicate(name: String)(replica: Int => DataFrame): Unit =
+        (0 until mult).map(replica).reduce(_ unionByName _)
+          .write.mode("overwrite").parquet(s"$path/$name.parquet")
+      def shifted(df: DataFrame, i: Int, keys: (String, Long)*) =
+        keys.foldLeft(df) { case (d, (k, by)) =>
+          d.withColumn(k, col(k) + lit(i.toLong * by)) }
+
+      val ev0 = table("events")
+      val evBase = base(ev0, "event_id")
+      val userBase = base(ev0, "user_id")
+      replicate("events") { i =>
         ev0.select(
           (col("event_id") + lit(i.toLong * evBase)).as("event_id"),
           col("ts"),
           (col("user_id") + lit(i.toLong * userBase)).as("user_id"),
           col("event_type"), col("value"), col("props"))
-      }.reduce(_ unionByName _)
-        .write.mode("overwrite").parquet(s"$path/events.parquet")
-
-      val ord0 = spark.read.parquet(s"$sfDir/orders.parquet")
-      val cust0 = spark.read.parquet(s"$sfDir/customer.parquet")
-      val ordBase = ord0.agg(max(col("o_orderkey"))).first().getLong(0) + 1L
-      val custBase = cust0.agg(max(col("c_custkey"))).first().getLong(0) + 1L
-      (0 until mult).map { i =>
-        ord0.withColumn("o_orderkey", col("o_orderkey") + lit(i.toLong * ordBase))
-          .withColumn("o_custkey", col("o_custkey") + lit(i.toLong * custBase))
-      }.reduce(_ unionByName _)
-        .write.mode("overwrite").parquet(s"$path/orders.parquet")
-      (0 until mult).map { i =>
-        cust0.withColumn("c_custkey", col("c_custkey") + lit(i.toLong * custBase))
-      }.reduce(_ unionByName _)
-        .write.mode("overwrite").parquet(s"$path/customer.parquet")
+      }
+      val ord0 = table("orders")
+      val cust0 = table("customer")
+      val ordBase = base(ord0, "o_orderkey")
+      val custBase = base(cust0, "c_custkey")
+      replicate("orders")(shifted(ord0, _, "o_orderkey" -> ordBase, "o_custkey" -> custBase))
+      replicate("customer")(shifted(cust0, _, "c_custkey" -> custBase))
       // lineitem/part (the A18/Q17 pair): orderkeys shift with their
       // orders, partkeys with their parts; p_brand stays, so per-brand
       // part density is constant — the brand-filtered fact slice grows
       // linearly like everything else
-      val li0 = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      val part0 = spark.read.parquet(s"$sfDir/part.parquet")
-      val partBase = part0.agg(max(col("p_partkey"))).first().getLong(0) + 1L
-      (0 until mult).map { i =>
-        li0.withColumn("l_orderkey", col("l_orderkey") + lit(i.toLong * ordBase))
-          .withColumn("l_partkey", col("l_partkey") + lit(i.toLong * partBase))
-      }.reduce(_ unionByName _)
-        .write.mode("overwrite").parquet(s"$path/lineitem.parquet")
-      (0 until mult).map { i =>
-        part0.withColumn("p_partkey", col("p_partkey") + lit(i.toLong * partBase))
-      }.reduce(_ unionByName _)
-        .write.mode("overwrite").parquet(s"$path/part.parquet")
-      val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
-      // id ranges derived from the corpus' own max ids — hardcoded
-      // offsets would silently collide on large-id corpora
-      val docBase = docs0.agg(max(col("doc_id"))).first().getLong(0) + 1L
-      val docs = (0 until mult).map { i =>
+      val li0 = table("lineitem")
+      val part0 = table("part")
+      val partBase = base(part0, "p_partkey")
+      replicate("lineitem")(shifted(li0, _, "l_orderkey" -> ordBase, "l_partkey" -> partBase))
+      replicate("part")(shifted(part0, _, "p_partkey" -> partBase))
+
+      val docs0 = table("documents")
+      val docBase = base(docs0, "doc_id")
+      replicate("documents") { i =>
         docs0.select(
           (col("doc_id") + lit(i.toLong * docBase)).as("doc_id"),
           regexp_replace(col("text"), "(\\S+)", s"$$1r$i").as("text"),
           col("lang"), col("source"), col("n_chars"))
-      }.reduce(_ unionByName _)
-      docs.write.mode("overwrite").parquet(s"$path/documents.parquet")
-
-      val emb0 = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      val embBase = emb0.agg(max(col("vec_id"))).first().getLong(0) + 1L
+      }
+      val emb0 = table("embeddings")
+      val embBase = base(emb0, "vec_id")
       val dim = emb0.select(size(col("embedding"))).first().getInt(0)
-      val embs = (0 until mult).map { i =>
+      replicate("embeddings") { i =>
         val r = i % dim
         // circular shift by r: slice is 1-based; r=0 shifts nothing
-        val shifted =
+        val rotated =
           if (r == 0) col("embedding")
           else concat(slice(col("embedding"), r + 1, dim - r),
             slice(col("embedding"), 1, r))
         emb0.select(
           (col("vec_id") + lit(i.toLong * embBase)).as("vec_id"),
-          shifted.as("embedding"), col("label"))
-      }.reduce(_ unionByName _)
-      embs.write.mode("overwrite").parquet(s"$path/embeddings.parquet")
-    }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val mults = sys.env.getOrElse("SPARK_GRAFT_MULTS", "1,2,4,8")
-      .split(",").map(_.trim.toInt).toSeq
-    val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", (cpus.toInt * 3).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val osBean = java.lang.management.ManagementFactory.getPlatformMXBean(
-      classOf[com.sun.management.OperatingSystemMXBean])
-
-    val dirs = mults.map(m => m -> ensureReplicatedDir(spark, sfDir, m)).toMap
-    val spill = new SpillListener
-    spark.sparkContext.addSparkListener(spill)
-    // untimed warm-up at 1x absorbs codegen/classloading/Catalyst init
-    heavy.foreach(nm => Bench.consume(SparkEntry.queries(nm)(spark, dirs(mults.min))))
-
-    // wall minima per (mult, query), pass-major like graft.Bench so
-    // one noisy window cannot poison all passes of a config; spill is
-    // the MAX across passes (the graceful-degradation evidence — an
-    // undercounted pass must not hide pressure)
-    val wall = collection.mutable.Map[(Int, String), Double]()
-      .withDefaultValue(Double.MaxValue)
-    val spillMb = collection.mutable.Map[(Int, String), Double]()
-      .withDefaultValue(0.0)
-    val loads = (0 until passes).map { _ =>
-      val load = osBean.getSystemLoadAverage
-      for (m <- mults; nm <- heavy) {
-        spill.reset()
-        val t0 = System.nanoTime()
-        Bench.consume(SparkEntry.queries(nm)(spark, dirs(m)))
-        val sec = (System.nanoTime() - t0) / 1e9
-        val (memB, diskB) = spill.settled()
-        wall((m, nm)) = math.min(wall((m, nm)), sec)
-        spillMb((m, nm)) =
-          math.max(spillMb((m, nm)), (memB + diskB) / 1e6)
+          rotated.as("embedding"), col("label"))
       }
-      load
     }
-    val sizesJson = mults.map { m =>
-      val qs = heavy.map(nm => "\"" + nm + f"\":${wall((m, nm))}%.3f")
-        .mkString("{", ",", "}")
-      s""""$m":$qs"""
-    }.mkString("{", ",", "}")
-    val spillJson = mults.map { m =>
-      val qs = heavy.map(nm => "\"" + nm + f"\":${spillMb((m, nm))}%.1f")
-        .mkString("{", ",", "}")
-      s""""$m":$qs"""
-    }.mkString("{", ",", "}")
-    val heapMb = Runtime.getRuntime.maxMemory() / (1024 * 1024)
-    val loadStr = loads.map(l => f"$l%.2f").mkString("[", ",", "]")
-    val json =
-      s"""{"metric":"corpus_scaling","sf":"$sfDir","mults":[${mults.mkString(",")}],"passes":$passes,"heap_mb":$heapMb,"load_avg":$loadStr,"sizes":$sizesJson,"spill_mb":$spillJson}"""
-    println(json)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("corpus_scaling.json"), json + "\n")
-    spark.stop()
-  }
 }

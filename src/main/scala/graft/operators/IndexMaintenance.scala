@@ -136,16 +136,6 @@ object IndexMaintenance {
     reports
   }
 
-  /** All parquet data files under a partitioned store root. */
-  private[graft] def dataFiles(root: File): Seq[File] = {
-    def walk(f: File): Seq[File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty[File]).toSeq.flatMap(walk)
-      else if (f.getName.endsWith(".parquet")) Seq(f)
-      else Seq.empty
-    walk(root)
-  }
-
   /** `q_index_maintain` — the index-store MAINTENANCE episode as one
     * driver-checked row: start from D13's steady-state base (the
     * ensured half-corpus index), replay [[maintainBatches]] daily

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorFunctions.{cosineSim, l2Norm}
+import graft.functions.VectorFunctions.l2Norm
 import graft.sources.Tables
 
 /** D32 — `q_kmeans`: the FLAT k-means convergence trajectory —
@@ -40,9 +40,6 @@ object KMeans {
 
   private[graft] val kmeansK = 8
   private[graft] val kmeansIters = 3
-
-  private def score6 = (e: org.apache.spark.sql.Column,
-      q: org.apache.spark.sql.Column) => round(cosineSim(e, q), 6)
 
   /** Deterministic seeds: the [[kmeansK]] lowest vec_ids, cell =
     * their rank − 1 (the seedCentroids convention). */

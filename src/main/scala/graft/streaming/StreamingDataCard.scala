@@ -44,12 +44,8 @@ import graft.operators.TextAnalysis
   * live plus an unreferenced staged dir the retention sweep ages
   * out; the two-generation grace window the old pointer GC kept is
   * now [[graft.sources.TableFormat.vacuumGenerations]] with
-  * keep = 2. States written by BOTH previous layouts still read and
-  * upgrade in place: the `_CARD`-pointer lineage (including its
-  * newest-`_SUCCESS`-complete-card damage recovery) and the
-  * pre-pointer single `card/` dir, each consulted only when no
-  * table-format generation exists, and retired with the same grace
-  * rule once the new lineage is two generations deep. */
+  * keep = 2. The table-format lineage is the only on-disk layout: a
+  * state dir with no committed generation reads as an empty card. */
 object StreamingDataCard {
 
   private val docSchema = StructType(Seq(
@@ -58,86 +54,6 @@ object StreamingDataCard {
     StructField("lang", StringType),
     StructField("source", StringType),
     StructField("n_chars", LongType)))
-
-  private def pointerPath(cardPath: String) =
-    java.nio.file.Paths.get(cardPath, "_CARD")
-
-  /** Newest COMPLETE versioned card on disk (its parquet `_SUCCESS`
-    * marker present — a crash mid-write leaves none), for pointer
-    * recovery. Dirs ahead of a lost pointer are only ever fully
-    * written + uncommitted, so resolving to the newest complete one
-    * is safe: its content is exactly pointed-card + that batch's
-    * delta, and the replayed batch skips on the id guard. */
-  private def newestCompleteCard(cardPath: String): Long =
-    Option(new java.io.File(cardPath).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(d => d.getName.startsWith("card_") &&
-        new java.io.File(d, "_SUCCESS").isFile)
-      .flatMap(d => d.getName.stripPrefix("card_").toLongOption)
-      .sorted.lastOption.getOrElse(-1L)
-
-  /** The PRE-pointer layout's committed batch id (`_STREAM_BATCH`
-    * marker beside a single mutable `card/` dir) — consulted only
-    * when no versioned card exists, so a state written by the
-    * previous release keeps its folded history across the upgrade
-    * instead of silently restarting from one batch's delta (the
-    * stream checkpoint would never re-deliver the old files). */
-  private def legacyCommitted(cardPath: String): Long = {
-    val f = java.nio.file.Paths.get(cardPath, "_STREAM_BATCH")
-    if (!java.nio.file.Files.exists(f) ||
-      !new java.io.File(cardPath, "card").isDirectory) -1L
-    else
-      java.nio.file.Files.readString(f).trim.toLongOption.getOrElse(-1L)
-  }
-
-  /** The committed batch id: the `_CARD` pointer's content, written
-    * only by ATOMIC_MOVE so it can never be torn. A missing or
-    * unparseable pointer (fresh state, manual damage) degrades to
-    * the newest complete versioned card on disk, then to the legacy
-    * single-dir layout — a fresh state has neither and reads -1 —
-    * instead of reading folded history as empty or throwing
-    * NumberFormatException on every subsequent micro-batch. */
-  private def lastCommitted(cardPath: String): Long = {
-    val scanned = versionedCommitted(cardPath)
-    if (scanned >= 0) scanned else legacyCommitted(cardPath)
-  }
-
-  /** The committed id within the VERSIONED lineage only: the pointer
-    * content, degrading to the newest complete card dir when the
-    * pointer is missing or unparseable; -1 when no versioned card has
-    * ever committed. The ONE place the pointer file is parsed —
-    * [[lastCommitted]] (the batch-id guard) and [[currentCardDir]]
-    * (the fold base) both resolve through it, so they can never
-    * disagree on the lineage. */
-  private def versionedCommitted(cardPath: String): Long = {
-    val f = pointerPath(cardPath)
-    if (!java.nio.file.Files.exists(f)) newestCompleteCard(cardPath)
-    else
-      java.nio.file.Files.readString(f).trim.toLongOption
-        .getOrElse(newestCompleteCard(cardPath))
-  }
-
-  /** The directory of the committed card, if any batch has committed
-    * and its table still exists: the versioned `card_<id>` dir, or
-    * the legacy `card/` dir ONLY when the state predates the pointer
-    * format entirely (the first post-upgrade commit folds it into a
-    * versioned card and garbage-collects it). Provenance matters: an
-    * id resolved from the VERSIONED lineage whose dir has gone
-    * missing (manual damage) degrades to the newest complete
-    * versioned card, never to a stale pre-upgrade `card/` left by a
-    * crashed migration — that dir's history predates every versioned
-    * commit, and serving it as the fold base would silently drop
-    * everything folded since the upgrade. */
-  private def currentCardDir(cardPath: String): Option[java.io.File] = {
-    val versioned = versionedCommitted(cardPath)
-    if (versioned >= 0)
-      Some(new java.io.File(cardPath, s"card_$versioned"))
-        .filter(_.isDirectory)
-        .orElse(Some(newestCompleteCard(cardPath)).filter(_ >= 0)
-          .map(b => new java.io.File(cardPath, s"card_$b"))
-          .filter(_.isDirectory))
-    else Some(new java.io.File(cardPath, "card")).filter(_.isDirectory)
-  }
 
   /** The additive per-(source, predicted-language) partials of a
     * document frame — the ONE fold rule both the micro-batch side
@@ -173,8 +89,6 @@ object StreamingDataCard {
     val state = graft.sources.TableFormat.currentGenOption(cardPath)
       .map(g => graft.sources.TableFormat.readGen(spark, cardPath, g,
         StructType.fromDDL(stateSchema)))
-      .orElse(currentCardDir(cardPath).map(d =>
-        spark.read.schema(stateSchema).parquet(d.getPath)))
       .getOrElse(
         spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
           StructType.fromDDL(stateSchema)))
@@ -194,30 +108,17 @@ object StreamingDataCard {
       .orderBy(col("source"))
   }
 
-  /** The idempotent-writer identity this checkpoint implies — the
-    * versioned sink's derivation rule (a fresh checkpoint location
-    * is a fresh writer). */
-  private def appIdFor(checkpointDir: String): String = {
-    val c = new java.util.zip.CRC32C()
-    c.update(java.nio.file.Paths.get(checkpointDir).toAbsolutePath
-      .normalize.toString
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    f"dcard_${c.getValue}%08x"
-  }
-
-  /** The committed batch id across ALL lineages: this writer's
-    * table-format txn record (the new layout); then — for a RESET
-    * checkpoint whose derived appId finds no record against a table
-    * other writers folded — the newest record of ANY writer, which
-    * preserves the pointer era's appId-blind semantics (redelivered
-    * batches SKIP rather than double-fold: a fresh checkpoint
-    * re-delivers files whose partials the card already holds); then
-    * the legacy pointer/marker resolution for pre-upgrade states. */
+  /** The committed batch id: this writer's table-format txn record;
+    * then — for a RESET checkpoint whose derived appId finds no record
+    * against a table other writers folded — the newest record of ANY
+    * writer, so redelivered batches SKIP rather than double-fold (a
+    * fresh checkpoint re-delivers files whose partials the card
+    * already holds); -1 when nothing has committed. */
   private def lastCommittedAny(cardPath: String, appId: String): Long = {
     val txns = graft.sources.TableFormat.txnTable(cardPath)
     txns.get(appId)
       .orElse(if (txns.nonEmpty) Some(txns.values.max) else None)
-      .getOrElse(lastCommitted(cardPath))
+      .getOrElse(-1L)
   }
 
   /** Start the card maintenance over a document drop directory.
@@ -226,7 +127,8 @@ object StreamingDataCard {
       checkpointDir: String, availableNow: Boolean = false,
       maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(cardPath))
-    val appId = appIdFor(checkpointDir)
+    // the versioned sink's rule: a fresh checkpoint is a fresh writer
+    val appId = StreamingVersionedSink.appIdFor(checkpointDir, "dcard")
     val reader = spark.readStream.schema(docSchema)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     val docs = reader.parquet(inputDir)
@@ -236,14 +138,10 @@ object StreamingDataCard {
         import graft.sources.TableFormat
         if (batchId > lastCommittedAny(cardPath, appId) && !batch.isEmpty) {
           val delta = partials(batch)
-          // fold base: the current table-format generation, or a
-          // pre-upgrade state (pointer layout, then single-dir) so an
-          // upgraded deployment keeps its folded history
+          // fold base: the current table-format generation
           val prevState = TableFormat.currentGenOption(cardPath)
             .map(g => TableFormat.readGen(spark, cardPath, g,
               StructType.fromDDL(stateSchema)))
-            .orElse(currentCardDir(cardPath).map(d =>
-              spark.read.schema(stateSchema).parquet(d.getPath)))
           val merged = prevState match {
             case Some(prev) =>
               prev.unionByName(delta)
@@ -267,19 +165,6 @@ object StreamingDataCard {
           // compromise the old pointer GC kept), now the format's own
           // retention sweep
           if (g >= 2) TableFormat.vacuumGenerations(cardPath, keep = 2)
-          // LEGACY retirement with the same grace rule: once the new
-          // lineage is two generations deep, every pre-upgrade
-          // artifact is at least two generations stale
-          if (g >= 1) {
-            Option(new java.io.File(cardPath).listFiles())
-              .getOrElse(Array.empty[java.io.File])
-              .filter(d => d.isDirectory && (d.getName == "card" ||
-                d.getName.startsWith("card_")))
-              .foreach(graft.sources.LayoutStore.deleteRecursively)
-            java.nio.file.Files.deleteIfExists(pointerPath(cardPath))
-            java.nio.file.Files.deleteIfExists(
-              java.nio.file.Paths.get(cardPath, "_STREAM_BATCH"))
-          }
           ()
         }
       }

@@ -137,16 +137,14 @@ object StreamingVersionedSink {
     * every new batch look like a replay. Deriving the id from the
     * canonical checkpoint path gives that rotation for free: a new
     * checkpoint dir is a new writer; restoring the SAME checkpoint
-    * keeps the same identity (replay detection intact). */
-  private[graft] def appIdFor(checkpointDir: String): String = {
-    val canon = Paths.get(checkpointDir).toAbsolutePath.normalize.toString
-    f"vsink_${crc32c(canon)}%08x"
-  }
-
-  private def crc32c(s: String): Long = {
+    * keeps the same identity (replay detection intact). The data-card
+    * sink derives its id by the same rule under its own prefix. */
+  private[graft] def appIdFor(checkpointDir: String,
+      prefix: String = "vsink"): String = {
     val c = new java.util.zip.CRC32C()
-    c.update(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    c.getValue
+    c.update(Paths.get(checkpointDir).toAbsolutePath.normalize.toString
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    f"${prefix}_${c.getValue}%08x"
   }
 
   /** Start the stream: parquet drops under `inputDir` merge into the

@@ -1,38 +1,18 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** Job-count pins for specs. Listener events arrive asynchronously, so
-  * a count is read only after a SENTINEL job — submitted after the
-  * measured body — has reached the listener: the bus delivers a
-  * queue's events in order, so every earlier event has arrived too. */
+  * a count is read only after [[JobProbe.drain]]'s sentinel job has
+  * reached the listeners. */
 object JobCounting {
-
-  private val SentinelKey = "graft.test.sentinel"
 
   /** Block until every listener event posted before this call has been
     * delivered to the listeners added with `addSparkListener`. */
-  def drain(spark: SparkSession): Unit = {
-    val sc = spark.sparkContext
-    val token = java.util.UUID.randomUUID().toString
-    val seen = new CountDownLatch(1)
-    val watcher = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(SentinelKey) == token))
-          seen.countDown()
-    }
-    sc.addSparkListener(watcher)
-    try {
-      sc.setLocalProperty(SentinelKey, token)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty(SentinelKey, null)
-      assert(seen.await(60, TimeUnit.SECONDS), "listener bus never drained")
-    } finally sc.removeSparkListener(watcher)
-  }
+  def drain(spark: SparkSession): Unit = JobProbe.drain(spark)
 
   /** `body`'s result and the number of Spark jobs submitted while it
     * ran (the drain's own sentinel job excluded). */
@@ -41,8 +21,7 @@ object JobCounting {
     val n = new AtomicInteger(0)
     val counter = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).forall(_.getProperty(SentinelKey) == null))
-          n.incrementAndGet()
+        if (!JobProbe.isSentinel(e)) n.incrementAndGet()
     }
     sc.addSparkListener(counter)
     try {

@@ -213,9 +213,8 @@ class LiveDaySpec extends SparkTestBase {
     // ---- card ≡ the batch fold over the same day, read back through
     // the SAME reader
     val refCard = Files.createTempDirectory("graft-liveday-refcard").toFile
-    StreamingDataCard.partials(deltaDocs)
-      .write.parquet(s"${refCard.getAbsolutePath}/card_0")
-    Files.writeString(new File(refCard, "_CARD").toPath, "0")
+    graft.sources.TableFormat.commitGen(
+      StreamingDataCard.partials(deltaDocs), refCard.getAbsolutePath, 0L)
     val liveCard = StreamingDataCard.readCard(spark, s"$root/card")
       .collect().map(_.toString).sorted.toSeq
     val batchCard = StreamingDataCard

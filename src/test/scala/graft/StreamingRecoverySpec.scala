@@ -338,9 +338,8 @@ class StreamingRecoverySpec extends SparkTestBase {
     // expected card: the SAME fold rule over the whole corpus in one
     // batch pass, read back through the SAME readCard path (so
     // rounding/ordering can't diverge between the two sides)
-    StreamingDataCard.partials(t.documents)
-      .write.parquet(s"${ref.getAbsolutePath}/card_0")
-    Files.writeString(new File(ref, "_CARD").toPath, "0")
+    graft.sources.TableFormat.commitGen(
+      StreamingDataCard.partials(t.documents), ref.getAbsolutePath, 0L)
     def rows(dir: File) =
       StreamingDataCard.readCard(spark, dir.getAbsolutePath).collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
@@ -362,98 +361,6 @@ class StreamingRecoverySpec extends SparkTestBase {
       ckpt.getAbsolutePath, availableNow = true, maxFilesPerTrigger = Some(1))
       .awaitTermination()
     assert(rows(card) === rows(ref), "resume double-folded the card")
-
-    // --- pointer-damage recovery: the commit pointer is the ONLY
-    // mutable metadata, so the failure drill is on it. A garbage or
-    // deleted pointer must degrade to the newest COMPLETE versioned
-    // card (scan recovery), never to an empty card (history loss) or
-    // a NumberFormatException (a permanently failing stream).
-    val full = rows(card)
-    Files.writeString(new File(card, "_CARD").toPath, "not-a-batch-id")
-    assert(rows(card) === full, "garbage pointer lost the folded card")
-    new File(card, "_CARD").delete()
-    assert(rows(card) === full, "missing pointer lost the folded card")
-    // an INCOMPLETE card ahead of the history (crash mid-write leaves
-    // no parquet _SUCCESS) must not win the scan
-    val torn = new File(card, "card_99")
-    torn.mkdirs()
-    Files.writeString(new File(torn, "part-00000.parquet").toPath, "torn")
-    assert(rows(card) === full, "a _SUCCESS-less card dir won recovery")
-  }
-
-  test("StreamingDataCard: a legacy single-dir state upgrades in place " +
-    "without losing folded history") {
-    import graft.streaming.StreamingDataCard
-    val t = graft.sources.Tables(spark, sfDir)
-    val in = Files.createTempDirectory("graft-cardmig-in").toFile
-    val card = Files.createTempDirectory("graft-cardmig-state").toFile
-    val ckpt = Files.createTempDirectory("graft-cardmig-ckpt").toFile
-    // batch 0 through the current code, then rewrite its state into
-    // the PRE-POINTER layout (single card/ dir + _STREAM_BATCH
-    // marker) — the faithful upgrade scenario shares the stream
-    // checkpoint, so post-upgrade batch ids continue past the marker
-    t.documents.filter(pmod(col("doc_id"), lit(3)) === 0)
-      .repartition(1).write.mode("append").parquet(in.getAbsolutePath)
-    new File(in, "_SUCCESS").delete()
-    StreamingDataCard.run(spark, in.getAbsolutePath, card.getAbsolutePath,
-      ckpt.getAbsolutePath, availableNow = true).awaitTermination()
-    // rewrite the committed state into the PRE-POINTER layout: the
-    // generation's parquet becomes the single mutable card/ dir, the
-    // table-format lineage disappears, only _STREAM_BATCH remains
-    val g = graft.sources.TableFormat.currentGen(card.getAbsolutePath)
-    assert(new File(card, s"gen_$g").renameTo(new File(card, "card")))
-    new File(card, "card/_txn").delete()
-    card.listFiles().filter(_.getName.startsWith("commit_"))
-      .foreach(_.delete())
-    Files.writeString(new File(card, "_STREAM_BATCH").toPath, "0")
-    // the legacy state READS as the committed card...
-    assert(StreamingDataCard.readCard(spark, card.getAbsolutePath)
-      .agg(sum(col("n_docs"))).first().getLong(0) ===
-      t.documents.filter(pmod(col("doc_id"), lit(3)) === 0).count())
-    // ...and the next two post-upgrade batches FOLD it forward (not
-    // restart from one delta), then retire the legacy dir + marker
-    Seq(1, 2).foreach { k =>
-      t.documents.filter(pmod(col("doc_id"), lit(3)) === k)
-        .repartition(1).write.mode("append").parquet(in.getAbsolutePath)
-      new File(in, "_SUCCESS").delete()
-      StreamingDataCard.run(spark, in.getAbsolutePath, card.getAbsolutePath,
-        ckpt.getAbsolutePath, availableNow = true).awaitTermination()
-    }
-    val ref = Files.createTempDirectory("graft-cardmig-ref").toFile
-    StreamingDataCard.partials(t.documents)
-      .write.parquet(s"${ref.getAbsolutePath}/card_0")
-    Files.writeString(new File(ref, "_CARD").toPath, "0")
-    def rows(dir: File) =
-      StreamingDataCard.readCard(spark, dir.getAbsolutePath).collect()
-        .map(_.toSeq).toSeq
-    assert(rows(card) === rows(ref),
-      "post-upgrade folds must include the legacy history")
-    assert(!new File(card, "card").exists, "legacy card dir must retire")
-    assert(!new File(card, "_STREAM_BATCH").exists, "legacy marker must retire")
-  }
-
-  test("StreamingDataCard: a damaged versioned state degrades to the " +
-    "newest complete versioned card, never a stale pre-upgrade legacy dir") {
-    import graft.streaming.StreamingDataCard
-    val t = graft.sources.Tables(spark, sfDir)
-    val card = Files.createTempDirectory("graft-cardfall-state").toFile
-    // stale legacy leftovers from a crashed migration: only a third
-    // of the corpus, plus its marker
-    StreamingDataCard.partials(
-      t.documents.filter(pmod(col("doc_id"), lit(3)) === 0))
-      .write.parquet(new File(card, "card").getAbsolutePath)
-    Files.writeString(new File(card, "_STREAM_BATCH").toPath, "0")
-    // versioned lineage: batch 4 complete with the FULL corpus; the
-    // pointer names batch 5 whose dir was manually damaged away
-    StreamingDataCard.partials(t.documents)
-      .write.parquet(new File(card, "card_4").getAbsolutePath)
-    Files.writeString(new File(card, "_CARD").toPath, "5")
-    val total = StreamingDataCard.readCard(spark, card.getAbsolutePath)
-      .agg(sum(col("n_docs"))).first().getLong(0)
-    // serving the legacy dir here would silently drop every batch
-    // folded since the upgrade (it would read a third of the corpus)
-    assert(total === t.documents.count(),
-      "a versioned-lineage id must degrade WITHIN the versioned cards")
   }
 
   test("StreamingSpanDedup: killed mid-stream and restarted, the streamed " +
@@ -892,8 +799,8 @@ class StreamingRecoverySpec extends SparkTestBase {
       maxFilesPerTrigger = Some(1)).awaitTermination()
     assert(TableFormat.currentGen(root) === 3L)
     // per generation: files REWRITTEN live in the generation's own
-    // dir; carried ones point elsewhere — the SkipProbe fact at the
-    // sink (per-batch cost O(delta-touched), not O(table))
+    // dir; carried ones point elsewhere — SCALING.md §20's scoped
+    // rewrite at the sink (per-batch cost O(delta-touched), not O(table))
     (1L to 3L).foreach { g =>
       val files = TableFormat.readManifest(spark, root, g)
         .select(col("file")).collect().map(_.getString(0))
