@@ -93,8 +93,6 @@ object Dedup {
     * projection and a lone explode consumer: still ~2× slower than
     * this shape at sf0.1 — the interpreted HOF allocation dominates;
     * reverted.) */
-  private def shingleRows(t: Tables): DataFrame = shingleRowsOf(t.documents)
-
   private def shingleRowsOf(documents: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     documents

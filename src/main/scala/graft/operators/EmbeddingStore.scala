@@ -642,16 +642,15 @@ object EmbeddingStore {
     // which is what lets indexStats report the appended fraction the
     // rebuild advice watches
     val cellsRoot = s"$path/cells"
-    val cg = TableFormat.currentGenOption(cellsRoot).map(_ + 1).getOrElse(0L)
     // bloom on doc_id: the probe path's QUERY-VECTOR fetch is an
     // equality lookup on a column this layout does NOT cluster by
     // (files cluster on cell, so every file's doc_id range spans the
     // query) — the per-file sketch prunes that lookup to the one
     // file holding the id, and propagates through every appendScoped
-    TableFormat.commitGenManifested(
+    val cg = TableFormat.commitGenManifested(
       finalAssign.withColumn("gen", lit(0))
         .repartitionByRange(k, col("cell"), col("doc_id")),
-      cellsRoot, cg, Seq("cell", "doc_id"), bloomKeys = Seq("doc_id"))
+      cellsRoot, Seq("cell", "doc_id"), bloomKeys = Seq("doc_id"))
     // the centroids table is an independent substore — its commit
     // overlaps the sidecar builds below (guide §2.6); only the cells
     // commit above is a strict prerequisite (the sidecars read the
@@ -659,11 +658,8 @@ object EmbeddingStore {
     import scala.concurrent.{Await, Future}
     import graft.Concurrency.commitEc
     import scala.concurrent.duration.Duration
-    val centRoot = s"$path/centroids"
     val fCent = Future(TableFormat.commitGenManifested(
-      centroids.coalesce(1), centRoot,
-      TableFormat.currentGenOption(centRoot).map(_ + 1).getOrElse(0L),
-      Seq("cell")))
+      centroids.coalesce(1), s"$path/centroids", Seq("cell")))
     // PQ sidecars (codebooks + cell-clustered codes) build from the
     // JUST-COMMITTED cells, not the lazy assignment frame — re-using
     // the materialized layout costs one read where re-evaluating
@@ -977,14 +973,6 @@ object EmbeddingStore {
   def searchIvfQuery(t: Tables): DataFrame =
     searchIvf(t.spark, ensureIndex(t), queryDocId = 0L, k = 10, probes = 2)
 
-  /** ANN over the persisted index: score the query against the tiny
-    * centroid table, probe the nearest `probes` cells, and scan ONLY
-    * those partitions (visible as PartitionFilters/partition pruning
-    * in the physical plan) for exact scoring. The probed-cell ids are
-    * collected to the driver — that is index METADATA (a handful of
-    * ints, like the reference's stored watermark), and turning them
-    * into literals is what lets the file listing prune partitions
-    * statically. */
   /** The probed-cell choice shared by the exact ([[searchIvf]]) and
     * compressed ([[ProductQuantizer.searchIvfPq]]) probes: top
     * `probes` refined centroids by 6dp-rounded cosine against the
@@ -992,15 +980,11 @@ object EmbeddingStore {
     * BEFORE the ranking (like every ranked score in the library) so
     * the choice is deterministic across engines and the oracle can
     * replay it. The returned ids are index METADATA (a handful of
-    * ints), bounded-collected. */
-  private[graft] def probeCells(spark: SparkSession, path: String,
-      queryDocId: Long, probes: Int): Array[Int] =
-    probeCellsWithQuery(spark, path, queryDocId, probes)._1
-
-  /** [[probeCells]] plus the query's stored vector, from the SAME
-    * bounded metadata job (the vector rides the collected probe rows
-    * instead of costing a second lookup) — every IVF probe scores
-    * against it. None when the id is not in the store. */
+    * ints, like the reference's stored watermark), bounded-collected;
+    * turning them into literals is what lets the file listing prune
+    * statically. The query's stored vector rides the SAME bounded
+    * metadata job (no second lookup) — every IVF probe scores against
+    * it. None when the id is not in the store. */
   private[graft] def probeCellsWithQuery(spark: SparkSession, path: String,
       queryDocId: Long, probes: Int): (Array[Int], Option[Seq[Float]]) = {
     val centroids = IndexCatalog.read(spark, path, "centroids")
@@ -1127,41 +1111,13 @@ object EmbeddingStore {
       .filter(col("score") >= minScore)
       .orderBy(col("score").desc, col("doc_id"))
 
-  /** D19 — `q_search_batch`: N ARBITRARY queries through the
-    * PERSISTED IVF index in ONE pass — the production batch-serving
-    * plan the reference's search entry implies at scale
-    * (engine.py:105 serves one query per call; a Spark deployment
-    * amortizes the index scan across the whole query batch instead
-    * of paying a probe round-trip per query, server.py:203's request
-    * loop turned into a single job).
-    *
-    * Plan: (1) ONE metadata job scores the centroid table against
-    * the broadcast query set and keeps the top `probes` cells per
-    * query (6dp-rounded cosine, cell tie-break — the
-    * [[probeCells]] rule per query); (2) the ≤ N·probes DISTINCT
-    * probed cell ids — index metadata, bounded-collected like every
-    * IVF-path collect — become partition-pruning literals, so the
-    * cells store is listed and scanned ONCE for the union of all
-    * queries' probes; (3) each scanned row scores only against the
-    * queries that probed its cell (broadcast equi-join on cell —
-    * never a queries × corpus cross product); (4) per-query exact
-    * top-k by window rank. The ranked row count is bounded by
-    * N · probes · τ ([[targetCellRows]] caps the expected cell size
-    * corpus-independently), so the final per-query window ranks a
-    * fixed-size candidate set no matter how big the store is.
-    *
-    * Determinism: probe choice and scores round to 6dp BEFORE
-    * ranking, ties break on cell/doc_id — the library's ranked-score
-    * contract, so DuckDB replays build + per-query probe + rank
-    * exactly. A query whose id exists in the store never matches
-    * itself (per-query self-exclusion, D8's rule). */
   /** The per-query probe choice for a BATCH of queries, in ONE pass:
     * every centroid × every broadcast query (metadata-scale: k cells
     * × N queries), top `probes` cells per query by 6dp-rounded
-    * cosine with the cell tie-break — the [[probeCells]] rule per
-    * query. Returns the eagerly-pinned (query_id, cell, qv) probe
-    * map (it feeds a metadata collect AND a candidate join in every
-    * consumer) — shared by the exact ([[searchIvfBatch]]) and
+    * cosine with the cell tie-break — the [[probeCellsWithQuery]]
+    * rule per query. Returns the eagerly-pinned (query_id, cell, qv)
+    * probe map (it feeds a metadata collect AND a candidate join in
+    * every consumer) — shared by the exact ([[searchIvfBatch]]) and
     * compressed ([[ProductQuantizer.searchIvfPqBatch]]) batch probes
     * so the two can never choose different cells. */
   private[operators] def batchProbeMap(spark: SparkSession, path: String,
@@ -1185,6 +1141,34 @@ object EmbeddingStore {
     collectBounded(probeMap.select(col("cell")).distinct(),
       bound, "batched probed cell ids").map(_.getInt(0))
 
+  /** D19 — `q_search_batch`: N ARBITRARY queries through the
+    * PERSISTED IVF index in ONE pass — the production batch-serving
+    * plan the reference's search entry implies at scale
+    * (engine.py:105 serves one query per call; a Spark deployment
+    * amortizes the index scan across the whole query batch instead
+    * of paying a probe round-trip per query, server.py:203's request
+    * loop turned into a single job).
+    *
+    * Plan: (1) ONE metadata job scores the centroid table against
+    * the broadcast query set and keeps the top `probes` cells per
+    * query (6dp-rounded cosine, cell tie-break — the
+    * [[probeCellsWithQuery]] rule per query); (2) the ≤ N·probes
+    * DISTINCT probed cell ids — index metadata, bounded-collected like
+    * every IVF-path collect — become partition-pruning literals, so the
+    * cells store is listed and scanned ONCE for the union of all
+    * queries' probes; (3) each scanned row scores only against the
+    * queries that probed its cell (broadcast equi-join on cell —
+    * never a queries × corpus cross product); (4) per-query exact
+    * top-k by window rank. The ranked row count is bounded by
+    * N · probes · τ ([[targetCellRows]] caps the expected cell size
+    * corpus-independently), so the final per-query window ranks a
+    * fixed-size candidate set no matter how big the store is.
+    *
+    * Determinism: probe choice and scores round to 6dp BEFORE
+    * ranking, ties break on cell/doc_id — the library's ranked-score
+    * contract, so DuckDB replays build + per-query probe + rank
+    * exactly. A query whose id exists in the store never matches
+    * itself (per-query self-exclusion, D8's rule). */
   def searchIvfBatch(spark: SparkSession, path: String, queries: DataFrame,
       k: Int, probes: Int = 2): DataFrame = {
     val probeMap = batchProbeMap(spark, path, queries, probes)

@@ -114,17 +114,14 @@ object IndexMaintenance {
         val root = s"$path/$sub"
         TableFormat.currentGenOption(root).map { g =>
           val beforeFiles = TableFormat.manifestFiles(spark, root, g)
-          verb(root, TableFormat.genSchema(root, g))
-          val afterFiles = TableFormat.manifestFiles(spark, root,
-            TableFormat.currentGen(root))
+          val after = verb(root, TableFormat.genSchema(root, g)).gen
+          val afterFiles = TableFormat.manifestFiles(spark, root, after)
           // bytes moved = the rewritten (non-carried) files' sizes;
           // the before-manifest names them, the filesystem prices them
           val carried = afterFiles.toSet
           val bytes = beforeFiles
             .filterNot(carried)
-            .map(f => new File(
-              if (f.startsWith("file:")) java.net.URI.create(f).getPath
-              else f).length())
+            .map(TableFormat.localFile(_).length())
             .sum
           CompactionReport(sub, beforeFiles.length.toLong,
             afterFiles.length.toLong, bytes)

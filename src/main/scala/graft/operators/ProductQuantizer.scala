@@ -186,22 +186,14 @@ object ProductQuantizer {
       .first().getInt(0)
     val m = dim / subDim
     val cb = codebookRows(assigned, dim)
-    val cbRoot = s"$path/pq_codebooks"
     graft.sources.TableFormat.commitGenManifested(
       spark.createDataFrame(cb).toDF("sub", "cid", "cvec").coalesce(1),
-      cbRoot,
-      graft.sources.TableFormat.currentGenOption(cbRoot)
-        .map(_ + 1).getOrElse(0L),
-      Seq("sub"))
+      s"$path/pq_codebooks", Seq("sub"))
     // the codes inherit the cells' (cell, doc_id) clustering (a pure
     // projection over the committed cell files — no shuffle), so the
     // sidecar's manifest prunes probe-identically to the cells'
-    val codesRoot = s"$path/pq_codes"
     graft.sources.TableFormat.commitGenManifested(
-      encodeWith(assigned, cb, m), codesRoot,
-      graft.sources.TableFormat.currentGenOption(codesRoot)
-        .map(_ + 1).getOrElse(0L),
-      Seq("cell", "doc_id"))
+      encodeWith(assigned, cb, m), s"$path/pq_codes", Seq("cell", "doc_id"))
   }
 
   /** Encode appended vectors against the PERSISTED codebooks and

@@ -91,14 +91,9 @@ object ScalarQuantizer {
     * sidecar, from the just-written cell layout (one read, not a
     * re-run of the assignment DAG). Cell-partitioned like `cells`
     * and `pq_codes`, so the probe prunes it at the file listing. */
-  def buildSq8(spark: SparkSession, cells: DataFrame, path: String): Unit = {
-    val root = s"$path/sq8_codes"
+  def buildSq8(spark: SparkSession, cells: DataFrame, path: String): Unit =
     graft.sources.TableFormat.commitGenManifested(
-      encodeSq8(cells), root,
-      graft.sources.TableFormat.currentGenOption(root)
-        .map(_ + 1).getOrElse(0L),
-      Seq("cell", "doc_id"))
-  }
+      encodeSq8(cells), s"$path/sq8_codes", Seq("cell", "doc_id"))
 
   /** Keep the sq8 sidecar append-consistent with the cells (the
     * [[ProductQuantizer.appendPq]] discipline) — unlike PQ there are

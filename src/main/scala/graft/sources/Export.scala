@@ -514,9 +514,7 @@ object Export {
       // rule): partition-type inference would corrupt a numeric-
       // looking source ("007" → 7) and a FULLY-purged store must
       // read as an empty frame, not a schema-inference failure
-      val docSchema =
-        "doc_id LONG, text STRING, lang STRING, n_chars LONG, source STRING"
-      def readBack(p: String) = spark.read.schema(docSchema).parquet(p)
+      def readBack(p: String) = spark.read.schema(Tables.docSchema).parquet(p)
       val listed = col("doc_id") % 97 === 0
       val takedown = readBack(store).filter(listed)
         .select(col("doc_id"))

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The CATALOG POINTER over a persisted multi-store index — the
@@ -41,50 +39,32 @@ object IndexCatalog {
   val stores: Seq[String] =
     Seq("cells", "centroids", "pq_codebooks", "pq_codes", "sq8_codes")
 
-  private def markerPath(path: String, g: Long) =
-    Paths.get(path, s"icommit_$g")
-
-  private[graft] def currentGenOption(path: String): Option[Long] = {
-    val gens = Option(new java.io.File(path).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .flatMap(f =>
-        if (f.isFile && f.getName.startsWith("icommit_"))
-          f.getName.stripPrefix("icommit_").toLongOption
-        else None)
-    if (gens.isEmpty) None else Some(gens.max)
-  }
-
   private[graft] def currentGen(path: String): Long =
-    currentGenOption(path).getOrElse(
+    Markers.index.current(path).getOrElse(
       throw new java.io.FileNotFoundException(
         s"no committed index generation under $path"))
 
   /** The pinned (substore → generation) map of index generation `g`. */
   private[graft] def pins(path: String, g: Long): Map[String, Long] =
-    Files.readString(markerPath(path, g)).linesIterator
+    Markers.index.read(path, g).linesIterator
       .map(_.trim.split(":", 2))
       .collect { case Array(s, v) if s.nonEmpty => s -> v.toLong }
       .toMap
 
   /** Publish the CURRENT generation of every existing substore as the
-    * next index generation — the one atomic commit point of a
-    * multi-store mutation. Content is complete before the name
-    * appears (temp + hard-link CAS, [[TableFormat]]'s rule), and a
-    * second writer racing the same id fails loudly. */
+    * next index generation and return it — the one atomic commit
+    * point of a multi-store mutation, the same [[Markers]] CAS as
+    * every table commit; a second writer racing the same id fails
+    * loudly. */
   private[graft] def publish(path: String): Long = {
-    val g = currentGenOption(path).map(_ + 1).getOrElse(0L)
+    val g = Markers.index.current(path).fold(0L)(_ + 1)
     val pinned = stores.flatMap { s =>
       TableFormat.currentGenOption(s"$path/$s").map(s -> _)
     }
-    val tmp = Files.createTempFile(Paths.get(path), "_icommit_", ".tmp")
-    Files.writeString(tmp,
-      pinned.map { case (s, v) => s"$s:$v" }.mkString("\n"))
-    try Files.createLink(markerPath(path, g), tmp)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new IllegalStateException(
-          s"index publish($g) raced a concurrent writer on $path")
-    } finally Files.deleteIfExists(tmp)
+    if (!Markers.index.publish(path, g,
+        pinned.map { case (s, v) => s"$s:$v" }.mkString("\n")))
+      throw new IllegalStateException(
+        s"index publish($g) raced a concurrent writer on $path")
     g
   }
 
@@ -130,24 +110,17 @@ object IndexCatalog {
       keep: Int): Long = {
     require(keep >= 1, "retention must keep at least the current index gen")
     val cur = currentGen(path)
-    val retained = (math.max(0L, cur - keep + 1) to cur).toSeq
-      .filter(g => Files.exists(markerPath(path, g)))
-    var reaped = 0L
-    stores.foreach { s =>
+    val retained = Markers.index.gens(path).filter(_ > cur - keep)
+    val reaped = stores.flatMap { s =>
       val root = s"$path/$s"
-      TableFormat.currentGenOption(root).foreach { sCur =>
+      TableFormat.currentGenOption(root).map { sCur =>
         val minPin = retained.flatMap(g => pins(path, g).get(s)).minOption
           .getOrElse(sCur)
-        reaped += TableFormat.vacuumManifested(spark, root,
-          keep = (sCur - minPin + 1).toInt)
+        TableFormat.vacuumTable(spark, root,
+          keep = (sCur - minPin + 1).toInt).files
       }
-    }
-    Option(new java.io.File(path).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isFile && f.getName.startsWith("icommit_") &&
-        f.getName.stripPrefix("icommit_").toLongOption
-          .exists(_ <= cur - keep))
-      .foreach(f => Files.deleteIfExists(f.toPath))
+    }.sum
+    Markers.index.expire(path, cur - keep)
     reaped
   }
 }

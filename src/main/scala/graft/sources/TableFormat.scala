@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -15,9 +15,9 @@ import graft.functions.TextFunctions.words
   * and as the per-key change set between two generations (H14 CDC).
   * Together they are the minimal from-scratch core of what Delta /
   * Iceberg / Hudi call snapshots, deletion vectors and change data
-  * feeds — built on the same atomic-pointer commit machinery
-  * StreamingDataCard's exactly-once sink uses (temp + ATOMIC_MOVE;
-  * a reader never sees a missing or half-written table).
+  * feeds — every writer commits through one protocol (data staged at
+  * a unique name, then one commit-marker CAS; a reader never sees a
+  * missing or half-written table).
   *
   * (Reference posture: the reference mutates its embedding store in
   * place and keeps no history, engine.py:163 `update_embeddings`;
@@ -28,144 +28,107 @@ import graft.functions.TextFunctions.words
 object TableFormat {
 
   // ---------------------------------------------------------------
-  // Versioned-table core: immutable gen dirs + commit-marker CAS
+  // Versioned-table core: immutable gen dirs + ONE commit protocol
   //
   // A generation is committed by CREATING the file `commit_<g>`
-  // exclusively (its content names the generation's data dir). File
-  // creation is the filesystem's one true compare-and-swap: exactly
-  // one writer can ever own a generation id, so there is NO lock, NO
-  // lease, NO heal machinery and NO check-to-move window — the
-  // round-16 lease design documented a residual race after a heal;
-  // this protocol has no interleaving that can double-commit, because
-  // the atomic winner-picker IS the commit point. Data dirs are
-  // written complete (at token-unique names, so racers never collide)
-  // BEFORE the marker lands; a crash before the marker leaves only an
-  // unreferenced dir that sweeps as aged debris. This is Delta's
-  // protocol shape: data files first at unique names, then the
-  // exclusive log-entry write decides the winner.
+  // exclusively ([[Markers]]; its content names the generation's data
+  // dir). File creation is the filesystem's one true compare-and-swap:
+  // exactly one writer can ever own a generation id, so there is NO
+  // lock, NO lease, NO heal machinery and NO check-to-move window —
+  // the round-16 lease design documented a residual race after a
+  // heal; this protocol has no interleaving that can double-commit,
+  // because the atomic winner-picker IS the commit point. Data dirs
+  // are written complete (at token-unique names, so racers never
+  // collide) BEFORE the marker lands; a crash before the marker leaves
+  // only an unreferenced dir that sweeps as aged debris. This is
+  // Delta's protocol shape: data files first at unique names, then
+  // the exclusive log-entry write decides the winner.
   // ---------------------------------------------------------------
-
-  private[graft] def markerPath(root: String, gen: Long) =
-    Paths.get(root, s"commit_$gen")
-
-  /** The single-writer canonical data-dir name for `gen` (OCC
-    * commits use token-suffixed names; readers always resolve
-    * through the marker, never this name). */
-  private[graft] def genDir(root: String, gen: Long): String =
-    s"$root/gen_$gen"
 
   /** The committed data dir for generation `gen`, resolved through
     * its commit marker. */
   private[graft] def resolveDir(root: String, gen: Long): String =
-    s"$root/${Files.readString(markerPath(root, gen)).trim}"
+    s"$root/${Markers.table.read(root, gen)}"
 
-  /** Atomically install the commit marker for `gen`, naming
-    * `dirName` as its data dir. The content is prepared in a temp
-    * file and PUBLISHED via `Files.createLink` — hard-link creation
-    * is atomic and fails when the target exists, so exactly one
-    * writer ever owns a generation id AND a reader can never observe
-    * a half-written marker (the content is complete before the name
-    * appears). Returns false when the generation is already
-    * committed. A crash between the link and the temp delete leaves
-    * a second hard link to the same inode — plain debris. */
-  private def casMarker(root: String, gen: Long, dirName: String): Boolean = {
-    val tmp = Files.createTempFile(Paths.get(root), "_commit_", ".tmp")
-    Files.writeString(tmp, dirName)
-    try { Files.createLink(markerPath(root, gen), tmp); true }
-    catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    finally Files.deleteIfExists(tmp)
-  }
-
-  /** Write `df` as generation `gen` and COMMIT it — the SINGLE-WRITER
-    * convenience verb (episodes, bootstraps): it may overwrite a
-    * previous commit of the same id, which contended writers must
-    * never do (they go through [[tryCommitGen]]). Superseded
-    * generations are NOT garbage-collected here: retaining them is
-    * the whole point (time travel); a production deployment vacuums
-    * by retention policy, exactly like a table format. */
-  private[graft] def commitGen(df: DataFrame, root: String, gen: Long,
-      txn: Option[(String, Long)] = None): Unit = {
-    df.write.mode("overwrite").parquet(genDir(root, gen))
-    // idempotent-writer record, atomic with the commit (the same
-    // `txn` rule as the scoped commits — carried forward so
-    // retention can never strand a writer's lineage)
-    val carried = txnTable(root) ++ txn
-    if (carried.nonEmpty)
-      Files.writeString(txnFile(genDir(root, gen)),
-        carried.toSeq.sorted.map { case (id, v) => s"$id:$v" }
-          .mkString("\n"))
-    installMarker(root, gen, s"gen_$gen")
-  }
-
-  /** Single-writer marker (re)install. First commit of an id goes
-    * through the CAS (so an ACCIDENTAL second writer still fails
-    * loudly); a RE-commit of an existing id replaces the marker via
-    * ATOMIC_MOVE instead of delete-then-link — concurrent readers are
-    * an advertised capability, and a reader calling
-    * currentGen/resolveDir in a delete window would resolve an older
-    * generation or throw; the atomic replace keeps marker visibility
-    * continuous. */
-  private def installMarker(root: String, gen: Long, dirName: String): Unit =
-    if (Files.exists(markerPath(root, gen))) {
-      val tmp = Files.createTempFile(Paths.get(root), "_commit_", ".tmp")
-      Files.writeString(tmp, dirName)
-      Files.move(tmp, markerPath(root, gen),
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    } else require(casMarker(root, gen, dirName),
-      s"single-writer commit($gen) raced a concurrent marker on $root")
-
-  /** The committed generation id — the highest commit marker. The
-    * listing is O(retained generations), the same cost as reading a
-    * format's log tail. Markers are contiguous by construction (a
-    * writer can only claim currentGen + 1), so highest = newest. */
+  /** The committed generation id — the highest commit marker. */
   private[graft] def currentGen(root: String): Long =
     currentGenOption(root).getOrElse(
       throw new java.io.FileNotFoundException(
         s"no committed generation under $root"))
 
-  private[graft] def currentGenOption(root: String): Option[Long] = {
-    val gens = Option(new java.io.File(root).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .flatMap(f =>
-        if (f.isFile && f.getName.startsWith("commit_"))
-          f.getName.stripPrefix("commit_").toLongOption
-        else None)
-    if (gens.isEmpty) None else Some(gens.max)
-  }
+  private[graft] def currentGenOption(root: String): Option[Long] =
+    Markers.table.current(root)
 
-  /** OPTIMISTIC-CONCURRENCY commit: install `df` as generation
-    * `expected + 1` only if the table is still at generation
-    * `expected` — the transaction-log conflict check every real
-    * table format runs (Delta's protocol: write data at unique
-    * names, then contend for the log entry). Returns false (and
-    * leaves nothing durable) when another writer committed first;
-    * the caller re-derives its change against the new current
-    * generation and retries — the data work is the retry cost,
-    * never a corrupted table.
-    *
-    * The data dir is written COMPLETE at a token-unique name before
-    * the marker CAS, so two racing writers never touch the same
-    * path; the marker creation ([[casMarker]]) is the atomic commit
-    * point. There is no lock and no lease: a writer that stalls
-    * arbitrarily long simply finds its marker creation failing if
-    * someone else won, and a crashed writer leaves only an
-    * unreferenced data dir ([[vacuumGenerations]] sweeps it by
-    * age). */
-  private[graft] def tryCommitGen(df: DataFrame, root: String,
-      expected: Long): Boolean = {
-    val g = expected + 1
+  /** THE commit protocol — every writer of a versioned table goes
+    * through it. `stage` writes the generation's data (and, for a
+    * manifested table, its `_manifest`) into a token-unique dir; the
+    * protocol records `schema` (`_schema.json`) and the carried-forward
+    * `_txn` records beside it, then claims marker `expected + 1` (0 for
+    * a table's first commit) with the one CAS. `expected` is the
+    * generation the change was DERIVED against, never an id to write.
+    * Returns the committed generation, or None when another writer
+    * committed first: the staged dir is deleted, nothing durable
+    * remains, and the caller re-derives against the new current
+    * generation — the data work is the retry cost, never a corrupted
+    * table. A writer that stalls arbitrarily long simply finds its CAS
+    * failing; a crashed one leaves only an unreferenced dir that
+    * [[vacuumTable]] sweeps by age. */
+  private[graft] def tryCommit(root: String, expected: Option[Long],
+      schema: StructType, txn: Option[(String, Long)] = None)(
+      stage: String => Unit): Option[Long] = {
     // cheap staleness pre-check: saves the data write when the table
     // has visibly moved on (the marker CAS below is the real gate)
-    if (currentGen(root) != expected) return false
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val dirName = s"gen_${g}_$token"
-    df.write.parquet(s"$root/$dirName")
-    if (casMarker(root, g, dirName)) true
+    if (currentGenOption(root) != expected) return None
+    val g = expected.fold(0L)(_ + 1)
+    val dirName = s"gen_${g}_${java.util.UUID.randomUUID().toString.take(8)}"
+    val dir = s"$root/$dirName"
+    stage(dir)
+    Files.writeString(schemaPath(dir), schema.json)
+    // idempotent-writer records commit ATOMICALLY with the data
+    // (inside the dir the marker publishes) — no window where a batch
+    // landed but its dedup record didn't. EVERY commit carries the
+    // known records forward (Delta checkpoints retain txn actions for
+    // the same reason): a maintenance commit between two stream
+    // batches, followed by an aggressive vacuum, must never strand the
+    // stream's lineage behind the retention horizon
+    val txns = txnTable(root) ++ txn
+    if (txns.nonEmpty)
+      Files.writeString(txnFile(dir),
+        txns.toSeq.sorted.map { case (id, v) => s"$id:$v" }.mkString("\n"))
+    if (Markers.table.publish(root, g, dirName)) Some(g)
     else {
-      LayoutStore.deleteRecursively(new java.io.File(s"$root/$dirName"))
-      false
+      LayoutStore.deleteRecursively(new java.io.File(dir))
+      None
     }
   }
+
+  /** The single-writer form of [[tryCommit]] (episodes, bootstraps,
+    * index builds, maintenance): derive against the current
+    * generation and fail loudly if a concurrent writer wins. */
+  private def commit(root: String, schema: StructType,
+      txn: Option[(String, Long)] = None)(stage: String => Unit): Long =
+    tryCommit(root, currentGenOption(root), schema, txn)(stage)
+      .getOrElse(throw new IllegalStateException(
+        s"commit raced a concurrent writer on $root"))
+
+  /** Commit `df` as the next generation of an unmanifested table and
+    * return that generation. Superseded generations are NOT
+    * garbage-collected here: retaining them is the whole point (time
+    * travel); a deployment vacuums by retention policy
+    * ([[vacuumTable]]), exactly like a table format. */
+  private[graft] def commitGen(df: DataFrame, root: String,
+      txn: Option[(String, Long)] = None): Long =
+    commit(root, df.schema, txn)(dir => df.write.parquet(dir))
+
+  /** Read exactly `files` with `schema`; an empty list (an
+    * all-rows-deleted generation, a fully pruned probe) reads as an
+    * empty frame, since Spark cannot read zero paths. */
+  private[graft] def readFiles(spark: SparkSession, schema: StructType,
+      files: Seq[String]): DataFrame =
+    if (files.isEmpty)
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else spark.read.schema(schema).parquet(files: _*)
 
   /** Generation-pinned read with an EXPLICIT schema (the purge
     * read-back rule: inference must never re-type a column, and an
@@ -199,12 +162,12 @@ object TableFormat {
     try {
       val root = dir.toString
       val (state, updates, inserts) = Export.mutationEpisode(t)
-      commitGen(state, root, 0L)
+      commitGen(state, root)
       val schema = state.schema
       val merged = Export.mergeLatest(
         readGen(spark, root, 0L, schema),
         updates.unionByName(inserts), "o_orderkey")
-      commitGen(merged, root, 1L)
+      commitGen(merged, root)
       val pinnedGen = currentGen(root)
       def leg(gen: Long) =
         readGen(spark, root, gen, schema)
@@ -219,62 +182,6 @@ object TableFormat {
         .orderBy(col("gen"), col("o_orderstatus"))
         .localCheckpoint(true)
     } finally LayoutStore.deleteRecursively(dir.toFile)
-  }
-
-  /** The RETENTION sweep over a versioned table: reap every
-    * generation at or below `current − keep`, i.e. retain the
-    * newest `keep` committed generations. Never touches generations
-    * NEWER than the pointer (an in-flight uncommitted write) or the
-    * pointer itself. Returns the reaped ids. Driver-side directory
-    * ops, O(generations) regardless of table size.
-    *
-    * The sweep also reaps CRASH DEBRIS past `debrisStaleMillis`:
-    * orphaned `_commit_*.tmp` marker temps (a crash between the temp
-    * write and the link) and UNREFERENCED `gen_*` data dirs — a
-    * writer that staged its data and died before winning (or after
-    * losing) the marker CAS. The age bound is what keeps the sweep
-    * safe beside LIVE writers — a fresh unreferenced dir belongs to
-    * an in-flight commit and survives (Delta's VACUUM has the same
-    * retention-vs-in-flight horizon). */
-  private[graft] def vacuumGenerations(root: String, keep: Int,
-      debrisStaleMillis: Long = 24L * 3600 * 1000): Seq[Long] = {
-    require(keep >= 1, "retention must keep at least the current generation")
-    val cur = currentGen(root)
-    def entries = Option(new java.io.File(root).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-    val committed: Map[Long, String] = entries
-      .flatMap(f =>
-        if (f.isFile && f.getName.startsWith("commit_"))
-          f.getName.stripPrefix("commit_").toLongOption
-            .map(_ -> Files.readString(f.toPath).trim)
-        else None).toMap
-    // INTERLOCK: a manifested table's newer generations can carry
-    // older generations' files BY REFERENCE (purgeScoped /
-    // mergeScoped), so the by-directory reap below would delete
-    // files the current manifest still reaches — data loss. Such a
-    // table vacuums by REACHABILITY ([[vacuumManifested]]); refuse
-    // rather than rely on callers reading the scaladoc.
-    require(!committed.values.exists(d =>
-        Files.isDirectory(Paths.get(root, d, "_manifest"))),
-      s"$root is a MANIFESTED table (in-dir _manifest present): its " +
-        "generations may reference older generations' files, so the " +
-        "by-directory sweep is unsafe — use vacuumManifested")
-    val reap = committed.filter { case (g, _) => g <= cur - keep }
-    reap.foreach { case (g, dirName) =>
-      LayoutStore.deleteRecursively(new java.io.File(root, dirName))
-      Files.deleteIfExists(markerPath(root, g))
-    }
-    def stale(f: java.io.File) =
-      System.currentTimeMillis() - f.lastModified() > debrisStaleMillis
-    val referenced = (committed -- reap.keys).values.toSet
-    entries
-      .filter(f => stale(f) && (
-        (f.isFile && f.getName.startsWith("_commit_") &&
-          f.getName.endsWith(".tmp")) ||
-        (f.isDirectory && f.getName.startsWith("gen_") &&
-          !referenced(f.getName))))
-      .foreach(LayoutStore.deleteRecursively)
-    reap.keys.toSeq.sorted
   }
 
   /** H15 — `q_vacuum`: the RETENTION sweep that bounds what H12's
@@ -302,18 +209,18 @@ object TableFormat {
     try {
       val root = dir.toString
       val (state, updates, inserts) = Export.mutationEpisode(t)
-      commitGen(state, root, 0L)
+      commitGen(state, root)
       val schema = state.schema
       val gen0 = readGen(spark, root, 0L, schema)
       val merged = Export.mergeLatest(gen0,
         updates.unionByName(inserts), "o_orderkey")
-      commitGen(merged, root, 1L)
+      commitGen(merged, root)
       val takedown = gen0
         .filter(pmod(col("o_orderkey"), lit(10L)) === 5L)
         .select(col("o_orderkey").as("__tk"))
       commitGen(readGen(spark, root, 1L, schema).join(takedown,
-        col("o_orderkey") === col("__tk"), "left_anti"), root, 2L)
-      val reaped = vacuumGenerations(root, keep = 2)
+        col("o_orderkey") === col("__tk"), "left_anti"), root)
+      val reaped = vacuumTable(spark, root, keep = 2).gens
       val pinnedGen = currentGen(root)
       def leg(gen: Long) =
         readGen(spark, root, gen, schema)
@@ -403,31 +310,28 @@ object TableFormat {
     m.columns.toIndexedSeq.collect { case c if c.startsWith("bloom_") =>
       c.stripPrefix("bloom_") }
 
-  /** Commit `df` as generation `gen` WITH a per-file min/max/null
-    * manifest on `keys` (multi-column, like a real format's
-    * per-column log stats) and the generation's recorded schema. A
+  /** Commit `df` as the next generation WITH a per-file
+    * min/max/null manifest on `keys` (multi-column, like a real
+    * format's per-column log stats) and return that generation. A
     * manifested generation is READ through its manifest's file list,
     * not the directory listing — which is what lets a later commit
     * REFERENCE this generation's surviving files instead of copying
     * them (see [[purgeScoped]]). Single-writer verb, like
     * [[commitGen]]; contended writers use [[tryMergeScoped]]. */
   private[graft] def commitGenManifested(df: DataFrame, root: String,
-      gen: Long, keys: Seq[String], bloomKeys: Seq[String] = Nil): Unit = {
-    val dirName = s"gen_$gen"
-    val dir = s"$root/$dirName"
-    df.write.mode("overwrite").parquet(dir)
-    // one file: a manifest is scan-planning-sized, and a single part
-    // file keeps schema inference possible even for an EMPTY table
-    // (zero part files would leave nothing to infer from)
-    fileStats(df.sparkSession, dir, df.schema, keys, bloomKeys).coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/_manifest")
-    Files.writeString(schemaPath(dir), df.schema.json)
-    installMarker(root, gen, dirName)
-  }
+      keys: Seq[String], bloomKeys: Seq[String] = Nil): Long =
+    commit(root, df.schema) { dir =>
+      df.write.parquet(dir)
+      writeManifest(
+        fileStats(df.sparkSession, dir, df.schema, keys, bloomKeys), dir)
+    }
 
-  private[graft] def commitGenManifested(df: DataFrame, root: String,
-      gen: Long, key: String): Unit =
-    commitGenManifested(df, root, gen, Seq(key))
+  /** Write a generation's manifest into its dir — one file: a
+    * manifest is scan-planning-sized, and a single part file keeps
+    * schema inference possible even for an EMPTY table (zero part
+    * files would leave nothing to infer from). */
+  private def writeManifest(stats: DataFrame, dir: String): Unit =
+    stats.coalesce(1).write.parquet(s"$dir/_manifest")
 
   // ---------------------------------------------------------------
   // Driver-side manifest metadata cache
@@ -464,9 +368,8 @@ object TableFormat {
   /** An LRU map from a manifest's IDENTITY to its metadata, holding at
     * most `capacity` entries. The identity is the canonical
     * `_manifest` dir plus the (name, length, mtime) of every part
-    * file; part names carry the writing job's UUID, so a
-    * single-writer re-commit of the same generation id, a root
-    * deleted and recreated, or a hard-link clone under a new root is
+    * file; part names carry the writing job's UUID, so a root
+    * deleted and recreated, or a hard-link clone under a new root, is
     * a NEW key — an entry can never answer for different bytes. */
   private[graft] final class ManifestCache(capacity: Int) {
     private type Key = (String, Seq[(String, Long, Long)])
@@ -545,44 +448,27 @@ object TableFormat {
     * all-rows-deleted generation (empty manifest) reads as an empty
     * frame. */
   private[graft] def readViaManifest(spark: SparkSession, root: String,
-      gen: Long, schema: StructType): DataFrame = {
-    val files = manifestFiles(spark, root, gen)
-    if (files.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(files: _*)
-  }
+      gen: Long, schema: StructType): DataFrame =
+    readFiles(spark, schema, manifestFiles(spark, root, gen))
 
+  /** What a scoped commit (or a pruned read) did: files rewritten (or
+    * read), files carried by reference (or skipped), and the
+    * generation committed (or read). */
   private[graft] final case class SkipReport(
-      filesTouched: Long, filesCarried: Long)
+      filesTouched: Long, filesCarried: Long, gen: Long)
 
-  /** STATS-SKIPPING targeted delete: rewrite ONLY the files whose
-    * [min_key, max_key] range can contain a listed key; every other
-    * file is CARRIED into the new generation's manifest by reference
-    * — zero bytes moved for files the list cannot touch. This is the
-    * at-100-TB shape H10's scale note promises (Delta/Iceberg scope
-    * a DELETE to intersecting files via their log's file stats; H6's
-    * z-order is the row-group-level analog).
-    *
-    * The skip decision is a range-intersection semi join of the
-    * manifest against the broadcast key list (BroadcastNestedLoop —
-    * manifest rows = file count, the list is human-scale, so the
-    * product is scan-planning-sized, never data-sized). The rewrite
-    * itself is H10's broadcast anti-join over ONLY the touched
-    * files. Retention note: a generation that references an earlier
-    * generation's files makes [[vacuumGenerations]]'s by-directory
-    * reap unsafe — a manifested table vacuums by REACHABILITY from
-    * retained manifests (exactly Delta VACUUM's rule); this episode
-    * retains everything. */
   /** The shared SCOPED-COMMIT core: split generation `expected`'s
     * manifest into touched/carried by `touch` (a predicate over the
     * manifest's stats columns against the broadcast `scope` frame),
     * read ONLY the touched files, rewrite them through `rewrite`,
     * carry every other file into the new generation's manifest BY
-    * REFERENCE (zero bytes moved), and CAS-commit the result as
-    * generation `expected + 1`. Returns None when another writer
-    * committed first — nothing durable remains (the OCC discipline
-    * of [[tryCommitGen]], at O(touched files) data cost).
+    * REFERENCE (zero bytes moved), and commit the result through
+    * [[tryCommit]] against `expected`. Returns None when another
+    * writer committed first — nothing durable remains, at O(touched
+    * files) data cost. This is the at-100-TB shape H10's scale note
+    * promises (Delta/Iceberg scope a DELETE to intersecting files via
+    * their log's file stats; H6's z-order is the row-group-level
+    * analog).
     *
     * The skip decision is a range-intersection semi join of the
     * manifest against the broadcast scope (BroadcastNestedLoop over
@@ -710,11 +596,9 @@ object TableFormat {
   }
 
   /** The staged-commit tail every scoped verb shares: read ONLY the
-    * touched files, rewrite them through `rewrite` into a
-    * token-unique dir, publish carried ∪ new-file stats as the next
-    * generation's manifest, record `schema`, and CAS the marker —
-    * everything durable before the atomic commit point, nothing
-    * durable if the CAS loses. */
+    * touched files, rewrite them through `rewrite`, and publish
+    * carried ∪ new-file stats as the next generation's manifest —
+    * staged and CAS'd by [[tryCommit]]. */
   private def tryCommitFiles(spark: SparkSession, root: String,
       expected: Long, schema: StructType, keys: Seq[String],
       touchedFiles: Seq[String], carried: DataFrame,
@@ -723,46 +607,18 @@ object TableFormat {
       // every caller already knows the carried-file count from its
       // own manifest split — passing it avoids a count job per commit
       // (the carried frame itself still feeds the manifest write)
-      carriedN: Long): Option[SkipReport] = {
-    val g = expected + 1
-    val survivors =
-      if (touchedFiles.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else spark.read.schema(schema).parquet(touchedFiles: _*)
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val dirName = s"gen_${g}_$token"
-    val dir = s"$root/$dirName"
-    rewrite(survivors).write.parquet(dir)
-    // allowMissingColumns: a widened stats key set (additive schema
-    // evolution) adds min_/max_/null_ columns the carried rows don't
-    // have — they fill NULL, the "file predates this column" marker.
-    // Bloom keys propagate from the carried manifest's own columns:
-    // rewritten files get fresh sketches, carried rows keep theirs.
-    carried.unionByName(
+      carriedN: Long): Option[SkipReport] =
+    tryCommit(root, Some(expected), schema, txn) { dir =>
+      rewrite(readFiles(spark, schema, touchedFiles)).write.parquet(dir)
+      // allowMissingColumns: a widened stats key set (additive schema
+      // evolution) adds min_/max_/null_ columns the carried rows don't
+      // have — they fill NULL, the "file predates this column" marker.
+      // Bloom keys propagate from the carried manifest's own columns:
+      // rewritten files get fresh sketches, carried rows keep theirs.
+      writeManifest(carried.unionByName(
         fileStats(spark, dir, schema, keys, manifestBloomKeys(carried)),
-        allowMissingColumns = true).coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/_manifest")
-    Files.writeString(schemaPath(dir), schema.json)
-    // idempotent-writer records commit ATOMICALLY with the data
-    // (inside the dir the marker publishes) — no window where a
-    // batch landed but its dedup record didn't. EVERY scoped commit
-    // carries the known records forward (Delta checkpoints retain
-    // txn actions for the same reason): a maintenance commit between
-    // two stream batches, followed by an aggressive vacuum, must
-    // never strand the stream's lineage behind the retention horizon
-    val carriedTxns = txnTable(root) ++ txn
-    if (carriedTxns.nonEmpty)
-      Files.writeString(txnFile(dir),
-        carriedTxns.toSeq.sorted.map { case (id, v) => s"$id:$v" }
-          .mkString("\n"))
-    if (casMarker(root, g, dirName))
-      Some(SkipReport(touchedFiles.length.toLong, carriedN))
-    else {
-      LayoutStore.deleteRecursively(new java.io.File(dir))
-      None
-    }
-  }
+        allowMissingColumns = true), dir)
+    }.map(SkipReport(touchedFiles.length.toLong, carriedN, _))
 
   // ---------------------------------------------------------------
   // Writer-transaction lineage (Delta's `txn` action): an idempotent
@@ -786,8 +642,8 @@ object TableFormat {
   /** The newest committed transaction version per writer, merged
     * newest-generation-first (a writer's versions are monotone in
     * generation order, so the first record seen per appId is its
-    * latest). Every scoped commit CARRIES the known records forward
-    * into its own generation (see [[tryCommitFiles]] — the rule that
+    * latest). Every commit CARRIES the known records forward into its
+    * own generation (see [[tryCommit]] — the rule that
     * makes Delta checkpoints retain txn actions), so the newest
     * generation normally holds the complete table and retention can
     * never strand a live writer's lineage behind the vacuum horizon:
@@ -799,15 +655,8 @@ object TableFormat {
     // 0, whose cost would grow with every generation EVER committed
     // for the stream's whole lifetime even after vacuum removed most
     // markers (this verb runs twice per micro-batch)
-    val gens = Option(new java.io.File(root).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .flatMap(f =>
-        if (f.isFile && f.getName.startsWith("commit_"))
-          f.getName.stripPrefix("commit_").toLongOption
-        else None)
-      .sorted(Ordering[Long].reverse)
     var seen = Map.empty[String, Long]
-    gens.iterator
+    Markers.table.gens(root).reverseIterator
       .map(g => txnFile(resolveDir(root, g)))
       .filter(Files.exists(_))
       .foreach(p => seen = parseTxns(p) ++ seen)
@@ -844,16 +693,6 @@ object TableFormat {
         s"purgeScoped raced a concurrent writer on $root"))
   }
 
-  /** STATS-SKIPPING merge (H8's latest-wins upsert over a manifested
-    * table): only files whose [min_key, max_key] range can contain a
-    * delta key rewrite (their delta-keyed rows drop; survivors
-    * rewrite beside the arriving delta rows); every other file
-    * carries into the new generation's manifest by reference. Same
-    * skip decision as [[purgeScoped]]; the rewrite leg is
-    * mergeLatest's own anti-join + union restricted to the touched
-    * files. Answer ≡ mergeLatest over the full table (spec-pinned) —
-    * at 100 TB the difference is rewriting the files a day's delta
-    * touches instead of the corpus. */
   /** STATS-SKIPPING merge with the OCC contract: commit H8's
     * latest-wins upsert of `delta` as generation `expected + 1` only
     * if the table is still at `expected` — the verb a CONTENDED
@@ -886,6 +725,12 @@ object TableFormat {
         schema.fieldNames.map(col).toIndexedSeq: _*), key), txn)
   }
 
+  /** The single-writer STATS-SKIPPING merge: [[tryMergeScoped]]
+    * against the current generation, failing loudly on a lost race.
+    * Same skip decision as [[purgeScoped]]; the rewrite leg is
+    * mergeLatest's own anti-join + union restricted to the touched
+    * files, so the answer ≡ mergeLatest over the full table
+    * (spec-pinned). */
   private[graft] def mergeScoped(spark: SparkSession, root: String,
       delta: DataFrame, schema: StructType, key: String,
       scopeMaxKeys: Int = 8192, scopeIntervals: Int = 512): SkipReport =
@@ -925,13 +770,8 @@ object TableFormat {
     * decision is a filter over the scan-planning-sized manifest. */
   private[graft] def readPrunedIn(spark: SparkSession, root: String,
       gen: Long, schema: StructType, key: String,
-      values: Seq[Any]): DataFrame = {
-    val files = prunedFilesIn(spark, root, gen, key, values)
-    if (files.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(files: _*)
-  }
+      values: Seq[Any]): DataFrame =
+    readFiles(spark, schema, prunedFilesIn(spark, root, gen, key, values))
 
   /** The file list [[readPrunedIn]] scans — separated so specs and
     * probes can assert the PRUNING itself (files planned), not just
@@ -970,75 +810,69 @@ object TableFormat {
     ranged.select(col("file")).collect().map(_.getString(0)).toSeq
   }
 
-  /** Retention for a MANIFESTED table — Delta VACUUM's rule: a file
-    * is reclaimable only when NO retained manifest reaches it
-    * (generations that carry files by reference make the by-directory
-    * sweep of [[vacuumGenerations]] unsafe here). Reaps unreferenced
-    * data files and expired manifests; a generation dir whose every
-    * file is still referenced survives as storage for the newer
-    * generations that reference it. Returns the reaped file count.
-    * Driver-side, O(files in expired generations) — scan-planning
-    * scale, data-size independent. */
-  private[graft] def vacuumManifested(spark: SparkSession, root: String,
-      keep: Int, debrisStaleMillis: Long = 24L * 3600 * 1000): Long = {
+  /** What a retention sweep reclaimed: the expired generation ids
+    * and the number of files deleted. */
+  private[graft] final case class VacuumReport(gens: Seq[Long], files: Long)
+
+  /** A manifest file URI (`file:///…`) as a local file. */
+  private[graft] def localFile(f: String): java.io.File =
+    new java.io.File(
+      if (f.startsWith("file:")) java.net.URI.create(f).getPath else f)
+
+  /** The RETENTION sweep over a versioned table — Delta VACUUM's rule:
+    * keep the newest `keep` generations; a file is reclaimable only
+    * when NO retained generation reaches it. A manifested generation
+    * reaches its manifest's file list (scoped commits carry older
+    * generations' files BY REFERENCE); an unmanifested one reaches its
+    * own dir, which a retained generation never loses. Expired
+    * generations lose their markers, manifests, schema and txn records
+    * (every commit carries txn records forward, so the retained tail
+    * still holds the lineage); an expired dir whose files are all
+    * still referenced survives as storage for the newer generations.
+    *
+    * The sweep also reaps CRASH DEBRIS past `debrisStaleMillis`:
+    * orphaned marker temps (a crash between the temp write and the
+    * link) and unmarkered `gen_*` dirs — a writer that staged its data
+    * and died before winning (or after losing) the marker CAS. The age
+    * bound is what keeps the sweep safe beside LIVE writers: a fresh
+    * unmarkered dir is an in-flight commit's staging (data, manifest,
+    * schema and txn written, CAS pending), and sweeping it would let
+    * that CAS publish a generation with missing files. Driver-side,
+    * O(files in expired generations) — data-size independent. */
+  private[graft] def vacuumTable(spark: SparkSession, root: String,
+      keep: Int, debrisStaleMillis: Long = 24L * 3600 * 1000): VacuumReport = {
     require(keep >= 1, "retention must keep at least the current generation")
     val cur = currentGen(root)
-    val retainedGens = (math.max(0L, cur - keep + 1) to cur).toSeq
-    val reachable = retainedGens.flatMap(g => manifestFiles(spark, root, g))
-      .toSet
-    // normalize manifest URIs (file:///…) onto local paths for compare
-    def localPath(f: String): String =
-      if (f.startsWith("file:")) java.net.URI.create(f).getPath else f
-    val reach = reachable.map(localPath)
-    // a retained generation's OWN dir is untouchable (its manifest
-    // and schema record live there); every other gen dir is storage
-    // whose data files survive only by reachability
-    val retainedDirs = retainedGens
-      .map(g => new java.io.File(resolveDir(root, g)).getName).toSet
-    // the dir names SOME marker currently publishes: everything else
-    // matching gen_* is either an IN-FLIGHT OCC writer's staged dir
-    // (data written, token-suffixed, marker not yet CAS'd) or crash
-    // debris — and only AGE distinguishes the two. Sweeping a live
-    // writer's staged dir would delete its data files, _manifest,
-    // _schema.json and _txn while its marker CAS still SUCCEEDS,
-    // publishing a generation with missing data — silent loss (this
-    // sweep is advertised safe beside a live stream). Skip unmarkered
-    // dirs younger than the staleness bound entirely, mirroring
-    // vacuumGenerations' debris horizon.
-    val markerTargets = Option(new java.io.File(root).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isFile && f.getName.startsWith("commit_"))
-      .map(f => Files.readString(f.toPath).trim).toSet
+    val (retained, expired) =
+      Markers.table.list(root).partition(_._1 > cur - keep)
+    val keepDirs = retained.values.toSet
+    val expiredDirs = expired.values.toSet
+    val reach = retained.keys.toSeq
+      .filter(g =>
+        Files.isDirectory(Paths.get(resolveDir(root, g), "_manifest")))
+      .flatMap(g => manifestFiles(spark, root, g))
+      .map(localFile(_).getAbsolutePath).toSet
     def stale(f: java.io.File) =
       System.currentTimeMillis() - f.lastModified() > debrisStaleMillis
+    def list(d: java.io.File) =
+      Option(d.listFiles()).getOrElse(Array.empty[java.io.File])
+    val entries = list(new java.io.File(root))
     var reaped = 0L
-    Option(new java.io.File(root).listFiles())
-      .getOrElse(Array.empty[java.io.File])
+    entries
       .filter(f => f.isDirectory && f.getName.startsWith("gen_") &&
-        !retainedDirs(f.getName) &&
-        (markerTargets(f.getName) || stale(f)))
+        !keepDirs(f.getName) && (expiredDirs(f.getName) || stale(f)))
       .foreach { dir =>
-        Option(dir.listFiles()).getOrElse(Array.empty[java.io.File])
-          .filter(f => f.isFile && !reach(f.getAbsolutePath))
+        list(dir).filter(f => f.isFile && !reach(f.getAbsolutePath))
           .foreach { f => if (f.delete()) reaped += 1 }
-        // the expired generation's own manifest, schema and txn
-        // records go with it (scoped commits carry txn records
-        // forward, so the retained tail still holds the lineage)
         LayoutStore.deleteRecursively(new java.io.File(dir, "_manifest"))
-        Files.deleteIfExists(schemaPath(dir.getPath))
-        Files.deleteIfExists(txnFile(dir.getPath))
-        val rest = Option(dir.listFiles()).getOrElse(Array.empty[java.io.File])
-        if (!rest.exists(_.isFile)) LayoutStore.deleteRecursively(dir)
+        if (!list(dir).exists(_.isFile)) LayoutStore.deleteRecursively(dir)
       }
+    entries.filter(f => Markers.table.isTemp(f) && stale(f))
+      .foreach(LayoutStore.deleteRecursively)
     // expired markers go with their generations (resolution for a
     // reaped generation must fail cleanly, not dangle)
-    Option(new java.io.File(root).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isFile && f.getName.startsWith("commit_") &&
-        f.getName.stripPrefix("commit_").toLongOption
-          .exists(_ <= cur - keep))
-      .foreach(f => Files.deleteIfExists(f.toPath))
-    reaped
+    Markers.table.expire(root, cur - keep)
+    VacuumReport(expired.keys.toSeq.sorted, reaped)
   }
 
   /** CDC between two MANIFESTED generations scoped by the commit
@@ -1060,10 +894,7 @@ object TableFormat {
     def files(gen: Long): Set[String] = manifestFiles(spark, root, gen).toSet
     val pf = files(prevGen); val nf = files(nextGen)
     def readOnly(only: Set[String]): DataFrame =
-      if (only.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else spark.read.schema(schema).parquet(only.toSeq.sorted: _*)
+      readFiles(spark, schema, only.toSeq.sorted)
     cdcDiff(readOnly(pf -- nf), readOnly(nf -- pf), key)
   }
 
@@ -1092,17 +923,16 @@ object TableFormat {
     val dir = LayoutStore.scratch(t.dir, "skip").toPath
     try {
       val root = dir.toString
-      val docSchema = StructType.fromDDL(
-        "doc_id LONG, text STRING, lang STRING, n_chars LONG, source STRING")
       commitGenManifested(
         t.documents.repartitionByRange(16, col("doc_id")),
-        root, 0L, "doc_id")
+        root, Seq("doc_id"))
       val listed = col("doc_id") % 97 === 0
-      val takedown = readViaManifest(spark, root, 0L, docSchema)
+      val takedown = readViaManifest(spark, root, 0L, Tables.docSchema)
         .filter(listed).select(col("doc_id"))
       val nPurged = takedown.count()
-      purgeScoped(spark, root, takedown, docSchema, "doc_id")
-      val back = readViaManifest(spark, root, currentGen(root), docSchema)
+      purgeScoped(spark, root, takedown, Tables.docSchema, "doc_id")
+      val back = readViaManifest(spark, root, currentGen(root),
+        Tables.docSchema)
       val residual = back.filter(listed).count()
       back
         .select(col("source"), col("doc_id"),
@@ -1156,9 +986,7 @@ object TableFormat {
     try {
       val store = s"$dir/store"
       t.documents.write.partitionBy("source").parquet(store)
-      val docSchema = StructType.fromDDL(
-        "doc_id LONG, text STRING, lang STRING, n_chars LONG, source STRING")
-      def readBack(p: String) = spark.read.schema(docSchema).parquet(p)
+      def readBack(p: String) = spark.read.schema(Tables.docSchema).parquet(p)
       val listed = col("doc_id") % 97 === 0
       // the DV commit: ONLY the listed ids, persisted as the sidecar
       val dvPath = s"$dir/dv"
@@ -1265,7 +1093,7 @@ object TableFormat {
     try {
       val root = dir.toString
       val (state, updates, inserts) = Export.mutationEpisode(t)
-      commitGen(state, root, 0L)
+      commitGen(state, root)
       val schema = state.schema
       val gen0 = readGen(spark, root, 0L, schema)
       val merged = Export.mergeLatest(gen0,
@@ -1278,7 +1106,7 @@ object TableFormat {
         .filter(pmod(col("o_orderkey"), lit(10L)) === 5L)
         .select(col("o_orderkey").as("__tk"))
       commitGen(merged.join(takedown,
-        col("o_orderkey") === col("__tk"), "left_anti"), root, 1L)
+        col("o_orderkey") === col("__tk"), "left_anti"), root)
       cdcDiff(gen0, readGen(spark, root, 1L, schema), "o_orderkey")
         .orderBy(col("change_type"), col("o_orderkey"))
         .localCheckpoint(true)
@@ -1340,7 +1168,7 @@ object TableFormat {
     try {
       val root = dir.toString
       val (state, updates, inserts) = Export.mutationEpisode(t)
-      commitGen(state, root, 0L)
+      commitGen(state, root)
       val schema = state.schema
       val gen0 = readGen(spark, root, 0L, schema)
       val merged = Export.mergeLatest(gen0,
@@ -1349,7 +1177,7 @@ object TableFormat {
         .filter(pmod(col("o_orderkey"), lit(10L)) === 5L)
         .select(col("o_orderkey").as("__tk"))
       commitGen(merged.join(takedown,
-        col("o_orderkey") === col("__tk"), "left_anti"), root, 1L)
+        col("o_orderkey") === col("__tk"), "left_anti"), root)
       val feed = cdcDiff(gen0, readGen(spark, root, 1L, schema),
         "o_orderkey")
       maintainAgg(gen0, feed, "o_orderstatus", "o_orderkey",
@@ -1391,12 +1219,8 @@ object TableFormat {
     val total = meta.stats.length
     val residual = preds.map { case (k, lo, hi) =>
       col(k).between(lit(lo), lit(hi)) }.reduce(_ && _)
-    val df =
-      if (files.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else spark.read.schema(schema).parquet(files: _*).filter(residual)
-    (df, SkipReport(files.length.toLong, total - files.length))
+    (readFiles(spark, schema, files).filter(residual),
+      SkipReport(files.length.toLong, total - files.length, gen))
   }
 
   /** H18 — `q_skip_read`: a RANGE QUERY through the manifested table
@@ -1424,12 +1248,10 @@ object TableFormat {
     val dir = LayoutStore.scratch(t.dir, "skipread").toPath
     try {
       val root = dir.toString
-      val docSchema = StructType.fromDDL(
-        "doc_id LONG, text STRING, lang STRING, n_chars LONG, source STRING")
       commitGenManifested(
         t.documents.repartitionByRange(16, col("source"), col("doc_id")),
-        root, 0L, Seq("source", "doc_id"))
-      val (slice, _) = readScoped(spark, root, 0L, docSchema,
+        root, Seq("source", "doc_id"))
+      val (slice, _) = readScoped(spark, root, 0L, Tables.docSchema,
         Seq(("source", "src7", "src7"), ("doc_id", 100L, 400L)))
       val sliced = slice.localCheckpoint(true)
       val leaked = sliced.filter(!(col("source") === "src7" &&
@@ -1476,22 +1298,15 @@ object TableFormat {
     val dir = LayoutStore.scratch(t.dir, "bloomread").toPath
     try {
       val root = dir.toString
-      val docSchema = StructType.fromDDL(
-        "doc_id LONG, text STRING, lang STRING, n_chars LONG, source STRING")
       // hash-cluster on text: the adversarial-for-ranges layout —
       // every file's doc_id range spans the whole id space
       commitGenManifested(t.documents.repartition(16, col("text")),
-        root, 0L, Seq("lang", "doc_id"), bloomKeys = Seq("doc_id"))
+        root, Seq("lang", "doc_id"), bloomKeys = Seq("doc_id"))
       val ids = Seq(11L, 137L, 423L)
       val planned = prunedFilesIn(spark, root, 0L, "doc_id", ids)
       val total = readManifest(spark, root, 0L).count()
-      val hit =
-        if (planned.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            docSchema)
-        else spark.read.schema(docSchema).parquet(planned: _*)
-      hit.filter(col("doc_id").isin(ids: _*))
+      readFiles(spark, Tables.docSchema, planned)
+        .filter(col("doc_id").isin(ids: _*))
         .select(col("doc_id"), col("lang"), col("source"),
           size(words(col("text"))).cast(LongType).as("n_tokens"))
         .withColumn("bloom_pruned",
@@ -1539,14 +1354,12 @@ object TableFormat {
     val dir = LayoutStore.scratch(t.dir, "metaagg").toPath
     try {
       val root = dir.toString
-      val docSchema = StructType.fromDDL(
-        "doc_id LONG, text STRING, lang STRING, n_chars LONG, source STRING")
       commitGenManifested(
         t.documents.repartitionByRange(16, col("doc_id")),
-        root, 0L, "doc_id")
-      val takedown = readViaManifest(spark, root, 0L, docSchema)
+        root, Seq("doc_id"))
+      val takedown = readViaManifest(spark, root, 0L, Tables.docSchema)
         .filter(col("doc_id") % 97 === 0).select(col("doc_id"))
-      purgeScoped(spark, root, takedown, docSchema, "doc_id")
+      purgeScoped(spark, root, takedown, Tables.docSchema, "doc_id")
       metaAgg(spark, root, currentGen(root), "doc_id")
         .select(col("n_rows").as("n_docs"),
           col("min_key").as("min_id"), col("max_key").as("max_id"))
@@ -1582,18 +1395,16 @@ object TableFormat {
     val dir = LayoutStore.scratch(t.dir, "mergebulk").toPath
     try {
       val root = dir.toString
-      val docSchema = StructType.fromDDL(
-        "doc_id LONG, text STRING, lang STRING, n_chars LONG, source STRING")
       commitGenManifested(
         t.documents.repartitionByRange(16, col("doc_id")),
-        root, 0L, "doc_id")
+        root, Seq("doc_id"))
       val mid = t.documents.agg(max(col("doc_id"))).first().getLong(0) / 2
       val delta = t.documents
         .filter(col("doc_id") % 2 === 0L && col("doc_id") <= mid)
         .withColumn("source", lit("bulk"))
-      val rep = mergeScoped(spark, root, delta, docSchema, "doc_id",
+      val rep = mergeScoped(spark, root, delta, Tables.docSchema, "doc_id",
         scopeMaxKeys = 64, scopeIntervals = 8)
-      readViaManifest(spark, root, currentGen(root), docSchema)
+      readViaManifest(spark, root, currentGen(root), Tables.docSchema)
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_chars")).as("chars"),
@@ -1618,7 +1429,7 @@ object TableFormat {
     * file already at size carries by reference. Data movement, zero
     * logical change — the new generation reads row-identical, the
     * pre-optimize generation still time-travels, and
-    * [[vacuumManifested]] later reaps the superseded smalls by
+    * [[vacuumTable]] later reaps the superseded smalls by
     * reachability. This is the maintenance verb that keeps a year of
     * daily scoped commits (each adding one small rewrite file — H5's
     * pathology inside the versioned core) from degrading every
@@ -1669,19 +1480,18 @@ object TableFormat {
     val dir = LayoutStore.scratch(t.dir, "optimize").toPath
     try {
       val root = dir.toString
-      val docSchema = StructType.fromDDL(
-        "doc_id LONG, text STRING, lang STRING, n_chars LONG, source STRING")
       val docs = t.documents
       commitGenManifested(docs.repartitionByRange(16, col("doc_id")),
-        root, 0L, "doc_id")
+        root, Seq("doc_id"))
       val shift = docs.agg(max(col("doc_id")) + 1L).first().getLong(0)
       (1 to 3).foreach { k =>
         val slice = docs.filter(pmod(col("doc_id"), lit(211L)) === k.toLong)
           .withColumn("doc_id", col("doc_id") + lit(shift * k))
-        mergeScoped(spark, root, slice, docSchema, "doc_id")
+        mergeScoped(spark, root, slice, Tables.docSchema, "doc_id")
       }
-      optimize(spark, root, docSchema, smallRows = 10L, targetRows = 512L)
-      readViaManifest(spark, root, currentGen(root), docSchema)
+      optimize(spark, root, Tables.docSchema,
+        smallRows = 10L, targetRows = 512L)
+      readViaManifest(spark, root, currentGen(root), Tables.docSchema)
         .select(col("source"), col("doc_id"),
           size(words(col("text"))).cast(LongType).as("toks"))
         .groupBy(col("source"))
@@ -1730,10 +1540,9 @@ object TableFormat {
       val root = dir.toString
       val docs = t.documents
       commitGenManifested(docs.repartitionByRange(16, col("doc_id")),
-        root, 0L, "doc_id")
-      val evolved = StructType.fromDDL(
-        "doc_id LONG, text STRING, lang STRING, n_chars LONG, " +
-          "source STRING, quality LONG, rev LONG")
+        root, Seq("doc_id"))
+      val evolved = Tables.docSchema
+        .add("quality", LongType).add("rev", LongType)
       val shift = docs.agg(max(col("doc_id")) + 1L).first().getLong(0)
       // the new columns derive from the FINAL doc_id (micro-unit
       // quality, so the oracle's sum is integer-exact cross-engine)

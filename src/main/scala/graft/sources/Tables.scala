@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet tables (see TESTDATA.md).
   *
@@ -52,6 +53,13 @@ final class Tables(val spark: SparkSession, val dir: String) {
 
 object Tables {
   def apply(spark: SparkSession, dir: String): Tables = new Tables(spark, dir)
+
+  /** The `documents` schema, passed EXPLICITLY on every read-back of a
+    * documents store: inference must never re-type a column (a
+    * numeric-looking partition value), and an empty (fully purged)
+    * store must read as an empty frame. */
+  private[graft] val docSchema: StructType = StructType.fromDDL(
+    "doc_id LONG, text STRING, lang STRING, n_chars LONG, source STRING")
 
   /** Naive nanos-long → microsecond TIMESTAMP_NTZ truncation,
     * SESSION-TIMEZONE-INDEPENDENT: micros are added onto an NTZ epoch

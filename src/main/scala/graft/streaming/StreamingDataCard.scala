@@ -32,8 +32,7 @@ import graft.operators.TextAnalysis
   *
   * Exactly-once: foreachBatch + the TABLE-FORMAT COMMIT CORE — the
   * card is a [[graft.sources.TableFormat]] versioned table (the
-  * round-17 verdict's "one commit protocol should own every store":
-  * this sink predated the core and carried its own pointer swap).
+  * round-17 verdict's "one commit protocol should own every store").
   * Batch b folds the current generation with its delta and commits
   * it as the next generation via [[graft.sources.TableFormat
   * .commitGen]], with the (appId, batchId) idempotent-writer record
@@ -42,10 +41,10 @@ import graft.operators.TextAnalysis
   * crash-replayed batch skips without any separate mutable marker).
   * A crash before the marker CAS leaves the OLD generation fully
   * live plus an unreferenced staged dir the retention sweep ages
-  * out; the two-generation grace window the old pointer GC kept is
-  * now [[graft.sources.TableFormat.vacuumGenerations]] with
-  * keep = 2. The table-format lineage is the only on-disk layout: a
-  * state dir with no committed generation reads as an empty card. */
+  * out; the two-generation grace window is the format's own
+  * [[graft.sources.TableFormat.vacuumTable]] with keep = 2. The
+  * table-format lineage is the only on-disk layout: a state dir with
+  * no committed generation reads as an empty card. */
 object StreamingDataCard {
 
   private val docSchema = StructType(Seq(
@@ -154,17 +153,14 @@ object StreamingDataCard {
           }
           // COMMIT through the table-format core: the next generation
           // plus the (appId, batchId) txn record, atomic behind the
-          // marker install — a crash-replayed batch re-folds and
-          // overwrites the same UNCOMMITTED generation idempotently,
-          // a replay of a committed batch skips on the txn guard
-          val g = TableFormat.currentGenOption(cardPath)
-            .map(_ + 1).getOrElse(0L)
-          TableFormat.commitGen(merged, cardPath, g,
+          // marker CAS — a crash-replayed batch re-folds into a fresh
+          // staged dir (the crashed one is unreferenced debris), a
+          // replay of a committed batch skips on the txn guard
+          val g = TableFormat.commitGen(merged, cardPath,
             txn = Some(appId -> batchId))
           // two-generation grace window (the snapshot-table
-          // compromise the old pointer GC kept), now the format's own
-          // retention sweep
-          if (g >= 2) TableFormat.vacuumGenerations(cardPath, keep = 2)
+          // compromise), the format's own retention sweep
+          if (g >= 2) TableFormat.vacuumTable(spark, cardPath, keep = 2)
           ()
         }
       }

@@ -68,7 +68,7 @@ object StreamingDeduper {
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
   /** (distinct shingles, band buckets) for one document — the batch
-    * pipeline's shingleRows + signatureOf + bandBucketCols semantics
+    * pipeline's shingleRowsOf + signatureOf + bandBucketCols semantics
     * (same trim/lower/split, same hash salts, same string-min), as a
     * pure per-doc function. */
   private[graft] def features(text: String): (Seq[String], Seq[String]) = {

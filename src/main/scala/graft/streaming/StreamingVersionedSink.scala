@@ -10,10 +10,9 @@ import org.apache.spark.sql.types.StructType
 import graft.sources.TableFormat
 
 /** Micro-batch commits through the VERSIONED TABLE — the streaming
-  * exactly-once discipline unified with the table-format core
-  * (StreamingDataCard predates sources/TableFormat and carries its
-  * own pointer swap; this sink is the composition the round-15
-  * verdict asked for, and the one a new stream should use).
+  * exactly-once discipline unified with the table-format core (the
+  * composition the round-15 verdict asked for; StreamingDataCard
+  * commits its card through the same core).
   *
   * Batch b MERGES (latest-wins on the key, H8's rule) into the
   * CURRENT generation via [[TableFormat.tryMergeScoped]], recording
@@ -30,7 +29,7 @@ import graft.sources.TableFormat
   * real format's log does. A mid-stream reader time-travels ANY
   * committed generation (H12) while the stream runs, because commits
   * never touch older generations, and the reachability sweep
-  * (vacuumManifested) bounds the history exactly as for a
+  * (vacuumTable) bounds the history exactly as for a
   * batch-written table (retention must keep at least the stream's
   * replayable horizon — the rule Delta documents for idempotent
   * writer versions).
@@ -125,9 +124,7 @@ object StreamingVersionedSink {
     Files.createDirectories(Paths.get(root))
     if (TableFormat.currentGenOption(root).isEmpty)
       TableFormat.commitGenManifested(
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema),
-        root, 0L, key)
+        TableFormat.readFiles(spark, schema, Nil), root, Seq(key))
   }
 
   /** The writer identity a checkpoint location implies: Delta's

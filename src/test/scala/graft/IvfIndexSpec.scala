@@ -486,7 +486,8 @@ class IvfIndexSpec extends SparkTestBase {
     // plan: the cell scan is file-pruned from the manifest AND the
     // label predicate reaches the metadata parquet scan
     locally {
-      val probedF = EmbeddingStore.probeCells(spark, path, 0L, probes = 4)
+      val probedF =
+        EmbeddingStore.probeCellsWithQuery(spark, path, 0L, probes = 4)._1
       val (readF, totalF) = prunedVsTotal(path, "cells", probedF.toSeq)
       assert(readF < totalF,
         s"filtered probe scan planned $readF of $totalF cell files")
@@ -497,7 +498,8 @@ class IvfIndexSpec extends SparkTestBase {
     // completeness within the probed cells: independent brute-force
     // over those cells restricted to label 3 agrees row-for-row
     val cells = IndexCatalog.read(spark, path, "cells")
-    val probed = EmbeddingStore.probeCells(spark, path, 0L, probes = 4).toSeq
+    val probed = EmbeddingStore.probeCellsWithQuery(spark, path, 0L,
+      probes = 4)._1.toSeq
     val labels = t.embeddings
       .filter(col("label") === 3).select(col("vec_id")).collect()
       .map(_.getLong(0)).toSet

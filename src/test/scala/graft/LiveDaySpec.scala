@@ -214,7 +214,7 @@ class LiveDaySpec extends SparkTestBase {
     // the SAME reader
     val refCard = Files.createTempDirectory("graft-liveday-refcard").toFile
     graft.sources.TableFormat.commitGen(
-      StreamingDataCard.partials(deltaDocs), refCard.getAbsolutePath, 0L)
+      StreamingDataCard.partials(deltaDocs), refCard.getAbsolutePath)
     val liveCard = StreamingDataCard.readCard(spark, s"$root/card")
       .collect().map(_.toString).sorted.toSeq
     val batchCard = StreamingDataCard

@@ -65,7 +65,7 @@ class MutationPropertySpec extends SparkTestBase {
         .createTempDirectory("graft-prop-scoped").toString
       val schema = df(state).schema
       TableFormat.commitGenManifested(
-        df(state).repartitionByRange(4, col("k")), root, 0L, "k")
+        df(state).repartitionByRange(4, col("k")), root, Seq("k"))
       // merge tracks map union (delta wins)
       TableFormat.mergeScoped(spark, root, df(delta), schema, "k")
       val m1 = state ++ delta

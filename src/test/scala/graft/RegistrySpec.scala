@@ -73,4 +73,22 @@ class RegistrySpec extends AnyFunSuite {
     assert(orphan.isEmpty,
       s"oracleSql entries with no queries entry: ${orphan.toSeq.sorted.mkString(", ")}")
   }
+
+  /** PLANS.md is the reviewable plan of every row (`graft.Dev plan`
+    * output): one `## <row>` section per registry key, so a new row
+    * without a regenerated plan — or a retired row's stale plan —
+    * fails here instead of drifting silently. */
+  test("PLANS.md has exactly one ## section per registry key") {
+    val sections = Files.readString(Paths.get("PLANS.md")).linesIterator
+      .collect { case l if l.startsWith("## ") => l.stripPrefix("## ").trim }
+      .toSeq
+    val dup = sections.diff(sections.distinct)
+    assert(dup.isEmpty, s"PLANS.md sections repeated: ${dup.mkString(", ")}")
+    val missing = SparkEntry.queries.keySet -- sections
+    assert(missing.isEmpty,
+      s"registry keys with no PLANS.md section: ${missing.toSeq.sorted.mkString(", ")}")
+    val stale = sections.toSet -- SparkEntry.queries.keySet
+    assert(stale.isEmpty,
+      s"PLANS.md sections naming no registry key: ${stale.toSeq.sorted.mkString(", ")}")
+  }
 }

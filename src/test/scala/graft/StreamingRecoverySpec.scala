@@ -339,7 +339,7 @@ class StreamingRecoverySpec extends SparkTestBase {
     // batch pass, read back through the SAME readCard path (so
     // rounding/ordering can't diverge between the two sides)
     graft.sources.TableFormat.commitGen(
-      StreamingDataCard.partials(t.documents), ref.getAbsolutePath, 0L)
+      StreamingDataCard.partials(t.documents), ref.getAbsolutePath)
     def rows(dir: File) =
       StreamingDataCard.readCard(spark, dir.getAbsolutePath).collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
@@ -615,13 +615,10 @@ class StreamingRecoverySpec extends SparkTestBase {
     assert(gen(5L) ===
       Seq((1L, 11L), (2L, 21L), (3L, 30L), (4L, 40L), (5L, 50L)),
       "final state must equal the batch latest-wins replay of all deltas")
-    // the stream's retention composes — and the MANIFESTED table
-    // refuses the by-directory sweep (carried references would be
-    // destroyed); reachability-based retention is the safe verb
-    intercept[IllegalArgumentException] {
-      TableFormat.vacuumGenerations(root, keep = 2)
-    }
-    assert(TableFormat.vacuumManifested(spark, root, keep = 2) >= 0L)
+    // the stream's retention composes: the one reachability sweep
+    // keeps every file a retained generation carries by reference
+    assert(TableFormat.vacuumTable(spark, root, keep = 2).gens ===
+      (0L to 3L))
     assert(gen(5L) ===
       Seq((1L, 11L), (2L, 21L), (3L, 30L), (4L, 40L), (5L, 50L)),
       "the current generation must read intact through retained storage")
@@ -648,7 +645,7 @@ class StreamingRecoverySpec extends SparkTestBase {
     TableFormat.commitGenManifested(
       spark.range(0, 1000).select(col("id").as("k"), (col("id") * 10).as("v"))
         .repartitionByRange(10, col("k")),
-      root, 0L, "k")
+      root, Seq("k"))
     var i = 0
     def land(rows: Seq[(Long, Long)]): Unit = {
       rows.toDF("k", "v").coalesce(1).write.mode("append")
@@ -719,7 +716,7 @@ class StreamingRecoverySpec extends SparkTestBase {
     assert(TableFormat.lastTxn(root, "vsink") === Some(1L),
       "the optimize commit must carry the stream's record forward")
     // the most aggressive retention reaps every txn-bearing batch gen
-    TableFormat.vacuumManifested(spark, root, keep = 1)
+    TableFormat.vacuumTable(spark, root, keep = 1)
     assert(TableFormat.lastTxn(root, "vsink") === Some(1L),
       "vacuum keep=1 stranded the stream's lineage")
     // the stream continues: replay still dedups, the next batch lands
@@ -729,6 +726,39 @@ class StreamingRecoverySpec extends SparkTestBase {
       TableFormat.currentGen(root), schema)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
     assert(fin === Seq((1L, 10L), (2L, 20L), (3L, 30L)))
+  }
+
+  test("versioned-table sink: a FULL single-writer re-commit carries " +
+    "the stream's txn records forward too, so vacuum keep=1 after it " +
+    "keeps the stream's lineage") {
+    import graft.streaming.StreamingVersionedSink
+    import graft.sources.TableFormat
+    import org.apache.spark.sql.types.StructType
+    val root = new File(
+      Files.createTempDirectory("graft-vfull-tbl").toFile, "table")
+      .getAbsolutePath
+    val schema = StructType.fromDDL("k LONG, v LONG")
+    StreamingVersionedSink.init(spark, root, schema, "k")
+    def commit(rows: Seq[(Long, Long)], b: Long) =
+      StreamingVersionedSink.commitBatch(root, schema, "k")(
+        rows.toDF("k", "v"), b)
+    assert(commit(Seq((1L, 10L)), 0L))
+    assert(commit(Seq((2L, 20L)), 1L))
+    // a backfill rewrites the whole table through the single-writer verb
+    val full = TableFormat.readViaManifest(spark, root,
+      TableFormat.currentGen(root), schema)
+      .unionByName(Seq((3L, 30L)).toDF("k", "v"))
+    assert(TableFormat.commitGenManifested(full, root, Seq("k")) === 3L)
+    TableFormat.vacuumTable(spark, root, keep = 1)
+    assert(TableFormat.lastTxn(root, "vsink") === Some(1L),
+      "a full re-commit plus vacuum keep=1 stranded the stream's lineage")
+    // replay still dedups and the next batch lands on the backfill
+    assert(!commit(Seq((9L, 90L)), 1L))
+    assert(commit(Seq((4L, 40L)), 2L))
+    val fin = TableFormat.readViaManifest(spark, root,
+      TableFormat.currentGen(root), schema)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+    assert(fin === Seq((1L, 10L), (2L, 20L), (3L, 30L), (4L, 40L)))
   }
 
   test("versioned-table sink: optimizeEvery folds the stream's " +
@@ -783,7 +813,7 @@ class StreamingRecoverySpec extends SparkTestBase {
     TableFormat.commitGenManifested(
       spark.range(0, 1000).select(col("id").as("k"), (col("id") * 10).as("v"))
         .repartitionByRange(10, col("k")),
-      root, 0L, "k")
+      root, Seq("k"))
     // three single-key deltas land as three micro-batches
     var i = 0
     def land(rows: Seq[(Long, Long)]): Unit = {

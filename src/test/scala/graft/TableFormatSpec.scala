@@ -16,14 +16,14 @@ class TableFormatSpec extends SparkTestBase {
     "after the gen-1 commit, and the pointer advances atomically") {
     val dir = java.nio.file.Files.createTempDirectory("graft-tt").toString
     val g0 = Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("k", "s", "v")
-    TableFormat.commitGen(g0, dir, 0L)
+    assert(TableFormat.commitGen(g0, dir) === 0L)
     assert(TableFormat.currentGen(dir) === 0L)
     val schema = g0.schema
     val before = TableFormat.readGen(spark, dir, 0L, schema)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
       .sortBy(_._1)
     val g1 = Seq((1L, "a", 10.0), (3L, "c", 30.0)).toDF("k", "s", "v")
-    TableFormat.commitGen(g1, dir, 1L)
+    assert(TableFormat.commitGen(g1, dir) === 1L)
     assert(TableFormat.currentGen(dir) === 1L)
     // the pinned past-generation read after the commit — time travel
     val after = TableFormat.readGen(spark, dir, 0L, schema)
@@ -113,24 +113,26 @@ class TableFormatSpec extends SparkTestBase {
     assert(applied === want)
   }
 
-  test("tryCommitGen: conflicting writers — exactly one wins, the " +
+  test("tryCommit: conflicting writers — exactly one wins, the " +
     "loser's commit leaves nothing durable, and a crashed writer's " +
     "orphan dir never blocks the next commit (no lease to heal)") {
     val root = java.nio.file.Files.createTempDirectory("graft-occ").toString
     val mk = (v: Long) => Seq((1L, v)).toDF("k", "v")
-    TableFormat.commitGen(mk(0), root, 0L)
+    val schema = mk(0).schema
+    def occ(v: Long, expected: Long) = TableFormat.tryCommit(root,
+      Some(expected), schema)(dir => mk(v).write.parquet(dir))
+    TableFormat.commitGen(mk(0), root)
     // writer A derived its change against gen 0 and commits first
-    assert(TableFormat.tryCommitGen(mk(10), root, expected = 0L))
+    assert(occ(10, expected = 0L) === Some(1L))
     assert(TableFormat.currentGen(root) === 1L)
     // writer B ALSO derived against gen 0 — its commit must fail,
     // the table must not advance, and gen 1 must still be A's data
-    assert(!TableFormat.tryCommitGen(mk(20), root, expected = 0L))
+    assert(occ(20, expected = 0L) === None)
     assert(TableFormat.currentGen(root) === 1L)
-    val schema = mk(0).schema
     assert(TableFormat.readGen(spark, root, 1L, schema)
       .collect().map(_.getLong(1)).toSeq === Seq(10L))
     // B retries against the NEW current generation and succeeds
-    assert(TableFormat.tryCommitGen(mk(20), root, expected = 1L))
+    assert(occ(20, expected = 1L) === Some(2L))
     assert(TableFormat.currentGen(root) === 2L)
     // a writer that CRASHED after staging (data dir, no marker)
     // blocks nothing: the next commit proceeds immediately — the
@@ -138,7 +140,7 @@ class TableFormatSpec extends SparkTestBase {
     val orphan = new java.io.File(root, "gen_3_deadbeef")
     assert(orphan.mkdir())
     java.nio.file.Files.writeString(orphan.toPath.resolve("part-0"), "x")
-    assert(TableFormat.tryCommitGen(mk(30), root, expected = 2L))
+    assert(occ(30, expected = 2L) === Some(3L))
     assert(TableFormat.currentGen(root) === 3L)
     assert(TableFormat.readGen(spark, root, 3L, schema)
       .collect().map(_.getLong(1)).toSeq === Seq(30L),
@@ -159,7 +161,7 @@ class TableFormatSpec extends SparkTestBase {
     "exactly one writer's payload and nothing is lost or torn") {
     val root = java.nio.file.Files.createTempDirectory("graft-cas").toString
     val mk = (w: Int, i: Int) => Seq((w.toLong, i.toLong)).toDF("w", "i")
-    TableFormat.commitGen(Seq((-1L, -1L)).toDF("w", "i"), root, 0L)
+    TableFormat.commitGen(Seq((-1L, -1L)).toDF("w", "i"), root)
     val writers = 8; val commitsEach = 5
     val pool = java.util.concurrent.Executors.newFixedThreadPool(writers)
     try {
@@ -169,7 +171,8 @@ class TableFormatSpec extends SparkTestBase {
             var done = 0; var spins = 0
             while (done < commitsEach) {
               val cur = TableFormat.currentGen(root)
-              if (TableFormat.tryCommitGen(mk(w, done), root, cur)) done += 1
+              if (TableFormat.tryCommit(root, Some(cur), mk(w, done).schema)(
+                  dir => mk(w, done).write.parquet(dir)).isDefined) done += 1
               else { spins += 1; require(spins < 10000, "livelock") }
             }
             done
@@ -214,7 +217,7 @@ class TableFormatSpec extends SparkTestBase {
       .select(col("id").as("k"), lit(0L).as("w"), lit(-1L).as("i"))
       .repartitionByRange(10, col("k"))
     val schema = base.schema
-    TableFormat.commitGenManifested(base, root, 0L, "k")
+    TableFormat.commitGenManifested(base, root, Seq("k"))
     val writers = 4; val commitsEach = 3
     val pool = java.util.concurrent.Executors.newFixedThreadPool(writers)
     try {
@@ -267,21 +270,21 @@ class TableFormatSpec extends SparkTestBase {
     "debris — an in-flight writer's staging — alone") {
     val root = java.nio.file.Files.createTempDirectory("graft-debris").toString
     val mk = (v: Long) => Seq((1L, v)).toDF("k", "v")
-    TableFormat.commitGen(mk(0), root, 0L)
-    TableFormat.commitGen(mk(1), root, 1L)
+    TableFormat.commitGen(mk(0), root)
+    TableFormat.commitGen(mk(1), root)
     val tmp = java.nio.file.Paths.get(root, "_commit_123.tmp")
     java.nio.file.Files.writeString(tmp, "gen_9_dead")
     val stage = new java.io.File(root, "gen_2_deadbeef")
     assert(stage.mkdir())
     java.nio.file.Files.writeString(stage.toPath.resolve("part-0"), "x")
     // fresh debris survives a sweep with a real staleness bound
-    assert(TableFormat.vacuumGenerations(root, keep = 1,
-      debrisStaleMillis = 3600000L) === Seq(0L))
+    assert(TableFormat.vacuumTable(spark, root, keep = 1,
+      debrisStaleMillis = 3600000L).gens === Seq(0L))
     assert(java.nio.file.Files.exists(tmp) && stage.isDirectory,
       "swept an in-flight writer's fresh files")
     // aged debris reaps; live generation + marker intact
-    assert(TableFormat.vacuumGenerations(root, keep = 1,
-      debrisStaleMillis = -1L) === Seq.empty)
+    assert(TableFormat.vacuumTable(spark, root, keep = 1,
+      debrisStaleMillis = -1L).gens === Seq.empty)
     assert(!java.nio.file.Files.exists(tmp), "_commit_*.tmp survived")
     assert(!stage.exists(), "unreferenced staging dir survived")
     assert(TableFormat.currentGen(root) === 1L)
@@ -289,25 +292,32 @@ class TableFormatSpec extends SparkTestBase {
       .collect().map(_.getLong(1)).toSeq === Seq(1L))
   }
 
-  test("vacuumGenerations REFUSES a manifested table — the " +
-    "by-directory sweep would reap files newer generations carry by " +
-    "reference; the table stays fully readable after the refusal") {
+  test("vacuumTable on a purged manifested table expires gen 0 but " +
+    "keeps every file gen 1 carries from it by reference — every " +
+    "carried file still reads") {
     val root = java.nio.file.Files.createTempDirectory("graft-vguard")
       .toString
     val docs = spark.range(0, 1000)
       .select(col("id").as("doc_id"),
         concat(lit("t"), col("id")).as("text"))
       .repartitionByRange(10, col("doc_id"))
-    TableFormat.commitGenManifested(docs, root, 0L, "doc_id")
+    TableFormat.commitGenManifested(docs, root, Seq("doc_id"))
     // gen 1 carries 9 of gen 0's files by reference
     TableFormat.purgeScoped(spark, root, Seq(5L).toDF("doc_id"),
       docs.schema, "doc_id")
-    val ex = intercept[IllegalArgumentException] {
-      TableFormat.vacuumGenerations(root, keep = 1)
-    }
-    assert(ex.getMessage.contains("vacuumManifested"),
-      s"refusal must point at the safe verb: ${ex.getMessage}")
-    // the refusal reaped nothing: every carried reference still reads
+    val gen0Dir = TableFormat.resolveDir(root, 0L)
+    val carried = TableFormat.manifestFiles(spark, root, 1L)
+      .filter(_.contains(new java.io.File(gen0Dir).getName))
+    assert(carried.length === 9)
+    assert(TableFormat.vacuumTable(spark, root, keep = 1).gens === Seq(0L))
+    assert(carried.forall(f => TableFormat.localFile(f).exists()),
+      "the sweep reaped a file gen 1 carries by reference")
+    // every carried reference still reads, row for row
+    val carriedRows = TableFormat.manifestMeta(spark, root, 1L).stats
+      .filter(r => carried.contains(r.getAs[String]("file")))
+      .map(_.getAs[Long]("n_rows")).sum
+    assert(spark.read.schema(docs.schema).parquet(carried: _*).count() ===
+      carriedRows)
     assert(TableFormat.readViaManifest(spark, root, 1L, docs.schema)
       .count() === 999L)
   }
@@ -323,7 +333,7 @@ class TableFormatSpec extends SparkTestBase {
         concat(lit("t"), col("id")).as("text"))
       .repartitionByRange(10, col("doc_id"))
     val schema = docs.schema
-    TableFormat.commitGenManifested(docs, root, 0L, "doc_id")
+    TableFormat.commitGenManifested(docs, root, Seq("doc_id"))
     val m0 = TableFormat.readManifest(spark, root, 0L)
     assert(m0.count() === 10L)
     // two listed ids hit exactly two files
@@ -364,7 +374,7 @@ class TableFormatSpec extends SparkTestBase {
         .select(lit(null).cast("long").as("doc_id"), col("text")))
       .repartitionByRange(5, col("doc_id"))
     val schema = docs.schema
-    TableFormat.commitGenManifested(docs, root, 0L, "doc_id")
+    TableFormat.commitGenManifested(docs, root, Seq("doc_id"))
     val m0 = TableFormat.readManifest(spark, root, 0L)
     assert(m0.filter(col("null_doc_id")).count() >= 1L,
       "the manifest must flag the null-carrying file(s)")
@@ -398,7 +408,7 @@ class TableFormatSpec extends SparkTestBase {
         concat(lit("t"), col("id")).as("text"))
       .repartitionByRange(10, col("doc_id"))
     val schema = docs.schema
-    TableFormat.commitGenManifested(docs, root, 0L, "doc_id")
+    TableFormat.commitGenManifested(docs, root, Seq("doc_id"))
     // two updates hit two files; two inserts sit past every max_key
     val delta = Seq((5L, "u5"), (950L, "u950"), (2000L, "n2000"),
       (2001L, "n2001")).toDF("doc_id", "text")
@@ -427,7 +437,7 @@ class TableFormatSpec extends SparkTestBase {
         concat(lit("t"), col("id")).as("text"))
       .repartitionByRange(16, col("source"), col("doc_id"))
     val schema = docs.schema
-    TableFormat.commitGenManifested(docs, root, 0L,
+    TableFormat.commitGenManifested(docs, root,
       Seq("source", "doc_id"))
     assert(TableFormat.readManifest(spark, root, 0L).count() === 16L)
     val all: (Any, Any) = (java.lang.Long.MIN_VALUE, java.lang.Long.MAX_VALUE)
@@ -470,7 +480,7 @@ class TableFormatSpec extends SparkTestBase {
         concat(lit("t"), col("id")).as("text"))
       .repartitionByRange(10, col("doc_id"))
     val schema = docs.schema
-    TableFormat.commitGenManifested(docs, root, 0L, "doc_id")
+    TableFormat.commitGenManifested(docs, root, Seq("doc_id"))
     // three out-of-range single-row commits — the fragmentation a
     // stream of scoped merges accretes (each adds small files)
     (1 to 3).foreach { i =>
@@ -497,7 +507,7 @@ class TableFormatSpec extends SparkTestBase {
     assert(rows(cur + 1).length === 1003)
     // the superseded smalls reap once retention expires them; the
     // compacted current generation reads intact through the sweep
-    val reaped = TableFormat.vacuumManifested(spark, root, keep = 1)
+    val reaped = TableFormat.vacuumTable(spark, root, keep = 1).files
     assert(reaped >= smallBefore,
       s"superseded small files not reclaimed: $reaped")
     assert(rows(cur + 1).length === 1003)
@@ -513,7 +523,7 @@ class TableFormatSpec extends SparkTestBase {
       .select(col("id").as("k"), concat(lit("s"), col("id")).as("s"))
       .repartitionByRange(10, col("k"))
     val baseSchema = base.schema
-    TableFormat.commitGenManifested(base, root, 0L, "k")
+    TableFormat.commitGenManifested(base, root, Seq("k"))
     val evolved = org.apache.spark.sql.types.StructType.fromDDL(
       "k LONG, s STRING, q LONG")
     // one in-range update gains the new column; one insert beyond
@@ -567,29 +577,30 @@ class TableFormatSpec extends SparkTestBase {
         concat(lit("t"), col("id")).as("text"))
       .repartitionByRange(10, col("doc_id"))
     val schema = docs.schema
-    TableFormat.commitGenManifested(docs, root, 0L, "doc_id")
+    TableFormat.commitGenManifested(docs, root, Seq("doc_id"))
     TableFormat.purgeScoped(spark, root, Seq(5L, 950L).toDF("doc_id"),
       schema, "doc_id")
-    def gen0Parquet = Option(new java.io.File(root, "gen_0").listFiles())
+    val gen0Dir = TableFormat.resolveDir(root, 0L)
+    def gen0Parquet = Option(new java.io.File(gen0Dir).listFiles())
       .getOrElse(Array.empty[java.io.File])
       .count(f => f.isFile && f.getName.endsWith(".parquet"))
     assert(gen0Parquet === 10)
-    val reaped = TableFormat.vacuumManifested(spark, root, keep = 1)
+    val reaped = TableFormat.vacuumTable(spark, root, keep = 1).files
     assert(reaped >= 2L, s"expected the 2 rewritten-away files, got $reaped")
     // exactly the 8 carried-by-reference data files survive in gen_0
     assert(gen0Parquet === 8,
       "reachability sweep touched a file gen 1 still references")
-    assert(!new java.io.File(s"$root/gen_0", "_manifest").exists(),
+    assert(!new java.io.File(gen0Dir, "_manifest").exists(),
       "the expired generation's manifest survived")
     assert(!java.nio.file.Files.exists(
-        TableFormat.markerPath(root, 0L)),
+        graft.sources.Markers.table.path(root, 0L)),
       "the expired generation's commit marker survived")
     // the current generation reads intact THROUGH the swept storage
     val back = TableFormat.readViaManifest(spark, root, 1L, schema)
     assert(back.count() === 998L)
     assert(back.filter(col("doc_id").isin(5L, 950L)).isEmpty)
     // idempotent: a second sweep reclaims nothing further
-    assert(TableFormat.vacuumManifested(spark, root, keep = 1) === 0L)
+    assert(TableFormat.vacuumTable(spark, root, keep = 1).files === 0L)
   }
 
   test("bulk-delta scoped merge: a 100k-key delta's skip decision " +
@@ -601,7 +612,7 @@ class TableFormatSpec extends SparkTestBase {
     val base = spark.range(0, 200000)
       .select(col("id").as("k"), (col("id") * 10).as("v"))
       .repartitionByRange(20, col("k"))
-    TableFormat.commitGenManifested(base, root, 0L, "k")
+    TableFormat.commitGenManifested(base, root, Seq("k"))
     val delta = spark.range(50000, 150000)
       .select(col("id").as("k"), lit(-1L).as("v"))
     // the verb's contract at 100 TB is "a day's delta" — 10⁷+ keys.
@@ -640,7 +651,7 @@ class TableFormatSpec extends SparkTestBase {
     val base = spark.range(0, 1000)
       .select(col("id").as("k"), concat(lit("s"), col("id")).as("s"))
       .repartitionByRange(10, col("k"))
-    TableFormat.commitGenManifested(base, root, 0L, "k")
+    TableFormat.commitGenManifested(base, root, Seq("k"))
     val evolved = org.apache.spark.sql.types.StructType.fromDDL(
       "k LONG, s STRING, q LONG")
     // the widening delta: keys 0..99 (one file's range) gain q = k
@@ -695,7 +706,7 @@ class TableFormatSpec extends SparkTestBase {
         concat(lit("t"), col("id")).as("text"))
       .repartition(8, col("text"))
     val schema = docs.schema
-    TableFormat.commitGenManifested(docs, root, 0L, Seq("doc_id"),
+    TableFormat.commitGenManifested(docs, root, Seq("doc_id"),
       bloomKeys = Seq("doc_id"))
     val m = TableFormat.readManifest(spark, root, 0L)
     assert(m.count() === 8L)
@@ -738,7 +749,7 @@ class TableFormatSpec extends SparkTestBase {
         concat(lit("t"), col("id")).as("text"))
       .repartitionByRange(10, col("doc_id"))
     val schema = docs.schema
-    TableFormat.commitGenManifested(docs, root, 0L, Seq("doc_id"),
+    TableFormat.commitGenManifested(docs, root, Seq("doc_id"),
       bloomKeys = Seq("doc_id"))
     val rep = TableFormat.purgeScoped(spark, root, Seq(5L).toDF("doc_id"),
       schema, "doc_id")
@@ -769,7 +780,7 @@ class TableFormatSpec extends SparkTestBase {
         concat(lit("t"), col("id")).as("text"))
       .repartition(8, col("text"))
     val schema = docs.schema
-    TableFormat.commitGenManifested(docs, root, 0L, Seq("doc_id"),
+    TableFormat.commitGenManifested(docs, root, Seq("doc_id"),
       bloomKeys = Seq("doc_id"))
     // mid-domain keys: every file's range admits them (hash layout),
     // so any carry below is the sketch's decision alone
@@ -786,8 +797,9 @@ class TableFormatSpec extends SparkTestBase {
     val withNulls = TableFormat.readViaManifest(spark, root, 1L, schema)
       .unionByName(Seq("n1", "n2").toDF("text")
         .select(lit(null).cast("long").as("doc_id"), col("text")))
-    TableFormat.commitGenManifested(withNulls.repartition(8, col("text")),
-      root, 2L, Seq("doc_id"), bloomKeys = Seq("doc_id"))
+    assert(TableFormat.commitGenManifested(
+      withNulls.repartition(8, col("text")), root, Seq("doc_id"),
+      bloomKeys = Seq("doc_id")) === 2L)
     val nullList = Seq(Option.empty[Long]).toDF("doc_id")
     TableFormat.purgeScoped(spark, root, nullList, schema, "doc_id")
     assert(TableFormat.readViaManifest(spark, root, 3L, schema)
@@ -817,7 +829,7 @@ class TableFormatSpec extends SparkTestBase {
         concat(lit("t"), col("id")).as("text"))
       .repartitionByRange(4, col("doc_id"))
     val schema = docs.schema
-    TableFormat.commitGenManifested(docs, root, 0L, "doc_id")
+    TableFormat.commitGenManifested(docs, root, Seq("doc_id"))
     assert(!TableFormat.readManifest(spark, root, 0L).columns
       .exists(_.startsWith("bloom_")))
     val planned = TableFormat.prunedFilesIn(spark, root, 0L,
@@ -839,7 +851,7 @@ class TableFormatSpec extends SparkTestBase {
     val docs = spark.range(0, 100)
       .select(col("id").as("doc_id"),
         concat(lit("t"), col("id")).as("text"))
-    TableFormat.commitGenManifested(docs, root, 0L, "doc_id")
+    TableFormat.commitGenManifested(docs, root, Seq("doc_id"))
     // an in-flight OCC writer: data + manifest + schema + txn staged
     // at a token-suffixed name, marker NOT yet CAS'd
     val staged = new java.io.File(root, "gen_1_feedf00d")
@@ -859,13 +871,13 @@ class TableFormatSpec extends SparkTestBase {
     // the default staleness bound shields the young staged dir: the
     // round-17 sweep deleted its data AND metadata here, after which
     // the writer's CAS would publish a generation with missing files
-    TableFormat.vacuumManifested(spark, root, keep = 1)
+    TableFormat.vacuumTable(spark, root, keep = 1)
     assert(stagedState() === before,
       "retention swept a live writer's staged commit")
     // ... and the writer's CAS still publishes a COMPLETE generation
     assert(java.nio.file.Files.exists(staged.toPath))
     // past the bound the same dir is crash debris and reaps fully
-    TableFormat.vacuumManifested(spark, root, keep = 1,
+    TableFormat.vacuumTable(spark, root, keep = 1,
       debrisStaleMillis = -1L)
     assert(!staged.exists(), "aged unmarkered debris must reap")
     // the committed table is untouched throughout
@@ -883,7 +895,7 @@ class TableFormatSpec extends SparkTestBase {
         concat(lit("t"), col("id")).as("text"))
       .repartitionByRange(10, col("doc_id"))
     val schema = docs.schema
-    TableFormat.commitGenManifested(docs, root, 0L, "doc_id")
+    TableFormat.commitGenManifested(docs, root, Seq("doc_id"))
     // a narrow takedown touches exactly 2 of 10 files
     val keys = Seq(5L, 950L).toDF("doc_id")
     TableFormat.purgeScoped(spark, root, keys, schema, "doc_id")
@@ -936,27 +948,27 @@ class TableFormatSpec extends SparkTestBase {
     "(uncommitted) generation survives, and the sweep is idempotent") {
     val root = java.nio.file.Files.createTempDirectory("graft-vac").toString
     val mk = (v: Long) => Seq((1L, v)).toDF("k", "v")
-    TableFormat.commitGen(mk(0), root, 0L)
-    TableFormat.commitGen(mk(1), root, 1L)
-    TableFormat.commitGen(mk(2), root, 2L)
-    // an in-flight generation: fully written, pointer NOT moved
-    mk(3).write.parquet(TableFormat.genDir(root, 3L))
+    (0 to 2).foreach(v => TableFormat.commitGen(mk(v), root))
+    val gen0Dir = TableFormat.resolveDir(root, 0L)
+    // an in-flight generation: fully written, marker NOT claimed
+    val inFlight = s"$root/gen_3_feedf00d"
+    mk(3).write.parquet(inFlight)
     assert(TableFormat.currentGen(root) === 2L)
 
-    assert(TableFormat.vacuumGenerations(root, keep = 2) === Seq(0L))
+    assert(TableFormat.vacuumTable(spark, root, keep = 2).gens === Seq(0L))
     assert(TableFormat.currentGen(root) === 2L, "sweep moved the pointer")
     val schema = mk(0).schema
     def v(gen: Long) = TableFormat.readGen(spark, root, gen, schema)
       .collect().map(_.getLong(1)).toSeq
     assert(v(1L) === Seq(1L) && v(2L) === Seq(2L),
       "a retained generation was damaged")
-    assert(!new java.io.File(TableFormat.genDir(root, 0L)).exists(),
+    assert(!new java.io.File(gen0Dir).exists(),
       "the reaped generation still exists")
-    assert(new java.io.File(TableFormat.genDir(root, 3L)).isDirectory,
+    assert(new java.io.File(inFlight).isDirectory,
       "the sweep touched an in-flight generation newer than the pointer")
-    assert(TableFormat.vacuumGenerations(root, keep = 2) === Seq.empty)
+    assert(TableFormat.vacuumTable(spark, root, keep = 2).gens === Seq.empty)
     // keep=1 retains only the current committed generation
-    assert(TableFormat.vacuumGenerations(root, keep = 1) === Seq(1L))
+    assert(TableFormat.vacuumTable(spark, root, keep = 1).gens === Seq(1L))
     assert(v(2L) === Seq(2L))
   }
 
@@ -979,8 +991,8 @@ class TableFormatSpec extends SparkTestBase {
     try {
       val root = s"$work/table"
       new java.io.File(root).mkdirs()
-      TableFormat.commitGen(gen0, root, 0L)
-      TableFormat.commitGen(gen1, root, 1L)
+      TableFormat.commitGen(gen0, root)
+      TableFormat.commitGen(gen1, root)
       val schema = gen0.schema
       val feed = TableFormat.cdcDiff(
         TableFormat.readGen(spark, root, 0L, schema),
@@ -1108,47 +1120,19 @@ class TableFormatSpec extends SparkTestBase {
   private def localFile(f: String) = new java.io.File(
     if (f.startsWith("file:")) java.net.URI.create(f).getPath else f)
 
-  test("manifest cache: a single-writer re-commit of the same " +
-    "generation id reads the new files and stats, never the cached ones") {
-    val root = java.nio.file.Files.createTempDirectory("graft-mc-recommit")
-      .toString
-    val a = rangeDocs(0, 100, 4)
-    val schema = a.schema
-    TableFormat.commitGenManifested(a, root, 0L, "doc_id")
-    assert(idsAt(root, 0L, schema) === (0L until 100L))
-    assert(TableFormat.prunedFilesIn(spark, root, 0L, "doc_id",
-      Seq(50L)).length === 1)
-    TableFormat.commitGenManifested(rangeDocs(1000, 1060, 3), root, 0L,
-      "doc_id")
-    assert(idsAt(root, 0L, schema) === (1000L until 1060L))
-    assert(TableFormat.prunedFilesIn(spark, root, 0L, "doc_id",
-      Seq(50L)).isEmpty, "range test answered from the old stats")
-    assert(TableFormat.prunedFilesIn(spark, root, 0L, "doc_id",
-      Seq(1010L)).length === 1)
-    val (_, rep) = TableFormat.readScoped(spark, root, 0L, schema,
-      Seq(("doc_id", 0L, 5000L)))
-    val nFiles = spark.read.parquet(TableFormat.manifestPath(root, 0L))
-      .count()
-    assert(rep === TableFormat.SkipReport(nFiles, 0L))
-    val agg = TableFormat.metaAgg(spark, root, 0L, "doc_id").first()
-    assert((agg.getLong(0), agg.getLong(1), agg.getLong(2)) ===
-      ((60L, 1000L, 1059L)))
-    assertCacheFresh(root, 0L)
-  }
-
   test("manifest cache: after vacuumManifested a retained generation " +
     "re-reads intact and an expired one can never be served") {
     val root = java.nio.file.Files.createTempDirectory("graft-mc-vacuum")
       .toString
     val docs = rangeDocs(0, 1000, 10)
     val schema = docs.schema
-    TableFormat.commitGenManifested(docs, root, 0L, "doc_id")
+    TableFormat.commitGenManifested(docs, root, Seq("doc_id"))
     TableFormat.purgeScoped(spark, root, Seq(5L, 950L).toDF("doc_id"),
       schema, "doc_id")
     // both generations cached before the sweep
     assert(TableFormat.manifestFiles(spark, root, 0L).length === 10)
     assert(idsAt(root, 1L, schema).length === 998)
-    assert(TableFormat.vacuumManifested(spark, root, keep = 1) >= 2L)
+    assert(TableFormat.vacuumTable(spark, root, keep = 1).files >= 2L)
     val files = TableFormat.manifestFiles(spark, root, 1L)
     assert(files.nonEmpty && files.forall(f => localFile(f).exists()),
       "the retained generation lists a reaped file")
@@ -1165,12 +1149,12 @@ class TableFormatSpec extends SparkTestBase {
       .toString
     val a = rangeDocs(0, 100, 4)
     val schema = a.schema
-    TableFormat.commitGenManifested(a, root, 0L, "doc_id")
+    TableFormat.commitGenManifested(a, root, Seq("doc_id"))
     assert(idsAt(root, 0L, schema) === (0L until 100L))
     graft.sources.LayoutStore.deleteRecursively(new java.io.File(root))
     new java.io.File(root).mkdirs()
-    TableFormat.commitGenManifested(rangeDocs(500, 550, 2), root, 0L,
-      "doc_id")
+    TableFormat.commitGenManifested(rangeDocs(500, 550, 2), root,
+      Seq("doc_id"))
     assert(idsAt(root, 0L, schema) === (500L until 550L))
     assert(TableFormat.prunedFilesIn(spark, root, 0L, "doc_id",
       Seq(10L)).isEmpty)
@@ -1185,7 +1169,7 @@ class TableFormatSpec extends SparkTestBase {
       .toString
     val a = rangeDocs(0, 100, 4)
     val schema = a.schema
-    TableFormat.commitGenManifested(a, src, 0L, "doc_id")
+    TableFormat.commitGenManifested(a, src, Seq("doc_id"))
     assert(idsAt(src, 0L, schema) === (0L until 100L))
     val dst = java.nio.file.Files.createTempDirectory("graft-mc-dst")
       .resolve("clone").toString
@@ -1209,7 +1193,7 @@ class TableFormatSpec extends SparkTestBase {
     val root = java.nio.file.Files.createTempDirectory("graft-mc-bloom")
       .toString
     val docs = rangeDocs(0, 400, 4)
-    TableFormat.commitGenManifested(docs, root, 0L, Seq("doc_id"),
+    TableFormat.commitGenManifested(docs, root, Seq("doc_id"),
       bloomKeys = Seq("doc_id"))
     assert(TableFormat.prunedFilesIn(spark, root, 0L, "doc_id",
       Seq(7L)).length === 1)
@@ -1240,7 +1224,7 @@ class TableFormatSpec extends SparkTestBase {
       .toString
     val docs = rangeDocs(0, 400, 4)
     val schema = docs.schema
-    TableFormat.commitGenManifested(docs, root, 0L, Seq("doc_id"),
+    TableFormat.commitGenManifested(docs, root, Seq("doc_id"),
       bloomKeys = Seq("doc_id"))
     TableFormat.manifestFiles(spark, root, 0L)
     val (_, warm) = JobCounting.countJobs(spark) {
