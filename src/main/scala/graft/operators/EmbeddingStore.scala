@@ -979,31 +979,68 @@ object EmbeddingStore {
     * query's stored vector, cell-id tie-break. Probe scores round
     * BEFORE the ranking (like every ranked score in the library) so
     * the choice is deterministic across engines and the oracle can
-    * replay it. The returned ids are index METADATA (a handful of
-    * ints, like the reference's stored watermark), bounded-collected;
+    * replay it. Everything reads at ONE pin. The query's stored
+    * vector is the one job: a bounded collect of its row from the
+    * files the cells manifest admits (range stats, then the doc_id
+    * sketch — both folded on the driver for a small manifest). Every
+    * IVF probe scores against it. The ranking ([[rankCells]]) runs
+    * no job while the pinned centroids are small enough to sit on the
+    * driver ([[IndexCatalog.Pin.smallRows]]), and one bounded TakeOrdered
+    * collect otherwise. The returned cell ids are index METADATA;
     * turning them into literals is what lets the file listing prune
-    * statically. The query's stored vector rides the SAME bounded
-    * metadata job (no second lookup) — every IVF probe scores against
-    * it. None when the id is not in the store. */
+    * statically. None when the id is not in the store. */
   private[graft] def probeCellsWithQuery(spark: SparkSession, path: String,
-      queryDocId: Long, probes: Int): (Array[Int], Option[Seq[Float]]) = {
-    val centroids = IndexCatalog.read(spark, path, "centroids")
-    // the query-vector lookup prunes by the manifest's doc_id stats:
-    // only files whose id range covers the query are opened — at
-    // 100 TB a point lookup against file statistics, not a scan
-    val qv = IndexCatalog.readPruned(spark, path, "cells",
-        "doc_id", Seq(queryDocId))
-      .filter(col("doc_id") === queryDocId)
-      .select(col("embedding").as("qv"))
-    val rows = collectBounded(
-      centroids.join(broadcast(qv))
-        .select(col("cell"),
-          round(cosineSim(col("centroid"), col("qv")), 6).as("cs"),
-          col("qv"))
-        .orderBy(col("cs").desc, col("cell"))
-        .limit(probes),
-      probes, "probed cell ids")
-    (rows.map(_.getInt(0)), rows.headOption.map(_.getSeq[Float](2)))
+      queryDocId: Long, probes: Int): (Array[Int], Option[Seq[Float]]) =
+    probeCellsWithQuery(spark, IndexCatalog.pin(path), queryDocId, probes)
+
+  private[graft] def probeCellsWithQuery(spark: SparkSession,
+      pin: IndexCatalog.Pin, queryDocId: Long,
+      probes: Int): (Array[Int], Option[Seq[Float]]) = {
+    // a doc id is unique in an index: a second row is a corrupt index
+    // and fails the bound instead of probing twice
+    val q = collectBounded(
+      pin.readPruned(spark, "cells", "doc_id", Seq(queryDocId))
+        .filter(col("doc_id") === queryDocId)
+        .select(col("embedding")),
+      1, "query vector")
+    q.headOption.fold((Array.empty[Int], Option.empty[Seq[Float]])) { r =>
+      val qv = r.getSeq[Float](0)
+      val centroids = pin.smallRows(spark, "centroids")
+        .getOrElse(pin.read(spark, "centroids"))
+      (rankCells(centroids, qv, probes), Some(qv))
+    }
+  }
+
+  /** The top `probes` cells of a (cell, centroid) frame by
+    * round(cosine(centroid, qv), 6) descending, then cell ascending.
+    * Over a LocalRelation the projection folds on the driver (same
+    * Catalyst expressions, so the same scores) and the order is
+    * Spark's, applied in Scala: a Sort over a LocalRelation would
+    * still launch a job. Otherwise one bounded TakeOrdered collect. */
+  private[graft] def rankCells(centroids: DataFrame, qv: Seq[Float],
+      probes: Int): Array[Int] = {
+    val qLit = Option(qv).fold(lit(null).cast(ArrayType(FloatType)))(typedLit(_))
+    val scored = centroids.select(col("cell"),
+      round(cosineSim(col("centroid"), qLit), 6).as("cs"))
+    if (centroids.isLocal)
+      collectBounded(scored, IndexCatalog.smallRowsCap, "cached centroid scores")
+        .sorted(probeOrder).take(probes).map(_.getInt(0))
+    else collectBounded(
+      scored.orderBy(col("cs").desc, col("cell")).limit(probes),
+      probes, "probed cell ids").map(_.getInt(0))
+  }
+
+  /** `ORDER BY cs DESC, cell` over (cell, cs) rows with Spark's
+    * semantics: a NULL score sorts last (DESC defaults to NULLS
+    * LAST), NaN above every number, -0.0 equal to 0.0. */
+  private val probeOrder: Ordering[org.apache.spark.sql.Row] = {
+    val cs: Ordering[org.apache.spark.sql.Row] = (a, b) =>
+      (a.isNullAt(1), b.isNullAt(1)) match {
+        case (false, false) => org.apache.spark.sql.catalyst.util
+          .SQLOrderingUtil.compareDoubles(b.getDouble(1), a.getDouble(1))
+        case (x, y) => java.lang.Boolean.compare(x, y)
+      }
+    cs.orElseBy(_.getInt(0))
   }
 
   /** D8/D25/D28's ONE probe skeleton: the partition-pruned scan of
@@ -1011,21 +1048,21 @@ object EmbeddingStore {
     * query doc excluded — (doc_id, cell, score). Each search variant
     * adds only its tail (top-k / θ filter / metadata join), so the
     * exclusion, rounding and probe handling can never diverge. The
-    * query vector is the one the probe job already collected, scored
-    * as ONE literal node (the compressed probes' idiom) — no second
-    * point lookup and no broadcast. An absent query id probes no
-    * cells, so the frame is empty with the same schema. */
-  private def scoredProbeScan(spark: SparkSession, path: String,
+    * query vector is the one the probe already collected, scored as
+    * ONE literal node (the compressed probes' idiom) — no second
+    * point lookup and no broadcast. Probe and scan read at the same
+    * pin. An absent query id probes no cells, so the frame is empty
+    * with the same schema. */
+  private def scoredProbeScan(spark: SparkSession, pin: IndexCatalog.Pin,
       queryDocId: Long, probes: Int): DataFrame = {
     val (probedCells, qFloat) =
-      probeCellsWithQuery(spark, path, queryDocId, probes)
+      probeCellsWithQuery(spark, pin, queryDocId, probes)
     val qv = qFloat.fold(lit(null).cast(ArrayType(FloatType)))(typedLit(_))
     // the probed scan reads ONLY files whose cell range intersects a
     // probed cell (manifest stats pruning — the versioned-table
     // analogue of the old Hive PartitionFilters); the isin filter is
     // the exact residual on top of the superset the stats admit
-    IndexCatalog.readPruned(spark, path, "cells", "cell",
-        probedCells.toSeq)
+    pin.readPruned(spark, "cells", "cell", probedCells.toSeq)
       .filter(col("cell").isin(probedCells.toSeq: _*))
       .filter(col("doc_id") =!= queryDocId)
       .select(col("doc_id"), col("cell"),
@@ -1034,7 +1071,12 @@ object EmbeddingStore {
 
   def searchIvf(spark: SparkSession, path: String, queryDocId: Long,
       k: Int, probes: Int = 2): DataFrame =
-    scoredProbeScan(spark, path, queryDocId, probes)
+    searchIvfAt(spark, IndexCatalog.pin(path), queryDocId, k, probes)
+
+  /** [[searchIvf]] at an already-resolved index generation. */
+  private[graft] def searchIvfAt(spark: SparkSession, pin: IndexCatalog.Pin,
+      queryDocId: Long, k: Int, probes: Int): DataFrame =
+    scoredProbeScan(spark, pin, queryDocId, probes)
       .orderBy(col("score").desc, col("doc_id"))
       .limit(k)
 
@@ -1094,7 +1136,7 @@ object EmbeddingStore {
     val meta = embeddings
       .select(col("vec_id").as("doc_id"), col("label"))
       .filter(col("label") === label)
-    scoredProbeScan(spark, path, queryDocId, probes)
+    scoredProbeScan(spark, IndexCatalog.pin(path), queryDocId, probes)
       .join(meta, "doc_id")
       .select(col("doc_id"), col("cell"), col("label"), col("score"))
       .orderBy(col("score").desc, col("doc_id"))
@@ -1107,7 +1149,7 @@ object EmbeddingStore {
     * above `minScore`, best-first. */
   def searchIvfRadius(spark: SparkSession, path: String, queryDocId: Long,
       minScore: Double, probes: Int): DataFrame =
-    scoredProbeScan(spark, path, queryDocId, probes)
+    scoredProbeScan(spark, IndexCatalog.pin(path), queryDocId, probes)
       .filter(col("score") >= minScore)
       .orderBy(col("score").desc, col("doc_id"))
 
@@ -1120,9 +1162,9 @@ object EmbeddingStore {
     * every consumer) — shared by the exact ([[searchIvfBatch]]) and
     * compressed ([[ProductQuantizer.searchIvfPqBatch]]) batch probes
     * so the two can never choose different cells. */
-  private[operators] def batchProbeMap(spark: SparkSession, path: String,
-      queries: DataFrame, probes: Int): DataFrame = {
-    val centroids = IndexCatalog.read(spark, path, "centroids")
+  private[operators] def batchProbeMap(spark: SparkSession,
+      pin: IndexCatalog.Pin, queries: DataFrame, probes: Int): DataFrame = {
+    val centroids = pin.read(spark, "centroids")
     val wProbe = Window.partitionBy(col("query_id"))
       .orderBy(col("cs").desc, col("cell"))
     centroids.join(broadcast(queries))
@@ -1171,12 +1213,12 @@ object EmbeddingStore {
     * itself (per-query self-exclusion, D8's rule). */
   def searchIvfBatch(spark: SparkSession, path: String, queries: DataFrame,
       k: Int, probes: Int = 2): DataFrame = {
-    val probeMap = batchProbeMap(spark, path, queries, probes)
+    val pin = IndexCatalog.pin(path)
+    val probeMap = batchProbeMap(spark, pin, queries, probes)
     val probedCells = probedCellsOf(probeMap, queries.count() * probes)
     val wRank = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("doc_id"))
-    IndexCatalog.readPruned(spark, path, "cells", "cell",
-        probedCells.toSeq)
+    pin.readPruned(spark, "cells", "cell", probedCells.toSeq)
       .filter(col("cell").isin(probedCells.toSeq: _*))
       .join(broadcast(probeMap), Seq("cell"))
       .filter(col("doc_id") =!= col("query_id"))
@@ -1414,8 +1456,9 @@ object EmbeddingStore {
     * skew/fractions divide exact integers in one fixed association,
     * so DuckDB replays the row bit-for-bit. */
   def indexStats(spark: SparkSession, path: String): DataFrame = {
-    val cells = IndexCatalog.read(spark, path, "cells")
-    val centroids = IndexCatalog.read(spark, path, "centroids")
+    val pin = IndexCatalog.pin(path)
+    val cells = pin.read(spark, "cells")
+    val centroids = pin.read(spark, "centroids")
     val perCell = cells.groupBy(col("cell")).agg(count(lit(1)).as("n"))
       .agg(count(lit(1)).as("n_cells"),
         max(col("n")).as("max_cell"))
@@ -1425,7 +1468,7 @@ object EmbeddingStore {
         // PQ quantization error per vector, micro-units (codegen'd
         // argmin against the broadcast codebook literal — rides the
         // SAME scan, no extra pass)
-        ProductQuantizer.distortionMicro(spark, path).as("d_mu"))
+        ProductQuantizer.distortionMicro(spark, pin).as("d_mu"))
       .agg(count(lit(1)).as("n_vectors"),
         sum(round(col("cs") * 1000000).cast("long")).as("s_micro"),
         sum(col("d_mu")).as("d_sum"),

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.VectorFunctions.cosineSim
-import graft.sources.Tables
+import graft.sources.{IndexCatalog, Tables}
 
 /** Product-quantization (PQ) layer over the persisted IVF index — the
   * scan-bytes lever for vector search at 100 TB (reference: the
@@ -167,8 +167,8 @@ object ProductQuantizer {
     * [[PqDistortion]]; the one scaling division is the same IEEE op
     * on the same integers on both engines. */
   private[operators] def distortionMicro(spark: SparkSession,
-      path: String): Column = {
-    val cb = readCodebooks(spark, path)
+      pin: IndexCatalog.Pin): Column = {
+    val cb = readCodebooks(spark, pin)
     val m = cb.map(_._1).max + 1
     val raw = GraftColumnBridge.column(PqDistortion(
       GraftColumnBridge.expression(quantize(col("embedding"))), nestedOf(cb, m)))
@@ -203,7 +203,7 @@ object ProductQuantizer {
     * rebuild-on-drift bounds); appended rows stay probe-visible in
     * the compressed domain with no rewrite. */
   def appendPq(spark: SparkSession, assigned: DataFrame, path: String): Unit = {
-    val cb = readCodebooks(spark, path)
+    val cb = readCodebooks(spark, IndexCatalog.pin(path))
     val m = cb.map(_._1).max + 1
     val root = s"$path/pq_codes"
     graft.sources.TableFormat.appendScoped(spark, root,
@@ -219,31 +219,20 @@ object ProductQuantizer {
       .select(col("doc_id"), col("cell"), quantize(col("embedding")).as("qv"))
       .select(col("doc_id"), col("cell"), codesExpr(cb, m).as("codes"))
 
-  /** The persisted codebook table back as driver-side metadata
-    * (m·ncent rows, bounded), memoized per (path, dir-mtime):
-    * codebooks are immutable between builds (appends never touch
-    * them; a rebuild swaps the directory and bumps its mtime, which
-    * invalidates the entry), so repeated probes against one index pay
-    * the read job once. */
-  private val codebookCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long),
-      Seq[(Int, Int, Seq[Long])]]()
-
+  /** The codebook table pinned by `pin`, back as driver-side
+    * metadata (m·ncent rows, bounded). Codebooks are immutable within
+    * a generation (appends never touch them; a rebuild commits the
+    * next one), so they come from [[IndexCatalog.Pin.smallRows]]: loaded
+    * once per generation, keyed by its manifest identity, which a
+    * root deleted and rebuilt at the same generation id does not
+    * share. */
   private def readCodebooks(spark: SparkSession,
-      path: String): Seq[(Int, Int, Seq[Long])] = {
-    // keyed by the SUBSTORE generation: codebooks are immutable
-    // within a generation (appends never touch them; a rebuild
-    // commits the next generation, which rotates the key), so
-    // repeated probes against one index pay the read job once
-    val root = s"$path/pq_codebooks"
-    val key = (root, graft.sources.TableFormat.currentGen(root))
-    codebookCache.computeIfAbsent(key, _ =>
-      EmbeddingStore.collectBounded(
-        graft.sources.TableFormat.readViaManifest(spark, root, key._2,
-          graft.sources.TableFormat.genSchema(root, key._2)),
-        numCentroids * 64L, "PQ codebooks")
-        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2))).toSeq)
-  }
+      pin: IndexCatalog.Pin): Seq[(Int, Int, Seq[Long])] =
+    EmbeddingStore.collectBounded(
+      pin.smallRows(spark, "pq_codebooks")
+        .getOrElse(pin.read(spark, "pq_codebooks")),
+      numCentroids * 64L, "PQ codebooks")
+      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2))).toSeq
 
   /** `q_search_ivfpq` — compressed-domain ANN through the persisted
     * IVF-PQ index: probe the 2 nearest refined centroids (exactly
@@ -260,14 +249,14 @@ object ProductQuantizer {
     * construction. */
   def searchIvfPq(spark: SparkSession, path: String, queryDocId: Long,
       k: Int, probes: Int = 2): DataFrame = {
+    val pin = IndexCatalog.pin(path)
     val (probed, qFloat) =
-      EmbeddingStore.probeCellsWithQuery(spark, path, queryDocId, probes)
-    val cb = readCodebooks(spark, path)
+      EmbeddingStore.probeCellsWithQuery(spark, pin, queryDocId, probes)
+    val cb = readCodebooks(spark, pin)
     val m = cb.map(_._1).max + 1
     // manifest-pruned: only code files whose cell range intersects a
     // probed cell are read (the isin filter below is the residual)
-    val codesTable = graft.sources.IndexCatalog.readPruned(spark, path,
-      "pq_codes", "cell", probed.toSeq)
+    val codesTable = pin.readPruned(spark, "pq_codes", "cell", probed.toSeq)
     if (qFloat.isEmpty) {
       // absent query doc: same empty-frame contract as the other
       // search rows — and the oracle's probe CTE is empty too
@@ -325,7 +314,8 @@ object ProductQuantizer {
     import org.apache.spark.sql.expressions.Window
     // the SAME probe choice as the exact batch probe (shared stage —
     // recall comparisons isolate compression, never cell choice)
-    val probeMap = EmbeddingStore.batchProbeMap(spark, path, queries, probes)
+    val pin = IndexCatalog.pin(path)
+    val probeMap = EmbeddingStore.batchProbeMap(spark, pin, queries, probes)
     val qRows = EmbeddingStore.collectBounded(
       probeMap.select(col("query_id"), col("qv")).distinct(),
       10000, "pq batch query vectors")
@@ -333,7 +323,7 @@ object ProductQuantizer {
       .sortBy(_._1)
     val probedCells =
       EmbeddingStore.probedCellsOf(probeMap, qRows.length.toLong * probes)
-    val cb = readCodebooks(spark, path)
+    val cb = readCodebooks(spark, pin)
     val m = cb.map(_._1).max + 1
     // per-query ADC tables (the searchIvfPq rule, one per query):
     // adcAll(qi)(s)(c) — bounded driver math over index metadata
@@ -358,8 +348,7 @@ object ProductQuantizer {
       .reduce(_ + _)
     val wRank = Window.partitionBy(col("query_id"))
       .orderBy(col("adist").asc, col("doc_id"))
-    graft.sources.IndexCatalog.readPruned(spark, path, "pq_codes",
-        "cell", probedCells.toSeq)
+    pin.readPruned(spark, "pq_codes", "cell", probedCells.toSeq)
       .filter(col("cell").isin(probedCells.toSeq: _*))
       .join(broadcast(pairs), Seq("cell"))
       .filter(col("doc_id") =!= col("query_id"))

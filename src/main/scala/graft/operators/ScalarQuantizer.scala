@@ -123,10 +123,10 @@ object ScalarQuantizer {
     * is a driver-computed constant from the same exact integers. */
   def searchIvfSq8(spark: SparkSession, path: String,
       queryDocId: Long, k: Int, probes: Int = 2): DataFrame = {
+    val pin = graft.sources.IndexCatalog.pin(path)
     val (probed, qFloat) =
-      EmbeddingStore.probeCellsWithQuery(spark, path, queryDocId, probes)
-    val codesTable = graft.sources.IndexCatalog.readPruned(spark, path,
-      "sq8_codes", "cell", probed.toSeq)
+      EmbeddingStore.probeCellsWithQuery(spark, pin, queryDocId, probes)
+    val codesTable = pin.readPruned(spark, "sq8_codes", "cell", probed.toSeq)
     if (qFloat.isEmpty) {
       // absent query doc: the empty-frame contract of the search rows
       return codesTable.select(col("doc_id"), col("cell"),

@@ -16,12 +16,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * publishes ONE top-level marker (`icommit_<g>`) pinning the exact
   * substore generation quintuple — the Iceberg shape: data files →
   * per-table metadata → one atomic catalog-pointer swap. Readers
-  * resolve the pointer once and read every substore AT ITS PINNED
-  * GENERATION, so no reader can ever observe new cells beside old
-  * centroids (the cross-store torn read the old rename-swap rebuild
-  * had a window for); a crash between substore commits leaves the
-  * previous quintuple fully live and only unreferenced newer
-  * generations as debris. Index generations are TIME TRAVEL for the
+  * resolve the pointer once (one [[Pin]] per request) and read every
+  * substore AT ITS PINNED GENERATION, so no reader can ever observe
+  * new cells beside old centroids (the cross-store torn read the old
+  * rename-swap rebuild had a window for); a crash between substore
+  * commits leaves the previous quintuple fully live and only
+  * unreferenced newer generations as debris. Index generations are TIME TRAVEL for the
   * whole index: pin g and every probe sees the index exactly as it
   * was (reference posture: engine.py:163 mutates its store in place
   * and keeps no history).
@@ -68,17 +68,64 @@ object IndexCatalog {
     g
   }
 
-  /** Read `store` at the index generation `g`'s pinned substore
-    * generation, via its manifest file list and recorded schema. */
-  private[graft] def readAt(spark: SparkSession, path: String, g: Long,
-      store: String): DataFrame = {
-    val sg = pins(path, g).getOrElse(store,
+  /** One index generation resolved once: the substore generations it
+    * pins. A request reads every substore through ONE pin, so a
+    * publish between its reads can never hand it centroids of
+    * generation g beside cells of g+1. */
+  private[graft] final case class Pin(path: String, gen: Long,
+      stores: Map[String, Long]) {
+
+    private[graft] def genOf(store: String): Long = stores.getOrElse(store,
       throw new java.io.FileNotFoundException(
-        s"index generation $g of $path does not pin substore $store"))
-    val root = s"$path/$store"
-    TableFormat.readViaManifest(spark, root, sg,
-      TableFormat.genSchema(root, sg))
+        s"index generation $gen of $path does not pin substore $store"))
+
+    /** `store` at its pinned generation, via its manifest file list
+      * and recorded schema. */
+    def read(spark: SparkSession, store: String): DataFrame = {
+      val (root, sg) = (s"$path/$store", genOf(store))
+      TableFormat.readViaManifest(spark, root, sg,
+        TableFormat.genSchema(root, sg))
+    }
+
+    /** Manifest-pruned read of `store` for a discrete `values` set on
+      * `key` — the probe path: only files whose stats can hold a
+      * probed value are read; callers keep their residual filters
+      * (the scan is a superset by stats). */
+    def readPruned(spark: SparkSession, store: String, key: String,
+        values: Seq[Any]): DataFrame = {
+      val (root, sg) = (s"$path/$store", genOf(store))
+      TableFormat.readPrunedIn(spark, root, sg,
+        TableFormat.genSchema(root, sg), key, values)
+    }
+
+    /** `store`'s pinned rows held on the driver, as a LocalRelation
+      * — None when the generation has more than [[smallRowsCap]] rows
+      * or its rows outweigh [[SmallRowsEntryBytes]]. */
+    def smallRows(spark: SparkSession, store: String): Option[DataFrame] = {
+      val (root, sg) = (s"$path/$store", genOf(store))
+      val n = TableFormat.manifestMeta(spark, root, sg).stats
+        .map(_.getAs[Long]("n_rows")).sum
+      if (n > smallRowsCap) None
+      else smallRowsCache.getOrLoad(TableFormat.manifestPath(root, sg)) {
+        val rows = graft.operators.EmbeddingStore.collectBounded(
+          read(spark, store), smallRowsCap, s"cached $store rows").toSeq
+        Some(rows).filter(r =>
+          org.apache.spark.util.SizeEstimator.estimate(r) <= SmallRowsEntryBytes)
+      }.map(TableFormat.localFrame(spark, _, TableFormat.genSchema(root, sg)))
+    }
   }
+
+  /** The CURRENT index generation, resolved once. */
+  private[graft] def pin(path: String): Pin = pinAt(path, currentGen(path))
+
+  private[graft] def pinAt(path: String, g: Long): Pin =
+    Pin(path, g, pins(path, g))
+
+  /** Read `store` at the index generation `g`'s pinned substore
+    * generation. */
+  private[graft] def readAt(spark: SparkSession, path: String, g: Long,
+      store: String): DataFrame =
+    pinAt(path, g).read(spark, store)
 
   /** Read `store` at the CURRENT index generation. The pin resolves
     * at plan-construction time, so the frame is a stable snapshot
@@ -86,21 +133,43 @@ object IndexCatalog {
     * immutable). */
   private[graft] def read(spark: SparkSession, path: String,
       store: String): DataFrame =
-    readAt(spark, path, currentGen(path), store)
+    pin(path).read(spark, store)
 
-  /** Manifest-pruned read of `store` (current index generation) for a
-    * discrete `values` set on `key` — the probe path: only files
-    * whose [min, max] can hold a probed value are read; callers keep
-    * their residual filters (the scan is a superset by stats). */
+  /** [[Pin.readPruned]] at the current index generation. */
   private[graft] def readPruned(spark: SparkSession, path: String,
-      store: String, key: String, values: Seq[Any]): DataFrame = {
-    val sg = pins(path, currentGen(path)).getOrElse(store,
-      throw new java.io.FileNotFoundException(
-        s"index at $path does not pin substore $store"))
-    val root = s"$path/$store"
-    TableFormat.readPrunedIn(spark, root, sg,
-      TableFormat.genSchema(root, sg), key, values)
-  }
+      store: String, key: String, values: Seq[Any]): DataFrame =
+    pin(path).readPruned(spark, store, key, values)
+
+  // ---------------------------------------------------------------
+  // Driver-side rows of small pinned substore generations
+  //
+  // The centroids and the PQ codebooks are index METADATA: a few
+  // hundred rows that every request of a session reads and no
+  // request changes. The driver keeps them per generation, keyed by
+  // the generation's manifest identity (the key of
+  // TableFormat.manifestCache, so a root deleted and rebuilt at the
+  // same generation id is a new key), and serves them as a
+  // LocalRelation that Catalyst folds without a job. Larger
+  // generations keep the distributed read.
+  // ---------------------------------------------------------------
+
+  /** A substore generation of at most this many rows (the manifest's
+    * `n_rows` sum, so deciding runs no job) is loaded once, through a
+    * bounded collect with this bound. A `var` ONLY so specs can force
+    * the distributed path. */
+  private[graft] var smallRowsCap: Long = 4096L
+
+  /** Bytes one cached generation may hold (SizeEstimator, measured
+    * once after its load); a larger one is remembered as too big and
+    * read distributed from then on. */
+  private[graft] val SmallRowsEntryBytes: Long = 4L << 20
+
+  /** Generations the cache holds. Worst case: 16 entries × 4 MiB =
+    * 64 MiB. */
+  private[graft] val SmallRowsEntries = 16
+
+  private val smallRowsCache = new TableFormat.IdentityCache[
+    Option[Seq[org.apache.spark.sql.Row]]](SmallRowsEntries)
 
   /** Retention over the whole index: keep the newest `keep` index
     * generations; every substore vacuums by REACHABILITY down to the

@@ -342,10 +342,11 @@ object TableFormat {
   // search request's jobs. The driver keeps, per manifest identity,
   // the inferred schema and the O(files) RANGE-STAT rows (`file`,
   // `n_rows`, `min_*`, `max_*`, `null_*`): the same scalars every
-  // file-list collect already brought to the driver. Bloom sketch bytes never enter the cache —
-  // the sketch probe stays a distributed filter over the manifest
-  // parquet, so the driver's share stays O(files) scalars at any
-  // table size.
+  // file-list collect already brought to the driver. Bloom sketch
+  // bytes stay out of these entries; a SMALL manifest's sketch rows
+  // live in the separate, byte-capped [[sketchCache]], so a point
+  // lookup on it folds on the driver, while a large manifest's
+  // sketch probe stays a distributed filter over its parquet.
   // ---------------------------------------------------------------
 
   /** The cached metadata of one manifest: the schema a reader passes
@@ -359,42 +360,51 @@ object TableFormat {
       * projections over it fold on the driver (Catalyst's
       * ConvertToLocalRelation), so a range-pruning decision keeps
       * Spark's exact comparison semantics and runs no job. */
-    def statsFrame(spark: SparkSession): DataFrame = {
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(stats.asJava, statsSchema)
-    }
+    def statsFrame(spark: SparkSession): DataFrame =
+      localFrame(spark, stats, statsSchema)
   }
 
-  /** An LRU map from a manifest's IDENTITY to its metadata, holding at
-    * most `capacity` entries. The identity is the canonical
+  /** Driver-held rows as a LocalRelation frame (see
+    * [[ManifestMeta.statsFrame]]). */
+  private[graft] def localFrame(spark: SparkSession,
+      rows: Seq[org.apache.spark.sql.Row], schema: StructType): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava, schema)
+  }
+
+  /** The part files of the manifest at `dir` (data files only). */
+  private def manifestParts(dir: String): Seq[java.io.File] =
+    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty[java.io.File])
+      .filter(f => f.isFile &&
+        !f.getName.startsWith("_") && !f.getName.startsWith("."))
+      .sortBy(_.getName).toSeq
+
+  /** An LRU map from a manifest's IDENTITY to a value derived from it,
+    * holding at most `capacity` entries. The identity is the canonical
     * `_manifest` dir plus the (name, length, mtime) of every part
     * file; part names carry the writing job's UUID, so a root
     * deleted and recreated, or a hard-link clone under a new root, is
     * a NEW key — an entry can never answer for different bytes. */
-  private[graft] final class ManifestCache(capacity: Int) {
+  private[graft] class IdentityCache[V](capacity: Int) {
     private type Key = (String, Seq[(String, Long, Long)])
     private val entries =
-      new java.util.LinkedHashMap[Key, ManifestMeta](16, 0.75f, true) {
+      new java.util.LinkedHashMap[Key, V](16, 0.75f, true) {
         override def removeEldestEntry(
-            e: java.util.Map.Entry[Key, ManifestMeta]): Boolean =
+            e: java.util.Map.Entry[Key, V]): Boolean =
           this.size() > capacity
       }
 
     private def key(dir: String): Key = {
       val d = new java.io.File(dir).getCanonicalFile
-      val parts = Option(d.listFiles()).getOrElse(Array.empty[java.io.File])
-        .filter(f => f.isFile &&
-          !f.getName.startsWith("_") && !f.getName.startsWith("."))
-        .map(f => (f.getName, f.length(), f.lastModified()))
-        .sortBy(_._1).toSeq
-      (d.getPath, parts)
+      (d.getPath, manifestParts(d.getPath)
+        .map(f => (f.getName, f.length(), f.lastModified())))
     }
 
     /** The entry for the manifest at `dir`, running `load` on a miss
       * OUTSIDE the map lock (a slow load never blocks readers of
       * other manifests; two racing loaders of one key compute the
       * same value and the later put is harmless). */
-    def getOrLoad(dir: String)(load: => ManifestMeta): ManifestMeta = {
+    def getOrLoad(dir: String)(load: => V): V = {
       val k = key(dir)
       entries.synchronized(Option(entries.get(k))).getOrElse {
         val v = load
@@ -406,12 +416,32 @@ object TableFormat {
     def size: Int = entries.synchronized(entries.size())
   }
 
+  private[graft] type ManifestCache = IdentityCache[ManifestMeta]
+
   /** Entries the manifest cache holds — each is O(files) scalars of
     * one generation, so the bound caps driver memory at a fixed
     * number of file lists. */
   private[graft] val ManifestCacheEntries = 256
 
   private[graft] val manifestCache = new ManifestCache(ManifestCacheEntries)
+
+  /** A manifest whose part files total at most this many bytes is
+    * collected once on its first sketch probe (deciding costs a stat
+    * of the part files, which the cache key already takes), and its
+    * rows stay in [[sketchCache]] when their sketches hold at most
+    * this many bytes too (a sparse sketch compresses on disk, so the
+    * load measures it); a heavier one is remembered as too big. A
+    * `var` ONLY so specs can force the distributed probe on a small
+    * manifest. */
+  private[graft] var sketchCacheBytes: Long = 256L << 10
+
+  /** Manifests [[sketchCache]] holds. Worst case: 64 entries × 256 KiB
+    * = 16 MiB of sketch bytes, plus each entry's O(files) path and
+    * range-stat scalars. */
+  private[graft] val SketchCacheEntries = 64
+
+  private[graft] val sketchCache =
+    new IdentityCache[Option[Seq[org.apache.spark.sql.Row]]](SketchCacheEntries)
 
   /** The cached metadata of generation `gen`'s manifest; a miss pays
     * two jobs (footer schema inference + the range-stat collect). */
@@ -786,28 +816,46 @@ object TableFormat {
     * range test's treatment of a NULL bound is the reverse (a file
     * carried from before the COLUMN existed holds only NULLs for it,
     * so no equality can select from it and it prunes). The range
-    * test runs on the driver over the cached stats (no job); the
-    * sketch probe, when the manifest has one, is ONE job over the
-    * manifest parquet, so sketch bytes stay distributed. */
+    * test runs on the driver over the cached stats (no job). The
+    * sketch probe runs over [[sketchFrame]]: on a small manifest a
+    * LocalRelation that folds on the driver (one collect on the
+    * manifest's first probe, no job after it), on a large one ONE job
+    * over the manifest parquet, so its sketch bytes stay distributed
+    * and the driver collects only the surviving file names. */
   private[graft] def prunedFilesIn(spark: SparkSession, root: String,
       gen: Long, key: String, values: Seq[Any]): Seq[String] = {
     if (values.isEmpty) return Seq.empty
     val keep = values.map(v =>
       lit(v).between(col(s"min_$key"), col(s"max_$key"))).reduce(_ || _)
     val meta = manifestMeta(spark, root, gen)
-    // the sketch probe runs INSIDE the manifest filter (the per-row
-    // BloomMightContainAnyExpr), so the driver collects only the
-    // SURVIVING file names — never the sketch bytes of every
-    // range-admitted row, which on a non-clustering key means every
-    // row and would grow the collect with the table's file count
+    val bloom = s"bloom_$key"
     val ranged =
-      if (!meta.schema.fieldNames.contains(s"bloom_$key"))
+      if (!meta.schema.fieldNames.contains(bloom))
         meta.statsFrame(spark).filter(keep)
-      else readManifest(spark, root, gen).filter(keep &&
-        (col(s"bloom_$key").isNull ||
-          graft.operators.JoinPruning.mightContainAnyOf(
-            col(s"bloom_$key"), values)))
+      else sketchFrame(spark, root, gen, meta).filter(keep &&
+        (col(bloom).isNull ||
+          graft.operators.JoinPruning.mightContainAnyOf(col(bloom), values)))
     ranged.select(col("file")).collect().map(_.getString(0)).toSeq
+  }
+
+  /** Generation `gen`'s whole manifest, sketches included: from
+    * [[sketchCache]] as a LocalRelation when it is small (see
+    * [[sketchCacheBytes]]), else the manifest parquet. */
+  private def sketchFrame(spark: SparkSession, root: String, gen: Long,
+      meta: ManifestMeta): DataFrame = {
+    val dir = manifestPath(root, gen)
+    val sketchCols = meta.schema.fieldNames.indices
+      .filter(meta.schema.fieldNames(_).startsWith("bloom_"))
+    def sketchBytes(rows: Seq[org.apache.spark.sql.Row]): Long =
+      rows.iterator.flatMap(r => sketchCols.filterNot(r.isNullAt)
+        .map(r.getAs[Array[Byte]](_).length.toLong)).sum
+    val cached =
+      if (manifestParts(dir).map(_.length()).sum > sketchCacheBytes) None
+      else sketchCache.getOrLoad(dir) {
+        Some(readManifest(spark, root, gen).collect().toSeq)
+          .filter(sketchBytes(_) <= sketchCacheBytes)
+      }
+    cached.fold(readManifest(spark, root, gen))(localFrame(spark, _, meta.schema))
   }
 
   /** What a retention sweep reclaimed: the expired generation ids

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
-import graft.operators.EmbeddingStore
+import graft.operators.{EmbeddingStore, ProductQuantizer, ScalarQuantizer}
 import graft.sources.{IndexCatalog, TableFormat, Tables}
 
 class IvfIndexSpec extends SparkTestBase {
@@ -215,7 +215,7 @@ class IvfIndexSpec extends SparkTestBase {
     val (rows, jobs) = JobCounting.countJobs(spark) {
       EmbeddingStore.searchIvf(spark, path, qid, k, probes).collect()
     }
-    assert(jobs <= 4, s"a warm searchIvf request submitted $jobs jobs")
+    assert(jobs <= 2, s"a warm searchIvf request submitted $jobs jobs")
     // the parent formulation: the query's stored vector joined onto
     // the centroids for the probe, then onto the probed cells' rows
     val cells = IndexCatalog.read(spark, path, "cells")
@@ -512,5 +512,141 @@ class IvfIndexSpec extends SparkTestBase {
       .filter(p => labels(p._1))
       .sortBy(p => (-p._2, p._1)).take(10).toSeq
     assert(rows.map(r => (r.getLong(0), r.getDouble(3))).toSeq === exact)
+  }
+
+  test("warm plan-phase job budgets: the filtered, radius, PQ and SQ8 " +
+    "searches each plan in one Spark job") {
+    val t = Tables(spark, sfDir)
+    val path = EmbeddingStore.ensureIndex(t)
+    val emb = t.embeddings
+    def variants(q: Long) = Seq(
+      "searchIvfFiltered" -> (() => EmbeddingStore.searchIvfFiltered(spark,
+        path, emb, q, k = 10, probes = 4, label = 3)),
+      "searchIvfRadius" -> (() => EmbeddingStore.searchIvfRadius(spark,
+        path, q, minScore = 0.12, probes = 4)),
+      "searchIvfPq" -> (() => ProductQuantizer.searchIvfPq(spark, path, q,
+        k = 10)),
+      "searchIvfSq8" -> (() => ScalarQuantizer.searchIvfSq8(spark, path, q,
+        k = 10)))
+    // the warm-up loads the manifests, sketches, centroids and codebooks
+    variants(0L).foreach { case (_, plan) => plan().collect() }
+    variants(5L).foreach { case (name, plan) =>
+      val (_, jobs) = JobCounting.countJobs(spark)(plan())
+      assert(jobs === 1, s"a warm $name request planned in $jobs jobs")
+    }
+  }
+
+  test("driver-side probe ranking equals the broadcast join-and-collect: " +
+    "6dp ties break on cell, NaN ranks first and NULL last, and the " +
+    "ranking of cached centroids runs no job") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("cell", IntegerType),
+      StructField("centroid", ArrayType(FloatType))))
+    def c(cell: Int, v: Float*) = Row(cell, v.toSeq)
+    val rows = Seq(
+      c(4, 1f, 0f, 0f),
+      c(1, 1f, 0f, 0f),        // exact tie with cell 4
+      c(3, 1f, 1e-5f, 0f),     // equal to cells 1 and 4 at 6dp
+      c(0, 0f, 1f, 0f),
+      c(7, 0f, 0f, 0f),        // zero vector scores 0.0, ties cell 0
+      c(2, Float.NaN, 0f, 0f), // NaN ranks above every number
+      c(5, 1f, 2f),            // width mismatch: NULL score, ranks last
+      c(6, -1f, 0f, 0f))
+    val local = TableFormat.localFrame(spark, rows, schema)
+    val distributed = local.repartition(3)
+    val qv = Seq(1f, 0f, 0f)
+    val qFrame = TableFormat.localFrame(spark, Seq(Row(qv)),
+      StructType(Seq(StructField("qv", ArrayType(FloatType))))).repartition(1)
+    (1 to rows.length).foreach { probes =>
+      val (viaDriver, jobs) = JobCounting.countJobs(spark)(
+        EmbeddingStore.rankCells(local, qv, probes).toSeq)
+      assert(jobs === 0, s"the driver-side ranking ran $jobs jobs")
+      val joined = distributed.join(broadcast(qFrame))
+        .select(col("cell"),
+          round(cosineSim(col("centroid"), col("qv")), 6).as("cs"))
+        .orderBy(col("cs").desc, col("cell")).limit(probes)
+        .collect().map(_.getInt(0)).toSeq
+      assert(viaDriver === joined, s"probes = $probes")
+      assert(EmbeddingStore.rankCells(distributed, qv, probes).toSeq === joined)
+    }
+    assert(EmbeddingStore.rankCells(local, qv, 4).toSeq === Seq(2, 1, 3, 4))
+
+    // and on a real index, per query: the probe of a warm request
+    // equals the join-and-collect over the same pinned generation
+    val path = EmbeddingStore.ensureIndex(Tables(spark, sfDir))
+    val pin = IndexCatalog.pin(path)
+    val cells = pin.read(spark, "cells")
+    Seq(0L, 3L, 17L, 42L).foreach { q =>
+      val probed = EmbeddingStore.probeCellsWithQuery(spark, pin, q, 3)._1.toSeq
+      val qv = cells.filter(col("doc_id") === q).select(col("embedding").as("qv"))
+      val joined = pin.read(spark, "centroids").join(broadcast(qv))
+        .select(col("cell"),
+          round(cosineSim(col("centroid"), col("qv")), 6).as("cs"))
+        .orderBy(col("cs").desc, col("cell")).limit(3)
+        .collect().map(_.getInt(0)).toSeq
+      assert(probed === joined, s"query $q")
+    }
+  }
+
+  test("with the sketch and centroid caps forced to 0, every single-query " +
+    "search is result-identical and plans through the distributed probe") {
+    val t = Tables(spark, sfDir)
+    val path = EmbeddingStore.ensureIndex(t)
+    def results(): Seq[Seq[String]] = Seq(
+      EmbeddingStore.searchIvf(spark, path, 0L, k = 10),
+      EmbeddingStore.searchIvf(spark, path, 33L, k = 10, probes = 4),
+      EmbeddingStore.searchIvfFiltered(spark, path, t.embeddings, 0L,
+        k = 10, probes = 4, label = 3),
+      EmbeddingStore.searchIvfRadius(spark, path, 0L, minScore = 0.12,
+        probes = 4),
+      ProductQuantizer.searchIvfPq(spark, path, 0L, k = 10),
+      ScalarQuantizer.searchIvfSq8(spark, path, 0L, k = 10),
+      EmbeddingStore.searchIvf(spark, path, 987654321L, k = 10)
+    ).map(_.collect().map(_.toString).toSeq)
+    def planJobs(): Int =
+      JobCounting.countJobs(spark)(EmbeddingStore.searchIvf(spark, path, 7L,
+        k = 10))._2
+    val cached = results()
+    assert(planJobs() === 1)
+    val (sketchBytes, rowsCap) =
+      (TableFormat.sketchCacheBytes, IndexCatalog.smallRowsCap)
+    try {
+      TableFormat.sketchCacheBytes = 0L
+      IndexCatalog.smallRowsCap = 0L
+      assert(results() === cached)
+      // the query-vector collect, the sketch probe over the manifest
+      // parquet and the TakeOrdered ranking collect
+      assert(planJobs() === 3)
+    } finally {
+      TableFormat.sketchCacheBytes = sketchBytes
+      IndexCatalog.smallRowsCap = rowsCap
+    }
+  }
+
+  test("one catalog pin per request: a request pinned at generation g " +
+    "returns exactly its rows after an append publishes g + 1") {
+    val dir = Files.createTempDirectory("graft-ivf-pin").toFile
+    dir.deleteOnExit()
+    val path = dir.getAbsolutePath
+    val vectors = EmbeddingStore.embed(Tables(spark, sfDir).documents)
+      .drop("shard")
+    EmbeddingStore.buildIvfIndex(spark, vectors, path)
+    val (qid, k) = (12L, 10)
+    val pin = IndexCatalog.pin(path)
+    val before = EmbeddingStore.searchIvfAt(spark, pin, qid, k, 2).collect().toSeq
+    // copies of the query's own vector under new ids: they land in
+    // the query's cell and score 1.0, so the append changes the answer
+    EmbeddingStore.appendToIvfIndex(spark, path, vectors
+      .filter(col("doc_id") === qid)
+      .crossJoin(spark.range(1, 4).toDF("i"))
+      .select((col("doc_id") + col("i") * 100000L).as("doc_id"),
+        col("embedding")))
+    assert(IndexCatalog.currentGen(path) === pin.gen + 1)
+    assert(EmbeddingStore.searchIvfAt(spark, pin, qid, k, 2).collect().toSeq
+      === before)
+    val now = EmbeddingStore.searchIvf(spark, path, qid, k).collect()
+    assert(Set(100012L, 200012L, 300012L).subsetOf(
+      now.map(_.getLong(0)).toSet), "fixture rot: the append is not visible")
   }
 }

@@ -221,4 +221,35 @@ class ProductQuantizerSpec extends SparkTestBase {
     assert(graft.operators.ScalarQuantizer
       .searchIvfSq8(spark, path, queryDocId = 0L, k = 10).count() === 10L)
   }
+
+  test("an index root deleted and rebuilt at the same path with " +
+    "different vectors serves its own codebooks and centroids, equal " +
+    "to an uncached computation") {
+    val t = Tables(spark, sfDir)
+    val vecs = t.embeddings.select(col("vec_id").as("doc_id"), col("embedding"))
+    val path = Files.createTempDirectory("pq-rebuilt").resolve("ivf").toString
+    val first = vecs.filter(col("doc_id") < 300)
+    val second = vecs.filter(col("doc_id") >= 100)
+    val q = 150L
+    EmbeddingStore.buildIvfIndex(spark, first, path)
+    val cb1 = graft.sources.IndexCatalog.read(spark, path, "pq_codebooks")
+      .collect().map(_.toString).toSet
+    ProductQuantizer.searchIvfPq(spark, path, q, k = 10).collect()
+    EmbeddingStore.searchIvf(spark, path, q, k = 10).collect()
+    // LayoutStore's documented way to force a rebuild: remove the root
+    graft.sources.LayoutStore.deleteRecursively(new java.io.File(path))
+    EmbeddingStore.buildIvfIndex(spark, second, path)
+    assert(graft.sources.IndexCatalog.read(spark, path, "pq_codebooks")
+      .collect().map(_.toString).toSet !== cb1,
+      "fixture rot: both builds have the same codebooks")
+    // the uncached computation: the same build at a path no cache has seen
+    val fresh = Files.createTempDirectory("pq-fresh").resolve("ivf").toString
+    EmbeddingStore.buildIvfIndex(spark, second, fresh)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).toSeq
+    assert(rows(ProductQuantizer.searchIvfPq(spark, path, q, k = 10)) ===
+      rows(ProductQuantizer.searchIvfPq(spark, fresh, q, k = 10)))
+    assert(rows(EmbeddingStore.searchIvf(spark, path, q, k = 10)) ===
+      rows(EmbeddingStore.searchIvf(spark, fresh, q, k = 10)))
+  }
 }

@@ -1239,4 +1239,67 @@ class TableFormatSpec extends SparkTestBase {
     }
     assert(planned.length === 1 && sketch === 1)
   }
+
+  test("sketch probe: the driver-side path plans the same files as the " +
+    "distributed probe for a present, an absent and an appended id, " +
+    "admits a file carried with a NULL sketch, and runs no job warm") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Files.createTempDirectory("graft-sketch-eq")
+      .toString
+    // hash-clustered: every file's doc_id range admits a mid-range id,
+    // so each decision below is the sketch's
+    // even ids only, so an odd id inside every range is absent
+    def docs(lo: Long, hi: Long, files: Int) = spark.range(lo, hi, 2)
+      .select(col("id").as("doc_id"), concat(lit("t"), col("id")).as("text"))
+      .repartition(files, col("text"))
+    val schema = docs(0, 1, 1).schema
+    TableFormat.commitGenManifested(docs(0, 2000, 8), root, Seq("doc_id"),
+      bloomKeys = Seq("doc_id"))
+    TableFormat.appendScoped(spark, root, docs(2000, 2200, 2), schema)
+    // a NULL sketch: the same table with one file's sketch nulled in its
+    // manifest, the shape of a file carried from a pre-Bloom generation
+    val nulled = java.nio.file.Files.createTempDirectory("graft-sketch-null")
+      .resolve("t").toString
+    graft.sources.LayoutStore.cloneRecursively(new java.io.File(root),
+      new java.io.File(nulled))
+    val mdir = TableFormat.manifestPath(nulled, 0L)
+    val onDisk = spark.read.parquet(mdir)
+    val rows = onDisk.collect().toSeq
+    val nullFile = rows.head.getAs[String]("file")
+    graft.sources.LayoutStore.deleteRecursively(new java.io.File(mdir))
+    spark.createDataFrame(rows.asJava, onDisk.schema)
+      .withColumn("bloom_doc_id", when(col("file") === nullFile,
+        lit(null).cast("binary")).otherwise(col("bloom_doc_id")))
+      .coalesce(1).write.parquet(mdir)
+
+    def planned(r: String, g: Long, ids: Seq[Long]) =
+      TableFormat.prunedFilesIn(spark, r, g, "doc_id", ids).sorted
+    def distributed(r: String, g: Long, ids: Seq[Long]) = {
+      val saved = TableFormat.sketchCacheBytes
+      TableFormat.sketchCacheBytes = 0L
+      try JobCounting.countJobs(spark)(planned(r, g, ids))
+      finally TableFormat.sketchCacheBytes = saved
+    }
+    val cases = Seq(
+      ("present", root, 0L, Seq(500L)),
+      ("absent", root, 1L, Seq(501L)),
+      ("appended", root, 1L, Seq(2100L)),
+      ("present after the append", root, 1L, Seq(8L, 500L)),
+      ("NULL sketch", nulled, 0L, Seq(500L)))
+    cases.foreach { case (what, r, g, ids) =>
+      val viaDriver = planned(r, g, ids)
+      val (viaManifest, probeJobs) = distributed(r, g, ids)
+      assert(viaDriver === viaManifest, what)
+      assert(probeJobs === 1, s"$what: the distributed probe ran $probeJobs jobs")
+      val (again, warm) = JobCounting.countJobs(spark)(planned(r, g, ids))
+      assert(again === viaDriver && warm === 0,
+        s"$what: a warm driver-side probe ran $warm jobs")
+    }
+    assert(planned(root, 0L, Seq(500L)).length < 8, "fixture rot: no pruning")
+    assert(planned(root, 1L, Seq(501L)).length <= 1,
+      "fixture rot: the absent id passed the sketches")
+    assert(planned(root, 1L, Seq(2100L)).nonEmpty)
+    assert(planned(nulled, 0L, Seq(501L)).contains(nullFile),
+      "a NULL sketch pruned its file")
+  }
 }
