@@ -6,6 +6,9 @@ import scala.collection.mutable
 
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd,
+  SparkListenerSQLExecutionStart}
 
 /** Job-level listening behind `graft.Dev trace`: per Spark job, the
   * wall seconds, task count and the call site that submitted it — the
@@ -56,6 +59,8 @@ object JobProbe {
   private[graft] class Listener extends SparkListener {
     val jobs = mutable.LinkedHashMap[Int, JobRec]()
     private val jobOfStage = mutable.HashMap[Int, Int]()
+    // the first graft frame of each running SQL execution's call site
+    private val siteOfExecution = mutable.HashMap[String, String]()
 
     def clear(): Unit = synchronized { jobs.clear(); jobOfStage.clear() }
 
@@ -66,20 +71,28 @@ object JobProbe {
       synchronized { try jobs.values.toList finally clear() }
     }
 
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart =>
+        graftFrame(s.details).foreach(f =>
+          synchronized(siteOfExecution(s.executionId.toString) = f))
+      case s: SparkListenerSQLExecutionEnd =>
+        synchronized(siteOfExecution.remove(s.executionId.toString))
+      case _ =>
+    }
+
     override def onJobStart(e: SparkListenerJobStart): Unit =
       if (!isSentinel(e)) synchronized {
-        val desc = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("")
-        // futures-submitted jobs carry no thread-local call site — the
-        // result stage's name (its creation site) localizes them
-        val site = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short")))
-          .filter(_.nonEmpty)
-          .orElse(e.stageInfos.iterator.flatMap(si =>
-            si.details.linesIterator
-              .find(l => l.contains("graft.") && !l.contains("graft.Dev")))
-            .toSeq.headOption.map(_.trim.stripPrefix("at ")))
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        val desc = prop("spark.job.description").getOrElse("")
+        // AQE's query-stage and broadcast jobs run on a future whose
+        // call site is the wrapper's own frame, and futures-submitted
+        // jobs carry none: the SQL execution that owns the job, else
+        // the first graft frame of its stage details, localizes them
+        val site = prop("callSite.short")
+          .filter(s => s.nonEmpty && !s.contains("withThreadLocalCaptured"))
+          .orElse(prop(SQLExecution.EXECUTION_ID_KEY).flatMap(siteOfExecution.get))
+          .orElse(e.stageInfos.iterator.flatMap(si => graftFrame(si.details))
+            .toSeq.headOption)
           .orElse(e.stageInfos.lastOption.map(_.name))
           .getOrElse("")
         jobs(e.jobId) = JobRec(e.jobId, desc, site, e.time)
@@ -96,4 +109,11 @@ object JobProbe {
       }
     }
   }
+
+  /** The first graft frame (the harness's own excluded) of a long
+    * call-site form. */
+  private def graftFrame(stack: String): Option[String] =
+    Option(stack).flatMap(_.linesIterator
+      .find(l => l.contains("graft.") && !l.contains("graft.Dev")))
+      .map(_.trim.stripPrefix("at "))
 }

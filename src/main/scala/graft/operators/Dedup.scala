@@ -289,9 +289,8 @@ object Dedup {
     * training — a quoted benchmark question inside an otherwise
     * unrelated page, which whole-document similarity never reaches.
     *
-    * Shape: 13-gram rows via word explode + 12 `lead`s over the one
-    * (doc_id, pos) window (the shingle pipeline's shape — partial
-    * grams at doc end drop via the last lead's null), distinct,
+    * Shape: 13-gram rows built row-locally from each doc's word
+    * array ([[ngramRows]]: no exchange before the gram key's),
     * document-frequency-capped like every exact shingle join
     * ([[cappedShingleRowsOf]]'s rule: a 13-gram in >1000 docs is
     * boilerplate, and pairing it is O(df²) for no signal), then ONE
@@ -299,25 +298,13 @@ object Dedup {
     * cross-corpus candidates materialize. Output counts the shared
     * capped 13-grams per (eval, train) pair. */
   def ngramOverlap(t: Tables): DataFrame =
-    ngramOverlapStats(TextAnalysis.posTokens(t.documents))
+    ngramOverlapStats(t.documents)
       .orderBy(col("eval_id"), col("train_id"))
 
-  /** E7b over an already-tokenized (doc_id, is_eval, pos, w) frame —
-    * the composed pipeline (F9) feeds one shared token stage to this
-    * gate and the repetition gate, so the corpus is read and exploded
-    * once for both. Unordered (the standalone row adds the sort). */
-  private[operators] def ngramOverlapStats(tokens: DataFrame): DataFrame = {
-    val n = 13
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val leads = (1 until n).map(k => lead(col("w"), k).over(w))
-    val grams = tokens
-      .select(col("doc_id"), col("is_eval"),
-        concat_ws(" ", (col("w") +: leads): _*).as("g"),
-        leads.last.isNotNull.as("full"))
-      .filter(col("full"))
-      .select(col("doc_id"), col("is_eval"), col("g"))
-      .distinct()
-    val capped = capBuckets(grams, Seq("g")).localCheckpoint()
+  /** E7b over a (doc_id, source, text) frame; unordered (the
+    * standalone row adds the sort). */
+  private[operators] def ngramOverlapStats(documents: DataFrame): DataFrame = {
+    val capped = capBuckets(ngramRows(documents), Seq("g")).localCheckpoint()
     // shuffle_hash for the same reason as ngramJaccardDocs: one
     // reused exchange either way, no double sort of the 13-gram rows
     // (the fattest strings in the library); buckets DF-capped
@@ -326,6 +313,38 @@ object Dedup {
         col("a.g") === col("b.g") && col("a.is_eval") && !col("b.is_eval"))
       .groupBy(col("a.doc_id").as("eval_id"), col("b.doc_id").as("train_id"))
       .agg(count(lit(1)).as("n_shared"))
+  }
+
+  /** E7b's contaminated TRAIN doc ids over a (doc_id, source, text)
+    * frame — the decontamination gate needs only these, not the
+    * pairs: a train doc pairs with an eval doc iff one of its capped
+    * 13-grams has an eval row in its (same, so equally capped) gram
+    * bucket. So the cap's own window keyed on the gram answers it —
+    * no self-join, no pin. An id repeats once per such gram. */
+  private[operators] def ngramContaminated(documents: DataFrame): DataFrame = {
+    val byGram = Window.partitionBy(col("g"))
+    ngramRows(documents)
+      .withColumn("bucket_n", count(lit(1)).over(byGram))
+      .withColumn("has_eval", max(col("is_eval")).over(byGram))
+      .filter(col("bucket_n") <= maxBucketSize && col("has_eval") && !col("is_eval"))
+      .select(col("doc_id"))
+  }
+
+  /** Distinct (doc_id, is_eval, g) 13-gram rows, built row-locally
+    * from each doc's word array: the gram at word i is words i..i+12
+    * joined by single spaces, for every i with 12 words after it (a
+    * doc shorter than 13 words has none). The array is its own
+    * projection and enters the lambda as a column, so the word split
+    * runs once per doc. A doc's grams depend only on its own words,
+    * so nothing shuffles before the gram key does. */
+  private def ngramRows(documents: DataFrame): DataFrame = {
+    val n = 13
+    documents
+      .select(col("doc_id"), isEvalTag.as("is_eval"), words(col("text")).as("ws"))
+      .filter(size(col("ws")) >= n)
+      .select(col("doc_id"), col("is_eval"), explode(array_distinct(transform(
+        sequence(lit(1), size(col("ws")) - (n - 1)),
+        i => concat_ws(" ", slice(col("ws"), i, lit(n)))))).as("g"))
   }
 
   /** Exact Jaccard from per-pair intersection counts and per-doc set

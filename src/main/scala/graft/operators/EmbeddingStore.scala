@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, StructField, StructType}
 
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
@@ -1176,6 +1176,42 @@ object EmbeddingStore {
       .localCheckpoint(true)
   }
 
+  /** The most queries a batch ranks on the driver
+    * ([[driverProbeMap]]); a larger batch keeps the distributed
+    * [[batchProbeMap]]. Each query's ranking is one driver-side
+    * Catalyst fold over the cached centroids, so past a few dozen
+    * queries the one distributed pass is cheaper. */
+  private[operators] val driverProbeQueries = 64
+
+  /** [[batchProbeMap]] built on the driver, when the pinned centroids
+    * sit in [[IndexCatalog.Pin.smallRows]] and the batch holds at most
+    * [[driverProbeQueries]] float-vector queries: the queries collect
+    * once (bounded), each ranks with [[rankCells]] — the single-query
+    * rule itself — and the (query_id, cell, qv) rows come back as a
+    * LocalRelation together with the union of their cells. None
+    * otherwise. */
+  private def driverProbeMap(spark: SparkSession, pin: IndexCatalog.Pin,
+      queries: DataFrame, probes: Int): Option[(DataFrame, Array[Int])] = {
+    val floatQueries = queries.schema("qv").dataType match {
+      case ArrayType(FloatType, _) => true
+      case _ => false
+    }
+    pin.smallRows(spark, "centroids").filter(_ => floatQueries).flatMap { centroids =>
+      val qs = queries.select(col("query_id"), col("qv"))
+        .limit(driverProbeQueries + 1).collect()
+      if (qs.length > driverProbeQueries) None
+      else {
+        val rows = qs.toSeq.flatMap(q =>
+          rankCells(centroids, q.getSeq[Float](1), probes)
+            .map(c => Row(q.get(0), c, q.get(1))))
+        val schema = StructType(Seq(queries.schema("query_id"),
+          StructField("cell", IntegerType, nullable = false), queries.schema("qv")))
+        Some((TableFormat.localFrame(spark, rows, schema),
+          rows.map(_.getInt(1)).distinct.toArray))
+      }
+    }
+  }
+
   /** The union of a probe map's cells — ≤ N·probes ints of index
     * metadata, bounded-collected into partition-pruning literals. */
   private[operators] def probedCellsOf(probeMap: DataFrame,
@@ -1194,7 +1230,9 @@ object EmbeddingStore {
     * Plan: (1) ONE metadata job scores the centroid table against
     * the broadcast query set and keeps the top `probes` cells per
     * query (6dp-rounded cosine, cell tie-break — the
-    * [[probeCellsWithQuery]] rule per query); (2) the ≤ N·probes
+    * [[probeCellsWithQuery]] rule per query) — for a small batch over
+    * cached centroids, the driver ranks each query instead
+    * ([[driverProbeMap]]: the plan is the one query collect); (2) the ≤ N·probes
     * DISTINCT probed cell ids — index metadata, bounded-collected like
     * every IVF-path collect — become partition-pruning literals, so the
     * cells store is listed and scanned ONCE for the union of all
@@ -1214,8 +1252,11 @@ object EmbeddingStore {
   def searchIvfBatch(spark: SparkSession, path: String, queries: DataFrame,
       k: Int, probes: Int = 2): DataFrame = {
     val pin = IndexCatalog.pin(path)
-    val probeMap = batchProbeMap(spark, pin, queries, probes)
-    val probedCells = probedCellsOf(probeMap, queries.count() * probes)
+    val (probeMap, probedCells) = driverProbeMap(spark, pin, queries, probes)
+      .getOrElse {
+        val m = batchProbeMap(spark, pin, queries, probes)
+        (m, probedCellsOf(m, queries.count() * probes))
+      }
     val wRank = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("doc_id"))
     pin.readPruned(spark, "cells", "cell", probedCells.toSeq)

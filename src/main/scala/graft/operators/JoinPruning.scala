@@ -216,56 +216,98 @@ case class BloomMightContainAnyExpr(left: Expression, right: Expression)
   * below the fixed 128 KiB sketch the old shape carried per PARTIAL
   * too); `eval` sizes bits = clamp(10 × n, [[JoinPruning.bloomMinBits]],
   * maxBits) and serializes through the standard sketch writeTo, so
-  * probes are format-unchanged. Input hashes must be non-null
-  * (xxhash64 never is). */
+  * probes are format-unchanged. Past [[cap]] values the bits are at
+  * `maxBits` whatever n is, so the buffer stops growing there: it
+  * becomes the sketch a group of exactly `cap` values gets, and every
+  * further value goes into it (no false negatives; only the hash
+  * count stops following n). Input hashes must be non-null (xxhash64
+  * never is). */
 case class AdaptiveBloomAggregate(child: Expression, maxBits: Long,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
     extends org.apache.spark.sql.catalyst.expressions.aggregate
-      .TypedImperativeAggregate[scala.collection.mutable.ArrayBuffer[Long]]
+      .TypedImperativeAggregate[AdaptiveBloomAggregate.Buffer]
     with org.apache.spark.sql.catalyst.trees.UnaryLike[Expression] {
+  import AdaptiveBloomAggregate.Buffer
 
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = true
   override def prettyName: String = "adaptive_bloom_agg"
 
-  override def createAggregationBuffer():
-      scala.collection.mutable.ArrayBuffer[Long] =
-    scala.collection.mutable.ArrayBuffer.empty[Long]
+  /** The most raw hashes a buffer holds: from here on 10 × n reaches
+    * `maxBits`, so a sketch's size no longer depends on n. */
+  private[graft] def cap: Long = math.max(1L, (maxBits + 9) / 10)
 
-  override def update(b: scala.collection.mutable.ArrayBuffer[Long],
-      input: InternalRow): scala.collection.mutable.ArrayBuffer[Long] = {
+  override def createAggregationBuffer(): Buffer = new Buffer
+
+  private def add(b: Buffer, v: Long): Unit =
+    if (b.sketch != null) b.sketch.putLong(v)
+    else {
+      b.hashes += v
+      if (b.hashes.length > cap) saturate(b)
+    }
+
+  private def saturate(b: Buffer): Unit =
+    if (b.sketch == null) {
+      b.sketch = BloomFilter.create(cap, maxBits)
+      b.hashes.foreach(b.sketch.putLong)
+      b.hashes.clear()
+    }
+
+  override def update(b: Buffer, input: InternalRow): Buffer = {
     val v = child.eval(input)
-    if (v != null) b += v.asInstanceOf[Long]
+    if (v != null) add(b, v.asInstanceOf[Long])
     b
   }
 
-  override def merge(b: scala.collection.mutable.ArrayBuffer[Long],
-      o: scala.collection.mutable.ArrayBuffer[Long]):
-      scala.collection.mutable.ArrayBuffer[Long] = { b ++= o; b }
+  override def merge(b: Buffer, o: Buffer): Buffer = {
+    if (o.sketch == null) o.hashes.foreach(add(b, _))
+    else { saturate(b); b.sketch.mergeInPlace(o.sketch) }
+    b
+  }
 
-  override def eval(b: scala.collection.mutable.ArrayBuffer[Long]): Any =
-    if (b.isEmpty) null
+  override def eval(b: Buffer): Any = {
+    val bf =
+      if (b.sketch != null) b.sketch
+      else if (b.hashes.isEmpty) null
+      else {
+        val n = b.hashes.length.toLong
+        val f = BloomFilter.create(n,
+          math.min(maxBits, math.max(JoinPruning.bloomMinBits, 10L * n)))
+        b.hashes.foreach(f.putLong)
+        f
+      }
+    if (bf == null) null
     else {
-      val bits = math.min(maxBits,
-        math.max(JoinPruning.bloomMinBits, 10L * b.length))
-      val bf = BloomFilter.create(b.length.toLong, bits)
-      b.foreach(bf.putLong)
       val bos = new ByteArrayOutputStream()
       bf.writeTo(bos)
       bos.toByteArray
     }
-
-  override def serialize(b: scala.collection.mutable.ArrayBuffer[Long]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(8 * b.length)
-    b.foreach(bb.putLong)
-    bb.array()
   }
 
-  override def deserialize(bytes: Array[Byte]):
-      scala.collection.mutable.ArrayBuffer[Long] = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val b = new scala.collection.mutable.ArrayBuffer[Long](bytes.length / 8)
-    while (bb.remaining() >= 8) b += bb.getLong()
+  /** Raw: a 0 byte then the packed longs; saturated: a 1 byte then
+    * the sketch's own serialization. */
+  override def serialize(b: Buffer): Array[Byte] =
+    if (b.sketch != null) {
+      val bos = new ByteArrayOutputStream()
+      bos.write(1)
+      b.sketch.writeTo(bos)
+      bos.toByteArray
+    } else {
+      val bb = java.nio.ByteBuffer.allocate(1 + 8 * b.hashes.length)
+      bb.put(0.toByte)
+      b.hashes.foreach(bb.putLong)
+      bb.array()
+    }
+
+  override def deserialize(bytes: Array[Byte]): Buffer = {
+    val b = new Buffer
+    if (bytes(0) == 1)
+      b.sketch = BloomFilter.readFrom(
+        new ByteArrayInputStream(bytes, 1, bytes.length - 1))
+    else {
+      val bb = java.nio.ByteBuffer.wrap(bytes, 1, bytes.length - 1)
+      while (bb.remaining() >= 8) b.hashes += bb.getLong()
+    }
     b
   }
 
@@ -275,4 +317,13 @@ case class AdaptiveBloomAggregate(child: Expression, maxBits: Long,
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildInternal(newChild: Expression): AdaptiveBloomAggregate =
     copy(child = newChild)
+}
+
+object AdaptiveBloomAggregate {
+  /** A group's raw hashes (at most `cap` of them), or, once past the
+    * cap, its saturated sketch (then `hashes` is empty). */
+  final class Buffer {
+    val hashes = scala.collection.mutable.ArrayBuffer.empty[Long]
+    var sketch: BloomFilter = _
+  }
 }

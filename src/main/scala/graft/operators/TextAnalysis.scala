@@ -286,10 +286,9 @@ object TextAnalysis {
     * sharing a verbatim 13-word span with the eval corpus) → exact
     * dedup (keep the canonical doc per content hash) → deterministic
     * train/test split → per-(source, split) audit. One DataFrame
-    * program, so Catalyst plans ACROSS stage boundaries; the two
-    * token-level gates consume ONE shared, eagerly-materialized
-    * tokenize pass (posTokens), so the corpus text is read once for
-    * both — the E9 shared-stage contract applied to the pipeline.
+    * program, so Catalyst plans ACROSS stage boundaries, and every
+    * gate's verdict attaches to its doc in ONE doc-keyed pass
+    * ([[gateFlags]]).
     * This is the "switch to graft and run your pipeline" story
     * end-to-end, and the oracle replays every stage in SQL, so the
     * composition — not just the pieces — is correctness-checked.
@@ -297,47 +296,82 @@ object TextAnalysis {
     * [[pipelineKeptDocs]] is the pipeline's KEPT-DOCUMENT frame
     * (doc_id, source, split) — the thing a pipeline actually ships;
     * F9 aggregates it to the audit table and H1's export writes it
-    * to partitioned storage. */
+    * (with its text, [[pipelineKeptText]]) to partitioned storage. */
   private[graft] def pipelineKeptDocs(t: Tables): DataFrame =
-    pipelineKeptFrom(t, qualityScore(t)
-      .filter(col("quality") >= 0.5)
-      .select(col("doc_id")))
+    pipelineKeptText(t).select(col("doc_id"), col("source"), col("split"))
 
-  /** [[pipelineKeptDocs]] with the quality gate's surviving ids
-    * supplied by the caller — the shared-scan seam for a composition
-    * that ALSO needs the quality scores (H3's curriculum export
-    * scores the corpus once and feeds both this gate and the F26
-    * buckets from the same pinned frame). The ids must be exactly
-    * `quality >= 0.5` survivors of the F2 rule — same values, fewer
-    * corpus scans. */
-  private[graft] def pipelineKeptFrom(t: Tables, kept: DataFrame): DataFrame = {
-    // one tokenize pass feeds both gates (two consumers — lazy would
-    // re-read and re-explode the corpus per gate)
-    val tok = posTokens(t.documents).localCheckpoint()
-    val repFlagged = repetitionStats(tok).filter(col("flagged"))
-      .select(col("doc_id"))
-    val contaminated = Dedup.ngramOverlapStats(tok)
-      .select(col("train_id").as("doc_id")).distinct()
-    val norm = regexp_replace(lower(trim(col("text"))), "\\s+", " ")
-    // eager checkpoint: hashed feeds the canonical groupBy (keyed on
-    // h) AND the final join (keyed on doc_id) — no exchange reuse is
-    // possible across different keys, so without materialization the
-    // corpus scan + quality scoring + hashing would execute twice.
-    // The gate anti-joins key on doc_id; their right sides are tiny
-    // (flagged/contaminated ids), so AQE broadcasts them.
-    val hashed = t.documents.join(kept, "doc_id")
-      .join(repFlagged, Seq("doc_id"), "left_anti")
-      .join(contaminated, Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("source"), md5(norm).as("h"))
-      .localCheckpoint()
-    val canonical = hashed.groupBy(col("h"))
-      .agg(min(col("doc_id")).as("doc_id"))
-      .select(col("doc_id"))
+  /** [[pipelineKeptDocs]] plus each kept doc's `text`, carried through
+    * the gates — an export writes it without joining the corpus again. */
+  private[graft] def pipelineKeptText(t: Tables): DataFrame =
+    pipelineKeptFrom(t.documents.select(col("doc_id"), col("source"),
+      col("text"), qualityExpr.as("quality")))
+      .select(col("doc_id"), col("source"), col("text"), col("split"))
+
+  /** The pipeline's surviving doc rows of `docs` (doc_id, source,
+    * text, plus any column the caller carries) with `split` appended.
+    * The F2 `quality` the first gate reads comes from `docs` or from
+    * one of the `extra` per-doc frames — the shared-scan seam for a
+    * composition that scores the corpus once for another consumer too
+    * (H3's curriculum export attaches its F26 bucket rows, which carry
+    * the quality, here). Exact dedup keeps the smallest surviving
+    * doc_id per normalized-text hash: one window keyed on the hash,
+    * where a groupBy plus a join back on doc_id would need the gated
+    * rows twice (and so a pin). */
+  private[graft] def pipelineKeptFrom(docs: DataFrame,
+      extra: DataFrame*): DataFrame = {
     val bucket = substring(md5(concat(lit("split:"),
       col("doc_id").cast("string"))), 1, 2)
-    hashed.join(canonical, "doc_id")
-      .select(col("doc_id"), col("source"),
-        when(bucket < "cd", "train").otherwise("test").as("split"))
+    gateFlags(docs, extra: _*)
+      .filter(col("q_ok") && !col("rep") && !col("contam"))
+      .withColumn("canon", min(col("doc_id")).over(Window.partitionBy(col("h"))))
+      .filter(col("doc_id") === col("canon"))
+      .withColumn("split", when(bucket < "cd", "train").otherwise("test"))
+      .drop("h", "q_ok", "rep", "contam", "canon")
+  }
+
+  /** The pipeline's per-doc gate flags, ONE row per doc row of `docs`:
+    * its columns, `h` (md5 of the whitespace-normalized lowercase text,
+    * the exact-dedup key), each `extra` frame's columns, and the three
+    * gate verdicts — q_ok (F2 quality ≥ 0.5), rep (F11 flags it)
+    * and contam (it is the train side of an E7b 13-gram match). The
+    * two token gates' flagged ids attach in the same doc-keyed
+    * union-and-aggregate as the extra frames ([[attachByDoc]]) instead
+    * of a join per gate. Each gate reads the corpus once: the
+    * repetition gate through its token rows, the 13-gram gate through
+    * each doc's word array. */
+  private def gateFlags(docs: DataFrame, extra: DataFrame*): DataFrame = {
+    val repeated = repetitionStats(posTokens(docs)).filter(col("flagged"))
+      .select(col("doc_id"), lit(true).as("rep"))
+    val contaminated = Dedup.ngramContaminated(docs)
+      .select(col("doc_id"), lit(true).as("contam"))
+    val norm = regexp_replace(lower(trim(col("text"))), "\\s+", " ")
+    attachByDoc(docs.withColumn("h", md5(norm)),
+      (repeated +: contaminated +: extra): _*)
+      .withColumn("q_ok", coalesce(col("quality") >= 0.5, lit(false)))
+      .withColumn("rep", coalesce(col("rep"), lit(false)))
+      .withColumn("contam", coalesce(col("contam"), lit(false)))
+  }
+
+  /** `docs` (one row per doc_id) with the columns of every `flags`
+    * frame attached by doc_id — what a chain of left joins on doc_id
+    * gives, computed as ONE union and ONE groupBy(doc_id): a doc that
+    * a frame does not name gets NULLs there. A frame may repeat a
+    * doc_id only with equal values (the max of equal values is the
+    * value). */
+  private def attachByDoc(docs: DataFrame, flags: DataFrame*): DataFrame = {
+    val frames = docs.withColumn("_doc", lit(true)) +: flags
+    val fields = frames.flatMap(_.schema.fields)
+      .filter(_.name != "doc_id").distinctBy(_.name)
+    frames.map { f =>
+      f.select(col("doc_id") +: fields.map(c =>
+        if (f.columns.contains(c.name)) col(c.name)
+        else lit(null).cast(c.dataType).as(c.name)): _*)
+    }.reduce(_ union _)
+      .groupBy(col("doc_id"))
+      .agg(max(col(fields.head.name)).as(fields.head.name),
+        fields.tail.map(c => max(col(c.name)).as(c.name)): _*)
+      .filter(col("_doc"))
+      .drop("_doc")
   }
 
   def pipelineE2e(t: Tables): DataFrame =
@@ -359,43 +393,25 @@ object TextAnalysis {
     * cardinality, and stage 4's survivors are exactly F9's kept docs
     * (the spec pins that identity).
     *
-    * Shape: the F9 composition discipline verbatim — each gate is
-    * the family's ONE operator CALLED (qualityScore,
-    * repetitionStats, ngramOverlapStats), the two token gates share
-    * ONE checkpointed tokenize pass, and the per-doc flag frame is
-    * checkpointed once to feed the canonical groupBy (keyed h) and
-    * the funnel aggregate (no shared exchange across different
-    * keys). The funnel itself is ONE map-side-combining aggregate to
-    * a single row, exploded into 4 stage rows (the
-    * explode-unpivot-computes-once rule, BENCH_BASELINE #4) —
-    * nothing after the flag frame grows with the corpus. */
+    * Shape: the F9 composition verbatim — the same per-doc gate
+    * flags ([[gateFlags]]: quality scored in the projection that
+    * hashes the text, both token gates attached in one doc-keyed
+    * pass), then ONE aggregate to a single row, exploded into 4
+    * stage rows (the explode-unpivot-computes-once rule,
+    * BENCH_BASELINE #4). Exact dedup keeps one doc per distinct hash
+    * among the stage-3 survivors, so n4 is their distinct-hash count
+    * (a NULL hash — NULL text — is one group, as in F9's window). */
   def pipelineFunnel(t: Tables): DataFrame = {
-    val quality = qualityScore(t)
-      .select(col("doc_id"), coalesce(col("quality") >= 0.5, lit(false)).as("q_ok"))
-    val tok = posTokens(t.documents).localCheckpoint()
-    val rep = repetitionStats(tok).select(col("doc_id"), col("flagged"))
-    val contaminated = Dedup.ngramOverlapStats(tok)
-      .select(col("train_id").as("doc_id")).distinct()
-      .withColumn("contam", lit(true))
-    val norm = regexp_replace(lower(trim(col("text"))), "\\s+", " ")
-    val s2 = col("q_ok") && !coalesce(col("flagged"), lit(false))
-    val flags = t.documents.select(col("doc_id"), md5(norm).as("h"))
-      .join(quality, Seq("doc_id"))
-      .join(rep, Seq("doc_id"), "left")
-      .join(contaminated, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("h"), col("q_ok"), s2.as("s2"),
-        (s2 && !coalesce(col("contam"), lit(false))).as("s3"))
-      .localCheckpoint()
-    val canonical = flags.filter(col("s3")).groupBy(col("h"))
-      .agg(min(col("doc_id")).as("doc_id"))
-      .withColumn("canon", lit(true)).select(col("doc_id"), col("canon"))
-    val one = flags.join(canonical, Seq("doc_id"), "left").agg(
+    val flags = gateFlags(t.documents.select(col("doc_id"), col("source"),
+      col("text"), qualityExpr.as("quality")))
+    val s2 = col("q_ok") && !col("rep")
+    val s3 = s2 && !col("contam")
+    val one = flags.agg(
       count(lit(1)).as("n0"),
       coalesce(sum(when(col("q_ok"), 1L)), lit(0L)).as("n1"),
-      coalesce(sum(when(col("s2"), 1L)), lit(0L)).as("n2"),
-      coalesce(sum(when(col("s3"), 1L)), lit(0L)).as("n3"),
-      coalesce(sum(when(coalesce(col("canon"), lit(false)), 1L)), lit(0L))
-        .as("n4"))
+      coalesce(sum(when(s2, 1L)), lit(0L)).as("n2"),
+      coalesce(sum(when(s3, 1L)), lit(0L)).as("n3"),
+      countDistinct(when(s3, coalesce(col("h"), lit("")))).as("n4"))
     val stages = one.select(explode(array(
       struct(lit(1).as("stage"), lit("quality_gate").as("stage_name"),
         col("n0").as("n_in"), col("n1").as("n_out")),
@@ -491,32 +507,39 @@ object TextAnalysis {
   def repetition(t: Tables): DataFrame =
     repetitionStats(posTokens(t.documents)).orderBy(col("doc_id"))
 
-  /** Shared positional token stage for the repetition (F11) and
-    * 13-gram overlap (E7b) operators: ONE corpus read + tokenize →
-    * (doc_id, is_eval, pos, w). The composed pipeline materializes
-    * this once and feeds both gates. */
-  private[operators] def posTokens(documents: DataFrame): DataFrame =
-    documents.select(col("doc_id"), Dedup.isEvalTag.as("is_eval"),
+  /** The repetition gate's positional token rows: ONE corpus read +
+    * tokenize → (doc_id, pos, w). */
+  private def posTokens(documents: DataFrame): DataFrame =
+    documents.select(col("doc_id"),
       posexplode(words(col("text"))).as(Seq("pos", "w")))
 
   /** F11 over an already-tokenized frame; unordered (the standalone
-    * row adds the sort). */
+    * row adds the sort). Words and bigrams count in ONE aggregation
+    * chain: each token row unpivots into its word unit and (when it
+    * has a successor) its bigram unit, and every stage keys on
+    * doc_id first, so the bigram window's one exchange by doc_id
+    * serves all of it — a doc without bigrams gets NULL bigram
+    * counts, as the left join of two separate chains gave. */
   private[operators] def repetitionStats(tokens: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val tok = tokens
+    val units = tokens
       .select(col("doc_id"), col("w"),
         concat_ws(" ", col("w"), lead(col("w"), 1).over(w)).as("bg"),
         lead(col("w"), 1).over(w).isNotNull.as("has_bg"))
-    val wordStats = tok
-      .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("c"))
+      .select(col("doc_id"), col("has_bg"), explode(array(
+        struct(lit(0).as("kind"), col("w").as("unit")),
+        struct(lit(1).as("kind"), col("bg").as("unit")))).as("u"))
+      .filter(col("u.kind") === 0 || col("has_bg"))
+      .select(col("doc_id"), col("u.kind").as("kind"), col("u.unit").as("unit"))
+    def of(kind: Int, c: org.apache.spark.sql.Column) = when(col("kind") === kind, c)
+    val stats = units
+      .groupBy(col("doc_id"), col("kind"), col("unit")).agg(count(lit(1)).as("c"))
       .groupBy(col("doc_id")).agg(
-        sum(col("c")).cast(LongType).as("n_words"),
-        count(lit(1)).cast(LongType).as("n_distinct"),
-        max(col("c")).as("top_word_c"))
-    val bigramStats = tok.filter(col("has_bg"))
-      .groupBy(col("doc_id"), col("bg")).agg(count(lit(1)).as("c"))
-      .groupBy(col("doc_id")).agg(
-        sum(col("c")).as("n_bigrams"), max(col("c")).as("top_bigram_c"))
+        sum(of(0, col("c"))).cast(LongType).as("n_words"),
+        count(of(0, lit(1))).cast(LongType).as("n_distinct"),
+        max(of(0, col("c"))).as("top_word_c"),
+        sum(of(1, col("c"))).as("n_bigrams"),
+        max(of(1, col("c"))).as("top_bigram_c"))
     val dupFrac = round(lit(1.0) -
       col("n_distinct").cast("double") / col("n_words").cast("double"), 6)
     val topWordFrac = round(
@@ -524,7 +547,7 @@ object TextAnalysis {
     val topBigramFrac = round(coalesce(
       col("top_bigram_c").cast("double") / col("n_bigrams").cast("double"),
       lit(0.0)), 6)
-    wordStats.join(bigramStats, Seq("doc_id"), "left")
+    stats
       .select(col("doc_id"), col("n_words"), col("n_distinct"),
         dupFrac.as("dup_word_frac"),
         topWordFrac.as("top_word_frac"),
@@ -1086,21 +1109,25 @@ object TextAnalysis {
   def qualityBuckets(t: Tables): DataFrame =
     qualityBucketsFrom(t.documents
       .select(col("doc_id"), col("source"), qualityExpr.as("quality")))
+      .orderBy(col("source"), col("doc_id"))
 
-  /** F26 over an already-scored (doc_id, source, quality) frame — the
-    * shared-scan seam (H3 feeds the same pinned scored frame here and
-    * into the pipeline's quality gate). */
+  /** F26 over an already-scored (doc_id, source, quality) frame,
+    * unordered — the shared-scan seam (H3 feeds its pinned scored
+    * frame here and the bucket rows into the pipeline's gates, where
+    * a sort would be thrown away). A source's size is the sum of its
+    * bin counts, so it rides the offsets broadcast. */
   private[graft] def qualityBucketsFrom(scored: DataFrame): DataFrame = {
-    val docs = scored
+    val binned = scored
       .filter(col("quality").isNotNull)
-    val binned = docs.withColumn("bin", floor(col("quality") * 100).cast("int"))
+      .withColumn("bin", floor(col("quality") * 100).cast("int"))
+    val bySource = Window.partitionBy(col("source"))
     val offsets = binned.groupBy(col("source"), col("bin"))
       .agg(count(lit(1)).as("c"))
       .withColumn("off", coalesce(sum(col("c")).over(
-        Window.partitionBy(col("source")).orderBy(col("bin").desc)
+        bySource.orderBy(col("bin").desc)
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("source"), col("bin"), col("off"))
-    val nSrc = docs.groupBy(col("source")).agg(count(lit(1)).as("n_src"))
+      .withColumn("n_src", sum(col("c")).over(bySource))
+      .select(col("source"), col("bin"), col("off"), col("n_src"))
     val wIn = Window.partitionBy(col("source"), col("bin"))
       .orderBy(col("quality").desc, col("doc_id"))
     val pr = coalesce((col("rnk") - 1).cast("double") /
@@ -1108,13 +1135,11 @@ object TextAnalysis {
     binned
       .join(broadcast(offsets), Seq("source", "bin"))
       .withColumn("rnk", col("off") + row_number().over(wIn))
-      .join(broadcast(nSrc), Seq("source"))
       .select(col("doc_id"), col("source"), col("quality"),
         round(pr, 6).as("pct_rank"),
         when(pr <= lit(1.0 / 3), "head")
           .when(pr <= lit(2.0 / 3), "middle")
           .otherwise("tail").as("bucket"))
-      .orderBy(col("source"), col("doc_id"))
   }
 
   /** F24 — `q_token_histogram`: the corpus' token-LENGTH distribution

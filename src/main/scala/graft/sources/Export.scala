@@ -1,11 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 import graft.functions.TextFunctions.words
-import graft.operators.TextAnalysis
+import graft.operators.{EmbeddingStore, TextAnalysis}
 
 /** H1 — `q_export_manifest`: the pipeline's SINK — materialize the
   * curated corpus (F9's kept documents) as split/source-partitioned
@@ -65,6 +65,18 @@ object Export {
     else df.repartition((keys :+ pmod(col("doc_id"), lit(k.toLong))): _*)
   }
 
+  /** A read-back manifest of at most `bound` rows (its keys fix the
+    * bound by construction), materialized before its scratch store is
+    * deleted: collected in `keys` order — one task sorts the few
+    * aggregated rows, where a global sort adds a sampling job and an
+    * exchange — and returned as a LocalRelation, so its consumer runs
+    * no job and there is no pinned block to lose. */
+  private def manifestRows(df: DataFrame, bound: Long,
+      keys: Column*): DataFrame =
+    TableFormat.localFrame(df.sparkSession,
+      EmbeddingStore.collectBounded(df.coalesce(1).sortWithinPartitions(keys: _*),
+        bound, "export manifest rows").toSeq, df.schema)
+
   /** Precondition (standard for any Hive-style partitioned sink):
     * the partition keys are non-null, non-empty strings — a null or
     * '' source would write as `__HIVE_DEFAULT_PARTITION__` and read
@@ -80,8 +92,7 @@ object Export {
     runs.incrementAndGet()
     try {
       val out = s"$dir/corpus"
-      TextAnalysis.pipelineKeptDocs(t)
-        .join(t.documents.select(col("doc_id"), col("text")), "doc_id")
+      TextAnalysis.pipelineKeptText(t)
         .select(col("doc_id"), col("text"), col("split"), col("source"))
         // hash-distribute on the partition keys before the fan-out
         // (Iceberg write.distribution-mode=hash; guide §6): without
@@ -142,8 +153,7 @@ object Export {
     val dir = LayoutStore.scratch(t.dir, "export_shards").toPath
     try {
       val out = s"$dir/shards"
-      TextAnalysis.pipelineKeptDocs(t)
-        .join(t.documents.select(col("doc_id"), col("text")), "doc_id")
+      TextAnalysis.pipelineKeptText(t)
         .select(col("doc_id"), col("text"), col("source"), col("split"),
           pmod(col("doc_id"), lit(exportShardCount.toLong)).as("shard"))
         // hash-distribute on the partition keys (H1's rationale) —
@@ -151,7 +161,7 @@ object Export {
         // small files
         .transform(distributeByKeys(_, col("split"), col("shard")))
         .write.partitionBy("split", "shard").parquet(out)
-      spark.read
+      manifestRows(spark.read
         .schema("doc_id LONG, text STRING, source STRING, split STRING, shard LONG")
         .parquet(out)
         .select(col("split"), col("shard"), col("doc_id"),
@@ -159,9 +169,8 @@ object Export {
         .groupBy(col("split"), col("shard"))
         .agg(count(lit(1)).as("n_docs"),
           sum(col("toks")).as("n_tokens"),
-          expr("bit_xor(doc_id)").as("id_xor"))
-        .orderBy(col("split"), col("shard"))
-        .localCheckpoint(true)
+          expr("bit_xor(doc_id)").as("id_xor")),
+        2L * exportShardCount, col("split"), col("shard"))
     } finally LayoutStore.deleteRecursively(dir.toFile)
   }
 
@@ -285,19 +294,19 @@ object Export {
         .select(col("doc_id"), col("source"),
           TextAnalysis.qualityExpr.as("quality"))
         .localCheckpoint()
+      // the bucket rows carry the quality the first gate reads, so
+      // they attach in the gates' own doc-keyed pass: no bucket join
       val buckets = TextAnalysis.qualityBucketsFrom(scored)
-        .select(col("doc_id"), col("bucket"))
-      TextAnalysis.pipelineKeptFrom(t,
-          scored.filter(col("quality") >= 0.5).select(col("doc_id")))
+        .select(col("doc_id"), col("quality"), col("bucket"))
+      TextAnalysis.pipelineKeptFrom(
+          t.documents.select(col("doc_id"), col("source"), col("text")), buckets)
         .filter(col("split") === "train")
-        .join(t.documents.select(col("doc_id"), col("text")), "doc_id")
-        .join(buckets, "doc_id")
         .select(col("doc_id"), col("text"), phase.as("phase"),
           pmod(col("doc_id"), lit(exportShardCount.toLong)).as("shard"))
         // hash-distribute on the partition keys (H1's rationale)
         .transform(distributeByKeys(_, col("phase"), col("shard")))
         .write.partitionBy("phase", "shard").parquet(out)
-      spark.read
+      manifestRows(spark.read
         .schema("doc_id LONG, text STRING, phase INT, shard LONG")
         .parquet(out)
         .select(col("phase"), col("shard"), col("doc_id"),
@@ -312,9 +321,8 @@ object Export {
           col("id_xor"),
           round(col("q_sum").cast("double")
             / (col("n_docs") * lit(1000000L)).cast("double"), 6)
-            .as("avg_quality"))
-        .orderBy(col("phase"), col("shard"))
-        .localCheckpoint(true)
+            .as("avg_quality")),
+        3L * exportShardCount, col("phase"), col("shard"))
     } finally LayoutStore.deleteRecursively(dir.toFile)
   }
 
@@ -338,16 +346,14 @@ object Export {
   def exportJsonl(t: Tables): DataFrame = {
     val dir = LayoutStore.scratch(t.dir, "export_jsonl").toPath
     try {
-      val docs = TextAnalysis.pipelineKeptDocs(t)
-        .join(t.documents.select(col("doc_id"), col("text")), "doc_id")
+      val docs = TextAnalysis.pipelineKeptText(t)
         .select(col("doc_id"), col("source"), col("text"), col("split"))
-      jsonlRoundTrip(docs, s"$dir/jsonl")
+      manifestRows(jsonlRoundTrip(docs, s"$dir/jsonl")
         .groupBy(col("split"))
         .agg(count(lit(1)).as("n_docs"),
           sum(size(words(col("text"))).cast(LongType)).as("n_tokens"),
-          expr("bit_xor(doc_id)").as("id_xor"))
-        .orderBy(col("split"))
-        .localCheckpoint(true)
+          expr("bit_xor(doc_id)").as("id_xor")),
+        2L, col("split"))
     } finally LayoutStore.deleteRecursively(dir.toFile)
   }
 

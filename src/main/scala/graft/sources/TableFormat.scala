@@ -372,19 +372,24 @@ object TableFormat {
     spark.createDataFrame(rows.asJava, schema)
   }
 
-  /** The part files of the manifest at `dir` (data files only). */
-  private def manifestParts(dir: String): Seq[java.io.File] =
-    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty[java.io.File])
+  /** The part files of the manifest at `dir` (data files only); a
+    * single-file table is its own one part. */
+  private def manifestParts(dir: String): Seq[java.io.File] = {
+    val d = new java.io.File(dir)
+    if (d.isFile) Seq(d)
+    else Option(d.listFiles()).getOrElse(Array.empty[java.io.File])
       .filter(f => f.isFile &&
         !f.getName.startsWith("_") && !f.getName.startsWith("."))
       .sortBy(_.getName).toSeq
+  }
 
   /** An LRU map from a manifest's IDENTITY to a value derived from it,
     * holding at most `capacity` entries. The identity is the canonical
-    * `_manifest` dir plus the (name, length, mtime) of every part
-    * file; part names carry the writing job's UUID, so a root
-    * deleted and recreated, or a hard-link clone under a new root, is
-    * a NEW key — an entry can never answer for different bytes. */
+    * `_manifest` dir (or single parquet file) plus the (name, length,
+    * mtime) of every part file; part names carry the writing job's
+    * UUID, so a root deleted and recreated, or a hard-link clone under
+    * a new root, is a NEW key — an entry can never answer for
+    * different bytes. */
   private[graft] class IdentityCache[V](capacity: Int) {
     private type Key = (String, Seq[(String, Long, Long)])
     private val entries =
@@ -404,14 +409,22 @@ object TableFormat {
       * OUTSIDE the map lock (a slow load never blocks readers of
       * other manifests; two racing loaders of one key compute the
       * same value and the later put is harmless). */
-    def getOrLoad(dir: String)(load: => V): V = {
+    def getOrLoad(dir: String)(load: => V): V = lookup(key(dir), load)
+
+    /** [[getOrLoad]] for a path that may have no part file of its own
+      * (missing, or only partition subdirectories): such a path has no
+      * identity, so its value loads every time and is never stored. */
+    def getOrLoadIdentified(dir: String)(load: => V): V = {
       val k = key(dir)
+      if (k._2.isEmpty) load else lookup(k, load)
+    }
+
+    private def lookup(k: Key, load: => V): V =
       entries.synchronized(Option(entries.get(k))).getOrElse {
         val v = load
         entries.synchronized(entries.put(k, v))
         v
       }
-    }
 
     def size: Int = entries.synchronized(entries.size())
   }

@@ -12,8 +12,14 @@ import org.apache.spark.sql.types.StructType
   * loaders keep that the only difference.
   */
 final class Tables(val spark: SparkSession, val dir: String) {
-  private def t(name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** The table read with the schema its file identity resolved once
+    * ([[Tables.schemaCache]]): inferring it costs a footer job per
+    * read. */
+  private def t(name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(Tables.schemaCache.getOrLoadIdentified(path)(
+      spark.read.parquet(path).schema)).parquet(path)
+  }
 
   def region: DataFrame = t("region")
   def nation: DataFrame = t("nation")
@@ -38,7 +44,9 @@ final class Tables(val spark: SparkSession, val dir: String) {
     * branches on LongType and applies the same div-1000 truncation. */
   def events: DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = t("events")
+    // inferred per read: the conf above decides the inferred ts type,
+    // so a schema cached under another session's conf could misread it
+    val raw = spark.read.parquet(s"$dir/events.parquet")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", Tables.ntzFromNanos("ts"))
@@ -53,6 +61,11 @@ final class Tables(val spark: SparkSession, val dir: String) {
 
 object Tables {
   def apply(spark: SparkSession, dir: String): Tables = new Tables(spark, dir)
+
+  /** Inferred table schemas by file identity (a single parquet file's
+    * own name, length and mtime; a directory's part files), so a table
+    * rewritten at the same path resolves its new schema. */
+  private[graft] val schemaCache = new TableFormat.IdentityCache[StructType](256)
 
   /** The `documents` schema, passed EXPLICITLY on every read-back of a
     * documents store: inference must never re-type a column (a

@@ -404,8 +404,11 @@ class IvfIndexSpec extends SparkTestBase {
     val batch =
       EmbeddingStore.searchIvfBatch(spark, path, queries, k = 10, probes = 2)
     val rows = batch.collect()
-    // the driver held only probe METADATA: <= nQueries * probes cell ids
-    assert(EmbeddingStore.driverRowsHighWater.get() <= 5L * 2,
+    // the driver held only index METADATA: the batch's queries and the
+    // cached centroids' scores it ranks them against (the distributed
+    // probe's own bound is pinned in the forced-cap case below)
+    val nCells = IndexCatalog.pin(path).read(spark, "centroids").count()
+    assert(EmbeddingStore.driverRowsHighWater.get() <= math.max(5L, nCells),
       s"batch probe held ${EmbeddingStore.driverRowsHighWater.get()} driver rows")
     // ONE scan of the union of probed cells, file-pruned from the
     // manifest's cell statistics
@@ -589,11 +592,19 @@ class IvfIndexSpec extends SparkTestBase {
     }
   }
 
+  // the title predates the batch searches below; kept so the test id
+  // stays stable
   test("with the sketch and centroid caps forced to 0, every single-query " +
     "search is result-identical and plans through the distributed probe") {
     val t = Tables(spark, sfDir)
     val path = EmbeddingStore.ensureIndex(t)
+    val queries = t.embeddings.filter(col("vec_id") < 5 || col("vec_id") === 33L)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+    def batchPlanJobs(): Int = JobCounting.countJobs(spark)(
+      EmbeddingStore.searchIvfBatch(spark, path, queries, k = 10))._2
     def results(): Seq[Seq[String]] = Seq(
+      EmbeddingStore.searchIvfBatch(spark, path, queries, k = 10),
+      EmbeddingStore.searchIvfBatch(spark, path, queries, k = 5, probes = 4),
       EmbeddingStore.searchIvf(spark, path, 0L, k = 10),
       EmbeddingStore.searchIvf(spark, path, 33L, k = 10, probes = 4),
       EmbeddingStore.searchIvfFiltered(spark, path, t.embeddings, 0L,
@@ -609,12 +620,19 @@ class IvfIndexSpec extends SparkTestBase {
         k = 10))._2
     val cached = results()
     assert(planJobs() === 1)
+    // a warm batch plans in the one bounded query collect: each query
+    // ranks on the driver against the cached centroids
+    assert(batchPlanJobs() === 1)
     val (sketchBytes, rowsCap) =
       (TableFormat.sketchCacheBytes, IndexCatalog.smallRowsCap)
     try {
       TableFormat.sketchCacheBytes = 0L
       IndexCatalog.smallRowsCap = 0L
       assert(results() === cached)
+      // the distributed batch probe holds only probed cell ids
+      EmbeddingStore.driverRowsHighWater.set(0)
+      EmbeddingStore.searchIvfBatch(spark, path, queries, k = 10).collect()
+      assert(EmbeddingStore.driverRowsHighWater.get() <= 6L * 2)
       // the query-vector collect, the sketch probe over the manifest
       // parquet and the TakeOrdered ranking collect
       assert(planJobs() === 3)

@@ -37,4 +37,23 @@ class JobProbeSpec extends SparkTestBase {
         byDesc("probe-b").start <= byDesc("probe-a").end)
     } finally sc.removeSparkListener(listener)
   }
+
+  test("JobProbe credits AQE query-stage jobs to the graft frame that " +
+    "ran the query, not to the stage future's wrapper frame") {
+    val sc = spark.sparkContext
+    // resolved before listening: only the operator's own jobs count
+    val docs = graft.sources.Tables(spark, sfDir).documents
+    val listener = new JobProbe.Listener
+    sc.addSparkListener(listener)
+    try {
+      listener.take(spark)
+      // eager pins over a window exchange: each pin's query runs its
+      // shuffle as an AQE query-stage job before the pin's own job
+      graft.operators.Dedup.sharedStages(docs)
+      val jobs = listener.take(spark)
+      assert(jobs.size > 2, s"expected stage jobs besides the two pins: $jobs")
+      jobs.foreach(j => assert(j.site.startsWith("graft.operators.Dedup"),
+        s"job ${j.id} credited to '${j.site}'"))
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -1,8 +1,12 @@
 package graft
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
+import org.apache.spark.util.sketch.BloomFilter
 
-import graft.operators.{JoinPruning, Relational}
+import graft.operators.{AdaptiveBloomAggregate, JoinPruning, Relational}
 import graft.sources.Tables
 
 class JoinPruningSpec extends SparkTestBase {
@@ -85,6 +89,46 @@ class JoinPruningSpec extends SparkTestBase {
     assert((0L until 10L).forall(JoinPruning.mightContainValue(sketches("s"), _)))
     assert(Seq(0L, 99999L, 199999L)
       .forall(JoinPruning.mightContainValue(sketches("b"), _)))
+  }
+
+  test("bloomAgg over its cap: the buffer stops at cap hashes, the " +
+    "sketch stays maxBits wide with no false negatives, and a group at " +
+    "the cap keeps the uncapped sketch byte for byte") {
+    import spark.implicits._
+    val maxBits = 1L << 13
+    val agg = AdaptiveBloomAggregate(
+      BoundReference(0, LongType, nullable = false), maxBits)
+    val cap = agg.cap
+    assert(cap === 820L)
+    // driver-side: update and merge never hold more than cap hashes
+    val a = agg.createAggregationBuffer()
+    (0L until 3 * cap).foreach(v => agg.update(a, InternalRow(v)))
+    assert(a.hashes.length <= cap && a.sketch != null)
+    val b = agg.createAggregationBuffer()
+    (0L until cap / 2).foreach(v => agg.update(b, InternalRow(-v - 1)))
+    val merged = agg.merge(agg.deserialize(agg.serialize(b)),
+      agg.deserialize(agg.serialize(a)))
+    assert(merged.hashes.isEmpty)
+    val sketch = BloomFilter.readFrom(new java.io.ByteArrayInputStream(
+      agg.eval(merged).asInstanceOf[Array[Byte]]))
+    assert(sketch.bitSize() === maxBits)
+    assert(((0L until 3 * cap) ++ (1L to cap / 2).map(-_))
+      .forall(sketch.mightContainLong))
+    // through Spark: one group far over the cap, one exactly at it
+    val over = (0L until 20 * cap).map(("o", _))
+    val at = (0L until cap).map(("a", _))
+    val sketches = (over ++ at).toDF("g", "k")
+      .groupBy(col("g")).agg(JoinPruning.bloomAgg(col("k"), maxBits).as("bk"))
+      .collect().map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).toMap
+    assert((0L until 20 * cap).forall(JoinPruning.mightContainValue(sketches("o"), _)))
+    assert(sketches("o").length <= maxBits / 8 + 64)
+    // at the cap the sketch is exactly the uncapped rule's
+    val hashes = at.toDF("g", "k").select(xxhash64(col("k"))).collect().map(_.getLong(0))
+    val want = BloomFilter.create(cap, maxBits)
+    hashes.foreach(want.putLong)
+    val bos = new java.io.ByteArrayOutputStream()
+    want.writeTo(bos)
+    assert(sketches("a").toSeq === bos.toByteArray.toSeq)
   }
 
   test("plan: the pre-filter is the codegen'd might_contain over the scan") {
