@@ -13,7 +13,7 @@ import graft.sources.Tables
   * runs it over both state stores):
   *
   *  1. yesterday's DEDUP STATE folds forward ([[Dedup.advanceDedupState]]:
-  *     delta-only shingling, occupancy merge, watermark advance);
+  *     delta-only shingling in one commit with the new watermark);
   *  2. the delta's vectors APPEND to the IVF index
   *     ([[EmbeddingStore.appendToIvfIndex]]: assigned with the
   *     persisted centroids, PQ codes included);
@@ -35,10 +35,10 @@ import graft.sources.Tables
   * already replays.
   *
   * Output facts are read back from the PERSISTED stores (the state's
-  * _WATERMARK file, its docs table, the rebuilt index), not echoed
-  * from inputs — the row fails if any stage half-runs. Scale shape:
-  * every stage is the documented delta-proportional or storage-stage
-  * path; nothing here adds a new corpus-shaped pass. */
+  * watermark txn record and current generation, the rebuilt index),
+  * not echoed from inputs — the row fails if any stage half-runs.
+  * Scale shape: every stage is the documented delta-proportional or
+  * storage-stage path; nothing here adds a new corpus-shaped pass. */
 object AdvanceDay {
 
   /** Drift threshold for the episode: the ~half-corpus delta must
@@ -58,10 +58,10 @@ object AdvanceDay {
   // D13's steady state), and Bench materializes it untimed — it is
   // ETL storage like the bucketed layout and the ensured index
   private[graft] def ensureDayBase(t: Tables): String =
-    // v2: the IVF index inside the base moved to the versioned
-    // table-format layout (r18) — the key must rotate with it or a
-    // cached pre-refactor base would be probed by the new readers
-    graft.sources.LayoutStore.ensure(t.dir, "daybase", "v2") { path =>
+    // v3: the dedup state became one versioned table (v2: so did the
+    // IVF index) — the key rotates with every layout change, or a
+    // cached pre-change base would be read by the new readers
+    graft.sources.LayoutStore.ensure(t.dir, "daybase", "v3") { path =>
       val maxDoc = t.documents.agg(max(col("doc_id"))).first().getLong(0)
       Dedup.buildDedupState(t.documents, maxDoc / 2, s"$path/dedup")
       val vectors = t.embeddings
@@ -131,7 +131,7 @@ object AdvanceDay {
     // --- read the outcome back from the persisted stores
     val dedupWatermark = Dedup.stateWatermark(statePath)
     // one readback pass yields both counts (was two scans)
-    val stateCounts = spark.read.parquet(s"$statePath/docs")
+    val stateCounts = Dedup.readState(spark, statePath)
       .agg(count(lit(1)).as("n"),
         sum(when(col("doc_id") > docSplit, 1L).otherwise(0L)).as("nd")).first()
     val nStateDocs = stateCounts.getLong(0)

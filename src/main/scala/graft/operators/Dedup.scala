@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.LongType
 
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
-import graft.sources.Tables
+import graft.sources.{TableFormat, Tables}
 
 /** E-family: document deduplication — the headline operators of a
   * training-data pipeline. Five escalating strategies over
@@ -531,8 +531,8 @@ object Dedup {
 
   /** Bump when the state schema or the signature rule changes: a rule
     * change must never silently join deltas against stale state
-    * (v2: the _WATERMARK coverage marker joined the layout). */
-  private val dedupStateVersion = "r10-inc-v2"
+    * (v3: one versioned table whose commits carry the watermark). */
+  private val dedupStateVersion = "r10-inc-v3"
 
   /** Per-doc dedup state over distinct shingle rows: the SORTED
     * shingle set (deterministic files), its size, and the 12 minhash
@@ -548,18 +548,35 @@ object Dedup {
       .select(col("doc_id") +: size(col("sh")).cast("long").as("n") +:
         col("sh") +: (0 until numHashes).map(k => col(s"h$k")): _*)
 
+  /** A doc's state shard: Spark's bucket id of doc_id — the partition
+    * a hash exchange on doc_id into 16·m partitions assigns mod 16, so
+    * each file [[stateRows]] writes holds one shard. */
+  private def shardOf = pmod(hash(col("doc_id")), lit(16))
+
+  /** [[docState]] rows with their shard, one shard per written file. */
+  private def stateRows(ex: DataFrame): DataFrame = {
+    val n = ex.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    docState(ex.repartition(16 * math.max(1, n / 16), col("doc_id")))
+      .withColumn("shard", shardOf)
+  }
+
+  /** The txn record of a state commit: the doc_id coverage. */
+  private val watermarkTxn = "watermark"
+
+  /** The current generation of a dedup or span state table. */
+  private[graft] def readState(spark: org.apache.spark.sql.SparkSession,
+      path: String): DataFrame = {
+    val g = TableFormat.currentGen(path)
+    TableFormat.readViaManifest(spark, path, g, TableFormat.genSchema(path, g))
+  }
+
   /** Build-once persisted dedup state for the base corpus (doc_id <=
     * watermark), under the content-fingerprinted [[graft.sources.LayoutStore]]
     * root (replaced data rekeys the state; a rule change bumps
-    * [[dedupStateVersion]]):
-    *
-    *  - `docs/` — [[docState]] rows partitioned by `shard =
-    *    pmod(doc_id, 16)`, so verification's candidate-doc lookups
-    *    prune shards at the file listing (dynamic partition pruning
-    *    off the broadcast candidate list);
-    *  - `bcounts/` — per-band-bucket occupancy of the base corpus,
-    *    pre-aggregated so the delta run never re-counts (or even
-    *    re-derives) the old bucket rows.
+    * [[dedupStateVersion]]): ONE versioned [[TableFormat]] table of
+    * [[docState]] rows and their `shard`, whose every commit records
+    * its watermark as a `_txn` record (Delta's `txn` action) — data
+    * and watermark publish together through the one marker CAS.
     *
     * This is the heavy text work (corpus scan, shingle window,
     * signature aggregation) paid ONCE at ETL time — exactly what the
@@ -570,39 +587,17 @@ object Dedup {
       buildDedupState(t.documents, deltaWatermarkOf(t.documents), _)
     }
 
-  /** Explicit-path state builder: persist the dedup state for docs
-    * with `doc_id <= watermark` (see [[ensureDedupState]] for the
-    * layout). The watermark is recorded beside the data so
-    * [[advanceDedupState]] knows where coverage ends. */
-  def buildDedupState(documents: DataFrame, watermark: Long, path: String): Unit = {
-    val spark = documents.sparkSession
-    docState(shingleRowsOf(documents.filter(col("doc_id") <= watermark)))
-      .withColumn("shard", pmod(col("doc_id"), lit(16)).cast("int"))
-      .write.mode("overwrite").partitionBy("shard").parquet(s"$path/docs")
-    spark.read.parquet(s"$path/docs")
-      .select(col("doc_id"), explode(array(bandBucketCols: _*)).as("bucket"))
-      .groupBy(col("bucket")).agg(count(lit(1)).as("n_old"))
-      .write.mode("overwrite").parquet(s"$path/bcounts")
-    writeWatermark(path, watermark)
-  }
+  /** Explicit-path state builder: commit the dedup state for docs
+    * with `doc_id <= watermark` (see [[ensureDedupState]]). */
+  def buildDedupState(documents: DataFrame, watermark: Long, path: String): Unit =
+    TableFormat.commitGenManifested(
+      stateRows(shingleRowsOf(documents.filter(col("doc_id") <= watermark))),
+      path, Seq("shard"), txn = Some(watermarkTxn -> watermark))
 
-  private def writeWatermark(path: String, w: Long): Unit =
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(path, "_WATERMARK"), w.toString)
-
-  /** The doc_id coverage recorded in a state dir. Refuses a state
-    * whose last advance did not complete (`_ADVANCING` marker
-    * present): its docs/bcounts may be partially mutated, and
-    * joining deltas against it would silently drop or duplicate
-    * pairs — rebuild with [[buildDedupState]] instead. */
-  def stateWatermark(path: String): Long = {
-    require(!new java.io.File(path, "_ADVANCING").exists(),
-      s"dedup state at $path has an interrupted advance (_ADVANCING " +
-        "marker present) — its tables may be partially mutated; rebuild " +
-        "it with buildDedupState")
-    java.nio.file.Files.readString(
-      java.nio.file.Paths.get(path, "_WATERMARK")).trim.toLong
-  }
+  /** A dedup or span state's doc_id coverage: its watermark txn record. */
+  def stateWatermark(path: String): Long =
+    TableFormat.lastTxn(path, watermarkTxn).getOrElse(
+      throw new java.io.FileNotFoundException(s"no state committed under $path"))
 
   /** DAY TWO of the incremental loop: fold everything above the
     * state's watermark INTO the state, so the next day's delta joins
@@ -612,58 +607,31 @@ object Dedup {
     * each incremental pass (engine.py:98 returns the new watermark
     * the caller persists).
     *
-    * Cost ∝ delta: only the delta is shingled; its doc rows APPEND
-    * into the touched shard partitions (history never rewritten);
-    * the occupancy table merges old + delta counts — a rewrite of
-    * the NARROW per-bucket table only, staged then swapped by
-    * renames.
-    *
-    * Crash discipline — FAIL LOUD, never serve a half-advanced
-    * state: an `_ADVANCING` marker brackets every mutation, and both
-    * [[stateWatermark]] (so every reader) and this method refuse a
-    * state whose marker is still present — a crash anywhere inside
-    * the advance (mid-append, mid-swap, pre-watermark) therefore
-    * surfaces as an explicit rebuild-me error on next use rather
-    * than silently dropped/duplicated pairs from double-counted
-    * occupancy or re-appended doc rows. A plain filesystem offers no
-    * multi-file commit, so exactly-once ADVANCES (as opposed to
-    * exactly-once detection of a failed one) need the state under a
-    * transactional table format — that substitution changes only the
-    * read/write calls here. Assumes an APPEND-ONLY corpus (the
-    * daily-crawl model); replaced history needs a rebuild (the
-    * content-fingerprinted [[ensureDedupState]] key handles that
-    * case by construction). Returns the new watermark. */
-  def advanceDedupState(documents: DataFrame, path: String): Long = {
-    val spark = documents.sparkSession
-    val w0 = stateWatermark(path) // also refuses an interrupted state
+    * Cost ∝ delta: only the delta is shingled ([[advanceState]]).
+    * Assumes an APPEND-ONLY corpus (the daily-crawl model); replaced
+    * history needs a rebuild (the content-fingerprinted
+    * [[ensureDedupState]] key handles that case by construction).
+    * Returns the new watermark. */
+  def advanceDedupState(documents: DataFrame, path: String): Long =
+    advanceState(documents, path)(delta => stateRows(shingleRowsOf(delta)))
+
+  /** Fold the docs above a state's watermark w0 into it: ONE
+    * insert-only commit ([[TableFormat.appendScoped]]) of `rows` over
+    * the docs in (w0, w1] that also records w1 = their max doc_id. A
+    * crash leaves the previous generation live (and at most an
+    * unmarkered staged dir, which [[TableFormat.vacuumTable]] sweeps),
+    * so a retry simply re-derives it. Returns the watermark. */
+  private def advanceState(documents: DataFrame, path: String)(
+      rows: DataFrame => DataFrame): Long = {
+    val w0 = stateWatermark(path)
     val mx = documents.agg(max(col("doc_id"))).first()
     val w1 = if (mx.isNullAt(0)) w0 else mx.getLong(0)
-    if (w1 <= w0) return w0
-    val delta = docState(shingleRowsOf(
-      documents.filter(col("doc_id") > w0 && col("doc_id") <= w1)))
-      .localCheckpoint() // consumed by the doc append AND the count merge
-    // the merged occupancy table computes BEFORE the marker goes up:
-    // it reads the old bcounts, and staging it first keeps the
-    // marked window down to the append + two renames
-    val merged = spark.read.parquet(s"$path/bcounts")
-      .unionByName(delta
-        .select(col("doc_id"), explode(array(bandBucketCols: _*)).as("bucket"))
-        .groupBy(col("bucket")).agg(count(lit(1)).as("n_old")))
-      .groupBy(col("bucket")).agg(sum(col("n_old")).as("n_old"))
-    merged.write.mode("overwrite").parquet(s"$path/bcounts_next")
-    val advancing = java.nio.file.Paths.get(path, "_ADVANCING")
-    java.nio.file.Files.writeString(advancing, w1.toString)
-    delta.withColumn("shard", pmod(col("doc_id"), lit(16)).cast("int"))
-      .write.mode("append").partitionBy("shard").parquet(s"$path/docs")
-    val old = java.nio.file.Paths.get(path, "bcounts_replaced")
-    java.nio.file.Files.move(java.nio.file.Paths.get(path, "bcounts"), old)
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(path, "bcounts_next"),
-      java.nio.file.Paths.get(path, "bcounts"))
-    graft.sources.LayoutStore.deleteRecursively(old.toFile)
-    writeWatermark(path, w1)
-    java.nio.file.Files.delete(advancing)
-    w1
+    if (w1 > w0)
+      TableFormat.appendScoped(documents.sparkSession, path,
+        rows(documents.filter(col("doc_id") > w0 && col("doc_id") <= w1)),
+        TableFormat.genSchema(path, TableFormat.currentGen(path)),
+        txn = Some(watermarkTxn -> w1))
+    math.max(w0, w1)
   }
 
   /** E11 — `q_dedup_incremental`: near-dup pairs TOUCHING THE DELTA
@@ -675,20 +643,20 @@ object Dedup {
     *
     * Result contract: IDENTICAL to full E2 restricted to pairs with a
     * delta side — same signatures, same whole-corpus bucket occupancy
-    * caps (old occupancy comes from the persisted `bcounts`, so a
-    * bucket that full E2 would drop is dropped here too), same exact
-    * Jaccard ≥ 0.8 verification. The oracle IS full E2's pair CTEs
-    * filtered to delta-touching pairs.
+    * caps (a delta-touched bucket's occupancy counts its state rows
+    * and its delta rows, so a bucket that full E2 would drop is
+    * dropped here too), same exact Jaccard ≥ 0.8 verification. The
+    * oracle IS full E2's pair CTEs filtered to delta-touching pairs.
     *
     * Scale shape — delta cost ∝ delta, not corpus:
     *  - only delta docs are shingled/hashed (the corpus-scan stages);
-    *  - delta band buckets (tiny) BROADCAST against the persisted
-    *    occupancy table and state rows — the old side is read
-    *    (column-pruned to the 12 signature hashes), never shuffled,
-    *    and only buckets a delta doc touches can mint candidates;
+    *  - the delta's band buckets (tiny) BROADCAST against the state
+    *    rows (column-pruned to the 12 signature hashes), so only the
+    *    state rows of delta-touched buckets leave the scan, and only
+    *    those buckets can mint candidates;
     *  - verification reads only candidate docs' shingle sets: the
-    *    broadcast candidate list carries the shard key, so the
-    *    doc-partitioned state prunes at the file listing.
+    *    candidate shards prune the state's files through the
+    *    manifest's `shard` range.
     * SCALING.md §9 measures the resulting delta-proportional cost. */
   def dedupIncremental(t: Tables): DataFrame =
     dedupIncrementalAgainst(t.documents, ensureDedupState(t))
@@ -701,29 +669,25 @@ object Dedup {
   def dedupIncrementalAgainst(documents: DataFrame, path: String): DataFrame = {
     val spark = documents.sparkSession
     val w = stateWatermark(path)
-    val old = spark.read.parquet(s"$path/docs")
-    val oldCounts = spark.read.parquet(s"$path/bcounts")
+    val gen = TableFormat.currentGen(path)
+    val schema = TableFormat.genSchema(path, gen)
     val ddocs = docState(
       shingleRowsOf(documents.filter(col("doc_id") > w))).localCheckpoint()
     val dbuckets = ddocs.select(col("doc_id"),
       explode(array(bandBucketCols: _*)).as("bucket"))
-    val dcounts = dbuckets.groupBy(col("bucket")).agg(count(lit(1)).as("n_new"))
-    // whole-bucket occupancy = persisted old count + delta count; only
-    // delta-touched buckets can mint a delta-touching pair, so the old
-    // occupancy table is FILTERED by the broadcast touched set, never
-    // scanned into a shuffle
-    val touchedOld = oldCounts
-      .join(broadcast(dcounts.select(col("bucket"))), Seq("bucket"))
-    val survivors = dcounts.join(touchedOld, Seq("bucket"), "left")
-      .filter(coalesce(col("n_old"), lit(0L)) + col("n_new") <= maxBucketSize)
-      .select(col("bucket"))
-      .localCheckpoint() // tiny; consumed by both bucket-row joins
-    val oldRows = old
-      .select(col("doc_id"), explode(array(bandBucketCols: _*)).as("bucket"))
-      .join(broadcast(survivors), "bucket")
-    val deltaRows = dbuckets.join(broadcast(survivors), "bucket")
-    val cand = broadcast(deltaRows.select(col("doc_id").as("did"), col("bucket")))
-      .join(oldRows.unionByName(deltaRows), Seq("bucket"))
+    // whole-bucket occupancy = the state rows plus the delta rows of
+    // the bucket; only delta-touched buckets can mint a delta-touching
+    // pair, so the state's bucket rows are FILTERED by the broadcast
+    // touched set in the scan and the count window caps the rest
+    val rows = capBuckets(
+      TableFormat.readViaManifest(spark, path, gen, schema)
+        .select(col("doc_id"), explode(array(bandBucketCols: _*)).as("bucket"))
+        .join(broadcast(dbuckets.select(col("bucket")).distinct()), "bucket")
+        .unionByName(dbuckets),
+      Seq("bucket"))
+    val cand = broadcast(rows.filter(col("doc_id") > w)
+        .select(col("doc_id").as("did"), col("bucket")))
+      .join(rows, Seq("bucket"))
       .filter(col("did") =!= col("doc_id"))
       .select(least(col("did"), col("doc_id")).as("doc_a"),
         greatest(col("did"), col("doc_id")).as("doc_b"))
@@ -732,18 +696,17 @@ object Dedup {
     val candDocs = cand
       .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
       .distinct()
-      .withColumn("shard", pmod(col("doc_id"), lit(16)).cast("int"))
+      .withColumn("shard", shardOf)
     // exact verification over ONLY candidate docs' stored shingle
-    // sets. The candidate shard list (≤ 16 ints — bounded by the
-    // shard modulus, index metadata like D8's probed cell ids) turns
-    // into a STATIC partition filter, so the state read prunes shard
-    // directories at the file listing unconditionally — DPP would do
-    // this only when its stats heuristics fire. |A∩B| via
-    // array_intersect equals E2's common-shingle row count (rows are
-    // distinct), and the division is the same double expression
+    // sets: the candidate shard list (≤ 16 ints, like D8's probed cell
+    // ids) prunes the state's files through the manifest on the
+    // driver. |A∩B| via array_intersect equals E2's common-shingle row
+    // count (rows are distinct), and the division is the same double
+    // expression
     val candShards = candDocs.select(col("shard")).distinct()
       .collect().map(_.getInt(0)).toSeq
-    val sets = old.filter(col("shard").isin(candShards: _*))
+    val sets = TableFormat.readPrunedIn(spark, path, gen, schema, "shard",
+        candShards)
       .join(broadcast(candDocs), Seq("shard", "doc_id"))
       .select(col("doc_id"), col("n"), col("sh"))
       .unionByName(ddocs
@@ -1450,11 +1413,14 @@ object Dedup {
 
   // ---- E14: incremental span dedup over persisted gram state ---------
 
-  /** Bump when the span-state schema or gram rule changes. */
-  private val spanStateVersion = "r12-span-v1"
+  /** Bump when the span-state schema or gram rule changes (v2: one
+    * versioned table whose commits carry the watermark). */
+  private val spanStateVersion = "r12-span-v2"
 
   /** Build-once persisted SPAN state for the base corpus (doc_id <=
-    * watermark): `grams/` = the base's DISTINCT gram hashes. That
+    * watermark): one versioned [[TableFormat]] table of the base's
+    * DISTINCT gram hashes (`gh`), committed with the watermark as its
+    * txn record (the [[buildDedupState]] shape). That
     * single fact is all the corpus-wide first-occurrence rule needs
     * about history under the append-only contract: delta doc_ids are
     * strictly greater than every base id, so ANY base occurrence of a
@@ -1463,13 +1429,12 @@ object Dedup {
     * can never change, because a LATER occurrence never affects an
     * earlier one). Distinct-gram rows are far fewer than occurrence
     * rows, which is exactly what the daily pass saves. */
-  def buildSpanState(documents: DataFrame, watermark: Long, path: String): Unit = {
-    spanGramOccurrences(documents.filter(col("doc_id") <= watermark))
-      .filter(col("gh").isNotNull)
-      .select(col("gh")).distinct()
-      .write.mode("overwrite").parquet(s"$path/grams")
-    writeWatermark(path, watermark)
-  }
+  def buildSpanState(documents: DataFrame, watermark: Long, path: String): Unit =
+    TableFormat.commitGenManifested(
+      spanGramOccurrences(documents.filter(col("doc_id") <= watermark))
+        .filter(col("gh").isNotNull)
+        .select(col("gh")).distinct(),
+      path, Seq("gh"), txn = Some(watermarkTxn -> watermark))
 
   /** Build-once span state for a data dir (the E11 ensure pattern:
     * content-fingerprinted key, rule-versioned, built at the 0.9
@@ -1513,7 +1478,7 @@ object Dedup {
     val w = stateWatermark(path)
     val grams = spanGramOccurrences(documents.filter(col("doc_id") > w))
       .localCheckpoint() // feeds the distinct-gram probe AND the flag join
-    val touched = spark.read.parquet(s"$path/grams")
+    val touched = readState(spark, path)
       .join(grams.filter(col("gh").isNotNull).select(col("gh")).distinct(),
         Seq("gh"))
       .withColumn("in_base", lit(1))
@@ -1529,31 +1494,15 @@ object Dedup {
   }
 
   /** Fold the delta's grams into the span state (day-two of the E14
-    * loop, the [[advanceDedupState]] discipline): append only the
-    * grams NOT already present — the same membership join the delta
-    * pass runs — bracket the mutation with an `_ADVANCING` marker
-    * (readers refuse a half-advanced state via [[stateWatermark]]),
-    * then advance the watermark. History is never rewritten; the
-    * state grows by exactly the new-gram count. */
-  def advanceSpanState(documents: DataFrame, path: String): Long = {
-    val spark = documents.sparkSession
-    val w0 = stateWatermark(path)
-    val mx = documents.agg(max(col("doc_id"))).first()
-    val w1 = if (mx.isNullAt(0)) w0 else mx.getLong(0)
-    if (w1 <= w0) return w0
-    val deltaGh = spanGramOccurrences(
-      documents.filter(col("doc_id") > w0 && col("doc_id") <= w1))
-      .filter(col("gh").isNotNull).select(col("gh")).distinct()
-    val newGrams = deltaGh.join(spark.read.parquet(s"$path/grams"),
-      Seq("gh"), "left_anti")
-      .localCheckpoint() // pin BEFORE the append mutates what it reads
-    val advancing = java.nio.file.Paths.get(path, "_ADVANCING")
-    java.nio.file.Files.writeString(advancing, w1.toString)
-    newGrams.write.mode("append").parquet(s"$path/grams")
-    writeWatermark(path, w1)
-    java.nio.file.Files.delete(advancing)
-    w1
-  }
+    * loop, [[advanceState]]): commit only the grams NOT already
+    * present — the same membership join the delta pass runs. History
+    * is never rewritten; the state grows by exactly the new-gram
+    * count. */
+  def advanceSpanState(documents: DataFrame, path: String): Long =
+    advanceState(documents, path)(delta =>
+      spanGramOccurrences(delta).filter(col("gh").isNotNull)
+        .select(col("gh")).distinct()
+        .join(readState(documents.sparkSession, path), Seq("gh"), "left_anti"))
 
   /** E19 — `q_novelty_incremental`: the DAILY novelty read — E18's
     * duplication-rate audit for the DELTA ONLY, scored against the
@@ -1602,7 +1551,7 @@ object Dedup {
       .agg(count(lit(1)).as("c"))
       .localCheckpoint()
     val deltaCnt = mid.groupBy(col("gh")).agg(sum(col("c")).as("dcnt"))
-    val inBase = spark.read.parquet(s"$path/grams")
+    val inBase = readState(spark, path)
       .join(mid.select(col("gh")).distinct(), Seq("gh"))
       .withColumn("in_base", lit(1))
     mid.join(deltaCnt, "gh")

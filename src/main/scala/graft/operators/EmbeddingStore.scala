@@ -638,46 +638,47 @@ object EmbeddingStore {
     // skips files from STATISTICS, a rebuild is the NEXT generation
     // (no staging dirs, no rename window), and the pre-rebuild index
     // keeps time-traveling through IndexCatalog pins.
-    // gen = 0 marks build-time rows; appendToIvfIndex writes gen = 1,
-    // which is what lets indexStats report the appended fraction the
-    // rebuild advice watches
-    val cellsRoot = s"$path/cells"
-    // bloom on doc_id: the probe path's QUERY-VECTOR fetch is an
-    // equality lookup on a column this layout does NOT cluster by
-    // (files cluster on cell, so every file's doc_id range spans the
-    // query) — the per-file sketch prunes that lookup to the one
-    // file holding the id, and propagates through every appendScoped
-    val cg = TableFormat.commitGenManifested(
-      finalAssign.withColumn("gen", lit(0))
-        .repartitionByRange(k, col("cell"), col("doc_id")),
-      cellsRoot, Seq("cell", "doc_id"), bloomKeys = Seq("doc_id"))
-    // the centroids table is an independent substore — its commit
-    // overlaps the sidecar builds below (guide §2.6); only the cells
-    // commit above is a strict prerequisite (the sidecars read the
-    // just-committed cell layout)
-    import scala.concurrent.{Await, Future}
-    import graft.Concurrency.commitEc
-    import scala.concurrent.duration.Duration
-    val fCent = Future(TableFormat.commitGenManifested(
-      centroids.coalesce(1), s"$path/centroids", Seq("cell")))
-    // PQ sidecars (codebooks + cell-clustered codes) build from the
-    // JUST-COMMITTED cells, not the lazy assignment frame — re-using
-    // the materialized layout costs one read where re-evaluating
-    // finalAssign would re-run the whole two-level assignment DAG
-    val builtCells = TableFormat.readViaManifest(spark, cellsRoot, cg,
-      TableFormat.genSchema(cellsRoot, cg))
-    val fPq = Future(ProductQuantizer.buildPq(spark, builtCells, path))
-    // the int8 sidecar beside it — the two compressed representations
-    // (SQ8: 4x bytes cut, near-exact; PQ: 24-32x, lossier) share the
-    // cell clustering so every probe prunes them identically
-    ScalarQuantizer.buildSq8(spark, builtCells, path)
-    Await.result(fPq, Duration.Inf)
-    Await.result(fCent, Duration.Inf)
     // ONE atomic commit point for the whole quintuple: readers resolve
     // the catalog pointer and can never mix new cells with old
     // centroids/codebooks (the cross-store torn read the old
     // rename-swap rebuild had a window for)
-    IndexCatalog.publish(path)
+    IndexCatalog.commit(path) {
+      val cellsRoot = s"$path/cells"
+      // gen = 0 marks build-time rows; appendToIvfIndex writes gen = 1,
+      // which is what lets indexStats report the appended fraction the
+      // rebuild advice watches. Bloom on doc_id: the probe path's
+      // QUERY-VECTOR fetch is an equality lookup on a column this
+      // layout does NOT cluster by (files cluster on cell, so every
+      // file's doc_id range spans the query) — the per-file sketch
+      // prunes that lookup to the one file holding the id, and
+      // propagates through every appendScoped
+      val cg = TableFormat.commitGenManifested(
+        finalAssign.withColumn("gen", lit(0))
+          .repartitionByRange(k, col("cell"), col("doc_id")),
+        cellsRoot, Seq("cell", "doc_id"), bloomKeys = Seq("doc_id"))
+      // the centroids table is an independent substore — its commit
+      // overlaps the sidecar builds below (guide §2.6); only the cells
+      // commit above is a strict prerequisite (the sidecars read the
+      // just-committed cell layout)
+      import scala.concurrent.{Await, Future}
+      import graft.Concurrency.commitEc
+      import scala.concurrent.duration.Duration
+      val fCent = Future(TableFormat.commitGenManifested(
+        centroids.coalesce(1), s"$path/centroids", Seq("cell")))
+      // PQ sidecars (codebooks + cell-clustered codes) build from the
+      // JUST-COMMITTED cells, not the lazy assignment frame — re-using
+      // the materialized layout costs one read where re-evaluating
+      // finalAssign would re-run the whole two-level assignment DAG
+      val builtCells = TableFormat.readViaManifest(spark, cellsRoot, cg,
+        TableFormat.genSchema(cellsRoot, cg))
+      val fPq = Future(ProductQuantizer.buildPq(spark, builtCells, path))
+      // the int8 sidecar beside it — the two compressed representations
+      // (SQ8: 4x bytes cut, near-exact; PQ: 24-32x, lossier) share the
+      // cell clustering so every probe prunes them identically
+      ScalarQuantizer.buildSq8(spark, builtCells, path)
+      Await.result(fPq, Duration.Inf)
+      Await.result(fCent, Duration.Inf)
+    }
   }
 
   /** One Lloyd step: per-cell mean of the assigned vectors.
@@ -923,19 +924,20 @@ object EmbeddingStore {
     import scala.concurrent.{Await, Future}
     import graft.Concurrency.commitEc
     import scala.concurrent.duration.Duration
-    val cellsRoot = s"$path/cells"
-    val fCells = Future(TableFormat.appendScoped(spark, cellsRoot, assigned,
-      TableFormat.genSchema(cellsRoot, TableFormat.currentGen(cellsRoot))))
-    // keep the PQ code sidecar append-consistent with the cells: the
-    // appended vectors encode against the PERSISTED codebooks
-    val fPq = Future(ProductQuantizer.appendPq(spark, assigned, path))
-    val fSq = Future(ScalarQuantizer.appendSq8(assigned, path))
-    Await.result(fCells, Duration.Inf)
-    Await.result(fPq, Duration.Inf)
-    Await.result(fSq, Duration.Inf)
     // one atomic pointer swap publishes the consistent post-append
     // quintuple; the pre-append index generation stays readable
-    IndexCatalog.publish(path)
+    IndexCatalog.commit(path) {
+      val cellsRoot = s"$path/cells"
+      val fCells = Future(TableFormat.appendScoped(spark, cellsRoot, assigned,
+        TableFormat.genSchema(cellsRoot, TableFormat.currentGen(cellsRoot))))
+      // keep the PQ code sidecar append-consistent with the cells: the
+      // appended vectors encode against the PERSISTED codebooks
+      val fPq = Future(ProductQuantizer.appendPq(spark, assigned, path))
+      val fSq = Future(ScalarQuantizer.appendSq8(assigned, path))
+      Await.result(fCells, Duration.Inf)
+      Await.result(fPq, Duration.Inf)
+      Await.result(fSq, Duration.Inf)
+    }
     UpdateStats(nNew,
       if (head.isNullAt(1)) -1L else head.getLong(1),
       (System.nanoTime() - t0) / 1e9)

@@ -109,28 +109,28 @@ object IndexMaintenance {
     import scala.concurrent.{Await, Future}
     import graft.Concurrency.commitEc
     import scala.concurrent.duration.Duration
-    val futures = Seq("cells", "pq_codes", "sq8_codes").map { sub =>
-      Future {
-        val root = s"$path/$sub"
-        TableFormat.currentGenOption(root).map { g =>
-          val beforeFiles = TableFormat.manifestFiles(spark, root, g)
-          val after = verb(root, TableFormat.genSchema(root, g)).gen
-          val afterFiles = TableFormat.manifestFiles(spark, root, after)
-          // bytes moved = the rewritten (non-carried) files' sizes;
-          // the before-manifest names them, the filesystem prices them
-          val carried = afterFiles.toSet
-          val bytes = beforeFiles
-            .filterNot(carried)
-            .map(TableFormat.localFile(_).length())
-            .sum
-          CompactionReport(sub, beforeFiles.length.toLong,
-            afterFiles.length.toLong, bytes)
+    graft.sources.IndexCatalog.commit(path) {
+      val futures = Seq("cells", "pq_codes", "sq8_codes").map { sub =>
+        Future {
+          val root = s"$path/$sub"
+          TableFormat.currentGenOption(root).map { g =>
+            val beforeFiles = TableFormat.manifestFiles(spark, root, g)
+            val after = verb(root, TableFormat.genSchema(root, g)).gen
+            val afterFiles = TableFormat.manifestFiles(spark, root, after)
+            // bytes moved = the rewritten (non-carried) files' sizes;
+            // the before-manifest names them, the filesystem prices them
+            val carried = afterFiles.toSet
+            val bytes = beforeFiles
+              .filterNot(carried)
+              .map(TableFormat.localFile(_).length())
+              .sum
+            CompactionReport(sub, beforeFiles.length.toLong,
+              afterFiles.length.toLong, bytes)
+          }
         }
       }
+      futures.flatMap(Await.result(_, Duration.Inf))
     }
-    val reports = futures.flatMap(Await.result(_, Duration.Inf))
-    graft.sources.IndexCatalog.publish(path)
-    reports
   }
 
   /** `q_index_maintain` — the index-store MAINTENANCE episode as one

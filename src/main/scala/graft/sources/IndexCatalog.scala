@@ -20,11 +20,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * substore AT ITS PINNED GENERATION, so no reader can ever observe
   * new cells beside old centroids (the cross-store torn read the old
   * rename-swap rebuild had a window for); a crash between substore
-  * commits leaves the previous quintuple fully live and only
-  * unreferenced newer generations as debris. Index generations are TIME TRAVEL for the
-  * whole index: pin g and every probe sees the index exactly as it
-  * was (reference posture: engine.py:163 mutates its store in place
-  * and keeps no history).
+  * commits leaves the previous quintuple fully live, and the next
+  * writer ([[commit]]) expires the unpinned substore markers first,
+  * so it never builds on them. Index generations are TIME TRAVEL for
+  * the whole index: pin g and every probe sees the index exactly as
+  * it was (reference posture: engine.py:163 mutates its store in
+  * place and keeps no history).
   *
   * Single-writer by contract, like every maintenance verb here (the
   * daily loop owns its index); the marker install is still the CAS
@@ -51,21 +52,29 @@ object IndexCatalog {
       .collect { case Array(s, v) if s.nonEmpty => s -> v.toLong }
       .toMap
 
-  /** Publish the CURRENT generation of every existing substore as the
-    * next index generation and return it — the one atomic commit
-    * point of a multi-store mutation, the same [[Markers]] CAS as
-    * every table commit; a second writer racing the same id fails
-    * loudly. */
-  private[graft] def publish(path: String): Long = {
-    val g = Markers.index.current(path).fold(0L)(_ + 1)
-    val pinned = stores.flatMap { s =>
+  /** THE index write: expire every substore marker above its current
+    * pin (all of them when unpinned) — under the single-writer
+    * contract, a crashed writer's debris — then run `write`'s
+    * substore commits and publish the current generation of every
+    * existing substore as the next index generation: the one atomic
+    * commit point of a multi-store mutation, the same [[Markers]] CAS
+    * as every table commit, so a second writer racing the same id
+    * fails loudly. Returns `write`'s result. */
+  private[graft] def commit[A](path: String)(write: => A): A = {
+    val cur = Markers.index.current(path)
+    val pinned = cur.fold(Map.empty[String, Long])(pins(path, _))
+    stores.foreach(s =>
+      Markers.table.expire(s"$path/$s", g => pinned.get(s).forall(g > _)))
+    val out = write
+    val g = cur.fold(0L)(_ + 1)
+    val published = stores.flatMap { s =>
       TableFormat.currentGenOption(s"$path/$s").map(s -> _)
     }
     if (!Markers.index.publish(path, g,
-        pinned.map { case (s, v) => s"$s:$v" }.mkString("\n")))
+        published.map { case (s, v) => s"$s:$v" }.mkString("\n")))
       throw new IllegalStateException(
         s"index publish($g) raced a concurrent writer on $path")
-    g
+    out
   }
 
   /** One index generation resolved once: the substore generations it
@@ -189,7 +198,7 @@ object IndexCatalog {
           keep = (sCur - minPin + 1).toInt).files
       }
     }.sum
-    Markers.index.expire(path, cur - keep)
+    Markers.index.expire(path, _ <= cur - keep)
     reaped
   }
 }

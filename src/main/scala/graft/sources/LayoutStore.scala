@@ -139,9 +139,9 @@ object LayoutStore {
     * base the copy-then-mutate episode verbs (advance-day, index
     * maintenance, index history) would otherwise pay a full base
     * rewrite before doing any work (guide §6 — never rewrite carried
-    * data). Small metadata files (manifests, markers, watermarks) DO
-    * get rewritten in place by the advance, so they are copied — a
-    * linked inode would corrupt the pristine base. Falls back to copy
+    * data). Small metadata files (a stream's `_STREAM_BATCH` marker)
+    * CAN get rewritten in place, so they are copied — a linked inode
+    * would corrupt the pristine base. Falls back to copy
     * when the filesystem refuses the link (cross-device scratch). */
   def cloneRecursively(src: File, dst: File): Unit = {
     if (src.isDirectory) {
@@ -160,9 +160,7 @@ object LayoutStore {
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Recursive delete of a layout directory — the one shared
-    * implementation for every staged-swap site (dedup state advance,
-    * IVF rebuild). */
+  /** Recursive delete of a layout directory. */
   def deleteRecursively(f: File): Unit = {
     Option(f.listFiles()).getOrElse(Array.empty[File]).foreach(deleteRecursively)
     f.delete()

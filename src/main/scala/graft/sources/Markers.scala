@@ -49,9 +49,11 @@ private[graft] final class Markers(prefix: String) {
     finally Files.deleteIfExists(tmp)
   }
 
-  /** Delete every marker at or below `upTo` (retention). */
-  def expire(root: String, upTo: Long): Unit =
-    gens(root).filter(_ <= upTo)
+  /** Delete the markers `which` selects (retention's old ones, or a
+    * crashed writer's unpinned new ones), newest first, so the rest
+    * stay contiguous. */
+  def expire(root: String, which: Long => Boolean): Unit =
+    gens(root).filter(which).reverse
       .foreach(g => Files.deleteIfExists(path(root, g)))
 
   /** A marker temp file [[publish]] left behind on a crash. */

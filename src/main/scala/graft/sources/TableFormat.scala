@@ -260,9 +260,11 @@ object TableFormat {
     * the authoritative width per generation instead of re-inferring
     * it from file footers). */
   private[graft] def genSchema(root: String, gen: Long): StructType =
+    recordedSchema(resolveDir(root, gen))
+
+  private def recordedSchema(dir: String): StructType =
     org.apache.spark.sql.types.DataType.fromJson(
-      Files.readString(schemaPath(resolveDir(root, gen))))
-      .asInstanceOf[StructType]
+      Files.readString(schemaPath(dir))).asInstanceOf[StructType]
 
   /** Per-file statistics of `keys` over the parquet files under
     * `dir`: (min, max, null-presence) per key column in the column's
@@ -319,8 +321,9 @@ object TableFormat {
     * them (see [[purgeScoped]]). Single-writer verb, like
     * [[commitGen]]; contended writers use [[tryMergeScoped]]. */
   private[graft] def commitGenManifested(df: DataFrame, root: String,
-      keys: Seq[String], bloomKeys: Seq[String] = Nil): Long =
-    commit(root, df.schema) { dir =>
+      keys: Seq[String], bloomKeys: Seq[String] = Nil,
+      txn: Option[(String, Long)] = None): Long =
+    commit(root, df.schema, txn) { dir =>
       df.write.parquet(dir)
       writeManifest(
         fileStats(df.sparkSession, dir, df.schema, keys, bloomKeys), dir)
@@ -329,20 +332,22 @@ object TableFormat {
   /** Write a generation's manifest into its dir — one file: a
     * manifest is scan-planning-sized, and a single part file keeps
     * schema inference possible even for an EMPTY table (zero part
-    * files would leave nothing to infer from). */
-  private def writeManifest(stats: DataFrame, dir: String): Unit =
+    * files would leave nothing to infer from). Its schema is recorded
+    * beside it, so a cold read runs no footer-inference job. */
+  private def writeManifest(stats: DataFrame, dir: String): Unit = {
     stats.coalesce(1).write.parquet(s"$dir/_manifest")
+    Files.writeString(schemaPath(s"$dir/_manifest"), stats.schema.json)
+  }
 
   // ---------------------------------------------------------------
   // Driver-side manifest metadata cache
   //
   // A published generation's manifest never changes, yet reading it
-  // costs two Spark jobs (a footer schema-inference job plus a
-  // collect of the file list) — uncached, most of an interactive
-  // search request's jobs. The driver keeps, per manifest identity,
-  // the inferred schema and the O(files) RANGE-STAT rows (`file`,
-  // `n_rows`, `min_*`, `max_*`, `null_*`): the same scalars every
-  // file-list collect already brought to the driver. Bloom sketch
+  // costs a Spark job (the file-list collect) — uncached, most of an
+  // interactive search request's jobs. The driver keeps, per
+  // manifest identity, the schema and the O(files) RANGE-STAT rows
+  // (`file`, `n_rows`, `min_*`, `max_*`, `null_*`): the same scalars
+  // every file-list collect already brought to the driver. Bloom sketch
   // bytes stay out of these entries; a SMALL manifest's sketch rows
   // live in the separate, byte-capped [[sketchCache]], so a point
   // lookup on it folds on the driver, while a large manifest's
@@ -457,12 +462,14 @@ object TableFormat {
     new IdentityCache[Option[Seq[org.apache.spark.sql.Row]]](SketchCacheEntries)
 
   /** The cached metadata of generation `gen`'s manifest; a miss pays
-    * two jobs (footer schema inference + the range-stat collect). */
+    * one job (the range-stat collect), plus footer schema inference
+    * for a manifest written before its schema was recorded. */
   private[graft] def manifestMeta(spark: SparkSession, root: String,
       gen: Long): ManifestMeta = {
     val dir = manifestPath(root, gen)
     manifestCache.getOrLoad(dir) {
-      val m = spark.read.parquet(dir)
+      val m = (if (Files.exists(schemaPath(dir)))
+        spark.read.schema(recordedSchema(dir)) else spark.read).parquet(dir)
       val stats = m.drop(
         m.columns.filter(_.startsWith("bloom_")).toIndexedSeq: _*)
       ManifestMeta(m.schema, stats.schema, stats.collect().toSeq)
@@ -932,7 +939,7 @@ object TableFormat {
       .foreach(LayoutStore.deleteRecursively)
     // expired markers go with their generations (resolution for a
     // reaped generation must fail cleanly, not dangle)
-    Markers.table.expire(root, cur - keep)
+    Markers.table.expire(root, _ <= cur - keep)
     VacuumReport(expired.keys.toSeq.sorted, reaped)
   }
 

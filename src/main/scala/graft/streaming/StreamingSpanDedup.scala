@@ -29,9 +29,9 @@ import graft.operators.Dedup
   * in `results/batch=<b>` via an OVERWRITE of that one partition
   * directory (a replayed batch rewrites its own output
   * deterministically, never duplicates it), the gram fold reuses
-  * [[Dedup.advanceSpanState]] (idempotent via its watermark check,
-  * `_ADVANCING`-bracketed), and the committed batchId marker beside
-  * the state guards the whole pair. */
+  * [[Dedup.advanceSpanState]] (idempotent via its watermark check;
+  * one table commit that carries the watermark), and the committed
+  * batchId marker beside the state guards the whole pair. */
 object StreamingSpanDedup {
 
   private val docSchema = StructType(Seq(
@@ -84,9 +84,9 @@ object StreamingSpanDedup {
           // Under the append-only contract, watermark >= maxId ⟺
           // this batch's fold already committed — its results are
           // already on disk (written first), so a replay skips
-          // straight to the marker. A crash MID-advance leaves
-          // _ADVANCING and stateWatermark fails loud (the E14
-          // rebuild-me discipline), never wrong results.
+          // straight to the marker. A crash MID-advance leaves the
+          // previous state generation live, so the replay recomputes
+          // the results and the fold.
           // ONE watermark read per batch: guard and contract check
           // see the same value by construction (and the state-file
           // stat doesn't run three times per micro-batch)
@@ -97,7 +97,7 @@ object StreamingSpanDedup {
             // filtered out of both the results and the fold — never
             // deduplicated, never reported — while the marker still
             // advanced. An out-of-order crawl needs a batch rebuild,
-            // not a quiet hole (the _ADVANCING discipline's sibling).
+            // not a quiet hole.
             require(minId > wm,
               s"batch $batchId violates the nondecreasing-id contract: " +
                 s"min doc_id $minId <= state watermark $wm — these docs " +

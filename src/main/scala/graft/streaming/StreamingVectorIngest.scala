@@ -35,10 +35,10 @@ import graft.operators.EmbeddingStore
   * A replayed batch whose append already committed is skipped instead
   * of double-appended (StreamingRecoverySpec proves a re-run over the
   * same checkpoint appends nothing). The crash window between the
-  * parquet append and the marker write remains, exactly like every
-  * staged-swap site here: a plain filesystem has no multi-file
-  * commit, and the transactional-table substitution noted at
-  * `advanceDedupState` closes it. */
+  * index append and this `_STREAM_BATCH` write remains: the marker is
+  * a plain file beside the index, not a txn record committed with the
+  * append (the shape the dedup and span states use), so a crash there
+  * replays the batch into a second append. */
 object StreamingVectorIngest {
 
   private val vectorSchema = StructType(Seq(

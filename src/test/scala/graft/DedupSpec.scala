@@ -141,6 +141,65 @@ class DedupSpec extends SparkTestBase {
       "a day-2 copy of a day-1-base doc must pair via the original state")
   }
 
+  test("dedupIncrementalAgainst caps a bucket on state + delta occupancy: " +
+    "a bucket under the cap in the state and over it with the delta " +
+    "mints no pairs") {
+    import spark.implicits._
+    val base = t.documents.select(col("doc_id"), col("text"))
+    val maxId = base.agg(max(col("doc_id"))).first().getLong(0)
+    val copies = (1L to Dedup.maxBucketSize + 50L)
+      .map(i => (maxId + i, "the same short boilerplate line")).toDF("doc_id", "text")
+    val docs = base.unionByName(copies).localCheckpoint()
+    // the state holds maxBucketSize - 1 copies, the delta the other 51
+    val w = maxId + Dedup.maxBucketSize - 1
+    val path = s"${java.nio.file.Files.createTempDirectory("graft-dedup-cap")}/state"
+    Dedup.buildDedupState(docs, w, path)
+    val full = Dedup.dedupMinhashDocs(docs).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val got = Dedup.dedupIncrementalAgainst(docs, path).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(got === full.filter { case (a, b, _) => a > w || b > w })
+    assert(!got.exists { case (_, b, _) => b > maxId },
+      "the overfull bucket's copies must mint no pairs")
+  }
+
+  test("an advance that crashed before its marker CAS leaves the previous " +
+    "state live; the retry equals a fresh build at the new watermark") {
+    import graft.sources.TableFormat
+    val base = t.documents.select(col("doc_id"), col("text"))
+    val maxId = base.agg(max(col("doc_id"))).first().getLong(0)
+    val w0 = maxId - 50
+    val dir = java.nio.file.Files.createTempDirectory("graft-state-retry")
+    def rows(path: String) = Dedup.readState(spark, path).collect().map(_.toSeq).toSet
+    Seq[(String, (org.apache.spark.sql.DataFrame, Long, String) => Unit,
+        (org.apache.spark.sql.DataFrame, String) => Long)](
+      ("dedup", Dedup.buildDedupState, Dedup.advanceDedupState),
+      ("span", Dedup.buildSpanState, Dedup.advanceSpanState)
+    ).foreach { case (name, build, advance) =>
+      val path = s"$dir/$name"
+      build(base, w0, path)
+      // the crash: the advance staged its generation (data and the
+      // watermark record) and died before claiming the marker
+      val g = TableFormat.currentGen(path)
+      val staged = intercept[IllegalStateException](
+        TableFormat.tryCommit(path, Some(g), TableFormat.genSchema(path, g)) { d =>
+          Dedup.readState(spark, path).write.parquet(d)
+          java.nio.file.Files.writeString(
+            java.nio.file.Paths.get(d, "_txn"), s"watermark:$maxId")
+          throw new IllegalStateException(d)
+        }).getMessage
+      assert(new java.io.File(staged, "_txn").isFile)
+      assert(TableFormat.currentGen(path) === g)
+      assert(Dedup.stateWatermark(path) === w0, s"$name: the previous state stays live")
+      assert(advance(base, path) === maxId)
+      val fresh = s"$dir/${name}_fresh"
+      build(base, maxId, fresh)
+      assert(Dedup.stateWatermark(path) === Dedup.stateWatermark(fresh))
+      assert(Dedup.readState(spark, path).count() === Dedup.readState(spark, fresh).count())
+      assert(rows(path) === rows(fresh), s"$name: the retried advance diverged")
+    }
+  }
+
   test("dedupExact: one group per distinct normalized text, keep smallest id") {
     val rows = Dedup.dedupExact(t).collect()
     assert(rows.map(_.getString(2)).distinct.length === rows.length)
@@ -415,12 +474,12 @@ class DedupSpec extends SparkTestBase {
     val path = s"$dir/state"
     Dedup.buildSpanState(base, w1, path)
     assert(Dedup.stateWatermark(path) === w1)
-    val gramsBefore = spark.read.parquet(s"$path/grams").count()
+    val gramsBefore = Dedup.readState(spark, path).count()
 
     // advance folds the day-1 delta; watermark moves; idempotent
     assert(Dedup.advanceSpanState(base, path) === maxId)
     assert(Dedup.advanceSpanState(base, path) === maxId, "idempotent no-op")
-    val grams1 = spark.read.parquet(s"$path/grams")
+    val grams1 = Dedup.readState(spark, path)
     // the folded state is EXACTLY the full corpus' distinct grams —
     // append added the new ones, duplicated none
     assert(grams1.count() === grams1.distinct().count(), "no duplicate grams")

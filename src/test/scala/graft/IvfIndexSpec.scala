@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
-import graft.operators.{EmbeddingStore, ProductQuantizer, ScalarQuantizer}
+import graft.operators.{EmbeddingStore, IndexMaintenance, ProductQuantizer, ScalarQuantizer}
 import graft.sources.{IndexCatalog, TableFormat, Tables}
 
 class IvfIndexSpec extends SparkTestBase {
@@ -355,6 +355,51 @@ class IvfIndexSpec extends SparkTestBase {
     assert(pinned.agg(max(col("doc_id"))).first().getLong(0) < 400L)
     assert(pinned.filter(col("gen") =!= 0).count() === 0L,
       "the pre-advance generation must hold only build-time rows")
+  }
+
+  test("a retry after a crash between substore commits derives from " +
+    "the catalog pin: an append or a purge that committed only its " +
+    "cells leg, retried, reads like a clean run") {
+    import spark.implicits._
+    val t = Tables(spark, sfDir)
+    val vectors = EmbeddingStore.embed(t.documents).drop("shard").localCheckpoint()
+    val delta = vectors.filter(col("doc_id") >= 250)
+    val path = Files.createTempDirectory("graft-ivf-torn").toString
+    EmbeddingStore.buildIvfIndex(spark, vectors.filter(col("doc_id") < 250), path)
+    val cellsRoot = s"$path/cells"
+    def pinnedCells = IndexCatalog.pin(path).genOf("cells")
+    def assertStores(n: Int): Unit =
+      Seq("cells", "pq_codes", "sq8_codes").foreach { s =>
+        val ids = IndexCatalog.read(spark, path, s).select(col("doc_id"))
+          .collect().map(_.getLong(0)).toSeq
+        assert(ids.length === n, s"$s rows")
+        assert(ids.distinct.length === ids.length, s"$s holds a doc id twice")
+      }
+
+    // an append that committed its cells leg, then died (appendPq
+    // threw) before the catalog publish
+    val preAppend = pinnedCells
+    TableFormat.appendScoped(spark, cellsRoot,
+      EmbeddingStore.assignCells(delta, IndexCatalog.read(spark, path, "centroids"))
+        .withColumn("gen", lit(1)),
+      TableFormat.genSchema(cellsRoot, preAppend))
+    assert(TableFormat.currentGen(cellsRoot) === preAppend + 1)
+    EmbeddingStore.appendToIvfIndex(spark, path, delta)
+    assertStores(500)
+    assert(pinnedCells === preAppend + 1,
+      "the retry must re-derive the crashed generation from the pin")
+
+    // the same crash on a purge
+    val victims = Seq(3L, 260L, 499L)
+    val prePurge = pinnedCells
+    TableFormat.purgeScoped(spark, cellsRoot, victims.toDF("doc_id"),
+      TableFormat.genSchema(cellsRoot, prePurge), "doc_id")
+    IndexMaintenance.purgeIndex(spark, path, victims)
+    assertStores(497)
+    assert(IndexCatalog.read(spark, path, "cells")
+      .filter(col("doc_id").isin(victims: _*)).count() === 0L)
+    assert(pinnedCells === prePurge + 1,
+      "the retry must re-derive the crashed generation from the pin")
   }
 
   test("rebuildIfDrifted: below threshold no-op; past it the quantizer recovers") {

@@ -387,40 +387,24 @@ class StreamingRecoverySpec extends SparkTestBase {
     def start() = StreamingSpanDedup.run(spark, in.getAbsolutePath,
       state.toString, ckpt.getAbsolutePath, availableNow = true,
       maxFilesPerTrigger = Some(1))
-    // run 1: crash after >= 2 committed batches. Two CORRECT
-    // outcomes exist for run 2 — silent corruption is the only
-    // failure: the kill usually lands between batches and the
-    // resume drains cleanly; a kill INSIDE advanceSpanState leaves
-    // the _ADVANCING bracket, and the resume must then FAIL LOUD
-    // (the documented plain-filesystem crash window — a
-    // transactional table format closes it), never serve a
-    // half-advanced state.
+    // run 1: crash after >= 2 committed batches, wherever the kill
+    // lands: a kill inside advanceSpanState leaves the previous state
+    // generation live (its one commit either claimed the marker or
+    // did not), so the resume always drains cleanly
     killAfter(start(), minBatches = 2)
-    val resumed =
-      try { start().awaitTermination(); true }
-      catch {
-        case e: org.apache.spark.sql.streaming.StreamingQueryException =>
-          def chain(t: Throwable): Seq[String] =
-            if (t == null) Nil else Option(t.getMessage).toSeq ++ chain(t.getCause)
-          assert(chain(e).exists(_.contains("interrupted advance")),
-            s"resume failed for a reason other than the documented " +
-              s"_ADVANCING window: ${chain(e).mkString(" | ")}")
-          false
-      }
-    if (resumed) {
-      val streamed = StreamingSpanDedup.readResults(spark, state.toString)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getString(3)))
-      // exactly-once: one result row per doc across ALL batch dirs —
-      // a replayed batch must have overwritten its own output, never
-      // appended beside it
-      assert(streamed.map(_._1).distinct.length === streamed.length,
-        "a replayed batch duplicated results")
-      assert(streamed.toSet === Dedup.dedupSpans(t).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
-        .toSet, "kill+resume diverged from one-shot batch span dedup")
-      assert(Dedup.stateWatermark(state.toString) === maxId)
-    }
+    start().awaitTermination()
+    val streamed = StreamingSpanDedup.readResults(spark, state.toString)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getString(3)))
+    // exactly-once: one result row per doc across ALL batch dirs —
+    // a replayed batch must have overwritten its own output, never
+    // appended beside it
+    assert(streamed.map(_._1).distinct.length === streamed.length,
+      "a replayed batch duplicated results")
+    assert(streamed.toSet === Dedup.dedupSpans(t).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
+      .toSet, "kill+resume diverged from one-shot batch span dedup")
+    assert(Dedup.stateWatermark(state.toString) === maxId)
   }
 
   test("StreamingSpanDedup: id-ordered micro-batches reproduce full batch " +
