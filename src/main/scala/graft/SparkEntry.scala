@@ -104,7 +104,7 @@ object SparkEntry {
     // both scores so the row doubles as the SQ8 fidelity evaluator
     "q_search_sq8"        -> q(ScalarQuantizer.searchSq8),
     // D24: the persisted-index compressed probe in the SQ8 domain —
-    // IVF cell pruning + int8 code ranking off the sq8_codes sidecar
+    // IVF cell pruning + int8 code ranking off the cells' sq8 codes
     "q_search_ivfsq8"     -> q(ScalarQuantizer.searchIvfSq8Query),
     // D14: two-stage retrieval — IVF candidates (k1=50) reranked by
     // lexical Jaccard against the query text, blended in integer

@@ -631,6 +631,9 @@ object EmbeddingStore {
     // (sampling + shuffle) — pin the assignment once, range-cluster
     // the pinned rows
     val finalAssign = assignCells(vectors, centroids).localCheckpoint()
+    // the PQ codebooks train on the pinned assignment, which holds
+    // exactly the rows the cells commit below writes
+    val cb = ProductQuantizer.codebookRows(finalAssign, vecDim)
     // Every substore commits through the TableFormat core (manifested
     // generations + CAS markers): cells cluster on (cell, doc_id)
     // into ~k τ-row files, so the manifest's per-file ranges carry
@@ -638,12 +641,21 @@ object EmbeddingStore {
     // skips files from STATISTICS, a rebuild is the NEXT generation
     // (no staging dirs, no rename window), and the pre-rebuild index
     // keeps time-traveling through IndexCatalog pins.
-    // ONE atomic commit point for the whole quintuple: readers resolve
+    // ONE atomic commit point for the three substores: readers resolve
     // the catalog pointer and can never mix new cells with old
     // centroids/codebooks (the cross-store torn read the old
     // rename-swap rebuild had a window for)
     IndexCatalog.commit(path) {
-      val cellsRoot = s"$path/cells"
+      // the two metadata substores are independent of the cells —
+      // their commits overlap the cells write (guide §2.6)
+      import scala.concurrent.{Await, Future}
+      import graft.Concurrency.commitEc
+      import scala.concurrent.duration.Duration
+      val fCent = Future(TableFormat.commitGenManifested(
+        centroids.coalesce(1), s"$path/centroids", Seq("cell")))
+      val fCb = Future(TableFormat.commitGenManifested(
+        spark.createDataFrame(cb).toDF("sub", "cid", "cvec").coalesce(1),
+        s"$path/pq_codebooks", Seq("sub")))
       // gen = 0 marks build-time rows; appendToIvfIndex writes gen = 1,
       // which is what lets indexStats report the appended fraction the
       // rebuild advice watches. Bloom on doc_id: the probe path's
@@ -652,34 +664,30 @@ object EmbeddingStore {
       // file's doc_id range spans the query) — the per-file sketch
       // prunes that lookup to the one file holding the id, and
       // propagates through every appendScoped
-      val cg = TableFormat.commitGenManifested(
-        finalAssign.withColumn("gen", lit(0))
-          .repartitionByRange(k, col("cell"), col("doc_id")),
-        cellsRoot, Seq("cell", "doc_id"), bloomKeys = Seq("doc_id"))
-      // the centroids table is an independent substore — its commit
-      // overlaps the sidecar builds below (guide §2.6); only the cells
-      // commit above is a strict prerequisite (the sidecars read the
-      // just-committed cell layout)
-      import scala.concurrent.{Await, Future}
-      import graft.Concurrency.commitEc
-      import scala.concurrent.duration.Duration
-      val fCent = Future(TableFormat.commitGenManifested(
-        centroids.coalesce(1), s"$path/centroids", Seq("cell")))
-      // PQ sidecars (codebooks + cell-clustered codes) build from the
-      // JUST-COMMITTED cells, not the lazy assignment frame — re-using
-      // the materialized layout costs one read where re-evaluating
-      // finalAssign would re-run the whole two-level assignment DAG
-      val builtCells = TableFormat.readViaManifest(spark, cellsRoot, cg,
-        TableFormat.genSchema(cellsRoot, cg))
-      val fPq = Future(ProductQuantizer.buildPq(spark, builtCells, path))
-      // the int8 sidecar beside it — the two compressed representations
-      // (SQ8: 4x bytes cut, near-exact; PQ: 24-32x, lossier) share the
-      // cell clustering so every probe prunes them identically
-      ScalarQuantizer.buildSq8(spark, builtCells, path)
-      Await.result(fPq, Duration.Inf)
+      TableFormat.commitGenManifested(
+        withCodes(finalAssign.withColumn("gen", lit(0))
+          .repartitionByRange(k, col("cell"), col("doc_id")), cb),
+        s"$path/cells", Seq("cell", "doc_id"), bloomKeys = Seq("doc_id"))
+      Await.result(fCb, Duration.Inf)
       Await.result(fCent, Duration.Inf)
     }
   }
+
+  /** `rows` (doc_id, embedding, cell, gen) with the cells' code
+    * columns appended: `pq_codes` against the codebooks `cb`, and the
+    * SQ8 scale `sq8_s` with its int8 codes `sq8_codes` (the two
+    * compressed representations — SQ8: 4x bytes cut, near-exact; PQ:
+    * 24-32x, lossier). One projection over the quantized vector;
+    * callers apply it after their range shuffle, so each row encodes
+    * once, in the write stage. */
+  private[graft] def withCodes(rows: DataFrame,
+      cb: Seq[(Int, Int, Seq[Long])]): DataFrame =
+    rows.withColumn("__qv", ProductQuantizer.quantize(col("embedding")))
+      .withColumn("sq8_s", array_max(transform(col("__qv"), v => abs(v))))
+      .select(rows.columns.toIndexedSeq.map(col) ++ Seq(
+        ProductQuantizer.codesCol(cb, col("__qv")).as("pq_codes"),
+        col("sq8_s"),
+        ScalarQuantizer.sq8Codes(col("__qv"), col("sq8_s")).as("sq8_codes")): _*)
 
   /** One Lloyd step: per-cell mean of the assigned vectors.
     * Components round to 6 dp so the refined centroids are
@@ -887,7 +895,14 @@ object EmbeddingStore {
     * ratio the caller monitors, like the reference's processed
     * counts). */
   def appendToIvfIndex(spark: SparkSession, path: String,
-      vectors: DataFrame): UpdateStats = {
+      vectors: DataFrame): UpdateStats =
+    appendToIvfIndex(spark, path, vectors, txn = None)
+
+  /** `txn` is an idempotent writer's (appId, version) record, committed
+    * inside the cells generation the append publishes (see
+    * [[graft.streaming.StreamingVectorIngest]]). */
+  private[graft] def appendToIvfIndex(spark: SparkSession, path: String,
+      vectors: DataFrame, txn: Option[(String, Long)]): UpdateStats = {
     val t0 = System.nanoTime()
     // materialize ONCE (eager): the stats below must describe the
     // same snapshot the write appended — same consistency contract
@@ -898,45 +913,30 @@ object EmbeddingStore {
     val head = snap
       .agg(count(lit(1)).as("c"), max(col("doc_id")).as("m")).first()
     val nNew = head.getLong(0)
-    val centroids = IndexCatalog.read(spark, path, "centroids")
+    // the appended vectors assign against the PERSISTED centroids and
+    // encode against the PERSISTED codebooks of one pin (standard
+    // IVF-PQ posture: both are fixed after build, and their aging is
+    // what rebuild-on-drift bounds)
+    val pin = IndexCatalog.pin(path)
+    val cb = ProductQuantizer.readCodebooks(spark, pin)
     // the delta lands as ~⌈|delta|/τ⌉ range-clustered files via an
     // INSERT-ONLY scoped commit: every existing file carries into the
     // new generation by reference — O(delta) total, zero rewrite
-    // (engine.py:57's incremental update IS this write path). Eager
-    // checkpoint: the assignment feeds THREE appends (cells + both
-    // code sidecars) — without it each write re-runs the whole
-    // two-level assignment over the delta
+    // (engine.py:57's incremental update IS this write path). Pin the
+    // assignment BEFORE the range re-cluster, whose sampling would
+    // otherwise evaluate the assignment DAG a second time; the
+    // clustered rows have one consumer, the cells append
     val nFiles = math.max(1L, (nNew + targetCellRows - 1) / targetCellRows)
-    // pin the assignment BEFORE the range re-cluster (whose sampling
-    // would otherwise evaluate the assignment DAG a second time), and
-    // pin the clustered rows for the three appends that consume them
-    val assigned = assignCells(snap, centroids)
+    val assigned = withCodes(assignCells(snap, pin.read(spark, "centroids"))
       .withColumn("gen", lit(1))
       .localCheckpoint()
-      .repartitionByRange(nFiles.toInt, col("cell"), col("doc_id"))
-      .localCheckpoint()
-    // the three substore appends (cells + both code sidecars) are
-    // INDEPENDENT commits to disjoint roots off the same pinned
-    // assignment — submit them as concurrent jobs (guide §2.6: the
-    // scheduler interleaves their small stages across the executors),
-    // so this section's wall is max(append) instead of the sum; the
-    // catalog publish below is the one sequential point
-    import scala.concurrent.{Await, Future}
-    import graft.Concurrency.commitEc
-    import scala.concurrent.duration.Duration
-    // one atomic pointer swap publishes the consistent post-append
-    // quintuple; the pre-append index generation stays readable
+      .repartitionByRange(nFiles.toInt, col("cell"), col("doc_id")), cb)
+    // one cells commit, then one atomic pointer swap; the pre-append
+    // index generation stays readable
     IndexCatalog.commit(path) {
       val cellsRoot = s"$path/cells"
-      val fCells = Future(TableFormat.appendScoped(spark, cellsRoot, assigned,
-        TableFormat.genSchema(cellsRoot, TableFormat.currentGen(cellsRoot))))
-      // keep the PQ code sidecar append-consistent with the cells: the
-      // appended vectors encode against the PERSISTED codebooks
-      val fPq = Future(ProductQuantizer.appendPq(spark, assigned, path))
-      val fSq = Future(ScalarQuantizer.appendSq8(assigned, path))
-      Await.result(fCells, Duration.Inf)
-      Await.result(fPq, Duration.Inf)
-      Await.result(fSq, Duration.Inf)
+      TableFormat.appendScoped(spark, cellsRoot, assigned,
+        TableFormat.genSchema(cellsRoot, pin.genOf("cells")), txn)
     }
     UpdateStats(nNew,
       if (head.isNullAt(1)) -1L else head.getLong(1),
@@ -946,7 +946,7 @@ object EmbeddingStore {
   /** Assignment-rule version tag baked into the on-disk index path: a
     * rule change must never silently probe an index built by an older
     * rule. */
-  private val indexRuleVersion = "r18-lloyd1-6dp-gen-pq16x8l1-sq8-vtable"
+  private val indexRuleVersion = "r18-lloyd1-6dp-gen-pq16x8l1-sq8-vtable-cellcodes"
 
   /** Build-once location of the persisted IVF index for a data dir.
     * Like the bucketed table layout, the index is STORAGE — paid once
@@ -1341,7 +1341,7 @@ object EmbeddingStore {
     * ([[graft.sources.IndexCatalog]]). The old staging-dir +
     * five-rename swap machinery is GONE: a crash mid-rebuild leaves
     * the previous index generation fully live (readers resolve the
-    * pointer, which only ever names complete quintuples) plus
+    * pointer, which only ever names complete substore triples) plus
     * unreferenced newer substore generations as debris, and the
     * pre-rebuild index still time-travels. Returns whether a rebuild
     * ran. Nothing corpus-shaped touches the driver: the decision
@@ -1398,11 +1398,11 @@ object EmbeddingStore {
     if (!tripped) false
     else {
       // re-fit FROM THE STORED CELLS: the build commits the next
-      // generation of every substore (coarse centroids AND both code
-      // sidecars — a re-fit must never leave new cells probing old
-      // codes) and publishes ONE new index generation; generations
-      // are immutable, so the re-fit reads the old cells while the
-      // new ones commit beside them
+      // generation of every substore (cells with re-encoded codes,
+      // coarse centroids AND codebooks — a re-fit must never leave
+      // new cells probing old codebooks) and publishes ONE new index
+      // generation; generations are immutable, so the re-fit reads
+      // the old cells while the new ones commit beside them
       buildIvfIndex(spark,
         IndexCatalog.read(spark, path, "cells")
           .select(col("doc_id"), col("embedding")),

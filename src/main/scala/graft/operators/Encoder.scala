@@ -17,7 +17,7 @@ import graft.functions.TextFunctions._
   * downstream consumes only this contract through
   * [[EmbeddingStore.embedWith]], which adds the ONE shared
   * L2-normalize / float-cast / shard rule: the store layout, IVF
-  * build/append/probe, PQ/SQ8 sidecars, recall evaluators and the
+  * build/append/probe, PQ/SQ8 codes, recall evaluators and the
   * refresh orchestration never see the encoder, only vectors
   * (EncoderSpec proves the whole store→index→search→recall chain
   * under a second, structurally different encoder).

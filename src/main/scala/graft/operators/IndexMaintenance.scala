@@ -33,8 +33,8 @@ object IndexMaintenance {
     * compressed into one row — enough for multi-file cells). */
   private[graft] val maintainBatches = 4
 
-  /** Compact every cell-clustered store of a persisted IVF index
-    * (`cells` + the `pq_codes`/`sq8_codes` sidecars) by DELEGATING to
+  /** Compact the cells of a persisted IVF index (vectors and their
+    * PQ/SQ8 codes, one table) by DELEGATING to
     * the table-format core's OPTIMIZE ([[graft.sources.TableFormat
     * .optimize]], H19's verb): files under τ = [[EmbeddingStore
     * .targetCellRows]] rows fold into τ-row files re-clustered on the
@@ -49,8 +49,8 @@ object IndexMaintenance {
     *
     * Scale shape: the fold decision reads the manifest's own n_rows
     * (no data pass), the rewrite reads O(small files), and the new
-    * catalog pointer publishes the consistent post-compaction
-    * quintuple atomically. */
+    * catalog pointer publishes the post-compaction index generation
+    * atomically. */
   def compactIndex(spark: SparkSession, path: String): Seq[CompactionReport] =
     maintainStores(spark, path) { (root, schema) =>
       TableFormat.optimize(spark, root, schema,
@@ -64,12 +64,12 @@ object IndexMaintenance {
     * derived from the listed documents, and the vector index stores
     * their embeddings and compressed codes verbatim). A purge IS a
     * filtered compaction: the same per-cell rewrite + swap machinery
-    * with a doc_id filter, so the listed vectors leave `cells` and
-    * BOTH sidecars atomically-per-store, small files get paid down in
+    * with a doc_id filter, so the listed vectors and their codes leave
+    * `cells` in one commit, small files get paid down in
     * the same pass, and the crash-heal discipline is inherited.
     * Probes simply stop seeing the ids (assignment of the survivors
     * is untouched — cells only shrink). IndexMaintenanceSpec proves
-    * absence from all three stores, probe exclusion, and survivor
+    * absence from the cells, probe exclusion, and survivor
     * integrity. */
   def purgeIndex(spark: SparkSession, path: String,
       docIds: Seq[Long]): Seq[CompactionReport] = {
@@ -77,9 +77,9 @@ object IndexMaintenance {
     // decision is a summarized-scope broadcast against each store's
     // manifest, only files whose doc_id range can hold a listed id
     // rewrite (broadcast anti-join inside — never isin), the rest
-    // carry by reference, and the listed vectors leave `cells` and
-    // BOTH code sidecars before one catalog publish makes the
-    // post-purge quintuple visible atomically
+    // carry by reference, and the listed vectors leave `cells` with
+    // their codes before one catalog publish makes the post-purge
+    // index generation visible
     val td = spark.createDataFrame(
       docIds.map(org.apache.spark.sql.Row(_)).asJava,
       org.apache.spark.sql.types.StructType(Seq(
@@ -91,47 +91,28 @@ object IndexMaintenance {
   }
 
   /** The shared maintenance loop: run `verb` (an OPTIMIZE or a scoped
-    * purge — any table-format commit) over each data-bearing
-    * substore's versioned root, then PUBLISH one new index generation
-    * pinning the consistent post-maintenance quintuple. File counts
-    * and moved bytes come from the manifests — scan-planning-sized
-    * driver reads, never a data pass. */
+    * purge — any table-format commit) over the `cells` substore, the
+    * index's one data table (its rows carry the PQ and SQ8 codes), then
+    * PUBLISH one new index generation pinning it. File counts and
+    * moved bytes come from the manifests (the cached ones — no job
+    * after a generation's first read), never a data pass. */
   private def maintainStores(spark: SparkSession, path: String)(
       verb: (String, org.apache.spark.sql.types.StructType)
-        => graft.sources.TableFormat.SkipReport): Seq[CompactionReport] = {
-    // the three substores are INDEPENDENT manifested tables under
-    // disjoint roots — maintain them as concurrent job chains (guide
-    // §2.6: this section's wall is max(substore) instead of the sum);
-    // the catalog publish below is the one sequential point. Each
-    // manifest's file list (the cached one — no job after a
-    // generation's first read) gives the count, the carried set and
-    // the byte accounting.
-    import scala.concurrent.{Await, Future}
-    import graft.Concurrency.commitEc
-    import scala.concurrent.duration.Duration
-    graft.sources.IndexCatalog.commit(path) {
-      val futures = Seq("cells", "pq_codes", "sq8_codes").map { sub =>
-        Future {
-          val root = s"$path/$sub"
-          TableFormat.currentGenOption(root).map { g =>
-            val beforeFiles = TableFormat.manifestFiles(spark, root, g)
-            val after = verb(root, TableFormat.genSchema(root, g)).gen
-            val afterFiles = TableFormat.manifestFiles(spark, root, after)
-            // bytes moved = the rewritten (non-carried) files' sizes;
-            // the before-manifest names them, the filesystem prices them
-            val carried = afterFiles.toSet
-            val bytes = beforeFiles
-              .filterNot(carried)
-              .map(TableFormat.localFile(_).length())
-              .sum
-            CompactionReport(sub, beforeFiles.length.toLong,
-              afterFiles.length.toLong, bytes)
-          }
-        }
-      }
-      futures.flatMap(Await.result(_, Duration.Inf))
+        => graft.sources.TableFormat.SkipReport): Seq[CompactionReport] =
+    IndexCatalog.commit(path) {
+      val root = s"$path/cells"
+      val g = TableFormat.currentGen(root)
+      val beforeFiles = TableFormat.manifestFiles(spark, root, g)
+      val after = verb(root, TableFormat.genSchema(root, g)).gen
+      // bytes moved = the rewritten (non-carried) files' sizes; the
+      // before-manifest names them, the filesystem prices them
+      val afterFiles = TableFormat.manifestFiles(spark, root, after)
+      val carried = afterFiles.toSet
+      val bytes = beforeFiles.filterNot(carried)
+        .map(TableFormat.localFile(_).length()).sum
+      Seq(CompactionReport("cells", beforeFiles.length.toLong,
+        afterFiles.length.toLong, bytes))
     }
-  }
 
   /** `q_index_maintain` — the index-store MAINTENANCE episode as one
     * driver-checked row: start from D13's steady-state base (the

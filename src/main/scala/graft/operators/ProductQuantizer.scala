@@ -41,8 +41,8 @@ import graft.sources.{IndexCatalog, Tables}
   *  - encoding is a single codegen'd projection over the corpus
   *    (m·numCentroids·subDim integer mul-adds per row) at index
   *    BUILD time — storage cost, paid once, like the bucketed layout.
-  *  - the probe scans ONLY (doc_id, codes) from the probed cell
-  *    partitions: `codes` is m small ints vs dim floats — the
+  *  - the probe scans ONLY (doc_id, pq_codes) from the probed cells'
+  *    files: `pq_codes` is m small ints vs dim floats — the
   *    24-32× scan-bytes reduction that keeps probe I/O flat as
   *    vector width grows.
   *  - the ADC table (m·numCentroids integer distances) is index
@@ -124,7 +124,7 @@ object ProductQuantizer {
     (1 to lloydIterations).foreach { _ =>
       val means = EmbeddingStore.collectBounded(
         quant
-          .select(col("qv"), codesExpr(cb, m).as("codes"))
+          .select(col("qv"), codesCol(cb, col("qv")).as("codes"))
           .select(col("qv"), posexplode(col("codes")).as(Seq("s", "cid")))
           .select(col("s"), col("cid"),
             posexplode(slice(col("qv"), col("s") * subDim + 1, lit(subDim)))
@@ -144,21 +144,25 @@ object ProductQuantizer {
     cb
   }
 
+  private def nestedOf(cb: Seq[(Int, Int, Seq[Long])],
+      m: Int): Array[Array[Array[Long]]] =
+    (0 until m).map(s =>
+      cb.filter(_._1 == s).sortBy(_._2).map(_._3.toArray).toArray).toArray
+
   /** Code-assignment column over a quantized vector column `qv`:
     * per subspace, argmin over the codebook of the exact integer
     * squared L2, ties to the lowest code id. A dedicated codegen'd
     * expression ([[PqEncode]]): the m·ncent·subDim inner loop stays
     * primitive (an unrolled function-tree overflows a generated
     * method; higher-order functions interpret with per-element
-    * boxing — ~40× slower measured at 384 dims). */
-  private def nestedOf(cb: Seq[(Int, Int, Seq[Long])],
-      m: Int): Array[Array[Array[Long]]] =
-    (0 until m).map(s =>
-      cb.filter(_._1 == s).sortBy(_._2).map(_._3.toArray).toArray).toArray
-
-  private def codesExpr(cb: Seq[(Int, Int, Seq[Long])], m: Int): Column =
-    GraftColumnBridge.column(
-      PqEncode(GraftColumnBridge.expression(col("qv")), nestedOf(cb, m)))
+    * boxing — ~40× slower measured at 384 dims). It is the index
+    * cells' `pq_codes` column: each code lives beside the vector it
+    * encodes (the IVFADC inverted-list entry holds id and code
+    * together), so a probe reads it through the cells' (cell,
+    * doc_id) pruning. */
+  private[graft] def codesCol(cb: Seq[(Int, Int, Seq[Long])], qv: Column): Column =
+    GraftColumnBridge.column(PqEncode(GraftColumnBridge.expression(qv),
+      nestedOf(cb, cb.map(_._1).max + 1)))
 
   /** Per-row PQ quantization error against the PERSISTED codebooks,
     * over an `embedding` column, scaled to integer micro-units
@@ -175,50 +179,6 @@ object ProductQuantizer {
     round(raw.cast("double") / quantScale).cast("long")
   }
 
-  /** Build the PQ sidecars for an assigned corpus (doc_id, embedding,
-    * cell): `pq_codebooks` (the tiny seeded codebook table) and
-    * `pq_codes` (doc_id, codes) PARTITIONED BY CELL — the same
-    * partition key as the index cells, so a probe prunes code files
-    * at the listing exactly like vector files. Called inside the
-    * index build; storage, not query work. */
-  def buildPq(spark: SparkSession, assigned: DataFrame, path: String): Unit = {
-    val dim = assigned.select(size(col("embedding")).as("d")).limit(1)
-      .first().getInt(0)
-    val m = dim / subDim
-    val cb = codebookRows(assigned, dim)
-    graft.sources.TableFormat.commitGenManifested(
-      spark.createDataFrame(cb).toDF("sub", "cid", "cvec").coalesce(1),
-      s"$path/pq_codebooks", Seq("sub"))
-    // the codes inherit the cells' (cell, doc_id) clustering (a pure
-    // projection over the committed cell files — no shuffle), so the
-    // sidecar's manifest prunes probe-identically to the cells'
-    graft.sources.TableFormat.commitGenManifested(
-      encodeWith(assigned, cb, m), s"$path/pq_codes", Seq("cell", "doc_id"))
-  }
-
-  /** Encode appended vectors against the PERSISTED codebooks and
-    * append their codes — [[EmbeddingStore.appendToIvfIndex]]'s PQ
-    * sibling. The codebook is FIXED after build (standard IVF-PQ
-    * posture: like centroid drift, codebook aging is what
-    * rebuild-on-drift bounds); appended rows stay probe-visible in
-    * the compressed domain with no rewrite. */
-  def appendPq(spark: SparkSession, assigned: DataFrame, path: String): Unit = {
-    val cb = readCodebooks(spark, IndexCatalog.pin(path))
-    val m = cb.map(_._1).max + 1
-    val root = s"$path/pq_codes"
-    graft.sources.TableFormat.appendScoped(spark, root,
-      encodeWith(assigned, cb, m),
-      graft.sources.TableFormat.genSchema(root,
-        graft.sources.TableFormat.currentGen(root)))
-    ()
-  }
-
-  private def encodeWith(assigned: DataFrame, cb: Seq[(Int, Int, Seq[Long])],
-      m: Int): DataFrame =
-    assigned
-      .select(col("doc_id"), col("cell"), quantize(col("embedding")).as("qv"))
-      .select(col("doc_id"), col("cell"), codesExpr(cb, m).as("codes"))
-
   /** The codebook table pinned by `pin`, back as driver-side
     * metadata (m·ncent rows, bounded). Codebooks are immutable within
     * a generation (appends never touch them; a rebuild commits the
@@ -226,7 +186,7 @@ object ProductQuantizer {
     * once per generation, keyed by its manifest identity, which a
     * root deleted and rebuilt at the same generation id does not
     * share. */
-  private def readCodebooks(spark: SparkSession,
+  private[graft] def readCodebooks(spark: SparkSession,
       pin: IndexCatalog.Pin): Seq[(Int, Int, Seq[Long])] =
     EmbeddingStore.collectBounded(
       pin.smallRows(spark, "pq_codebooks")
@@ -239,7 +199,8 @@ object ProductQuantizer {
     * D8's probe), then rank the probed cells' vectors by ASYMMETRIC
     * DISTANCE — the query's exact quantized subvectors against each
     * vector's codebook entries, an m-lookup sum per candidate — over
-    * a scan that reads ONLY the code sidecar (never a float vector).
+    * a scan that reads ONLY the cells' code column (never a float
+    * vector: parquet column pruning skips `embedding`).
     * Smallest adist first, doc_id tie-break. The ADC lookup table is
     * index metadata (m·ncent integer distances): computed by one tiny
     * codebook×query job, bounded-collected, and folded into the scan
@@ -254,9 +215,9 @@ object ProductQuantizer {
       EmbeddingStore.probeCellsWithQuery(spark, pin, queryDocId, probes)
     val cb = readCodebooks(spark, pin)
     val m = cb.map(_._1).max + 1
-    // manifest-pruned: only code files whose cell range intersects a
+    // manifest-pruned: only cell files whose cell range intersects a
     // probed cell are read (the isin filter below is the residual)
-    val codesTable = pin.readPruned(spark, "pq_codes", "cell", probed.toSeq)
+    val codesTable = pin.readPruned(spark, "cells", "cell", probed.toSeq)
     if (qFloat.isEmpty) {
       // absent query doc: same empty-frame contract as the other
       // search rows — and the oracle's probe CTE is empty too
@@ -282,7 +243,7 @@ object ProductQuantizer {
     val adcLit = typedLit(adc)
     val adist = (0 until m).map(s =>
       element_at(element_at(adcLit, s + 1),
-        element_at(col("codes"), s + 1).cast("int") + 1))
+        element_at(col("pq_codes"), s + 1).cast("int") + 1))
       .reduce(_ + _)
     codesTable
       .filter(col("cell").isin(probed.toSeq: _*))
@@ -301,8 +262,8 @@ object ProductQuantizer {
   /** N queries through the COMPRESSED index in ONE pass —
     * [[EmbeddingStore.searchIvfBatch]]'s plan with the ADC ranking in
     * place of exact cosine: per-query probe choice (the shared D8
-    * rule), union-of-probes partition pruning over the CODE sidecar
-    * (m ints per row, never a float vector), and the per-query ADC
+    * rule), union-of-probes pruning over the cells' CODE column (m
+    * ints per row, never a float vector), and the per-query ADC
     * tables — N·m·ncent integer distances, index metadata — folded
     * into the scan as ONE literal indexed by a dense query index the
     * broadcast probe map carries. Scan → broadcast equi-join on cell
@@ -344,11 +305,11 @@ object ProductQuantizer {
       .join(qidx, "query_id")
     val adist = (0 until m).map(s =>
       element_at(element_at(element_at(adcLit, col("qi") + 1), s + 1),
-        element_at(col("codes"), s + 1).cast("int") + 1))
+        element_at(col("pq_codes"), s + 1).cast("int") + 1))
       .reduce(_ + _)
     val wRank = Window.partitionBy(col("query_id"))
       .orderBy(col("adist").asc, col("doc_id"))
-    pin.readPruned(spark, "pq_codes", "cell", probedCells.toSeq)
+    pin.readPruned(spark, "cells", "cell", probedCells.toSeq)
       .filter(col("cell").isin(probedCells.toSeq: _*))
       .join(broadcast(pairs), Seq("cell"))
       .filter(col("doc_id") =!= col("query_id"))

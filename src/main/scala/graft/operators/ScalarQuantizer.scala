@@ -33,9 +33,10 @@ import graft.sources.Tables
   * component) ever happens on either engine: integer codes compare
   * against the integer micro-unit query directly.
   *
-  * Scale shape: at 100 TB the `codes` column is what an index layout
-  * persists (m bytes/vector beside `pq_codes`' nibbles — same
-  * cell-partitioned sidecar pattern); computed here inline because
+  * Scale shape: the persisted index stores the codes as the cells'
+  * `sq8_codes` column beside its scale `sq8_s` and the PQ
+  * `pq_codes` (the L2/dot consumers and reconstruction need the
+  * scale; cosine ranking never does); computed here inline because
   * the row IS the fidelity evaluator for that layout choice. Stage 1
   * is scan → codegen'd projection → TakeOrderedAndProject (no
   * shuffle beyond top-k·F); stage 2 touches exactly k·F float rows
@@ -74,48 +75,13 @@ object ScalarQuantizer {
   private def intDot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
 
-  /** Micro-units → scale → codes as one projection: (doc_id, cell,
-    * s, codes). `s` rides along in the layout (cosine ranking never
-    * needs it — the scale-invariance identity — but L2/dot consumers
-    * and reconstruction do; one BIGINT per vector is free). */
-  private def encodeSq8(assigned: DataFrame): DataFrame =
-    assigned
-      .select(col("doc_id"), col("cell"),
-        ProductQuantizer.quantize(col("embedding")).as("qv"))
-      .withColumn("s", array_max(transform(col("qv"), v => abs(v))))
-      .select(col("doc_id"), col("cell"), col("s"),
-        sq8Codes(col("qv"), col("s")).as("codes"))
-
-  /** Write the int8 code sidecar for a freshly built index's cells —
-    * called by [[EmbeddingStore.buildIvfIndex]] beside the PQ
-    * sidecar, from the just-written cell layout (one read, not a
-    * re-run of the assignment DAG). Cell-partitioned like `cells`
-    * and `pq_codes`, so the probe prunes it at the file listing. */
-  def buildSq8(spark: SparkSession, cells: DataFrame, path: String): Unit =
-    graft.sources.TableFormat.commitGenManifested(
-      encodeSq8(cells), s"$path/sq8_codes", Seq("cell", "doc_id"))
-
-  /** Keep the sq8 sidecar append-consistent with the cells (the
-    * [[ProductQuantizer.appendPq]] discipline) — unlike PQ there are
-    * no codebooks to stay consistent with: the code rule is
-    * per-vector, so appended rows encode identically to build-time
-    * rows by construction. */
-  def appendSq8(assigned: DataFrame, path: String): Unit = {
-    val root = s"$path/sq8_codes"
-    graft.sources.TableFormat.appendScoped(assigned.sparkSession, root,
-      encodeSq8(assigned),
-      graft.sources.TableFormat.genSchema(root,
-        graft.sources.TableFormat.currentGen(root)))
-    ()
-  }
-
   /** D24 — `q_search_ivfsq8`: the compressed probe OVER the persisted
     * index — IVF cell pruning (exactly D8's probe rule) + int8 code
     * ranking, the FAISS `IVF,SQ8` shape that production deployments
     * usually pick before PQ (4× bytes, near-exact ranking — D23
     * measures the drift, D22 measures PQ's). The probe scans ONLY
-    * (doc_id, codes) from the probed cell partitions of the sidecar
-    * — never a float vector — and the plan is the D12 shape: scan →
+    * (doc_id, cell, sq8_codes) of the probed cells' files — never a
+    * float vector — and the plan is the D12 shape: scan →
     * codegen'd integer projection → TakeOrdered, no join, no shuffle
     * beyond top-k (the query's micro-units fold in as a literal).
     * Scoring: the scale-invariance identity again — integer code
@@ -126,7 +92,7 @@ object ScalarQuantizer {
     val pin = graft.sources.IndexCatalog.pin(path)
     val (probed, qFloat) =
       EmbeddingStore.probeCellsWithQuery(spark, pin, queryDocId, probes)
-    val codesTable = pin.readPruned(spark, "sq8_codes", "cell", probed.toSeq)
+    val codesTable = pin.readPruned(spark, "cells", "cell", probed.toSeq)
     if (qFloat.isEmpty) {
       // absent query doc: the empty-frame contract of the search rows
       return codesTable.select(col("doc_id"), col("cell"),
@@ -135,9 +101,9 @@ object ScalarQuantizer {
     val qq = qFloat.get.map(ProductQuantizer.quantizeLong)
     val qqLit = typedLit(qq.toSeq)
     val nq = math.sqrt(qq.map(x => x.toDouble * x).sum)
-    val dotc = intDot(qqLit, col("codes")).cast("double")
+    val dotc = intDot(qqLit, col("sq8_codes")).cast("double")
     val den = lit(nq) *
-      sqrt(intDot(col("codes"), col("codes")).cast("double"))
+      sqrt(intDot(col("sq8_codes"), col("sq8_codes")).cast("double"))
     codesTable
       .filter(col("cell").isin(probed.toSeq: _*))
       .filter(col("doc_id") =!= queryDocId)

@@ -8,19 +8,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * universes": the engine had a real table format and its flagship
   * derived store still lived on bespoke directory swaps).
   *
-  * An index is FIVE versioned tables under one root (`cells`,
-  * `centroids`, `pq_codebooks`, `pq_codes`, `sq8_codes` — each a
+  * An index is THREE versioned tables under one root — `cells` (the
+  * vectors with their PQ and SQ8 codes as columns, the IVFADC
+  * inverted-list entry), `centroids` and `pq_codebooks` — each a
   * [[TableFormat]] manifested table with its own generations, CAS
-  * markers and per-file statistics). A mutation (build, append,
-  * rebuild, purge, compaction) advances one or more substores, then
-  * publishes ONE top-level marker (`icommit_<g>`) pinning the exact
-  * substore generation quintuple — the Iceberg shape: data files →
-  * per-table metadata → one atomic catalog-pointer swap. Readers
+  * markers and per-file statistics. An append, a purge or a
+  * compaction advances `cells` alone; a build or rebuild advances all
+  * three. Every mutation then publishes ONE top-level marker
+  * (`icommit_<g>`) pinning the exact substore generation triple —
+  * the Iceberg shape: data files → per-table metadata → one atomic
+  * catalog-pointer swap. Readers
   * resolve the pointer once (one [[Pin]] per request) and read every
   * substore AT ITS PINNED GENERATION, so no reader can ever observe
   * new cells beside old centroids (the cross-store torn read the old
   * rename-swap rebuild had a window for); a crash between substore
-  * commits leaves the previous quintuple fully live, and the next
+  * commits leaves the previous triple fully live, and the next
   * writer ([[commit]]) expires the unpinned substore markers first,
   * so it never builds on them. Index generations are TIME TRAVEL for
   * the whole index: pin g and every probe sees the index exactly as
@@ -35,10 +37,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object IndexCatalog {
 
-  /** The substores an index carries. A missing substore (an index
-    * built before a sidecar existed) simply has no pin. */
-  val stores: Seq[String] =
-    Seq("cells", "centroids", "pq_codebooks", "pq_codes", "sq8_codes")
+  /** The substores an index carries. */
+  val stores: Seq[String] = Seq("cells", "centroids", "pq_codebooks")
 
   private[graft] def currentGen(path: String): Long =
     Markers.index.current(path).getOrElse(
@@ -183,7 +183,7 @@ object IndexCatalog {
   /** Retention over the whole index: keep the newest `keep` index
     * generations; every substore vacuums by REACHABILITY down to the
     * oldest generation any retained pin names, and expired top-level
-    * markers go with their quintuples. Returns reaped data files. */
+    * markers go with their triples. Returns reaped data files. */
   private[graft] def vacuum(spark: SparkSession, path: String,
       keep: Int): Long = {
     require(keep >= 1, "retention must keep at least the current index gen")

@@ -139,9 +139,9 @@ object LayoutStore {
     * base the copy-then-mutate episode verbs (advance-day, index
     * maintenance, index history) would otherwise pay a full base
     * rewrite before doing any work (guide §6 — never rewrite carried
-    * data). Small metadata files (a stream's `_STREAM_BATCH` marker)
-    * CAN get rewritten in place, so they are copied — a linked inode
-    * would corrupt the pristine base. Falls back to copy
+    * data). Small metadata files (markers, schemas, `_txn` records)
+    * are copied — a linked inode rewritten in place would corrupt the
+    * pristine base. Falls back to copy
     * when the filesystem refuses the link (cross-device scratch). */
   def cloneRecursively(src: File, dst: File): Unit = {
     if (src.isDirectory) {

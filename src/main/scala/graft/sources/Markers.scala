@@ -9,7 +9,7 @@ import java.nio.file.{Files, Path, Paths}
   * when the target exists, so exactly one writer ever owns a
   * generation id and no reader can observe a half-written marker.
   * [[TableFormat]] names a generation's data dir in `commit_<g>`;
-  * [[IndexCatalog]] pins a substore quintuple in `icommit_<g>`. */
+  * [[IndexCatalog]] pins a substore triple in `icommit_<g>`. */
 private[graft] final class Markers(prefix: String) {
 
   def path(root: String, gen: Long): Path = Paths.get(root, s"$prefix$gen")

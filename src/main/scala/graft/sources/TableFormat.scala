@@ -389,14 +389,18 @@ object TableFormat {
   }
 
   /** An LRU map from a manifest's IDENTITY to a value derived from it,
-    * holding at most `capacity` entries. The identity is the canonical
-    * `_manifest` dir (or single parquet file) plus the (name, length,
-    * mtime) of every part file; part names carry the writing job's
-    * UUID, so a root deleted and recreated, or a hard-link clone under
-    * a new root, is a NEW key — an entry can never answer for
-    * different bytes. */
+    * holding at most `capacity` entries. The identity is the
+    * (filesystem file key, name, length, mtime) of every part file:
+    * the file key (device and inode) is shared by hard links, so a
+    * `LayoutStore.cloneRecursively` working copy hits its base's
+    * entry — the same bytes — while a byte copy is a new key. Part
+    * names carry the writing job's UUID, so a root deleted and
+    * rebuilt at the same generation id is a new key too. Where the
+    * filesystem has no file key, or the path has no part file, the
+    * canonical `_manifest` dir (or single parquet file) joins the
+    * identity. An entry can never answer for different bytes. */
   private[graft] class IdentityCache[V](capacity: Int) {
-    private type Key = (String, Seq[(String, Long, Long)])
+    private type Key = (String, Seq[(AnyRef, String, Long, Long)])
     private val entries =
       new java.util.LinkedHashMap[Key, V](16, 0.75f, true) {
         override def removeEldestEntry(
@@ -406,8 +410,13 @@ object TableFormat {
 
     private def key(dir: String): Key = {
       val d = new java.io.File(dir).getCanonicalFile
-      (d.getPath, manifestParts(d.getPath)
-        .map(f => (f.getName, f.length(), f.lastModified())))
+      val parts = manifestParts(d.getPath).map { f =>
+        val a = Files.readAttributes(f.toPath,
+          classOf[java.nio.file.attribute.BasicFileAttributes])
+        (a.fileKey(), f.getName, a.size(), a.lastModifiedTime().toMillis)
+      }
+      (if (parts.isEmpty || parts.exists(_._1 == null)) d.getPath else "",
+        parts)
     }
 
     /** The entry for the manifest at `dir`, running `load` on a miss
@@ -707,14 +716,20 @@ object TableFormat {
     // markers (this verb runs twice per micro-batch)
     var seen = Map.empty[String, Long]
     Markers.table.gens(root).reverseIterator
-      .map(g => txnFile(resolveDir(root, g)))
-      .filter(Files.exists(_))
-      .foreach(p => seen = parseTxns(p) ++ seen)
+      .foreach(g => seen = txnsAt(root, g) ++ seen)
     seen
   }
 
   private[graft] def lastTxn(root: String, appId: String): Option[Long] =
     txnTable(root).get(appId)
+
+  /** The transaction records generation `gen` committed (carried ones
+    * included) — what a reader holding a pin of `gen` trusts, where
+    * [[txnTable]] would also count a newer, unpinned commit. */
+  private[graft] def txnsAt(root: String, gen: Long): Map[String, Long] = {
+    val p = txnFile(resolveDir(root, gen))
+    if (Files.exists(p)) parseTxns(p) else Map.empty
+  }
 
   /** The null-safe interval-intersection touch predicate against a
     * [[summarizeScope]] frame: a file is touched when a scope

@@ -22,7 +22,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *  - `spans`   — [[StreamingSpanDedup]]: span dedup against the
   *    persisted gram state, state advanced per batch;
   *  - `ingest`  — [[StreamingVectorIngest]]: vector appends through
-  *    the persisted IVF index (PQ/SQ8 sidecars kept consistent);
+  *    the persisted IVF index (PQ/SQ8 codes encoded with each row);
   *  - `card`    — [[StreamingDataCard]]: the per-source data card
   *    folded per batch under its atomic pointer commit.
   *

@@ -29,21 +29,14 @@ import graft.operators.Dedup
   * in `results/batch=<b>` via an OVERWRITE of that one partition
   * directory (a replayed batch rewrites its own output
   * deterministically, never duplicates it), the gram fold reuses
-  * [[Dedup.advanceSpanState]] (idempotent via its watermark check;
-  * one table commit that carries the watermark), and the committed
-  * batchId marker beside the state guards the whole pair. */
+  * [[Dedup.advanceSpanState]] (one table commit that carries the
+  * watermark as its txn record), and that watermark guards the whole
+  * pair: a batch whose ids it already covers is a replay. */
 object StreamingSpanDedup {
 
   private val docSchema = StructType(Seq(
     StructField("doc_id", LongType),
     StructField("text", StringType)))
-
-  private def lastCommitted(statePath: String): Long = {
-    val f = java.nio.file.Paths.get(statePath, "_STREAM_BATCH")
-    if (java.nio.file.Files.exists(f))
-      java.nio.file.Files.readString(f).trim.toLong
-    else -1L
-  }
 
   /** All spans results streamed so far: (doc_id, n_tokens, n_removed,
     * kept_hash) — one row per doc that lost at least one word, the
@@ -73,7 +66,7 @@ object StreamingSpanDedup {
     val writer = docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > lastCommitted(statePath) && !batch.isEmpty) {
+        if (!batch.isEmpty) {
           val snap = batch.localCheckpoint() // results + fold, one read
           val ids = snap.agg(min(col("doc_id")).as("mn"),
             max(col("doc_id")).as("mx")).first()
@@ -83,10 +76,9 @@ object StreamingSpanDedup {
           // grams are in the state and everything would self-flag).
           // Under the append-only contract, watermark >= maxId ⟺
           // this batch's fold already committed — its results are
-          // already on disk (written first), so a replay skips
-          // straight to the marker. A crash MID-advance leaves the
-          // previous state generation live, so the replay recomputes
-          // the results and the fold.
+          // already on disk (written first), so a replay is a no-op.
+          // A crash MID-advance leaves the previous state generation
+          // live, so the replay recomputes the results and the fold.
           // ONE watermark read per batch: guard and contract check
           // see the same value by construction (and the state-file
           // stat doesn't run three times per micro-batch)
@@ -95,7 +87,7 @@ object StreamingSpanDedup {
             // FAIL LOUD on a contract violation instead of silently
             // truncating: a doc at or below the watermark would be
             // filtered out of both the results and the fold — never
-            // deduplicated, never reported — while the marker still
+            // deduplicated, never reported — while the watermark still
             // advanced. An out-of-order crawl needs a batch rebuild,
             // not a quiet hole.
             require(minId > wm,
@@ -111,11 +103,8 @@ object StreamingSpanDedup {
               .parquet(s"$statePath/results/batch=$batchId")
             Dedup.advanceSpanState(snap, statePath)
           }
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(statePath, "_STREAM_BATCH"),
-            batchId.toString)
-          ()
         }
+        ()
       }
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
       .start()

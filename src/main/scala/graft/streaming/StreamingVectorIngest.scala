@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.operators.EmbeddingStore
+import graft.sources.{IndexCatalog, TableFormat}
 
 /** LIVE index maintenance — the streaming sibling of
   * [[graft.operators.EmbeddingStore.appendToIvfIndex]], mirroring the
@@ -22,34 +23,42 @@ import graft.operators.EmbeddingStore
   *
   * Each micro-batch appends through the SAME storage path batch uses
   * — [[EmbeddingStore.appendToIvfIndex]]: assignment with the
-  * persisted centroids, PQ code sidecar kept consistent, gen = 1
+  * persisted centroids, PQ/SQ8 codes encoded with each row, gen = 1
   * rows feeding D9's drift stat (so the drift-gated
   * [[EmbeddingStore.rebuildIfDrifted]] works unchanged on a
   * live-ingested index). `foreachBatch` is the canonical bridge from
   * a stream to a non-streaming storage sink.
   *
   * Exactly-once: the file source replays an UNCOMMITTED micro-batch
-  * after a crash with the SAME batchId, so the append is guarded by
-  * the last-committed batchId persisted beside the index
-  * (`_STREAM_BATCH`) — the standard foreachBatch idempotence recipe.
-  * A replayed batch whose append already committed is skipped instead
-  * of double-appended (StreamingRecoverySpec proves a re-run over the
-  * same checkpoint appends nothing). The crash window between the
-  * index append and this `_STREAM_BATCH` write remains: the marker is
-  * a plain file beside the index, not a txn record committed with the
-  * append (the shape the dedup and span states use), so a crash there
-  * replays the batch into a second append. */
+  * after a crash with the SAME batchId. The append is one `cells`
+  * commit that carries the batch's (appId, batchId) txn record (the
+  * [[StreamingVersionedSink]] recipe), so the record and the rows
+  * land atomically, and a replayed batch whose record the pinned
+  * `cells` generation already holds is skipped instead of
+  * double-appended. */
 object StreamingVectorIngest {
 
   private val vectorSchema = StructType(Seq(
     StructField("doc_id", LongType),
     StructField("embedding", ArrayType(FloatType))))
 
-  private def lastCommitted(indexPath: String): Long = {
-    val f = java.nio.file.Paths.get(indexPath, "_STREAM_BATCH")
-    if (java.nio.file.Files.exists(f))
-      java.nio.file.Files.readString(f).trim.toLong
-    else -1L
+  /** One micro-batch: append `batch` to the index at `indexPath`
+    * unless the `cells` generation the current catalog pins already
+    * holds writer `appId`'s record of `batchId` (a crashed, unpublished
+    * `cells` commit is not pinned, so it never counts as done).
+    * Returns true iff this call appended. Factored out so a spec can
+    * drive a literal redelivery. */
+  private[graft] def ingestBatch(spark: SparkSession, indexPath: String,
+      appId: String)(batch: DataFrame, batchId: Long): Boolean = {
+    val pin = IndexCatalog.pin(indexPath)
+    val done = TableFormat.txnsAt(s"$indexPath/cells", pin.genOf("cells"))
+      .get(appId).exists(_ >= batchId)
+    if (done || batch.isEmpty) false
+    else {
+      EmbeddingStore.appendToIvfIndex(spark, indexPath, batch,
+        Some(appId -> batchId))
+      true
+    }
   }
 
   /** Start the ingest over a vector drop directory. The caller owns
@@ -66,18 +75,13 @@ object StreamingVectorIngest {
     val reader = spark.readStream.schema(vectorSchema)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     val vectors = reader.parquet(inputDir)
+    // a fresh checkpoint is a fresh writer (StreamingVersionedSink.appIdFor)
+    val appId = StreamingVersionedSink.appIdFor(checkpointDir, "ivf")
     val writer = vectors.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // idempotence guard: a crash-replayed batch re-arrives with
-        // its original batchId; committed ones skip
-        if (batchId > lastCommitted(indexPath) && !batch.isEmpty) {
-          EmbeddingStore.appendToIvfIndex(spark, indexPath, batch)
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(indexPath, "_STREAM_BATCH"),
-            batchId.toString)
-          ()
-        }
+        ingestBatch(spark, indexPath, appId)(batch, batchId)
+        ()
       }
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
       .start()

@@ -46,7 +46,7 @@ class IndexMaintenanceSpec extends SparkTestBase {
     "OPTIMIZE: fewer files, losslessly, probe bit-identical, and the " +
     "pre-compaction index still time-travels") {
     val path = accretedIndex()
-    val stores = Seq("cells", "pq_codes", "sq8_codes")
+    val stores = Seq("cells")
 
     val probePre = EmbeddingStore.searchIvf(spark, path, 0L, 10, 2).collect()
     val contentPre = stores.map(s => readStore(path, s)
@@ -73,7 +73,7 @@ class IndexMaintenanceSpec extends SparkTestBase {
     val probePost = EmbeddingStore.searchIvf(spark, path, 0L, 10, 2).collect()
     assert(probePost.toSeq === probePre.toSeq)
     // compaction is a NEW index generation; the pre-compaction
-    // quintuple still reads intact (data movement, zero logical
+    // generation still reads intact (data movement, zero logical
     // change — provable because history is retained)
     assert(IndexCatalog.currentGen(path) === genPre + 1)
     val cellsPinned = IndexCatalog.readAt(spark, path, genPre, "cells")
@@ -96,16 +96,15 @@ class IndexMaintenanceSpec extends SparkTestBase {
     assert(victims.nonEmpty)
 
     val reports = IndexMaintenance.purgeIndex(spark, path, victims)
-    assert(reports.map(_.store) === Seq("cells", "pq_codes", "sq8_codes"))
+    assert(reports.map(_.store) === Seq("cells"))
     val vset = victims.toSet
-    Seq("cells", "pq_codes", "sq8_codes").foreach { sub =>
-      val ids = readStore(path, sub)
-        .select(col("doc_id")).collect().map(_.getLong(0))
-      assert(!ids.exists(vset), s"$sub still holds a purged id")
-      // survivors intact: purged store = original minus victims
-      assert(ids.sorted.toSeq === all.filterNot(vset).toSeq,
-        s"$sub lost a survivor")
-    }
+    // the cells carry the codes, so the ids leave both compressed forms
+    val ids = readStore(path, "cells")
+      .select(col("doc_id")).collect().map(_.getLong(0))
+    assert(!ids.exists(vset), "cells still holds a purged id")
+    // survivors intact: purged store = original minus victims
+    assert(ids.sorted.toSeq === all.filterNot(vset).toSeq,
+      "cells lost a survivor")
     val postProbe = EmbeddingStore.searchIvf(spark, path, 0L, 10, 2)
       .collect().map(_.getLong(0)).toSet
     assert(postProbe.intersect(vset).isEmpty,
@@ -123,13 +122,11 @@ class IndexMaintenanceSpec extends SparkTestBase {
     IndexMaintenance.purgeIndex(spark, path, all)
     // reads must SUCCEED and see zero rows — an all-rows-purged
     // generation is an empty manifest, not a broken directory
-    Seq("cells", "pq_codes", "sq8_codes").foreach { sub =>
-      assert(readStore(path, sub).count() === 0L,
-        s"$sub should be empty but readable")
-    }
+    assert(readStore(path, "cells").count() === 0L,
+      "cells should be empty but readable")
     // the emptied store is not a wedge: another full pass succeeds
     val again = IndexMaintenance.compactIndex(spark, path)
-    assert(again.map(_.store) === Seq("cells", "pq_codes", "sq8_codes"))
+    assert(again.map(_.store) === Seq("cells"))
     assert(readStore(path, "cells").count() === 0L)
   }
 
@@ -145,17 +142,17 @@ class IndexMaintenanceSpec extends SparkTestBase {
     // the store followed by an append of fresh vectors
     val stats = EmbeddingStore.appendToIvfIndex(spark, path, vecs)
     assert(stats.processed === all.length.toLong)
-    Seq("cells", "pq_codes", "sq8_codes").foreach { sub =>
-      assert(readStore(path, sub).count() === all.length.toLong,
-        s"$sub did not recover the appended rows")
-    }
+    // the appended rows carry their codes (the compressed probes read them)
+    assert(readStore(path, "cells").filter(col("pq_codes").isNotNull &&
+      col("sq8_codes").isNotNull).count() === all.length.toLong,
+      "cells did not recover the appended rows")
     // and the probe path serves the re-appended vectors
     val hits = EmbeddingStore.searchIvf(spark, path, all.head, 5, 4)
       .collect()
     assert(hits.nonEmpty)
     // a follow-up maintenance pass compacts the appended layout
     val reports = IndexMaintenance.compactIndex(spark, path)
-    assert(reports.map(_.store) === Seq("cells", "pq_codes", "sq8_codes"))
+    assert(reports.map(_.store) === Seq("cells"))
     assert(readStore(path, "cells").count() === all.length.toLong)
   }
 
@@ -183,7 +180,7 @@ class IndexMaintenanceSpec extends SparkTestBase {
     // the retry (a fresh full maintenance pass) completes and
     // publishes; the data is unchanged
     val reports = IndexMaintenance.compactIndex(spark, path)
-    assert(reports.map(_.store) === Seq("cells", "pq_codes", "sq8_codes"))
+    assert(reports.map(_.store) === Seq("cells"))
     assert(IndexCatalog.currentGen(path) === genPre + 1)
     assert(EmbeddingStore.searchIvf(spark, path, 0L, 10, 2).collect()
       .toSeq === probePre.toSeq)

@@ -104,7 +104,7 @@ class IvfIndexSpec extends SparkTestBase {
     EmbeddingStore.buildIvfIndex(spark, vectors, path)
     // the BUILD also honors the bounded-driver contract: two
     // two-level assignments run (seed + refined), each collecting
-    // only its ceil(sqrt(k)) coarse seeds, plus the PQ sidecar's
+    // only its ceil(sqrt(k)) coarse seeds, plus the PQ
     // codebook metadata — seeds (numCentroids rows) and the Lloyd
     // mean step (numCentroids·m·subDim = numCentroids·dim component
     // rows) — all corpus-independent constants
@@ -368,20 +368,21 @@ class IvfIndexSpec extends SparkTestBase {
     EmbeddingStore.buildIvfIndex(spark, vectors.filter(col("doc_id") < 250), path)
     val cellsRoot = s"$path/cells"
     def pinnedCells = IndexCatalog.pin(path).genOf("cells")
-    def assertStores(n: Int): Unit =
-      Seq("cells", "pq_codes", "sq8_codes").foreach { s =>
-        val ids = IndexCatalog.read(spark, path, s).select(col("doc_id"))
-          .collect().map(_.getLong(0)).toSeq
-        assert(ids.length === n, s"$s rows")
-        assert(ids.distinct.length === ids.length, s"$s holds a doc id twice")
-      }
+    def assertStores(n: Int): Unit = {
+      val ids = IndexCatalog.read(spark, path, "cells")
+        .filter(col("pq_codes").isNotNull && col("sq8_codes").isNotNull)
+        .select(col("doc_id")).collect().map(_.getLong(0)).toSeq
+      assert(ids.length === n, "cells rows")
+      assert(ids.distinct.length === ids.length, "cells holds a doc id twice")
+    }
 
-    // an append that committed its cells leg, then died (appendPq
-    // threw) before the catalog publish
+    // an append that committed its cells leg, then died before the
+    // catalog publish
     val preAppend = pinnedCells
     TableFormat.appendScoped(spark, cellsRoot,
-      EmbeddingStore.assignCells(delta, IndexCatalog.read(spark, path, "centroids"))
-        .withColumn("gen", lit(1)),
+      EmbeddingStore.withCodes(EmbeddingStore.assignCells(delta,
+        IndexCatalog.read(spark, path, "centroids")).withColumn("gen", lit(1)),
+        ProductQuantizer.readCodebooks(spark, IndexCatalog.pin(path))),
       TableFormat.genSchema(cellsRoot, preAppend))
     assert(TableFormat.currentGen(cellsRoot) === preAppend + 1)
     EmbeddingStore.appendToIvfIndex(spark, path, delta)
@@ -400,6 +401,56 @@ class IvfIndexSpec extends SparkTestBase {
       .filter(col("doc_id").isin(victims: _*)).count() === 0L)
     assert(pinnedCells === prePurge + 1,
       "the retry must re-derive the crashed generation from the pin")
+  }
+
+  test("a rebuild that died in its cells, centroids or pq_codebooks leg, " +
+    "retried, equals a clean rebuild in every substore") {
+    val t = Tables(spark, sfDir)
+    val vectors = EmbeddingStore.embed(t.documents).drop("shard").localCheckpoint()
+    // a small base and a large append: past the 0.5 drift gate
+    def drifted(): String = {
+      val path = Files.createTempDirectory("graft-ivf-rebuild-leg").toString
+      EmbeddingStore.buildIvfIndex(spark, vectors.filter(col("doc_id") < 100), path)
+      EmbeddingStore.appendToIvfIndex(spark, path, vectors.filter(col("doc_id") >= 100))
+      path
+    }
+    def rows(path: String, store: String): Seq[String] =
+      IndexCatalog.read(spark, path, store).collect().map(_.toString).sorted.toSeq
+    val clean = drifted()
+    assert(EmbeddingStore.rebuildIfDrifted(spark, clean, threshold = 0.5))
+    val expected = IndexCatalog.stores.map(s => s -> rows(clean, s)).toMap
+    assert(IndexCatalog.stores === Seq("cells", "centroids", "pq_codebooks"))
+
+    IndexCatalog.stores.foreach { failed =>
+      val path = drifted()
+      val pre = IndexCatalog.currentGen(path)
+      // the rebuild died in leg `failed`: every other leg committed its
+      // next generation and the catalog publish never ran. The debris
+      // shows if a retry builds on it: each cell row twice, zeroed
+      // centroids, zeroed codebooks
+      IndexCatalog.stores.filterNot(_ == failed).foreach { s =>
+        val cur = IndexCatalog.read(spark, path, s)
+        val (debris, keys) = s match {
+          case "cells" => (cur.union(cur), Seq("cell", "doc_id"))
+          case "centroids" => (cur.withColumn("centroid",
+            transform(col("centroid"), _ => lit(0f))), Seq("cell"))
+          case _ => (cur.withColumn("cvec",
+            transform(col("cvec"), _ => lit(0L))), Seq("sub"))
+        }
+        TableFormat.commitGenManifested(debris, s"$path/$s", keys)
+      }
+      assert(IndexCatalog.currentGen(path) === pre)
+      assert(EmbeddingStore.rebuildIfDrifted(spark, path, threshold = 0.5),
+        s"the retry after a failed $failed leg did not rebuild")
+      IndexCatalog.stores.foreach { s =>
+        assert(rows(path, s) === expected(s),
+          s"$s differs from a clean rebuild after a failed $failed leg")
+      }
+      val ids = IndexCatalog.read(spark, path, "cells").select(col("doc_id"))
+        .collect().map(_.getLong(0))
+      assert(ids.distinct.length === ids.length,
+        s"cells holds a doc id twice after a failed $failed leg")
+    }
   }
 
   test("rebuildIfDrifted: below threshold no-op; past it the quantizer recovers") {

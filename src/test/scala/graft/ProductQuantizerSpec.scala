@@ -54,10 +54,11 @@ class ProductQuantizerSpec extends SparkTestBase {
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Long](2).toSeq).toMap
     assert(got === expect, "persisted codebook is not the Lloyd-1 refinement")
     // every stored code addresses a codebook entry
-    val codes = graft.sources.IndexCatalog.read(spark, path, "pq_codes")
+    val codes = graft.sources.IndexCatalog.read(spark, path, "cells")
+      .filter(col("pq_codes").isNotNull)
     assert(codes.count() === n)
     val bad = codes
-      .select(explode(col("codes")).as("c"))
+      .select(explode(col("pq_codes")).as("c"))
       .filter(col("c") < 0 || col("c") >= ncent).count()
     assert(bad === 0L)
   }
@@ -145,9 +146,9 @@ class ProductQuantizerSpec extends SparkTestBase {
     val qv = graft.sources.IndexCatalog.read(spark, path, "cells")
       .filter(col("doc_id") === 0L).select(col("embedding")).first()
       .getSeq[Float](0).map(ProductQuantizer.quantizeLong)
-    val expected = graft.sources.IndexCatalog.read(spark, path, "pq_codes").collect()
+    val expected = graft.sources.IndexCatalog.read(spark, path, "cells").collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Int]("cell"),
-        r.getAs[scala.collection.Seq[Int]]("codes")))
+        r.getAs[scala.collection.Seq[Int]]("pq_codes")))
       .filter { case (id, cell, _) => id != 0L && probed(cell) }
       .map { case (id, cell, codes) =>
         val adist = codes.zipWithIndex.map { case (c, s) =>
@@ -178,16 +179,23 @@ class ProductQuantizerSpec extends SparkTestBase {
     val cbAfter = graft.sources.IndexCatalog.read(spark, path, "pq_codebooks").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2))).sortBy(x => (x._1, x._2))
     assert(cbAfter.toSeq === cbBefore.toSeq)
-    // every vector in the cells has exactly one code row, in the SAME
-    // cell the vector was assigned to (probe pruning must agree)
+    // every vector in the cells carries its codes, and they equal a
+    // fresh encoding of its embedding against the fixed codebooks
+    // (plain JVM argmin of the exact integer L2, lowest code id on ties)
+    val cb = cbAfter.map { case (sub, cid, cv) => (sub, cid) -> cv }.toMap
     val cells = graft.sources.IndexCatalog.read(spark, path, "cells")
-      .select(col("doc_id"), col("cell").as("vcell"))
-    val codes = graft.sources.IndexCatalog.read(spark, path, "pq_codes")
-      .select(col("doc_id"), col("cell").as("ccell"))
-    assert(codes.count() === cells.count())
-    val mismatched = cells.join(codes, "doc_id")
-      .filter(col("vcell") =!= col("ccell")).count()
-    assert(mismatched === 0L)
+      .select(col("embedding"), col("pq_codes")).collect()
+    assert(cells.length.toLong === all.count())
+    val sd = ProductQuantizer.subDim
+    cells.foreach { r =>
+      val qv = r.getSeq[Float](0).map(ProductQuantizer.quantizeLong)
+      val fresh = (0 until qv.length / sd).map { s =>
+        (0 until ProductQuantizer.numCentroids).minBy { c =>
+          (0 until sd).map { i => val d = qv(s * sd + i) - cb((s, c))(i); d * d }.sum
+        }
+      }
+      assert(r.getSeq[Int](1) === fresh)
+    }
     // appended rows are probe-visible in the compressed domain: a
     // search for a delta doc returns neighbors (its own cell is
     // non-empty by construction)
@@ -210,10 +218,11 @@ class ProductQuantizerSpec extends SparkTestBase {
     // seeds here, since seeds are the lowest ids — but the swap must
     // have left no stale/replaced dirs behind)
     val n = all.count()
-    assert(graft.sources.IndexCatalog.read(spark, path, "pq_codes").count() === n)
-    // the SQ8 sidecar swaps with the same rebuild — stale sq8 codes
+    val cells = graft.sources.IndexCatalog.read(spark, path, "cells")
+    assert(cells.filter(col("pq_codes").isNotNull).count() === n)
+    // the SQ8 codes re-encode with the same rebuild — stale sq8 codes
     // against new cells would rank against the wrong partitioning
-    assert(graft.sources.IndexCatalog.read(spark, path, "sq8_codes").count() === n)
+    assert(cells.filter(col("sq8_codes").isNotNull).count() === n)
     val leftovers = new java.io.File(path).list().filter(_.endsWith("_replaced"))
     assert(leftovers.isEmpty, s"stale dirs after rebuild: ${leftovers.mkString(",")}")
     val res = ProductQuantizer.searchIvfPq(spark, path, queryDocId = 0L, k = 10)

@@ -111,11 +111,12 @@ class ScalarQuantizerSpec extends SparkTestBase {
     val got = SQ.searchIvfSq8Query(t).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
     assert(got === expected)
-    // sidecar audit: one row per cell row, every code within int8
-    val side = graft.sources.IndexCatalog.read(spark, path, "sq8_codes")
+    // code audit: every cell row carries its codes, every code within int8
+    val side = graft.sources.IndexCatalog.read(spark, path, "cells")
+      .filter(col("sq8_codes").isNotNull)
     assert(side.count() === cells.length.toLong)
     val mx = side
-      .select(array_max(transform(col("codes"), x => abs(x))).as("m"))
+      .select(array_max(transform(col("sq8_codes"), x => abs(x))).as("m"))
       .agg(max(col("m"))).first().getLong(0)
     assert(mx <= 127L, s"a code escaped the int8 range: $mx")
   }

@@ -293,8 +293,8 @@ class StreamingRecoverySpec extends SparkTestBase {
     def cells(d: File) = graft.sources.IndexCatalog.read(spark, d.getAbsolutePath, "cells")
       .select("doc_id", "cell", "gen").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
-    def codes(d: File) = graft.sources.IndexCatalog.read(spark, d.getAbsolutePath, "pq_codes")
-      .select("doc_id", "codes").collect()
+    def codes(d: File) = graft.sources.IndexCatalog.read(spark, d.getAbsolutePath, "cells")
+      .select("doc_id", "pq_codes").collect()
       .map(r => (r.getLong(0), r.getSeq[Int](1))).toSet
     assert(cells(idxStream) === cells(idxBatch))
     assert(codes(idxStream) === codes(idxBatch))
@@ -311,6 +311,49 @@ class StreamingRecoverySpec extends SparkTestBase {
     val perDoc = graft.sources.IndexCatalog.read(spark, idxStream.getAbsolutePath, "cells")
       .groupBy("doc_id").count().filter(col("count") > 1).count()
     assert(perDoc === 0L, "a doc_id was appended more than once")
+  }
+
+  test("vector ingest: a batch redelivered after its append published " +
+    "appends nothing, and an unpublished cells commit does not count") {
+    import graft.operators.{EmbeddingStore, ProductQuantizer}
+    import graft.sources.{IndexCatalog, TableFormat}
+    import graft.streaming.{StreamingVectorIngest, StreamingVersionedSink}
+    val t = graft.sources.Tables(spark, sfDir)
+    val vectors = t.embeddings.select(col("vec_id").as("doc_id"), col("embedding"))
+    val maxId = vectors.agg(max(col("doc_id"))).first().getLong(0)
+    val idx = Files.createTempDirectory("graft-vi-redeliver").toString
+    EmbeddingStore.buildIvfIndex(spark,
+      vectors.filter(col("doc_id") <= maxId / 2), idx)
+    val batch0 = vectors.filter(col("doc_id") > maxId / 2 &&
+      col("doc_id") <= 3 * maxId / 4)
+    val batch1 = vectors.filter(col("doc_id") > 3 * maxId / 4)
+    val appId = StreamingVersionedSink.appIdFor(s"$idx-ckpt", "ivf")
+    val ingest = StreamingVectorIngest.ingestBatch(spark, idx, appId) _
+    def ids = IndexCatalog.read(spark, idx, "cells").select("doc_id")
+      .collect().map(_.getLong(0)).toSeq
+
+    assert(ingest(batch0, 0L))
+    // the process dies right after the append published (where a plain
+    // batch-id file beside the index would have been written next), and
+    // the source redelivers batch 0
+    assert(!ingest(batch0, 0L), "the redelivered batch appended again")
+    assert(ids.length === vectors.filter(col("doc_id") <= 3 * maxId / 4).count())
+    assert(ids.distinct.length === ids.length, "a doc_id was appended twice")
+
+    // batch 1's cells commit landed with its record, then the process
+    // died before the catalog publish: the redelivery must append
+    val pin = IndexCatalog.pin(idx)
+    val cellsRoot = s"$idx/cells"
+    TableFormat.appendScoped(spark, cellsRoot,
+      EmbeddingStore.withCodes(EmbeddingStore.assignCells(batch1,
+        pin.read(spark, "centroids")).withColumn("gen", lit(1)),
+        ProductQuantizer.readCodebooks(spark, pin)),
+      TableFormat.genSchema(cellsRoot, pin.genOf("cells")),
+      txn = Some(appId -> 1L))
+    assert(ingest(batch1, 1L), "an unpublished commit counted as done")
+    assert(!ingest(batch1, 1L))
+    assert(ids.length === vectors.count())
+    assert(ids.distinct.length === ids.length, "a doc_id was appended twice")
   }
 
   test("StreamingDataCard: three micro-batches fold to the exact batch " +

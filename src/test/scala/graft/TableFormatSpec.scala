@@ -1017,13 +1017,12 @@ class TableFormatSpec extends SparkTestBase {
         feed.filter(col("change_type") === "delete")
           .select("doc_id").collect().map(_.getLong(0)).toSeq)
 
-      Seq("cells", "pq_codes", "sq8_codes").foreach { sub =>
-        val fa = graft.sources.IndexCatalog.read(spark, a, sub)
-        val fb = graft.sources.IndexCatalog.read(spark, b, sub)
-          .select(fa.columns.map(col).toIndexedSeq: _*)
-        assert(fa.exceptAll(fb).isEmpty && fb.exceptAll(fa).isEmpty,
-          s"feed-driven $sub diverged from literal-delta maintenance")
-      }
+      // the cells carry the PQ and SQ8 codes, so one compare covers them
+      val fa = graft.sources.IndexCatalog.read(spark, a, "cells")
+      val fb = graft.sources.IndexCatalog.read(spark, b, "cells")
+        .select(fa.columns.map(col).toIndexedSeq: _*)
+      assert(fa.exceptAll(fb).isEmpty && fb.exceptAll(fa).isEmpty,
+        "feed-driven cells diverged from literal-delta maintenance")
       assert(feed.filter(col("change_type") === "delete").count() > 0 &&
         feed.filter(col("change_type") === "insert").count() > 0,
         "episode vacuous")
@@ -1163,8 +1162,9 @@ class TableFormatSpec extends SparkTestBase {
     assertCacheFresh(root, 0L)
   }
 
-  test("manifest cache: a LayoutStore.cloneRecursively clone gets its " +
-    "own entry, and commits on either side stay invisible to the other") {
+  test("manifest cache: a LayoutStore.cloneRecursively clone hits its " +
+    "source's entry, a byte copy misses, and commits on either side " +
+    "stay invisible to the other") {
     val src = java.nio.file.Files.createTempDirectory("graft-mc-src")
       .toString
     val a = rangeDocs(0, 100, 4)
@@ -1175,10 +1175,24 @@ class TableFormatSpec extends SparkTestBase {
       .resolve("clone").toString
     graft.sources.LayoutStore.cloneRecursively(new java.io.File(src),
       new java.io.File(dst))
+    // hard links: the clone's manifest IS its source's bytes
     val (_, cloneJobs) = JobCounting.countJobs(spark)(
-      TableFormat.manifestFiles(spark, dst, 0L))
-    assert(cloneJobs > 0,
-      "the clone's manifest was answered from its source's cache entry")
+      TableFormat.manifestMeta(spark, dst, 0L))
+    assert(cloneJobs === 0,
+      "the linked clone's manifest missed its source's cache entry")
+    // a byte copy holds equal bytes in new files: a new identity
+    val copy = java.nio.file.Files.createTempDirectory("graft-mc-copy")
+      .resolve("copy")
+    java.nio.file.Files.walk(java.nio.file.Paths.get(src)).forEach { p =>
+      val q = copy.resolve(java.nio.file.Paths.get(src).relativize(p))
+      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(q)
+      else java.nio.file.Files.copy(p, q,
+        java.nio.file.StandardCopyOption.COPY_ATTRIBUTES)
+    }
+    val (_, copyJobs) = JobCounting.countJobs(spark)(
+      TableFormat.manifestMeta(spark, copy.toString, 0L))
+    assert(copyJobs > 0,
+      "the byte copy's manifest was answered from its source's cache entry")
     TableFormat.appendScoped(spark, dst, rangeDocs(100, 120, 1), schema)
     TableFormat.appendScoped(spark, src, rangeDocs(200, 210, 1), schema)
     assert(idsAt(dst, 1L, schema) === (0L until 120L))
