@@ -58,11 +58,12 @@ object AdvanceDay {
   // D13's steady state), and Bench materializes it untimed — it is
   // ETL storage like the bucketed layout and the ensured index
   private[graft] def ensureDayBase(t: Tables): String =
-    // v4: the index codes became columns of its cells (v3: the dedup
-    // state became one versioned table; v2: so did the IVF index) —
-    // the key rotates with every layout change, or a cached
-    // pre-change base would be read by the new readers
-    graft.sources.LayoutStore.ensure(t.dir, "daybase", "v4") { path =>
+    // v5: the SQ8 codes became TINYINT (v4: the index codes became
+    // columns of its cells; v3: the dedup state became one versioned
+    // table; v2: so did the IVF index) — the key rotates with every
+    // layout change, or a cached pre-change base would be read by the
+    // new readers
+    graft.sources.LayoutStore.ensure(t.dir, "daybase", "v5") { path =>
       val maxDoc = t.documents.agg(max(col("doc_id"))).first().getLong(0)
       Dedup.buildDedupState(t.documents, maxDoc / 2, s"$path/dedup")
       val vectors = t.embeddings

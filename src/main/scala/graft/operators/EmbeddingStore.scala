@@ -946,7 +946,7 @@ object EmbeddingStore {
   /** Assignment-rule version tag baked into the on-disk index path: a
     * rule change must never silently probe an index built by an older
     * rule. */
-  private val indexRuleVersion = "r18-lloyd1-6dp-gen-pq16x8l1-sq8-vtable-cellcodes"
+  private val indexRuleVersion = "r18-lloyd1-6dp-gen-pq16x8l1-sq8-vtable-cellcodes-i8"
 
   /** Build-once location of the persisted IVF index for a data dir.
     * Like the bucketed table layout, the index is STORAGE — paid once

@@ -94,10 +94,13 @@ object JoinPruning {
     * in the standard sketch format, so every existing probe
     * (mightContainAnyOf / mightContainValue / BloomFilterMightContain)
     * reads it unchanged. */
-  def bloomAgg(key: Column, maxBits: Long = 1L << 20): Column =
+  def bloomAgg(key: Column, maxBits: Long = bloomMaxBits): Column =
     GraftColumnBridge.column(AdaptiveBloomAggregate(
       GraftColumnBridge.expression(xxhash64(key)),
       maxBits).toAggregateExpression())
+
+  /** Cap on a per-group sketch: 2^20 bits = 128 KiB serialized. */
+  private[graft] val bloomMaxBits: Long = 1L << 20
 
   /** Floor on a per-group sketch: 2^13 bits = 1 KiB serialized —
     * ≥10 bits/key up to ~800 rows, and a sane minimum k. */

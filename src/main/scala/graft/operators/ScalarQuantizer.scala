@@ -52,9 +52,10 @@ object ScalarQuantizer {
     * common default neighborhood). */
   val candidateFactor = 4
 
-  /** int8 codes of a micro-unit (BIGINT) vector with its per-vector
-    * max-abs scale s: cᵢ = sign(qᵢ)·⌊(2·127·|qᵢ| + s) / (2·s)⌋ —
-    * exact integer half-up of 127·|qᵢ|/s. Zero vector (s = 0) → all
+  /** int8 codes (TINYINT, one byte each) of a micro-unit (BIGINT)
+    * vector with its per-vector max-abs scale s:
+    * cᵢ = sign(qᵢ)·⌊(2·127·|qᵢ| + s) / (2·s)⌋ — exact integer half-up
+    * of 127·|qᵢ|/s, so |cᵢ| ≤ 127. Zero vector (s = 0) → all
     * zeros. STRUCTURALLY once-per-row in s: the scale rides in as a
     * zip_with ARGUMENT (`array_repeat(s, size(qv))`), so the lambda
     * only ever touches element attributes — even if the optimizer
@@ -68,12 +69,15 @@ object ScalarQuantizer {
       when(sv === 0L, lit(0L)).otherwise(
         when(v < 0L, lit(-1L)).otherwise(lit(1L)) *
           floor((lit(2L * sqMaxCode) * abs(v) + sv).cast("double") /
-            (lit(2L) * sv).cast("double")).cast("long")))
+            (lit(2L) * sv).cast("double")).cast("long")).cast("tinyint"))
 
-  /** Exact integer dot product of two BIGINT array columns. Both
-    * sides must be plain attributes (HOF re-evaluation rule). */
+  /** Exact integer dot product of two integer array columns (BIGINT
+    * micro-units or TINYINT codes, each element cast up to BIGINT
+    * before the product). Both sides must be plain attributes (HOF
+    * re-evaluation rule). */
   private def intDot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
+    aggregate(zip_with(a, b, (x, y) => x.cast("long") * y.cast("long")),
+      lit(0L), (acc, x) => acc + x)
 
   /** D24 — `q_search_ivfsq8`: the compressed probe OVER the persisted
     * index — IVF cell pruning (exactly D8's probe rule) + int8 code

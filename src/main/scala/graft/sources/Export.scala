@@ -57,12 +57,16 @@ object Export {
 
   /** Hash-distribute `df` on the partition keys, salted k ways when
     * [[saltKey]] asks (guide §2.5: the salt is derived from doc_id —
-    * deterministic under task retry, never rand()). */
+    * deterministic under task retry, never rand()). The partition
+    * count is explicit (the cluster's default parallelism): AQE may
+    * coalesce a keys-only repartition to one task, which then writes
+    * every dir alone; each dir still lands in one task. */
   private def distributeByKeys(df: DataFrame,
       keys: org.apache.spark.sql.Column*): DataFrame = {
     val k = df.sparkSession.conf.getOption(saltKey).map(_.toInt).getOrElse(1)
-    if (k <= 1) df.repartition(keys: _*)
-    else df.repartition((keys :+ pmod(col("doc_id"), lit(k.toLong))): _*)
+    val n = df.sparkSession.sparkContext.defaultParallelism
+    if (k <= 1) df.repartition(n, keys: _*)
+    else df.repartition(n, (keys :+ pmod(col("doc_id"), lit(k.toLong))): _*)
   }
 
   /** A read-back manifest of at most `bound` rows (its keys fix the

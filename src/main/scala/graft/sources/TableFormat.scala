@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StructType}
 
@@ -120,15 +120,13 @@ object TableFormat {
       txn: Option[(String, Long)] = None): Long =
     commit(root, df.schema, txn)(dir => df.write.parquet(dir))
 
-  /** Read exactly `files` with `schema`; an empty list (an
+  /** Read exactly `files` with `schema`, planned from the lengths the
+    * manifest cache holds (no listing, no job); an empty list (an
     * all-rows-deleted generation, a fully pruned probe) reads as an
-    * empty frame, since Spark cannot read zero paths. */
+    * empty frame. */
   private[graft] def readFiles(spark: SparkSession, schema: StructType,
-      files: Seq[String]): DataFrame =
-    if (files.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(files: _*)
+      files: Seq[DataFile]): DataFrame =
+    FileStats.read(spark, schema, files)
 
   /** Generation-pinned read with an EXPLICIT schema (the purge
     * read-back rule: inference must never re-type a column, and an
@@ -266,50 +264,32 @@ object TableFormat {
     org.apache.spark.sql.types.DataType.fromJson(
       Files.readString(schemaPath(dir))).asInstanceOf[StructType]
 
-  /** Per-file statistics of `keys` over the parquet files under
-    * `dir`: (min, max, null-presence) per key column in the column's
-    * NATIVE type, plus the row count — the statistics every table
-    * format records at commit time. One map-side-combining pass
-    * grouped on the file identity (`_metadata.file_path`); at 100 TB
-    * a format collects these DURING the write from each task's
-    * writer, which is the same numbers without the extra read —
-    * composition, not a different manifest. The null flag makes a
-    * NULL key first-class in the scoped verbs: a file whose key
-    * column contains NULLs (min/max are null-blind) always
-    * classifies as touched when the scope list can name a NULL. */
-  private def fileStats(spark: SparkSession, dir: String,
-      schema: StructType, keys: Seq[String],
-      bloomKeys: Seq[String] = Nil): DataFrame = {
-    val aggs = (count(lit(1)).as("n_rows") +: keys.flatMap(k => Seq(
-      min(col(k)).as(s"min_$k"),
-      max(col(k)).as(s"max_$k"),
-      (count(lit(1)) > count(col(k))).as(s"null_$k")))) ++
-      // per-file Bloom filters for POINT-LOOKUP pruning: range stats
-      // cannot prune an equality probe on a column the file layout
-      // does NOT cluster by (every file's [min, max] spans the probed
-      // value); a per-file membership sketch can. Same combining
-      // pass, fixed bytes per file (JoinPruning.bloomAgg's sizing) —
-      // the manifest stays scan-planning-sized.
-      bloomKeys.map(k =>
-        graft.operators.JoinPruning.bloomAgg(col(k)).as(s"bloom_$k"))
-    spark.read.schema(schema).parquet(dir)
-      .groupBy(col("_metadata.file_path").as("file"))
-      .agg(aggs.head, aggs.tail: _*)
-  }
+  // Per-file statistics — (min, max, null-presence) per key column in
+  // the column's NATIVE type, the row count, and optional per-file
+  // Bloom sketches — are what every table format records at commit
+  // time. The writer folds them per file while it writes
+  // ([[FileStats]]), so a commit reads its data once. The null flag
+  // makes a NULL key first-class in the scoped verbs: a file whose key
+  // column contains NULLs (min/max are null-blind) always classifies
+  // as touched when the scope list can name a NULL. The sketches serve
+  // POINT-LOOKUP pruning: range stats cannot prune an equality probe
+  // on a column the file layout does NOT cluster by (every file's
+  // [min, max] spans the probed value); a per-file membership sketch,
+  // sized by the file's own key count, can.
 
   /** The stat-carrying key columns a manifest tracks, recovered from
     * its own column names — so a scoped commit re-collects stats for
     * exactly the columns every carried row already has. */
-  private def manifestKeys(m: DataFrame): Seq[String] =
-    m.columns.toIndexedSeq.collect { case c if c.startsWith("min_") =>
+  private def manifestKeys(m: StructType): Seq[String] =
+    m.fieldNames.toIndexedSeq.collect { case c if c.startsWith("min_") =>
       c.stripPrefix("min_") }
 
   /** The Bloom-sketched key columns a manifest tracks, recovered the
     * same way as [[manifestKeys]] — so a table committed WITH blooms
     * keeps them through every scoped commit (rewritten files get
     * fresh sketches; carried rows keep theirs by reference). */
-  private def manifestBloomKeys(m: DataFrame): Seq[String] =
-    m.columns.toIndexedSeq.collect { case c if c.startsWith("bloom_") =>
+  private def manifestBloomKeys(m: StructType): Seq[String] =
+    m.fieldNames.toIndexedSeq.collect { case c if c.startsWith("bloom_") =>
       c.stripPrefix("bloom_") }
 
   /** Commit `df` as the next generation WITH a per-file
@@ -323,21 +303,79 @@ object TableFormat {
   private[graft] def commitGenManifested(df: DataFrame, root: String,
       keys: Seq[String], bloomKeys: Seq[String] = Nil,
       txn: Option[(String, Long)] = None): Long =
-    commit(root, df.schema, txn) { dir =>
-      df.write.parquet(dir)
-      writeManifest(
-        fileStats(df.sparkSession, dir, df.schema, keys, bloomKeys), dir)
-    }
+    tryCommitManifested(df.sparkSession, root, currentGenOption(root),
+      df.schema, keys, bloomKeys, txn, carried = None)(df)
+      .getOrElse(throw new IllegalStateException(
+        s"commit raced a concurrent writer on $root"))
 
-  /** Write a generation's manifest into its dir — one file: a
-    * manifest is scan-planning-sized, and a single part file keeps
-    * schema inference possible even for an EMPTY table (zero part
-    * files would leave nothing to infer from). Its schema is recorded
-    * beside it, so a cold read runs no footer-inference job. */
-  private def writeManifest(stats: DataFrame, dir: String): Unit = {
-    stats.coalesce(1).write.parquet(s"$dir/_manifest")
-    Files.writeString(schemaPath(s"$dir/_manifest"), stats.schema.json)
+  /** [[tryCommit]] of a manifested generation: write `data` with its
+    * per-file stats, then the manifest — `carried` names the files of
+    * a generation this one keeps by reference (a scoped commit) — and,
+    * once the marker CAS has won, seed the manifest caches with the
+    * rows just written, so the generation's first read runs no job. */
+  private def tryCommitManifested(spark: SparkSession, root: String,
+      expected: Option[Long], schema: StructType, keys: Seq[String],
+      bloomKeys: Seq[String], txn: Option[(String, Long)],
+      carried: Option[(Long, Seq[String])])(data: => DataFrame): Option[Long] = {
+    var seed: () => Unit = () => ()
+    tryCommit(root, expected, schema, txn) { dir =>
+      seed = writeManifest(spark, root, carried,
+        FileStats.write(data, dir, keys, bloomKeys), dir)
+    }.map { g => seed(); g }
   }
+
+  /** Write a generation's manifest into its dir in one job: the
+    * carried rows of the generation it derives from, then the fresh
+    * files' writer-side stats. One file: a manifest is
+    * scan-planning-sized, and a single part file keeps even an EMPTY
+    * table's manifest readable. Its schema is recorded beside it, so
+    * a cold read runs no footer-inference job. Returns the step that
+    * puts the written rows into [[manifestCache]] (and, for a small
+    * sketched manifest whose carried rows the driver held, into
+    * [[sketchCache]]) — for the committer to run after its CAS. */
+  private def writeManifest(spark: SparkSession, root: String,
+      carried: Option[(Long, Seq[String])], fresh: FileStats.Written,
+      dir: String): () => Unit = {
+    val freshFrame = localFrame(spark, fresh.rows, fresh.schema)
+    // (frame to write, its stats-row source, the full rows if held, files)
+    val (frame, statRows, fullRows, files) = carried match {
+      case None => (freshFrame, fresh.rows, Some(fresh.rows), fresh.files)
+      case Some((g, names)) =>
+        val prev = manifestMeta(spark, root, g)
+        val keep = names.toSet
+        def kept(rows: Seq[Row]) = rows.filter(r => keep(r.getAs[String]("file")))
+        val held = heldManifest(spark, root, g, prev, load = false)
+        val carriedFrame = held.fold(readManifest(spark, root, g)
+          .filter(col("file").isin(names: _*)))(
+          rows => localFrame(spark, kept(rows), prev.schema))
+        val carriedStats = kept(prev.stats)
+        (carriedFrame.unionByName(freshFrame, allowMissingColumns = true),
+          carriedStats ++ fresh.rows, held.map(kept(_) ++ fresh.rows),
+          prev.dataFilesOf(carriedStats.map(_.getAs[String]("file"))) ++
+            fresh.files)
+    }
+    val mdir = s"$dir/_manifest"
+    frame.coalesce(1).write.parquet(mdir)
+    Files.writeString(schemaPath(mdir), frame.schema.json)
+    val full = org.apache.spark.sql.GraftColumnBridge.asNullable(frame.schema)
+    val statsSchema = StructType(full.filterNot(_.name.startsWith("bloom_")))
+    () => {
+      manifestCache.put(mdir, ManifestMeta(full, statsSchema,
+        statRows.map(conform(_, statsSchema)), files))
+      if (full != statsSchema &&
+          manifestParts(mdir).map(_.length()).sum <= sketchCacheBytes)
+        fullRows.foreach(rows => sketchCache.put(mdir,
+          Some(rows.map(conform(_, full))).filter(sketchBytes(_, full) <= sketchCacheBytes)))
+    }
+  }
+
+  /** `r`'s values by name in `schema`'s order, NULL where `r` has no
+    * such column (a carried row predating a widened key). */
+  private def conform(r: Row, schema: StructType): Row =
+    new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
+      schema.fieldNames.map(n =>
+        if (r.schema.fieldNames.contains(n)) r.get(r.fieldIndex(n))
+        else null), schema)
 
   // ---------------------------------------------------------------
   // Driver-side manifest metadata cache
@@ -346,8 +384,9 @@ object TableFormat {
   // costs a Spark job (the file-list collect) — uncached, most of an
   // interactive search request's jobs. The driver keeps, per
   // manifest identity, the schema and the O(files) RANGE-STAT rows
-  // (`file`, `n_rows`, `min_*`, `max_*`, `null_*`): the same scalars
-  // every file-list collect already brought to the driver. Bloom sketch
+  // (`file`, `n_rows`, `min_*`, `max_*`, `null_*`) plus each file's
+  // length: the same scalars every file-list collect and listing
+  // already brought to the driver. Bloom sketch
   // bytes stay out of these entries; a SMALL manifest's sketch rows
   // live in the separate, byte-capped [[sketchCache]], so a point
   // lookup on it folds on the driver, while a large manifest's
@@ -355,11 +394,17 @@ object TableFormat {
   // ---------------------------------------------------------------
 
   /** The cached metadata of one manifest: the schema a reader passes
-    * instead of inferring it, and the range-stat rows (`statsSchema`
-    * = the manifest's columns minus every `bloom_*`). */
+    * instead of inferring it, the range-stat rows (`statsSchema` = the
+    * manifest's columns minus every `bloom_*`), and the data files in
+    * the same order, with the lengths a read plans from. */
   private[graft] final case class ManifestMeta(schema: StructType,
-      statsSchema: StructType, stats: Seq[org.apache.spark.sql.Row]) {
+      statsSchema: StructType, stats: Seq[Row], dataFiles: Seq[DataFile]) {
     def files: Seq[String] = stats.map(_.getAs[String]("file"))
+
+    private lazy val byPath = dataFiles.map(f => f.path -> f).toMap
+
+    /** The data files named `paths`, as [[readFiles]] plans them. */
+    def dataFilesOf(paths: Seq[String]): Seq[DataFile] = paths.map(byPath)
 
     /** The range-stat rows as a LocalRelation: filters and
       * projections over it fold on the driver (Catalyst's
@@ -433,6 +478,19 @@ object TableFormat {
       if (k._2.isEmpty) load else lookup(k, load)
     }
 
+    /** Store `v` as the entry for the manifest at `dir` — a committer
+      * seeding the rows it just wrote. */
+    def put(dir: String, v: V): Unit = {
+      val k = key(dir)
+      entries.synchronized(entries.put(k, v))
+    }
+
+    /** The entry for `dir`, if held; never loads. */
+    def peek(dir: String): Option[V] = {
+      val k = key(dir)
+      entries.synchronized(Option(entries.get(k)))
+    }
+
     private def lookup(k: Key, load: => V): V =
       entries.synchronized(Option(entries.get(k))).getOrElse {
         val v = load
@@ -470,9 +528,11 @@ object TableFormat {
   private[graft] val sketchCache =
     new IdentityCache[Option[Seq[org.apache.spark.sql.Row]]](SketchCacheEntries)
 
-  /** The cached metadata of generation `gen`'s manifest; a miss pays
-    * one job (the range-stat collect), plus footer schema inference
-    * for a manifest written before its schema was recorded. */
+  /** The cached metadata of generation `gen`'s manifest. The
+    * committer seeds it; a miss (another JVM's commit) pays one job
+    * (the range-stat collect), plus footer schema inference for a
+    * manifest written before its schema was recorded, and one
+    * driver-side listing per dir its files live in. */
   private[graft] def manifestMeta(spark: SparkSession, root: String,
       gen: Long): ManifestMeta = {
     val dir = manifestPath(root, gen)
@@ -481,7 +541,9 @@ object TableFormat {
         spark.read.schema(recordedSchema(dir)) else spark.read).parquet(dir)
       val stats = m.drop(
         m.columns.filter(_.startsWith("bloom_")).toIndexedSeq: _*)
-      ManifestMeta(m.schema, stats.schema, stats.collect().toSeq)
+      val rows = stats.collect().toSeq
+      ManifestMeta(m.schema, stats.schema, rows,
+        FileStats.listed(spark, rows.map(_.getAs[String]("file"))))
     }
   }
 
@@ -503,12 +565,12 @@ object TableFormat {
 
   /** Read a manifested generation via its file list — the O(files)
     * listing Spark's own file index would materialize (a format's log
-    * IS this list), taken from the manifest cache. An
-    * all-rows-deleted generation (empty manifest) reads as an empty
-    * frame. */
+    * IS this list), taken with the files' lengths from the manifest
+    * cache. An all-rows-deleted generation (empty manifest) reads as
+    * an empty frame. */
   private[graft] def readViaManifest(spark: SparkSession, root: String,
       gen: Long, schema: StructType): DataFrame =
-    readFiles(spark, schema, manifestFiles(spark, root, gen))
+    readFiles(spark, schema, manifestMeta(spark, root, gen).dataFiles)
 
   /** What a scoped commit (or a pruned read) did: files rewritten (or
     * read), files carried by reference (or skipped), and the
@@ -543,7 +605,8 @@ object TableFormat {
       txn: Option[(String, Long)] = None): Option[SkipReport] = {
     // cheap staleness pre-check (the marker CAS below is the gate)
     if (currentGen(root) != expected) return None
-    val m = readManifest(spark, root, expected).localCheckpoint(true)
+    val meta = manifestMeta(spark, root, expected)
+    val m = sketchFrame(spark, root, expected, meta)
     val sc = broadcast(scope)
     // SKETCH REFINEMENT of the skip decision: when the manifest
     // carries a Bloom sketch for the scoped key AND the scope is
@@ -559,7 +622,7 @@ object TableFormat {
     // pre-Bloom generation) cannot prune. The scope collect is
     // scan-planning-sized by summarizeScope's contract.
     val refined: Option[org.apache.spark.sql.Column] =
-      if (!m.columns.contains(s"bloom_$key")) None
+      if (!meta.schema.fieldNames.contains(s"bloom_$key")) None
       else {
         val rows = scope.collect()
         val allExact = rows.forall(r =>
@@ -576,16 +639,13 @@ object TableFormat {
               col(s"bloom_$key"), vals) || nullClause)
         }
       }
-    // the split is exhaustive and disjoint (carried = everything not
-    // touched, including sketch-rejected range hits), so the carried
-    // count is arithmetic over the cached manifest — no count job
-    val nAll = manifestMeta(spark, root, expected).stats.length
+    // the split is exhaustive and disjoint, so the carried files are
+    // every other file of the cached manifest (sketch-rejected range
+    // hits included) — no second pass over the manifest
     val rangeTouched = m.join(sc, touch, "left_semi")
     val touchedFiles = refined.fold(rangeTouched)(rangeTouched.filter)
       .select(col("file")).collect().map(_.getString(0)).toSeq
-    val rangeCarried = m.join(sc, touch, "left_anti")
-    val carried = refined.fold(rangeCarried)(p =>
-      rangeCarried.unionByName(rangeTouched.filter(!p)))
+    val touchedSet = touchedFiles.toSet
     // ADDITIVE EVOLUTION WIDENS THE STATS KEY SET: columns the new
     // schema adds over the generation's recorded width enter the
     // manifest for every REWRITTEN file (carried legacy rows read
@@ -595,12 +655,11 @@ object TableFormat {
     // NULLs it contains). Without this, H20's evolved columns could
     // never be skip-pruned or metaAgg'd until a full manual re-commit.
     val recorded = genSchema(root, expected).fieldNames.toSet
-    val widened = manifestKeys(m) ++ schema.fields.toSeq
+    val widened = manifestKeys(meta.schema) ++ schema.fields.toSeq
       .filter(f => !recorded(f.name) && statable(f.dataType))
       .map(_.name)
     tryCommitFiles(spark, root, expected, schema, widened.distinct,
-      touchedFiles, carried, rewrite, txn,
-      carriedN = nAll - touchedFiles.length)
+      touchedFiles, meta.files.filterNot(touchedSet), rewrite, txn)
   }
 
   /** Types whose min/max/null statistics a manifest tracks — the
@@ -655,29 +714,25 @@ object TableFormat {
   }
 
   /** The staged-commit tail every scoped verb shares: read ONLY the
-    * touched files, rewrite them through `rewrite`, and publish
-    * carried ∪ new-file stats as the next generation's manifest —
-    * staged and CAS'd by [[tryCommit]]. */
+    * touched files, rewrite them through `rewrite`, and publish the
+    * carried files' manifest rows ∪ the new files' stats as the next
+    * generation's manifest — staged and CAS'd by [[tryCommit]]. A
+    * widened stats key set (additive schema evolution) adds
+    * min_/max_/null_ columns the carried rows don't have — they fill
+    * NULL, the "file predates this column" marker. Bloom keys
+    * propagate from the carried manifest's own columns: rewritten
+    * files get fresh sketches, carried rows keep theirs. */
   private def tryCommitFiles(spark: SparkSession, root: String,
       expected: Long, schema: StructType, keys: Seq[String],
-      touchedFiles: Seq[String], carried: DataFrame,
+      touchedFiles: Seq[String], carried: Seq[String],
       rewrite: DataFrame => DataFrame,
-      txn: Option[(String, Long)] = None,
-      // every caller already knows the carried-file count from its
-      // own manifest split — passing it avoids a count job per commit
-      // (the carried frame itself still feeds the manifest write)
-      carriedN: Long): Option[SkipReport] =
-    tryCommit(root, Some(expected), schema, txn) { dir =>
-      rewrite(readFiles(spark, schema, touchedFiles)).write.parquet(dir)
-      // allowMissingColumns: a widened stats key set (additive schema
-      // evolution) adds min_/max_/null_ columns the carried rows don't
-      // have — they fill NULL, the "file predates this column" marker.
-      // Bloom keys propagate from the carried manifest's own columns:
-      // rewritten files get fresh sketches, carried rows keep theirs.
-      writeManifest(carried.unionByName(
-        fileStats(spark, dir, schema, keys, manifestBloomKeys(carried)),
-        allowMissingColumns = true), dir)
-    }.map(SkipReport(touchedFiles.length.toLong, carriedN, _))
+      txn: Option[(String, Long)] = None): Option[SkipReport] = {
+    val prev = manifestMeta(spark, root, expected)
+    tryCommitManifested(spark, root, Some(expected), schema, keys,
+      manifestBloomKeys(prev.schema), txn, Some(expected -> carried))(
+      rewrite(readFiles(spark, schema, prev.dataFilesOf(touchedFiles))))
+      .map(SkipReport(touchedFiles.length.toLong, carried.length.toLong, _))
+  }
 
   // ---------------------------------------------------------------
   // Writer-transaction lineage (Delta's `txn` action): an idempotent
@@ -815,13 +870,11 @@ object TableFormat {
       delta: DataFrame, schema: StructType,
       txn: Option[(String, Long)] = None): SkipReport = {
     val expected = currentGen(root)
-    // every row carries, so the manifest feeds the new manifest's
-    // write exactly once and the cached stats give the count
-    val m = readManifest(spark, root, expected)
-    tryCommitFiles(spark, root, expected, schema, manifestKeys(m),
-      Seq.empty, m, _ => delta.select(
-        schema.fieldNames.map(col).toIndexedSeq: _*), txn,
-      carriedN = manifestMeta(spark, root, expected).stats.length)
+    // every file carries
+    val meta = manifestMeta(spark, root, expected)
+    tryCommitFiles(spark, root, expected, schema, manifestKeys(meta.schema),
+      Seq.empty, meta.files, _ => delta.select(
+        schema.fieldNames.map(col).toIndexedSeq: _*), txn)
       .getOrElse(throw new IllegalStateException(
         s"appendScoped raced a concurrent writer on $root"))
   }
@@ -836,7 +889,8 @@ object TableFormat {
   private[graft] def readPrunedIn(spark: SparkSession, root: String,
       gen: Long, schema: StructType, key: String,
       values: Seq[Any]): DataFrame =
-    readFiles(spark, schema, prunedFilesIn(spark, root, gen, key, values))
+    readFiles(spark, schema, manifestMeta(spark, root, gen)
+      .dataFilesOf(prunedFilesIn(spark, root, gen, key, values)))
 
   /** The file list [[readPrunedIn]] scans — separated so specs and
     * probes can assert the PRUNING itself (files planned), not just
@@ -873,24 +927,36 @@ object TableFormat {
     ranged.select(col("file")).collect().map(_.getString(0)).toSeq
   }
 
-  /** Generation `gen`'s whole manifest, sketches included: from
-    * [[sketchCache]] as a LocalRelation when it is small (see
-    * [[sketchCacheBytes]]), else the manifest parquet. */
+  /** Generation `gen`'s whole manifest, sketches included: a
+    * LocalRelation when the driver holds its rows (see
+    * [[heldManifest]]), else the manifest parquet. */
   private def sketchFrame(spark: SparkSession, root: String, gen: Long,
-      meta: ManifestMeta): DataFrame = {
+      meta: ManifestMeta): DataFrame =
+    heldManifest(spark, root, gen, meta, load = true)
+      .fold(readManifest(spark, root, gen))(localFrame(spark, _, meta.schema))
+
+  /** Generation `gen`'s whole manifest rows when the driver holds them:
+    * a manifest without sketches is its cached range stats; a sketched
+    * one is held in [[sketchCache]] when it is small (see
+    * [[sketchCacheBytes]]), collected into it on a miss when `load`. */
+  private def heldManifest(spark: SparkSession, root: String, gen: Long,
+      meta: ManifestMeta, load: Boolean): Option[Seq[Row]] = {
     val dir = manifestPath(root, gen)
-    val sketchCols = meta.schema.fieldNames.indices
-      .filter(meta.schema.fieldNames(_).startsWith("bloom_"))
-    def sketchBytes(rows: Seq[org.apache.spark.sql.Row]): Long =
-      rows.iterator.flatMap(r => sketchCols.filterNot(r.isNullAt)
-        .map(r.getAs[Array[Byte]](_).length.toLong)).sum
-    val cached =
-      if (manifestParts(dir).map(_.length()).sum > sketchCacheBytes) None
-      else sketchCache.getOrLoad(dir) {
-        Some(readManifest(spark, root, gen).collect().toSeq)
-          .filter(sketchBytes(_) <= sketchCacheBytes)
-      }
-    cached.fold(readManifest(spark, root, gen))(localFrame(spark, _, meta.schema))
+    if (meta.schema == meta.statsSchema) Some(meta.stats)
+    else if (manifestParts(dir).map(_.length()).sum > sketchCacheBytes) None
+    else if (!load) sketchCache.peek(dir).flatten
+    else sketchCache.getOrLoad(dir) {
+      Some(readManifest(spark, root, gen).collect().toSeq)
+        .filter(sketchBytes(_, meta.schema) <= sketchCacheBytes)
+    }
+  }
+
+  /** The sketch bytes `rows` (in `schema`) hold. */
+  private def sketchBytes(rows: Seq[Row], schema: StructType): Long = {
+    val sketchCols = schema.fieldNames.indices
+      .filter(schema.fieldNames(_).startsWith("bloom_"))
+    rows.iterator.flatMap(r => sketchCols.filterNot(r.isNullAt)
+      .map(r.getAs[Array[Byte]](_).length.toLong)).sum
   }
 
   /** What a retention sweep reclaimed: the expired generation ids
@@ -974,11 +1040,12 @@ object TableFormat {
   private[graft] def cdcDiffScoped(spark: SparkSession, root: String,
       prevGen: Long, nextGen: Long, schema: StructType,
       key: String): DataFrame = {
-    def files(gen: Long): Set[String] = manifestFiles(spark, root, gen).toSet
-    val pf = files(prevGen); val nf = files(nextGen)
-    def readOnly(only: Set[String]): DataFrame =
-      readFiles(spark, schema, only.toSeq.sorted)
-    cdcDiff(readOnly(pf -- nf), readOnly(nf -- pf), key)
+    val prev = manifestMeta(spark, root, prevGen)
+    val next = manifestMeta(spark, root, nextGen)
+    def readOnly(side: ManifestMeta, other: ManifestMeta): DataFrame =
+      readFiles(spark, schema,
+        side.dataFilesOf((side.files.toSet -- other.files).toSeq.sorted))
+    cdcDiff(readOnly(prev, next), readOnly(next, prev), key)
   }
 
   /** H16 — `q_stats_skipping`: H10's takedown purge scoped by FILE
@@ -1302,7 +1369,7 @@ object TableFormat {
     val total = meta.stats.length
     val residual = preds.map { case (k, lo, hi) =>
       col(k).between(lit(lo), lit(hi)) }.reduce(_ && _)
-    (readFiles(spark, schema, files).filter(residual),
+    (readFiles(spark, schema, meta.dataFilesOf(files)).filter(residual),
       SkipReport(files.length.toLong, total - files.length, gen))
   }
 
@@ -1370,9 +1437,9 @@ object TableFormat {
     * inside the row; the answer itself is INVARIANT to the pruning
     * (same oracle as the raw IN filter).
     *
-    * Scale shape: the sketch is fixed bytes per file collected in
-    * the same map-side-combining stats pass every manifested commit
-    * already runs; the probe is driver-side planner work over the
+    * Scale shape: the sketch is bytes per file (sized by its key
+    * count) folded by the writer while the commit writes the file;
+    * the probe is driver-side planner work over the
     * O(files) manifest. At 100 TB this is the difference between a
     * needle lookup scanning the corpus (clustered by something else,
     * as real layouts always are) and reading ONE file. */
@@ -1387,8 +1454,9 @@ object TableFormat {
         root, Seq("lang", "doc_id"), bloomKeys = Seq("doc_id"))
       val ids = Seq(11L, 137L, 423L)
       val planned = prunedFilesIn(spark, root, 0L, "doc_id", ids)
-      val total = readManifest(spark, root, 0L).count()
-      readFiles(spark, Tables.docSchema, planned)
+      val meta = manifestMeta(spark, root, 0L)
+      val total = meta.stats.length
+      readFiles(spark, Tables.docSchema, meta.dataFilesOf(planned))
         .filter(col("doc_id").isin(ids: _*))
         .select(col("doc_id"), col("lang"), col("source"),
           size(words(col("text"))).cast(LongType).as("n_tokens"))
@@ -1521,20 +1589,18 @@ object TableFormat {
       schema: StructType, smallRows: Long,
       targetRows: Long): SkipReport = {
     val cur = currentGen(root)
-    // the manifest feeds only the carried rows' write, so no pin
-    val m = readManifest(spark, root, cur)
-    val keys = manifestKeys(m)
+    val meta = manifestMeta(spark, root, cur)
+    val keys = manifestKeys(meta.schema)
     // the cached (file, n_rows) decide everything driver-side: the
-    // fold set, the bin count and the carried count
-    val sizes = manifestMeta(spark, root, cur).stats
+    // fold set, the bin count and the carried files
+    val sizes = meta.stats
       .map(r => (r.getAs[String]("file"), r.getAs[Long]("n_rows")))
-    val touched = sizes.collect { case (f, n) if n < smallRows => f }.toSeq
-    val carried = m.filter(col("n_rows") >= smallRows)
-    val totalSmall = sizes.collect { case (_, n) if n < smallRows => n }.sum
-    val nOut = math.max(1L, (totalSmall + targetRows - 1) / targetRows).toInt
-    tryCommitFiles(spark, root, cur, schema, keys, touched, carried,
-      surv => surv.repartitionByRange(nOut, keys.map(col).toIndexedSeq: _*),
-      carriedN = sizes.length - touched.length)
+    val (small, carried) = sizes.partition(_._2 < smallRows)
+    val nOut = math.max(1L,
+      (small.map(_._2).sum + targetRows - 1) / targetRows).toInt
+    tryCommitFiles(spark, root, cur, schema, keys, small.map(_._1),
+      carried.map(_._1),
+      surv => surv.repartitionByRange(nOut, keys.map(col).toIndexedSeq: _*))
       .getOrElse(throw new IllegalStateException(
         s"optimize raced a concurrent writer on $root"))
   }

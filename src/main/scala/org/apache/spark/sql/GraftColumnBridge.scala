@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 /** Bridge to Spark's `private[sql]` internals so graft can expose
   * custom Catalyst expressions (codegen'd vector math) as plain
   * `Column`s in the DataFrame DSL and as named SQL functions on a
-  * live session.
+  * live session, and write through a file format instance.
   */
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -50,4 +50,29 @@ object GraftColumnBridge {
   def analyzedPlan(df: Dataset[Row])
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
+
+  /** Write `df` into the new dir `dir` through `format` — the command
+    * `df.write.format(...).save(dir)` plans, with a format INSTANCE
+    * (one that carries per-write state) where the writer API only
+    * takes a class name. */
+  def writeFiles(df: Dataset[Row],
+      format: org.apache.spark.sql.execution.datasources.FileFormat,
+      dir: String): Unit = {
+    val session = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val query = df.asInstanceOf[classic.Dataset[Row]].logicalPlan
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val qualified = path.getFileSystem(session.sessionState.newHadoopConf())
+      .makeQualified(path)
+    session.sessionState.executePlan(
+      org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand(
+        qualified, Map.empty, ifPartitionNotExists = false,
+        partitionColumns = Nil, bucketSpec = None, fileFormat = format,
+        options = Map("path" -> dir), query = query,
+        mode = SaveMode.ErrorIfExists, catalogTable = None, fileIndex = None,
+        outputColumnNames = query.output.map(_.name)))
+      .assertCommandExecuted()
+  }
+
+  /** `schema` with every field nullable, as a file source reads it. */
+  def asNullable(schema: types.StructType): types.StructType = schema.asNullable
 }

@@ -11,10 +11,11 @@ import graft.sources.Tables
   * the upper half, so the append reads every manifest cold, as on a
   * day's fresh working copy. Over this fixture, while the PQ and SQ8
   * codes were two more substores beside the cells, `buildIvfIndex`
-  * submitted 47 jobs and `appendToIvfIndex` 25. */
+  * submitted 47 jobs and `appendToIvfIndex` 25; while each commit read
+  * its data back for the manifest's stats, 39 and 17. */
 class IndexJobsSpec extends SparkTestBase {
 
-  test("a warm index build and append submit at most 39 and 17 Spark " +
+  test("a warm index build and append submit at most 36 and 13 Spark " +
     "jobs") {
     val vectors = Tables(spark, sfDir).embeddings
       .select(col("vec_id").as("doc_id"), col("embedding"))
@@ -31,7 +32,7 @@ class IndexJobsSpec extends SparkTestBase {
     }
     round()
     val jobs = round()
-    assert(jobs("buildIvfIndex") <= 39, s"the calls submitted $jobs")
-    assert(jobs("appendToIvfIndex") <= 17, s"the calls submitted $jobs")
+    assert(jobs("buildIvfIndex") <= 36, s"the calls submitted $jobs")
+    assert(jobs("appendToIvfIndex") <= 13, s"the calls submitted $jobs")
   }
 }

@@ -111,13 +111,16 @@ class ScalarQuantizerSpec extends SparkTestBase {
     val got = SQ.searchIvfSq8Query(t).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
     assert(got === expected)
-    // code audit: every cell row carries its codes, every code within int8
+    // code audit: every cell row carries its codes, one byte each, every
+    // code within ±127
     val side = graft.sources.IndexCatalog.read(spark, path, "cells")
       .filter(col("sq8_codes").isNotNull)
     assert(side.count() === cells.length.toLong)
+    assert(side.schema("sq8_codes").dataType ===
+      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.ByteType))
     val mx = side
-      .select(array_max(transform(col("sq8_codes"), x => abs(x))).as("m"))
-      .agg(max(col("m"))).first().getLong(0)
-    assert(mx <= 127L, s"a code escaped the int8 range: $mx")
+      .select(array_max(transform(col("sq8_codes"), x => abs(x.cast("int")))).as("m"))
+      .agg(max(col("m"))).first().getInt(0)
+    assert(mx <= 127, s"a code escaped the int8 range: $mx")
   }
 }
