@@ -1232,6 +1232,34 @@ class TableFormatSpec extends SparkTestBase {
     assert(loads === 4 && small.size === 2)
   }
 
+  test("manifest cache: a warm manifest read runs no Spark job; a " +
+    "sketch probe runs exactly one") {
+    // a byte copy is a table this JVM never committed: the driver holds
+    // no sketch rows for it, as for another writer's commit
+    val src = java.nio.file.Files.createTempDirectory("graft-mc-probe")
+      .toString
+    val docs = rangeDocs(0, 400, 4)
+    val schema = docs.schema
+    TableFormat.commitGenManifested(docs, src, Seq("doc_id"),
+      bloomKeys = Seq("doc_id"))
+    val root = java.nio.file.Files.createTempDirectory("graft-mc-probe-copy")
+      .resolve("t").toString
+    graft.sources.LayoutStore.copyRecursively(new java.io.File(src),
+      new java.io.File(root))
+    TableFormat.manifestFiles(spark, root, 0L)
+    val (_, warm) = JobCounting.countJobs(spark) {
+      TableFormat.readViaManifest(spark, root, 0L, schema)
+      TableFormat.readManifest(spark, root, 0L)
+      TableFormat.readScoped(spark, root, 0L, schema,
+        Seq(("doc_id", 10L, 20L)))
+    }
+    assert(warm === 0, s"warm manifest reads ran $warm jobs")
+    val (planned, sketch) = JobCounting.countJobs(spark) {
+      TableFormat.prunedFilesIn(spark, root, 0L, "doc_id", Seq(7L))
+    }
+    assert(planned.length === 1 && sketch === 1)
+  }
+
   test("manifest cache: a warm manifest read runs no Spark job, nor " +
     "does the first sketch probe after the commit seeded its rows") {
     val root = java.nio.file.Files.createTempDirectory("graft-mc-jobs")
